@@ -370,10 +370,22 @@ class RoutedSessions:
 
 
 def route_sessions(
-    sessions: DataFrame, cfg: PipelineConfig, watermark_df: DataFrame | None = None,
-    watermark_value=None,
+    sessions: DataFrame, cfg: PipelineConfig, watermark_df: DataFrame | None = None
 ) -> RoutedSessions:
-    """Classify each map by how it died.
+    """Classify each map by how it died and split the buckets:
+    :func:`split_sessions` over :func:`close_sessions`."""
+    return split_sessions(close_sessions(sessions, cfg, watermark_df), cfg)
+
+
+# helper columns close_sessions adds; every bucket drops them
+_ROUTE_COLS = ["_end_seg", "_gap_seg", "_age_seg", "_is_last", "_watermark",
+               "_session_timeout", "_session_inactivity", "close_kind"]
+
+
+def close_sessions(
+    sessions: DataFrame, cfg: PipelineConfig, watermark_df: DataFrame | None = None
+) -> DataFrame:
+    """Set each map's ``close_reason``.
 
     Expiry is event-time (the reference's only deterministic mode,
     ``spec:374-390``): a non-last session of a task was by construction
@@ -393,16 +405,11 @@ def route_sessions(
     # provided — a scan-only, column-pruned subtree — instead of from
     # `sessions`, which would recompute the whole pipeline a second time
     # just to produce one scalar.
-    if watermark_value is not None:
-        # pre-materialized scalar (one job): every bucket's plan embeds the
-        # literal instead of re-scanning the input per bucket
-        sessions = sessions.withColumn("_watermark", F.lit(watermark_value))
+    if watermark_df is not None:
+        wm = watermark_df.agg(F.max("ts").alias("_watermark"))
     else:
-        if watermark_df is not None:
-            wm = watermark_df.agg(F.max("ts").alias("_watermark"))
-        else:
-            wm = sessions.agg(F.max("lastevent_ts").alias("_watermark"))
-        sessions = sessions.crossJoin(F.broadcast(wm))
+        wm = sessions.agg(F.max("lastevent_ts").alias("_watermark"))
+    sessions = sessions.crossJoin(F.broadcast(wm))
 
     eff_timeout = F.coalesce(F.col("_session_timeout"), F.lit(float(cfg.timeout)))
     eff_inact = F.coalesce(
@@ -424,25 +431,27 @@ def route_sessions(
         .when(age_expired | gap_expired, F.lit("timeout"))   # expired vs watermark
         .otherwise(F.lit("open"))
     )
-    sessions = sessions.withColumn("close_reason", reason)
+    return sessions.withColumn("close_reason", reason)
 
-    drop = ["_end_seg", "_gap_seg", "_age_seg", "_is_last", "_watermark",
-            "_session_timeout", "_session_inactivity", "close_kind"]
 
+def split_sessions(sessions: DataFrame, cfg: PipelineConfig) -> RoutedSessions:
+    """The buckets of a :func:`close_sessions` frame, each a filter over
+    it: a persisted closed frame feeds every bucket without recomputing
+    the correlation or re-scanning the input for the watermark."""
     def _as_open(df: DataFrame) -> DataFrame:
         # the OPEN bucket is the persistence analog of aggregate_maps_path
         # (O21): it must carry the map's effective custom timeout
         # overrides (the reference Marshal-dumps map_meta too,
         # aggregate.rb:125-140) — a resumed map must keep its overridden
         # clocks, not fall back to the pattern defaults
-        keep = [d for d in drop if d not in ("_session_timeout", "_session_inactivity")]
+        keep = [d for d in _ROUTE_COLS if d not in ("_session_timeout", "_session_inactivity")]
         return (
             df.drop(*keep)
             .withColumnRenamed("_session_timeout", "map_custom_timeout")
             .withColumnRenamed("_session_inactivity", "map_custom_inactivity")
         )
 
-    completed = sessions.where(F.col("close_reason") == "completed").drop(*drop)
+    completed = sessions.where(F.col("close_reason") == "completed").drop(*_ROUTE_COLS)
 
     if cfg.push_previous_map_as_event:
         # O16 (aggregate.rb:205-208,314-320,341-344): with ≤1 live map
@@ -458,25 +467,25 @@ def route_sessions(
         pushed = pushed.crossJoin(F.broadcast(glast)).withColumn(
             "_g_last", F.col("_g") == F.struct("creation_ts", "task_id")
         ).drop("_g")
-        timeout = _timeout_event(pushed, cfg, final_col="_g_last").drop(*drop, "_g_last")
+        timeout = _timeout_event(pushed, cfg, final_col="_g_last").drop(*_ROUTE_COLS, "_g_last")
         inline_rows = sessions.where(F.col("close_reason") == "inline")
-        inline = _timeout_event(inline_rows, cfg, final_col=None).drop(*drop)
+        inline = _timeout_event(inline_rows, cfg, final_col=None).drop(*_ROUTE_COLS)
         open_maps = _as_open(sessions.where(F.lit(False)))
         return RoutedSessions(
             completed=completed, timeout=timeout, inline=inline,
-            open=open_maps, sessions=sessions.drop(*drop),
+            open=open_maps, sessions=sessions.drop(*_ROUTE_COLS),
         )
 
     timeout_rows = sessions.where(F.col("close_reason") == "timeout")
     inline_rows = sessions.where(F.col("close_reason") == "inline")
     if cfg.push_map_as_event_on_timeout:
-        timeout = _timeout_event(timeout_rows, cfg, final_col=None).drop(*drop)
-        inline = _timeout_event(inline_rows, cfg, final_col=None).drop(*drop)
+        timeout = _timeout_event(timeout_rows, cfg, final_col=None).drop(*_ROUTE_COLS)
+        inline = _timeout_event(inline_rows, cfg, final_col=None).drop(*_ROUTE_COLS)
     else:
         # without push, expired maps are silently discarded
         # (aggregate.rb:399-400 only collects events when configured)
-        timeout = timeout_rows.limit(0).drop(*drop)
-        inline = inline_rows.limit(0).drop(*drop)
+        timeout = timeout_rows.limit(0).drop(*_ROUTE_COLS)
+        inline = inline_rows.limit(0).drop(*_ROUTE_COLS)
 
     open_maps = _as_open(sessions.where(F.col("close_reason") == "open"))
     return RoutedSessions(
@@ -484,7 +493,7 @@ def route_sessions(
         timeout=timeout,
         inline=inline,
         open=open_maps,
-        sessions=sessions.drop(*drop),
+        sessions=sessions.drop(*_ROUTE_COLS),
     )
 
 

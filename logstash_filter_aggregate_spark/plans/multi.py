@@ -32,21 +32,28 @@ def run_multi(
 
     The grok parse — the most expensive stage — is built ONCE and shared
     by every pattern's pipeline (the reference also parses upstream of
-    all its aggregate filters). With ``share_parse=True`` (default for
-    >1 pattern) the parsed frame is additionally lazily
+    all its aggregate filters): with ``share_parse=True`` (the default)
+    and more than one pattern, the parsed frame is lazily
     ``localCheckpoint``-ed, so M patterns' consuming actions MATERIALIZE
-    the parse once instead of re-executing the regex subtree M times —
-    the multi-pattern analog of ``passthrough_shared_subtree``'s
-    one-parse-per-job guarantee (same lineage-truncation tradeoff,
-    documented there)."""
+    the parse once instead of re-executing the regex subtree M times
+    (the lineage-truncation tradeoff is PLANS.md's). Each pattern then
+    takes it ``pre_parsed`` and checkpoints nothing again. Otherwise each
+    pattern runs its own :func:`run_pipeline` on ``transcripts``.
+
+    Each ``run_pipeline`` releases the frames the previous one persisted,
+    so only the last pattern's buckets read persisted frames; the others
+    recompute from their lineage (identical rows)."""
     from logstash_filter_aggregate_spark.plans.pipeline import parse
 
     validate_configs(configs)
-    parsed = parse(transcripts, groks, backend=parse_backend)
-    if share_parse and len(configs) > 1:
-        parsed = parsed.localCheckpoint(eager=False)
+    shared = share_parse and len(configs) > 1
+    if shared:
+        transcripts = parse(transcripts, groks, backend=parse_backend).localCheckpoint(eager=False)
     return {
-        cfg.pattern_id: run_pipeline(spark, parsed, cfg, pre_parsed=True, **kwargs)
+        cfg.pattern_id: run_pipeline(
+            spark, transcripts, cfg, groks=groks, parse_backend=parse_backend,
+            pre_parsed=shared, **kwargs,
+        )
         for cfg in configs
     }
 

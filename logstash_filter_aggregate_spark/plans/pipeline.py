@@ -7,11 +7,13 @@ passthrough event stream (tags O19, cancel U3) and inline emissions
 physical strategy. Two shuffles total on the hot path: the
 ``_task_id`` window exchange (reused by every window and the groupBy,
 which are co-partitioned) and the small session-level routing window.
+Gated configs add one exchange of the narrow guarded rows, since the
+groupBy reads them from a persisted frame (see :func:`run_pipeline`).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,28 +31,38 @@ from logstash_filter_aggregate_spark.functions.grok import (
 )
 from logstash_filter_aggregate_spark.operators.classify import classify
 from logstash_filter_aggregate_spark.operators.correlate import (
-    RoutedSessions,
     aggregate_sessions,
     apply_guards,
-    route_sessions,
+    close_sessions,
+    split_sessions,
 )
 from logstash_filter_aggregate_spark.operators.sessionize import sessionize
 
 
-# Persisted frames (sessions + exception-key sets) from the most recent
-# cache_sessions=True pipeline. A new caching run releases the previous
-# one's handles, so repeated multi-bucket jobs don't accumulate pinned
-# blocks for the app lifetime. Releasing is SAFE here (unlike a
-# range-partitioned index): both frames are deterministic pure functions
-# of their inputs, so a still-lazy consumer of an older pipeline merely
-# recomputes identical rows.
+# Frames the most recent run_pipeline persisted: the guarded frame of
+# gated configs and the closed sessions frame. write_routed releases them
+# when it finishes and the next run_pipeline releases whatever is left, so
+# nothing stays pinned and no run reads an earlier run's cache (a cached
+# scan can serve a rewritten input at the same path).
+# Releasing is safe: both frames are deterministic functions of their
+# inputs, so a still-lazy consumer merely recomputes identical rows.
 _LIVE_CACHES: list[DataFrame] = []
 
 
+def _persisted(df: DataFrame) -> DataFrame:
+    df = df.persist()
+    _LIVE_CACHES.append(df)
+    return df
+
+
 def release_pipeline_caches() -> None:
-    """Unpersist frames cached by prior ``cache_sessions=True`` runs."""
+    """Unpersist the frames the last ``run_pipeline`` persisted. Frames
+    of a stopped SparkContext are only dropped: stopping freed their
+    blocks, and unpersisting through it would raise."""
     while _LIVE_CACHES:
-        _LIVE_CACHES.pop().unpersist()
+        df = _LIVE_CACHES.pop()
+        if not df.sparkSession._jsparkSession.sparkContext().isStopped():
+            df.unpersist()
 
 
 @dataclass
@@ -167,145 +179,6 @@ def tagged_exception_keys(guarded: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def _rejoinable_heavy_cols(
-    classified: DataFrame, cfg: PipelineConfig, raw: DataFrame | None
-) -> list[str]:
-    """Columns safe to DROP from the shared-subtree checkpoint and rejoin
-    from the raw scan afterwards: present untouched in the raw input
-    (so the scan can restore them by row key) and never referenced by a
-    post-checkpoint expression (agg inputs / emit exprs evaluate on the
-    checkpointed frame in :func:`narrow_for_correlation` and
-    :func:`_exception_flag`). In the transcript pipeline this is the raw
-    ``text`` column — the single widest column of the stream."""
-    if raw is None:
-        return []
-    import re as _re
-
-    referenced = set()
-    for r in cfg.rules:
-        for s in r.aggs:
-            if s.col:
-                referenced.update(_re.findall(r"[A-Za-z_]\w*", s.col))
-        for e in (r.emit or {}).values():
-            referenced.update(_re.findall(r"[A-Za-z_]\w*", e))
-    return [
-        c for c in ("text",)
-        if c in raw.columns and c in classified.columns and c not in referenced
-        and c not in ("conv_id", "turn_idx", "ts")
-    ]
-
-
-def passthrough_shared_subtree(
-    classified: DataFrame,
-    cfg: PipelineConfig,
-    open_maps: DataFrame | None,
-    gated_cancel: bool,
-    gated_ids: list[str],
-    raw: DataFrame | None = None,
-) -> DataFrame:
-    """Single-job passthrough for guard-gated configs without
-    ``cache_sessions``: the classified stream is lazily
-    ``localCheckpoint``-ed, so the guard-resolution build side and the
-    passthrough main stage read the SAME materialized blocks — ONE parse
-    per passthrough job (the round-3 shape planned an independent second
-    correlation subtree as the broadcast build side, re-running
-    scan+parse+windows and doubling the job cost).
-
-    Measured at sf0.1/local[32] (3M turns, example1 config, best-of-2
-    steady): this shape 7.6s vs 10.8s for the round-3 double-compute,
-    13.8s for inclusion windows inlined into the full-width stream (the
-    wide rows drag text through ~8 sequential Window nodes), 8.5s for a
-    columnar ``persist`` of the parsed frame (cache-build cost).
-
-    Round 5 also measured a NARROW checkpoint + row-key text rejoin
-    (``SPARK_GRAFT_PT_SHAPE=narrowck``): drop the raw ``text`` column
-    from the checkpoint (the stream's single widest column, restorable
-    from the raw scan) and inner-join it back onto the final passthrough
-    by ``(conv_id, turn_idx)``. Four alternating steady reps at
-    sf0.1/local[32]: fullck 6.8/7.0s (min/median) vs narrowck 7.0/7.3s —
-    a wash; the text shuffle-join (sort + exchange of the text bytes)
-    costs what the narrow checkpoint write/reads save, and on a real
-    cluster the rejoin moves text over the NETWORK where the full-width
-    checkpoint is executor-local disk. Default stays ``fullck``; the
-    narrow shape is kept behind the env var as a measured alternative
-    for deployments where local disk, not network, is the scarce
-    resource (both shapes parity-tested).
-
-    Scale notes: the checkpoint materializes the parsed stream once to
-    executor-local storage — the same magnitude of local I/O as one
-    full-stream shuffle leg, with no network. ``localCheckpoint``
-    truncates lineage, so a lost executor fails the job instead of
-    recomputing (the documented tradeoff ``operators/order.py`` already
-    makes); multi-bucket jobs should prefer ``cache_sessions=True``,
-    which keeps the passthrough scan-shaped against a persisted NARROW
-    correlated frame (correlation materializes once for the whole job
-    set, and text never leaves the scan).
-    """
-    from logstash_filter_aggregate_spark.operators.correlate import narrow_for_correlation
-    from logstash_filter_aggregate_spark.plans.resume import inject_seeds
-
-    import os as _os
-
-    shape = _os.environ.get("SPARK_GRAFT_PT_SHAPE", "fullck")
-    heavy = _rejoinable_heavy_cols(classified, cfg, raw) if shape == "narrowck" else []
-    out_cols = [
-        c for c in classified.columns
-        if c not in (
-            "_rule_id", "_task_id", "_end_flag", "_action", "_cancel",
-            "_custom_timeout", "_custom_inactivity", "parse_tags",
-        )
-    ] + ["tags"]
-
-    ck = classified.drop(*heavy).localCheckpoint(eager=False)
-    correlated_in = inject_seeds(narrow_for_correlation(ck, cfg), open_maps, cfg)
-    if gated_cancel:
-        # cancellation needs per-row inclusion for EVERY matched row of
-        # the gated rules (not just the rare null ones) — a row-key join,
-        # both sides reading the checkpointed blocks
-        guarded = apply_guards(sessionize(correlated_in, cfg), cfg)
-        incl_df = guarded.where(F.col("_rule_id").isin(gated_ids)).select(
-            "conv_id", "turn_idx", F.col("_included").alias("_g_included")
-        )
-        pt = passthrough_stream(ck, cfg, incl_df=incl_df)
-    else:
-        # The tagged-keys build side only needs `_included` for rows of
-        # gated rules whose REQUIRED agg input is NULL — literally the
-        # exceptions. Guard inclusion is a pure per-task property (every
-        # window partitions by the task key), so the correlation subtree
-        # can be pruned to the tasks CONTAINING a candidate row with a
-        # broadcast semi-join BEFORE its exchange (guide §3.2 shape):
-        # the guard-resolution exchange+sort then carries ~the candidate
-        # tasks' rows instead of the whole event stream. Results are
-        # identical — pruned-away tasks could never contribute a key.
-        from logstash_filter_aggregate_spark.config import KIND_COL, TASK_ID_COL
-        from logstash_filter_aggregate_spark.operators.correlate import value_col_name
-
-        cand = F.lit(False)
-        for r in cfg.rules:
-            if r.map_action == "create_or_update":
-                continue
-            req = [s for s in r.aggs if s.required and s.col]
-            if not req:
-                continue
-            nulls = F.lit(False)
-            for s in req:
-                nulls = nulls | F.col(value_col_name(r.rule_id, s.col)).isNull()
-            cand = cand | ((F.col(KIND_COL) == r.rule_id) & nulls)
-        cand_tasks = (
-            correlated_in.where(F.col(TASK_ID_COL).isNotNull() & cand)
-            .select(TASK_ID_COL)
-            .distinct()
-        )
-        pruned = correlated_in.join(F.broadcast(cand_tasks), TASK_ID_COL, "left_semi")
-        guarded = apply_guards(sessionize(pruned, cfg), cfg)
-        tagged_df = tagged_exception_keys(guarded, cfg)
-        pt = passthrough_stream(ck, cfg, tagged_df=tagged_df)
-    if heavy:
-        pt = pt.join(raw.select("conv_id", "turn_idx", *heavy), ["conv_id", "turn_idx"])
-        pt = pt.select(*out_cols)
-    return pt
-
-
 def passthrough_stream(
     classified: DataFrame,
     cfg: PipelineConfig,
@@ -326,14 +199,10 @@ def passthrough_stream(
     - ``tagged_df`` (gated REQUIRED-agg rules, the common case): the
       pre-decided exception keys broadcast onto the stream — the
       passthrough stays scan-shaped (zero event-stream shuffle); the
-      build side re-runs the narrow correlation stage once.
+      build side reads the persisted guarded frame.
     - ``incl_df`` (the prereduce path, or gated CANCEL rules): full
       per-row inclusion ``(conv_id, turn_idx, _g_included)`` joined on
       the row key — one extra exchange of the passthrough stream.
-
-    Without ``cache_sessions``, :func:`passthrough_shared_subtree` wraps
-    this so both deliveries read a lazily checkpointed classified stream
-    (one parse per job).
     """
     df = classified
     if incl_df is not None:
@@ -412,26 +281,33 @@ def run_pipeline(
     open_maps: DataFrame | None = None,
     prereduce_s: float | None = None,
     prereduce_assume_no_expiry: bool = False,
-    cache_sessions: bool = False,
     pre_parsed: bool = False,
 ) -> PipelineOutputs:
-    """``open_maps``: the previous run's ``open`` bucket — resumes the
+    """The routed outputs of one correlation, as lazy frames: building
+    them starts no Spark job.
+
+    The job set correlates once (PLANS.md): the closed sessions frame is
+    persisted and every session bucket is a filter over it. Configs whose
+    passthrough depends on guard results read one lazily checkpointed
+    classified stream (one parse), and persist the narrow guarded frame
+    that both the session aggregate and the passthrough read. The frames
+    are released by ``write_routed`` or the next ``run_pipeline``.
+
+    ``open_maps``: the previous run's ``open`` bucket — resumes the
     still-live maps (plans/resume.py, the aggregate_maps_path analog).
 
     ``prereduce_s``: hot-conversation skew handling (operators/skew.py):
     collapse correlation rows into per-(task, bucket) partial rows before
     the task-ordered window. Exact for gap splits when ``prereduce_s <=
     inactivity_timeout``; absolute-age splits quantize to bucket
-    boundaries (opting in accepts that)."""
+    boundaries (opting in accepts that).
+
+    ``pre_parsed``: ``transcripts`` already went through :func:`parse`
+    and its caller owns its materialization (run_multi checkpoints the
+    parse it shares across patterns), so it is not checkpointed again."""
     from logstash_filter_aggregate_spark.plans.resume import inject_seeds
 
-    # pre_parsed: the caller already ran parse() (run_multi shares one
-    # parse across patterns — the parse stage is the most expensive one,
-    # so M patterns must not pay it M times)
-    if cache_sessions:
-        # this run registers fresh persisted frames below — release the
-        # previous caching run's first (never frames from THIS run)
-        release_pipeline_caches()
+    release_pipeline_caches()  # this run persists its own frames below
     parsed = transcripts if pre_parsed else parse(transcripts, groks, backend=parse_backend)
     parsed = enrich(parsed, dims)
     classified = classify(parsed, cfg)
@@ -441,6 +317,13 @@ def run_pipeline(
     gated_emit = any(r.emit for r in gated)
     gated_cancel = any(r.cancel for r in gated)
     gated_req = any(any(s.required and s.col for s in r.aggs) for r in gated)
+    if (gated_cancel or gated_req) and not pre_parsed:
+        # the passthrough joins guard results back onto the stream, so the
+        # correlation and the passthrough both read the classified stream:
+        # one lazy checkpoint makes that one parse. It sits on the
+        # exchange-free stream only — over an exchange, AQE would run the
+        # shuffle stages while this plan is built.
+        classified = classified.localCheckpoint(eager=False)
     if prereduce_s is not None:
         from logstash_filter_aggregate_spark.operators.skew import prereduce
 
@@ -457,23 +340,14 @@ def run_pipeline(
         correlated_in = narrow_for_correlation(classified, cfg)
     correlated_in = inject_seeds(correlated_in, open_maps, cfg)
 
-    sessionized = sessionize(correlated_in, cfg)
-    guarded = apply_guards(sessionized, cfg)
-    if cache_sessions and (gated_req or gated_cancel):
-        # a multi-bucket GATED job consumes the guarded frame twice: the
-        # session aggregation AND the gated-tag key set / cancel
-        # inclusion frame. Persist the NARROW correlated frame so the
-        # correlation stage (parse -> task exchange -> windows)
-        # materializes exactly once across the whole job set. Narrow =
-        # engine cols + pre-evaluated agg inputs only (no text), so the
-        # persist footprint is a small fraction of the input even at
-        # cluster scale. Ungated configs skip this — only the (tiny,
-        # separately persisted) sessions frame is re-read there, and
-        # caching the event stream would be pure overhead. Registered in
-        # _LIVE_CACHES (released by the next caching run or
-        # release_pipeline_caches()).
-        guarded = guarded.persist()
-        _LIVE_CACHES.append(guarded)
+    guarded = apply_guards(sessionize(correlated_in, cfg), cfg)
+    if prereduce_s is None and (gated_emit or gated_cancel or gated_req):
+        # the gated side effects read the guarded frame besides the session
+        # aggregate: persisting it runs the task exchange, the windows and
+        # the guards once for the job set. Narrow = engine cols +
+        # pre-evaluated agg inputs only (no text), so the footprint is a
+        # small fraction of the input.
+        guarded = _persisted(guarded)
 
     # per-row inclusion for gated code side-effects (see the
     # passthrough_stream docstring for the cost model of each delivery).
@@ -482,18 +356,11 @@ def run_pipeline(
     # under prereduce's own no-mid-segment-expiry precondition).
     incl_df = None
     tagged_df = None
-    shared_pt = False
     if prereduce_s is not None:
         if gated_emit or gated_cancel or gated_req:
             from logstash_filter_aggregate_spark.operators.skew import guard_inclusion_frame
 
             incl_df = guard_inclusion_frame(classified, cfg)
-    elif (gated_cancel or gated_req) and not cache_sessions:
-        # single-consumer default: the passthrough checkpoints the
-        # classified stream lazily and derives both the guard resolution
-        # and the main stage from it (passthrough_shared_subtree) — one
-        # parse per job, no second correlation subtree
-        shared_pt = True
     elif gated_cancel:
         gated_ids = [
             r.rule_id for r in gated
@@ -504,29 +371,14 @@ def run_pipeline(
         )
     elif gated_req:
         tagged_df = tagged_exception_keys(guarded, cfg)
-        if cache_sessions:
-            # the key set is tiny — persist it too, so each passthrough
-            # consumer broadcasts the rows instead of re-filtering the
-            # (persisted) guarded frame
-            tagged_df = tagged_df.persist()
-            _LIVE_CACHES.append(tagged_df)
 
-    sessions = aggregate_sessions(guarded, cfg)
-    wm_value = None
-    if cache_sessions:
-        # the aggregated sessions are tiny relative to the event stream —
-        # persist them so each bucket write doesn't recompute the final
-        # aggregation, and materialize the watermark scalar once
-        # (scan-only job) so the bucket plans embed a literal instead of
-        # re-scanning the input.
-        sessions = sessions.persist()
-        _LIVE_CACHES.append(sessions)
-        wm_value = transcripts.agg(F.max("ts")).first()[0]
     # watermark from the raw input: scan-only (ts column pruned down to
-    # the parquet reader), so routing never recomputes the pipeline
-    routed: RoutedSessions = route_sessions(
-        sessions, cfg, watermark_df=transcripts, watermark_value=wm_value
+    # the parquet reader). The closed frame is persisted, so the buckets
+    # share one aggregate, one routing window and one watermark scan.
+    closed = _persisted(
+        close_sessions(aggregate_sessions(guarded, cfg), cfg, watermark_df=transcripts)
     )
+    routed = split_sessions(closed, cfg)
 
     inline = routed.inline
     emitted = inline_emissions(
@@ -542,21 +394,10 @@ def run_pipeline(
         timeout=routed.timeout,
         inline=inline,
         open=routed.open,
-        passthrough=(
-            passthrough_shared_subtree(
-                classified, cfg, open_maps, gated_cancel,
-                [
-                    r.rule_id for r in gated
-                    if r.cancel or any(s.required and s.col for s in r.aggs)
-                ],
-                raw=transcripts if not pre_parsed else None,
-            )
-            if shared_pt
-            else passthrough_stream(
-                classified, cfg,
-                incl_df=incl_df if (gated_cancel or gated_req) else None,
-                tagged_df=tagged_df,
-            )
+        passthrough=passthrough_stream(
+            classified, cfg,
+            incl_df=incl_df if (gated_cancel or gated_req) else None,
+            tagged_df=tagged_df,
         ),
         sessions=routed.sessions,
     )

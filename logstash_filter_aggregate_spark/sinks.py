@@ -18,14 +18,20 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import time
 from dataclasses import asdict, dataclass, field
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from logstash_filter_aggregate_spark.config import PipelineConfig
+from logstash_filter_aggregate_spark.plans.pipeline import release_pipeline_caches
+
+log = logging.getLogger(__name__)
 
 SINKS = ("completed", "timeout", "inline", "open", "passthrough")
 
@@ -70,9 +76,12 @@ class RunManifest:
 
 
 def input_files_of(df: DataFrame) -> list[str]:
+    """The files ``df`` reads; empty, with a warning, when Spark cannot
+    list them (the manifest then records no input files)."""
     try:
         return sorted(df.inputFiles())
-    except Exception:
+    except (Py4JError, PySparkException) as e:
+        log.warning("input files unknown, manifest records none: %s", e)
         return []
 
 
@@ -91,41 +100,46 @@ def write_routed(
       their own run scope only (idempotent).
     - already-done sinks (per the manifest) are skipped.
     - per-sink row counts via ``Observation`` — no separate count() jobs.
+    - the frames ``run_pipeline`` persisted are released when the writes
+      end, whether they succeed or raise.
     """
-    run_id = run_id_for(input_desc, cfg)
-    manifest = RunManifest.load(base_path, run_id)
-    if manifest is None:
-        files_src = input_df if input_df is not None else next(iter(outputs.values()))
-        manifest = RunManifest(
-            run_id=run_id,
-            input_desc=input_desc,
-            input_files=input_files_of(files_src),
-            config_fingerprint=config_fingerprint(cfg),
-            started_at=time.time(),
-        )
-    for sink, df in outputs.items():
-        if sink == "sessions":
-            continue
-        if manifest.sinks.get(sink, {}).get("done"):
-            continue  # resumable: this sink already landed for this run_id
-        path = f"{base_path}/{sink}/run_id={run_id}"
-        obs = Observation(f"rows_{sink}")
-        t0 = time.time()
-        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = observed.write.mode("overwrite").format(fmt)
-        for col in (partition_by or {}).get(sink, []):
-            writer = writer.partitionBy(col)
-        writer.save(path)
-        manifest.sinks[sink] = {
-            "rows": obs.get["rows"],
-            "path": path,
-            "wall_s": round(time.time() - t0, 3),
-            "done": True,
-        }
-        manifest.save(base_path)  # checkpoint after every sink
-    manifest.finished_at = time.time()
-    manifest.save(base_path)
-    return manifest
+    try:
+        run_id = run_id_for(input_desc, cfg)
+        manifest = RunManifest.load(base_path, run_id)
+        if manifest is None:
+            files_src = input_df if input_df is not None else next(iter(outputs.values()))
+            manifest = RunManifest(
+                run_id=run_id,
+                input_desc=input_desc,
+                input_files=input_files_of(files_src),
+                config_fingerprint=config_fingerprint(cfg),
+                started_at=time.time(),
+            )
+        for sink, df in outputs.items():
+            if sink == "sessions":
+                continue
+            if manifest.sinks.get(sink, {}).get("done"):
+                continue  # resumable: this sink already landed for this run_id
+            path = f"{base_path}/{sink}/run_id={run_id}"
+            obs = Observation(f"rows_{sink}")
+            t0 = time.perf_counter()
+            observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            writer = observed.write.mode("overwrite").format(fmt)
+            for col in (partition_by or {}).get(sink, []):
+                writer = writer.partitionBy(col)
+            writer.save(path)
+            manifest.sinks[sink] = {
+                "rows": obs.get["rows"],
+                "path": path,
+                "wall_s": round(time.perf_counter() - t0, 3),
+                "done": True,
+            }
+            manifest.save(base_path)  # checkpoint after every sink
+        manifest.finished_at = time.time()
+        manifest.save(base_path)
+        return manifest
+    finally:
+        release_pipeline_caches()
 
 
 def partition_metrics(df: DataFrame) -> DataFrame:
@@ -152,7 +166,9 @@ def write_run(
     input_desc: str,
     fmt: str = "parquet",
 ) -> RunManifest:
-    """Full run: routed sinks + per-partition lineage table."""
+    """Full run: routed sinks + per-partition lineage table. The pipeline's
+    persisted frames are released by ``write_routed`` before the lineage
+    table, which reads only ``transcripts``."""
     manifest = write_routed(
         outputs.as_dict(), base_path, cfg, input_desc, fmt=fmt, input_df=transcripts
     )

@@ -5,8 +5,9 @@ plans, so a refactor that silently adds a shuffle or widens a scan
 fails CI instead of surfacing at 100x the data.
 """
 
+import re
+
 import pytest
-from pyspark.sql import functions as F
 
 from logstash_filter_aggregate_spark.operators import dedup
 from logstash_filter_aggregate_spark.plans.pipeline import (
@@ -46,10 +47,16 @@ def transcripts_path(spark, tmp_path_factory):
 def test_correlation_stage_single_task_exchange(spark, transcripts_path, cfg_fn):
     # the whole sessionize/guard/aggregate stage must share ONE hash
     # exchange on the task key: every window and the session groupBy are
-    # co-partitioned (the claim BENCH/BASELINE.md's scaling rests on)
+    # co-partitioned (the claim BENCH/BASELINE.md's scaling rests on).
+    # Gated configs persist the guarded frame: its windows and guards
+    # share the one task exchange, pinned on its plan, and the session
+    # groupBy over the cache re-exchanges the narrow rows (PLANS.md).
+    from logstash_filter_aggregate_spark.plans.pipeline import _LIVE_CACHES
+
     t = spark.read.parquet(transcripts_path)
     out = run_pipeline(spark, t, cfg_fn())
-    plan = _plan(out.sessions)
+    guarded = [df for df in _LIVE_CACHES if "_included" in df.columns]
+    plan = _plan(guarded[0] if guarded else out.sessions)
     n_task_exchanges = plan.count("Exchange hashpartitioning(_task_id")
     assert n_task_exchanges == 1, plan
 
@@ -85,24 +92,33 @@ def test_dim_join_broadcasts(spark, transcripts_path):
 
 
 def test_guard_gated_passthrough_plan_shapes(spark, transcripts_path):
-    # Guard-gated configs (example1's update rule, cancel rules): the
-    # single-consumer passthrough reads a lazily CHECKPOINTED classified
-    # stream shared by the guard-resolution build side and the main
-    # stage (passthrough_shared_subtree) — the job parses the input
-    # exactly once; the round-3 shape planned an independent second
-    # correlation subtree as the broadcast build side, re-running
-    # scan+parse and doubling the job cost.
+    # Guard-gated configs (example1's update rule, cancel rules) correlate
+    # ONCE per job set: the classified stream is lazily checkpointed and
+    # the narrow guarded frame persisted. The passthrough broadcasts the
+    # exception keys read off that frame onto the checkpointed stream:
+    # no parquet scan, no second correlation subtree, and the same
+    # persisted frame feeds the sessions aggregation.
     from logstash_filter_aggregate_spark.config import CorrelationRule, PipelineConfig
 
     t = spark.read.parquet(transcripts_path)
-    tagged_plan = _plan(
-        run_pipeline(spark, t, example1_config(timeout=3600.0)).passthrough
-    )
+    out = run_pipeline(spark, t, example1_config(timeout=3600.0))
+    out.sessions.count()  # materializes the persisted correlation once
+    tagged_plan = _plan(out.passthrough)
     assert "SortMergeJoin" not in tagged_plan, tagged_plan
     assert "BroadcastHashJoin" in tagged_plan, tagged_plan
     # no parquet scan anywhere: every leg reads the checkpointed blocks
     assert "Scan parquet" not in tagged_plan, tagged_plan
     assert tagged_plan.count("Scan ExistingRDD") >= 2, tagged_plan
+    # the stream side (everything before the in-memory build side) is
+    # scan-shaped: no correlation windows. InMemoryTableScan's printed
+    # CACHED plan repeats the correlation subtree, so only the prefix is
+    # the live stream plan.
+    assert "InMemoryTableScan" in tagged_plan, tagged_plan
+    stream_side = tagged_plan.partition("InMemoryTableScan")[0]
+    assert "Scan ExistingRDD" in stream_side, tagged_plan
+    assert "Window" not in stream_side, tagged_plan
+    # the sessions aggregation reads the same persisted frame
+    assert "InMemoryTableScan" in _plan(out.sessions)
 
     cancel_cfg = PipelineConfig(
         task_id="%{taskid}",
@@ -126,79 +142,34 @@ def test_guard_gated_passthrough_plan_shapes(spark, transcripts_path):
     assert "Window" not in plain_plan, plain_plan
 
 
-def test_narrowck_passthrough_shape_parity(spark, transcripts_path, monkeypatch):
-    # SPARK_GRAFT_PT_SHAPE=narrowck: the shared-subtree checkpoint drops
-    # the raw text column and rejoins it from the raw scan by row key —
-    # measured a wash vs the default full-width checkpoint (docstring),
-    # kept as a disk-vs-network tradeoff knob. Same rows, same columns,
-    # same order of columns; the checkpoint must NOT carry text (the
-    # rejoin scan is the only parquet leg allowed to).
-    from logstash_filter_aggregate_spark.config import CorrelationRule, PipelineConfig
+def test_routed_write_parses_once(spark, transcripts_path, tmp_path):
+    # One example1 routed write parses the input once: of the SQL plans
+    # the run starts, only the lazy localCheckpoint of the classified
+    # stream reads `text` from parquet (it starts no job; the first sink
+    # job materializes it). The five sink writes read the checkpointed
+    # blocks and the persisted frames, never the raw text again.
+    from logstash_filter_aggregate_spark.sinks import write_routed
 
-    t = spark.read.parquet(transcripts_path)
-    base = run_pipeline(spark, t, example1_config(timeout=3600.0)).passthrough
-    monkeypatch.setenv("SPARK_GRAFT_PT_SHAPE", "narrowck")
-    narrow = run_pipeline(spark, t, example1_config(timeout=3600.0)).passthrough
-    assert narrow.columns == base.columns
-    # the rejoin leg is the ONLY parquet scan in the narrow plan, and it
-    # reads just the row key + text (everything else rides the checkpoint)
-    nplan = _plan(narrow)
-    scan_lines = [ln for ln in nplan.splitlines() if "ReadSchema" in ln]
-    assert scan_lines, nplan
-    for ln in scan_lines:
-        schema = ln.split("ReadSchema:", 1)[1]
-        assert "text" in schema and "role" not in schema, ln
-    key = ["conv_id", "turn_idx"]
-    sel = key + [F.to_json("tags").alias("tags"), "text"]
-    a = {tuple(r) for r in base.select(*sel).collect()}
-    b = {tuple(r) for r in narrow.select(*sel).collect()}
-    assert a == b
+    store = spark._jsparkSession.sharedState().statusStore()
 
-    # gated-cancel delivery under narrowck too
-    cancel_cfg = PipelineConfig(
-        task_id="%{taskid}",
-        rules=(
-            CorrelationRule("start", "logger = 'TASK_START'", map_action="create"),
-            CorrelationRule("err", "err_tool is not null", map_action="update", cancel=True),
-        ),
-        timeout=3600.0,
-    )
-    narrow_c = run_pipeline(spark, t, cancel_cfg).passthrough
-    monkeypatch.delenv("SPARK_GRAFT_PT_SHAPE")
-    base_c = run_pipeline(spark, t, cancel_cfg).passthrough
-    assert narrow_c.columns == base_c.columns
-    ac = {tuple(r) for r in base_c.select(*sel).collect()}
-    bc = {tuple(r) for r in narrow_c.select(*sel).collect()}
-    assert ac == bc
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
 
+    def reads_text(plan: str) -> bool:
+        # only file scans print a ReadSchema
+        return re.search(r"ReadSchema: struct<(.*[<,])?text:", plan) is not None
 
-def test_guard_gated_cached_job_set_runs_correlation_once(spark, transcripts_path):
-    # Multi-bucket jobs (cache_sessions=True): the narrow correlated
-    # frame is persisted, so the correlation stage materializes ONCE
-    # across the whole job set — the passthrough then stays scan-shaped,
-    # broadcasting the (persisted) exception-key set: one parquet scan,
-    # no Window, the build side an in-memory read.
-    from logstash_filter_aggregate_spark.plans.pipeline import release_pipeline_caches
-
-    t = spark.read.parquet(transcripts_path)
-    out = run_pipeline(spark, t, example1_config(timeout=3600.0), cache_sessions=True)
-    try:
-        out.sessions.count()  # materializes the persisted correlation once
-        pt_plan = _plan(out.passthrough)
-        assert "BroadcastHashJoin" in pt_plan, pt_plan
-        assert "InMemoryTableScan" in pt_plan, pt_plan
-        # the stream side (everything before the in-memory build side) is
-        # scan-shaped: one parquet scan, no correlation windows —
-        # InMemoryTableScan's printed CACHED plan repeats the correlation
-        # subtree's scans, so only the prefix is the live stream plan
-        stream_side = pt_plan.partition("InMemoryTableScan")[0]
-        assert stream_side.count("Scan parquet") == 1, pt_plan
-        assert "Window" not in stream_side, pt_plan
-        # the sessions aggregation reads the same persisted frame
-        sess_plan = _plan(out.sessions)
-        assert "InMemoryTableScan" in sess_plan, sess_plan
-    finally:
-        release_pipeline_caches()
+    before = {e.executionId() for e in executions()}
+    cfg = example1_config(timeout=3600.0)
+    out = run_pipeline(spark, spark.read.parquet(transcripts_path), cfg)
+    write_routed(out.as_dict(), str(tmp_path / "sinks"), cfg, input_desc="parse-once")
+    new = [e for e in executions() if e.executionId() not in before]
+    writes = [e for e in new if e.jobs().size() > 0]
+    assert len(writes) == 5, [e.description() for e in new]
+    assert not [e.description() for e in writes if reads_text(e.physicalPlanDescription())]
+    parses = [e for e in new if reads_text(e.physicalPlanDescription())]
+    assert len(parses) == 1 and parses[0].jobs().size() == 0, [e.description() for e in parses]
 
 
 def test_no_cartesian_or_nested_loop_in_pipeline(spark, transcripts_path):

@@ -111,6 +111,113 @@ def test_write_routed_sinks_and_manifest(spark, tmp_path):
     assert {"input_file", "rows", "min_ts", "max_ts"} <= set(pm.columns)
 
 
+def test_routed_run_is_lazy_and_leak_free(spark, tmp_path):
+    # building the outputs starts no Spark job; the frames the run
+    # persisted are released when write_routed returns AND when it raises
+    # partway; a later run over input rewritten at the same path (outside
+    # Spark, so no cache refresh hook fires) reads the new rows, not an
+    # earlier run's cache
+    import shutil
+
+    from pyspark import StorageLevel
+
+    from logstash_filter_aggregate_spark.plans import pipeline as P
+    from logstash_filter_aggregate_spark.sinks import run_id_for, write_routed
+
+    cfg = example1_config(timeout=3600.0)
+    path = str(tmp_path / "in")
+    generate_transcripts(spark, n_convs=12, hot_convs=0).write.parquet(path)
+    t = spark.read.parquet(path)  # schema resolved before the jobs are counted
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup(None))
+    out = run_pipeline(spark, t, cfg)
+    assert set(tracker.getJobIdsForGroup(None)) <= jobs_before
+    persisted = list(P._LIVE_CACHES)
+    assert len(persisted) == 2  # the guarded and the closed sessions frames
+
+    def released():
+        return all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+    write_routed(out.as_dict(), str(tmp_path / "ok"), cfg, input_desc="ok")
+    assert released()
+
+    out = run_pipeline(spark, t, cfg)
+    persisted = list(P._LIVE_CACHES)
+    with pytest.raises(Exception):
+        # the open bucket cannot be partitioned by a missing column: the
+        # write raises after the earlier sinks landed
+        write_routed(
+            out.as_dict(), str(tmp_path / "fail"), cfg, input_desc="fail",
+            partition_by={"open": ["no_such_column"]},
+        )
+    done = RunManifest.load(str(tmp_path / "fail"), run_id_for("fail", cfg))
+    assert done is not None and done.sinks["completed"]["done"]
+    assert released()
+
+    # the input alternates between 12 and 30 conversations
+    for n_convs, cfg in ((30, example3_config(timeout=600.0)), (12, example1_config(timeout=3600.0))):
+        staged = str(tmp_path / f"staged{n_convs}")
+        generate_transcripts(spark, n_convs=n_convs, hot_convs=0).write.parquet(staged)
+        expected = run_pipeline(spark, spark.read.parquet(staged), cfg).sessions.count()
+        # persisted and left pinned: no write releases it
+        n_first = run_pipeline(spark, spark.read.parquet(path), cfg).sessions.count()
+        shutil.rmtree(path)
+        shutil.move(staged, path)
+        second = run_pipeline(spark, spark.read.parquet(path), cfg).sessions.count()
+        assert second == expected != n_first
+
+
+def test_release_skips_frames_of_a_stopped_session():
+    # a driver that stops its SparkSession and starts another (as the
+    # benchmark's traced run does) leaves the last run's frames persisted
+    # against the dead context; the next run_pipeline releases them
+    # without failing. Runs in its own process: the test session stays up.
+    import os
+    import subprocess
+    import sys
+
+    script = """
+from logstash_filter_aggregate_spark import get_spark
+from logstash_filter_aggregate_spark.plans.pipeline import example1_config, run_pipeline
+from logstash_filter_aggregate_spark.sources.transcripts import generate_transcripts
+
+cfg = example1_config(timeout=3600.0)
+for _ in range(2):
+    s = get_spark(app_name="restart", master="local[1]", shuffle_partitions=1)
+    out = run_pipeline(s, generate_transcripts(s, n_convs=4, hot_convs=0), cfg)
+    assert out.sessions.count() > 0
+    s.stop()
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g",
+           "PYTHONPATH": os.pathsep.join([root, os.environ.get("PYTHONPATH", "")])}
+    r = subprocess.run(
+        [sys.executable, "-c", script], cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+
+
+def test_input_files_of_warns_instead_of_hiding_errors(caplog):
+    # a Spark-side listing failure leaves the manifest without input files
+    # and says so; any other error is a bug and propagates
+    from pyspark.errors import PySparkException
+
+    from logstash_filter_aggregate_spark.sinks import input_files_of
+
+    class Frame:
+        def __init__(self, exc):
+            self.exc = exc
+
+        def inputFiles(self):
+            raise self.exc
+
+    with caplog.at_level("WARNING", logger="logstash_filter_aggregate_spark.sinks"):
+        assert input_files_of(Frame(PySparkException("listing failed"))) == []
+    assert "listing failed" in caplog.text
+    with pytest.raises(TypeError):
+        input_files_of(Frame(TypeError("not a DataFrame")))
+
+
 def test_seed_schema_validation(spark):
     from logstash_filter_aggregate_spark.config import ConfigurationError
     from logstash_filter_aggregate_spark.plans.resume import seed_rows_from_open

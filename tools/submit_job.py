@@ -48,8 +48,7 @@ def main() -> None:
     out = None
     for i in range(args.reps):
         t0 = time.perf_counter()
-        out = P.run_pipeline(spark, t, cfg, prereduce_s=args.prereduce_s,
-                             cache_sessions=len(buckets) > 1 or args.count_sinks)
+        out = P.run_pipeline(spark, t, cfg, prereduce_s=args.prereduce_s)
         if args.output:
             manifest = write_run(spark, out, t, args.output, cfg, input_desc=args.input)
             sink_rows = {k: v.get("rows") for k, v in manifest.sinks.items() if "rows" in v}
@@ -59,10 +58,11 @@ def main() -> None:
                     df.write.mode("overwrite").format("noop").save()
         walls.append(time.perf_counter() - t0)
         if not (args.count_sinks and i == args.reps - 1):
-            out.sessions.unpersist(blocking=True)  # reps must not reuse the cache
+            P.release_pipeline_caches()  # reps must not reuse the cache
     wall = min(walls)
     if args.count_sinks:
-        # UNTIMED, reusing the final rep's cached sessions: per-sink row
+        # UNTIMED, reusing the final rep's persisted frames (released already
+        # when --output wrote them): per-sink row
         # counts AND an order-independent content checksum (sum of
         # xxhash64 over the canonical JSON of each row) — both
         # deterministic functions of the routed row MULTISET, so they
@@ -80,7 +80,7 @@ def main() -> None:
                 F.sum(F.xxhash64(row_json).cast("decimal(38,0)")).alias("chk"),
             ).first()
             sink_rows[name] = {"rows": agg["n"], "checksum": str(agg["chk"])}
-        out.sessions.unpersist(blocking=True)
+        P.release_pipeline_caches()
     n = t.count()
     print(json.dumps({
         "input": args.input, "config": args.config, "turns": n,
