@@ -92,33 +92,21 @@ def test_dim_join_broadcasts(spark, transcripts_path):
 
 
 def test_guard_gated_passthrough_plan_shapes(spark, transcripts_path):
-    # Guard-gated configs (example1's update rule, cancel rules) correlate
-    # ONCE per job set: the classified stream is lazily checkpointed and
-    # the narrow guarded frame persisted. The passthrough broadcasts the
-    # exception keys read off that frame onto the checkpointed stream:
-    # no parquet scan, no second correlation subtree, and the same
-    # persisted frame feeds the sessions aggregation.
+    # Guard-gated configs (example1's update rule, cancel rules): the
+    # passthrough reads the lazily CHECKPOINTED classified stream, so the
+    # job parses the input exactly once: no parquet scan, no second
+    # correlation subtree as the broadcast build side.
     from logstash_filter_aggregate_spark.config import CorrelationRule, PipelineConfig
 
     t = spark.read.parquet(transcripts_path)
-    out = run_pipeline(spark, t, example1_config(timeout=3600.0))
-    out.sessions.count()  # materializes the persisted correlation once
-    tagged_plan = _plan(out.passthrough)
+    tagged_plan = _plan(
+        run_pipeline(spark, t, example1_config(timeout=3600.0)).passthrough
+    )
     assert "SortMergeJoin" not in tagged_plan, tagged_plan
     assert "BroadcastHashJoin" in tagged_plan, tagged_plan
     # no parquet scan anywhere: every leg reads the checkpointed blocks
     assert "Scan parquet" not in tagged_plan, tagged_plan
     assert tagged_plan.count("Scan ExistingRDD") >= 2, tagged_plan
-    # the stream side (everything before the in-memory build side) is
-    # scan-shaped: no correlation windows. InMemoryTableScan's printed
-    # CACHED plan repeats the correlation subtree, so only the prefix is
-    # the live stream plan.
-    assert "InMemoryTableScan" in tagged_plan, tagged_plan
-    stream_side = tagged_plan.partition("InMemoryTableScan")[0]
-    assert "Scan ExistingRDD" in stream_side, tagged_plan
-    assert "Window" not in stream_side, tagged_plan
-    # the sessions aggregation reads the same persisted frame
-    assert "InMemoryTableScan" in _plan(out.sessions)
 
     cancel_cfg = PipelineConfig(
         task_id="%{taskid}",
@@ -140,6 +128,36 @@ def test_guard_gated_passthrough_plan_shapes(spark, transcripts_path):
     )
     assert "Join" not in plain_plan, plain_plan
     assert "Window" not in plain_plan, plain_plan
+
+
+def test_guard_gated_cached_job_set_runs_correlation_once(spark, transcripts_path):
+    # The narrow guarded frame is persisted, so the correlation stage
+    # materializes ONCE across the whole job set: the passthrough then
+    # stays scan-shaped, broadcasting the (persisted) exception-key set
+    # onto the checkpointed stream, the build side an in-memory read, and
+    # the same persisted frame feeds the sessions aggregation.
+    from logstash_filter_aggregate_spark.plans.pipeline import release_pipeline_caches
+
+    t = spark.read.parquet(transcripts_path)
+    out = run_pipeline(spark, t, example1_config(timeout=3600.0))
+    try:
+        out.sessions.count()  # materializes the persisted correlation once
+        pt_plan = _plan(out.passthrough)
+        assert "BroadcastHashJoin" in pt_plan, pt_plan
+        assert "InMemoryTableScan" in pt_plan, pt_plan
+        # the stream side (everything before the in-memory build side) is
+        # scan-shaped: the checkpointed blocks, no correlation windows —
+        # InMemoryTableScan's printed CACHED plan repeats the correlation
+        # subtree, so only the prefix is the live stream plan
+        stream_side = pt_plan.partition("InMemoryTableScan")[0]
+        assert "Scan ExistingRDD" in stream_side, pt_plan
+        assert "Scan parquet" not in stream_side, pt_plan
+        assert "Window" not in stream_side, pt_plan
+        # the sessions aggregation reads the same persisted frame
+        sess_plan = _plan(out.sessions)
+        assert "InMemoryTableScan" in sess_plan, sess_plan
+    finally:
+        release_pipeline_caches()
 
 
 def test_routed_write_parses_once(spark, transcripts_path, tmp_path):
