@@ -151,7 +151,7 @@ class PipelineConfig:
     # window-based split is exact for gap/end splits; the absolute-age cap
     # within a session is iterative. False = single-pass approximation
     # (age measured from each gap-session's creation); True = exact
-    # per-group scan via applyInPandas.
+    # per-task scan, one mapInArrow call per task-clustered partition.
     exact_age_cap: bool = False
 
     def __post_init__(self) -> None:

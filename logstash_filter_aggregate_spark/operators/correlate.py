@@ -58,7 +58,7 @@ def apply_guards(sessions: DataFrame, cfg: PipelineConfig) -> DataFrame:
         # create_or_update never hits a guard return): the first row of
         # each segment creates the map and every row is included — no
         # guard windows needed. This matters most in exact_age_cap mode,
-        # where the applyInPandas output has lost its partitioning: with
+        # where the mapInArrow scan's output reports no partitioning: with
         # no post-scan window, the only shuffle after the scan carries
         # per-session aggregation PARTIALS instead of the event stream.
         return sessions.withColumn("_included", F.lit(True))

@@ -20,9 +20,17 @@ reference's global mutex + ``-w 1`` worker (``docs/index.asciidoc:29-30``).
 
 from __future__ import annotations
 
-import pandas as pd
+import functools
+
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from logstash_filter_aggregate_spark.config import ORDER_COL, TASK_ID_COL, PipelineConfig
 
@@ -30,6 +38,9 @@ from logstash_filter_aggregate_spark.config import ORDER_COL, TASK_ID_COL, Pipel
 # arrival order under the deterministic event-time mode, spec:374-390),
 # then (conv_id, turn_idx) as the stable tiebreak (SURVEY.md §7 hard pt 4).
 ORDER_BY = ["ts", "conv_id", "turn_idx"]
+
+# columns the exact scan appends to its input rows
+SCAN_COLS = (ORDER_COL, "_end_seg", "_gap_seg", "_age_seg")
 
 
 def _w():
@@ -68,17 +79,15 @@ def sessionize(classified: DataFrame, cfg: PipelineConfig) -> DataFrame:
     part = part.withColumn("_close_flag", close_flag)
 
     if cfg.exact_age_cap and cfg.timeout_timestamp_field is not None:
-        # Window-free exact path: the per-task scan sorts its group in
-        # pandas anyway and its session-hop subsumes every split, so the
-        # pre-scan JVM window pass is pure waste — `_gap_seg` was
-        # computed and then ZEROED by the scan, and `_ord`/`_end_seg`
-        # are one arange/cumsum on the scan's own sorted arrays. Removing
-        # it drops the window sort + window eval of the whole event
-        # stream from the (single-task-per-hot-task) stage; the one
-        # exchange the stage needs now comes from the applyInPandas
-        # grouping itself. (push_previous_exact+exact_age_cap is
-        # rejected by config validation, and processing-time mode never
-        # reaches exact mode, so no run-break/proc-time interplay here.)
+        # Window-free exact path: the scan's session-hop subsumes every
+        # split, so no JVM window pass runs before it — `_gap_seg` would
+        # be ZEROED by the scan, and `_ord`/`_end_seg` are one
+        # arange/cumsum on the scan's own sorted arrays. The stage is one
+        # exchange on the task key, one sort in the scan's order, and
+        # one Arrow-native scan call per partition.
+        # (push_previous_exact+exact_age_cap is rejected by config
+        # validation, and processing-time mode never reaches exact mode,
+        # so no run-break/proc-time interplay here.)
         return _exact_age_seg(part, cfg)
 
     if cfg.push_previous_exact:
@@ -214,9 +223,14 @@ def _window_age_seg(
 
 
 def _exact_age_seg(part: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Exact per-task scan via applyInPandas (SURVEY.md §7 hard part 1).
+    """Exact per-task scan, one Arrow-native call per partition (SURVEY.md
+    §7 hard part 1).
 
-    Two tiers inside the scan:
+    The JVM clusters the rows by task (one hash exchange on ``_task_id``)
+    and sorts each partition by ``(_task_id, ts, conv_id, turn_idx)``,
+    nulls last; ``mapInArrow`` then hands the sorted partition to
+    :func:`_scan_partition` as a stream of Arrow batches. Each task's
+    slice runs one of these tiers on numpy views:
 
     - **fast path** (the common shape — every row ``create_or_update``,
       no per-map overrides): session-hop with numpy ``searchsorted``. Each
@@ -238,89 +252,158 @@ def _exact_age_seg(part: DataFrame, cfg: PipelineConfig) -> DataFrame:
       Every tier is fuzz-pinned against an independent per-row reference
       simulator (``tests/test_timeouts.py::_reference_scan``).
 
-    Groups are single tasks — bounded by the reference's own working-set
-    assumption (one in-memory map per task, warning at 5000 maps,
-    ``aggregate.rb:499-516``). Resume seed rows age from their carried
-    ``_seed_creation_ts``, not their injection position.
+    The scan holds at most one task plus one batch — bounded by the
+    reference's own working-set assumption (one in-memory map per task,
+    warning at 5000 maps, ``aggregate.rb:499-516``). Resume seed rows age
+    from their carried ``_seed_creation_ts``, not their injection
+    position.
     """
-    timeout = float(cfg.timeout)
-    inactivity = float(cfg.effective_inactivity_timeout)
-    out_schema = part.withColumns(
-        {
-            ORDER_COL: F.lit(0).cast("int"),
-            "_end_seg": F.lit(0).cast("int"),
-            "_gap_seg": F.lit(0).cast("int"),
-            "_age_seg": F.lit(0).cast("int"),
-        }
-    ).schema
-    has_seed_cols = "_seed_creation_ts" in part.columns
+    schema = part.schema
+    ts_type = schema["ts"].dataType
+    if not isinstance(ts_type, (TimestampType, TimestampNTZType)):
+        raise TypeError(f"exact_age_cap needs a timestamp 'ts' column, got {ts_type.simpleString()}")
+    out_schema = StructType(
+        schema.fields + [StructField(c, IntegerType(), False) for c in SCAN_COLS]
+    )
+    scan = functools.partial(
+        _scan_partition,
+        timeout=float(cfg.timeout),
+        inactivity=float(cfg.effective_inactivity_timeout),
+    )
+    return (
+        part.repartition(TASK_ID_COL)
+        .sortWithinPartitions(*[F.col(c).asc_nulls_last() for c in (TASK_ID_COL, *ORDER_BY)])
+        .mapInArrow(scan, out_schema)
+    )
 
+
+def _scan_partition(batches, timeout: float, inactivity: float):
+    """``mapInArrow`` body over one partition sorted by (task, ts,
+    conv_id, turn_idx). Every task whose last row has arrived is scanned;
+    the trailing task of a batch may continue in the next one, so it is
+    carried until a batch starts a different task (or the partition
+    ends)."""
     import numpy as np
+    import pyarrow.compute as pc
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        # sort_values returns a fresh frame — safe to assign columns on
-        # directly (the former extra .copy() doubled the group's memory
-        # traffic for nothing)
-        pdf = pdf.sort_values(["ts", "conv_id", "turn_idx"], kind="mergesort")
-        ts = pdf["ts"].astype("datetime64[ns]").astype("int64").to_numpy() / 1e9
-        n = len(pdf)
-        # _ord / _end_seg on the scan's own sorted arrays (same task-local
-        # total order the window pass produced): row number, and the count
-        # of close rows strictly before me
-        close = pdf["_close_flag"].to_numpy(dtype="int64", na_value=0)
-        end_seg = np.zeros(n, dtype="int64")
-        if n > 1:
-            np.cumsum(close[:-1], out=end_seg[1:])
-        cust_to = pdf["_custom_timeout"].to_numpy(dtype="float64", na_value=np.nan)
-        cust_in = pdf["_custom_inactivity"].to_numpy(dtype="float64", na_value=np.nan)
-        age = np.zeros(n, dtype="int32")
-        action = pdf["_action"].to_numpy() if "_action" in pdf.columns else None
-        seed_creation = None
-        if has_seed_cols:
-            s = pdf["_seed_creation_ts"].astype("datetime64[ns]")
-            mask = s.isna().to_numpy()
-            sc = s.fillna(pd.Timestamp(0)).astype("int64").to_numpy() / 1e9
-            sc[mask] = np.nan
-            seed_creation = sc
-        all_cou = action is None or bool((action == "create_or_update").all())
-        no_overrides = not (np.nan_to_num(cust_to) > 0).any() and not (
-            np.nan_to_num(cust_in) > 0
-        ).any()
+    pending: list = []  # (batch, task-start flags) not yet scanned
+    pending_tid = None  # task id of the last pending row
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        tid = batch.column(TASK_ID_COL)
+        starts = np.empty(n, dtype=bool)
+        starts[0] = not pending or tid[0].as_py() != pending_tid
+        starts[1:] = pc.not_equal(tid.slice(1), tid.slice(0, n - 1)).to_numpy(zero_copy_only=False)
+        pending_tid = tid[n - 1].as_py()
+        firsts = np.flatnonzero(starts)
+        if not len(firsts):
+            pending.append((batch, starts))
+            continue
+        k = int(firsts[-1])  # the batch's trailing task starts here
+        if k:
+            pending.append((batch.slice(0, k), starts[:k]))
+        if pending:
+            yield from _scan_tasks(pending, timeout, inactivity)
+        pending = [(batch.slice(k), starts[k:])]
+    if pending:
+        yield from _scan_tasks(pending, timeout, inactivity)
+
+
+def _epoch_seconds(col, null: float):
+    """Seconds since the epoch as ``int64 ns / 1e9`` — the arithmetic the
+    age and gap comparisons are pinned to; ``null`` fills null rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ns = col.cast(pa.timestamp("ns", col.type.tz)).cast(pa.int64())
+    sec = pc.fill_null(ns, 0).to_numpy() / 1e9
+    sec[col.is_null().to_numpy()] = null
+    return sec
+
+
+def _scan_tasks(pending: list, timeout: float, inactivity: float):
+    """Scan whole tasks: ``pending`` holds (batch, task-start flags)
+    pairs whose rows end on a task boundary. Yields the input batches
+    with ``_ord``, ``_end_seg``, ``_gap_seg`` and ``_age_seg`` appended;
+    the input columns pass through untouched."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = pa.Table.from_batches([b for b, _ in pending])
+    n = tbl.num_rows
+    starts = np.flatnonzero(np.concatenate([s for _, s in pending]))
+    bounds = np.append(starts, n)
+    row_start = np.repeat(starts, np.diff(bounds))
+
+    def floats(name):
+        return pc.fill_null(tbl.column(name), np.nan).to_numpy()
+
+    # a NaT ts reads as int64-min nanoseconds, as pandas casts it
+    ts = _epoch_seconds(tbl.column("ts"), np.iinfo(np.int64).min / 1e9)
+    close = pc.fill_null(tbl.column("_close_flag"), 0).to_numpy().astype("int64")
+    # close rows strictly before me within my task
+    before = np.cumsum(close) - close
+    end_seg = before - before[row_start]
+    cust_to, cust_in = floats("_custom_timeout"), floats("_custom_inactivity")
+    live = (np.nan_to_num(cust_to) > 0) | (np.nan_to_num(cust_in) > 0)
+    seed_creation = (
+        _epoch_seconds(tbl.column("_seed_creation_ts"), np.nan)
+        if "_seed_creation_ts" in tbl.column_names
+        else None
+    )
+    action_col = tbl.column("_action")
+    all_cou = pc.fill_null(pc.equal(action_col, "create_or_update"), False).to_numpy()
+    age = np.zeros(n, dtype="int32")
+    for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+        t_ts, t_end, t_age = ts[s:e], end_seg[s:e], age[s:e]
         # seeds (finite _seed_creation_ts, at ANY position — overlapping
         # resumes inject several per task) ride through every tier: a seed
         # only perturbs the session whose CREATOR is the seed row, one
         # scalar lookup per session start in the hop loops
-        if all_cou and no_overrides and n > 0:
-            _fast_scan(ts, end_seg, seed_creation, age, timeout, inactivity)
-        elif no_overrides and n > 0:
+        t_seed = seed_creation[s:e] if seed_creation is not None else None
+        overrides = bool(live[s:e].any())
+        if not overrides and all_cou[s:e].all():
+            _fast_scan(t_ts, t_end, t_seed, t_age, timeout, inactivity)
+            continue
+        # only the guarded and override tiers read the action strings
+        action = action_col.slice(s, e - s).to_numpy()
+        if not overrides:
             # guarded (create/update actions) but no live overrides: the
             # vectorized session-hop still applies (tier B)
-            _guarded_scan(ts, end_seg, action, seed_creation, age, timeout, inactivity)
-        elif n > 0:
-            # live per-map overrides (tier C): session-hop with override
-            # regimes. Every-row constant overrides (a rule that always
-            # sets the same map_meta timeout) collapse to tier B with
-            # substituted clocks — the creator applies the override at
-            # session start, so the whole session runs on it.
-            if action is None:
-                action = np.full(n, "create_or_update", dtype=object)
-            eff = _constant_override_clocks(cust_to, cust_in, timeout, inactivity)
-            if eff is not None:
-                _guarded_scan(ts, end_seg, action, seed_creation, age, eff[0], eff[1])
-            else:
-                _override_scan(
-                    ts, end_seg, action, cust_to, cust_in, seed_creation, age,
-                    timeout, inactivity,
-                )
-        pdf[ORDER_COL] = np.arange(1, n + 1, dtype="int32")
-        pdf["_end_seg"] = end_seg.astype("int32")
+            _guarded_scan(t_ts, t_end, action, t_seed, t_age, timeout, inactivity)
+            continue
+        # live per-map overrides (tier C): session-hop with override
+        # regimes. Every-row constant overrides (a rule that always sets
+        # the same map_meta timeout) collapse to tier B with substituted
+        # clocks — the creator applies the override at session start, so
+        # the whole session runs on it.
+        t_to, t_in = cust_to[s:e], cust_in[s:e]
+        eff = _constant_override_clocks(t_to, t_in, timeout, inactivity)
+        if eff is not None:
+            _guarded_scan(t_ts, t_end, action, t_seed, t_age, eff[0], eff[1])
+        else:
+            _override_scan(
+                t_ts, t_end, action, t_to, t_in, t_seed, t_age, timeout, inactivity,
+            )
+    scanned = [
+        np.arange(1, n + 1, dtype="int32") - row_start.astype("int32"),  # _ord: row number in task
+        end_seg.astype("int32"),
         # exact mode folds gap splits into _age_seg; zero _gap_seg so the
         # aggregate stage's (end, gap, age) grouping key stays uniform
-        pdf["_gap_seg"] = np.zeros(n, dtype="int32")
-        pdf["_age_seg"] = age
-        return pdf
-
-    return part.groupBy(TASK_ID_COL).applyInPandas(scan, schema=out_schema)
+        np.zeros(n, dtype="int32"),
+        age,
+    ]
+    off = 0
+    for b, _ in pending:
+        m = b.num_rows
+        yield pa.RecordBatch.from_arrays(
+            b.columns + [pa.array(a[off : off + m]) for a in scanned],
+            names=b.schema.names + list(SCAN_COLS),
+        )
+        off += m
 
 
 def _seed_or_ts(seed_creation, s: int, ts) -> float:

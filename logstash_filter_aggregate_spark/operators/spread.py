@@ -19,19 +19,27 @@ the scan stage.
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 
 def spread_input(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     """Repartition ``df`` up to the session's default parallelism when it
     plans fewer partitions — identity otherwise. Row values are
     unaffected; only use where downstream results are independent of
-    partitioning (every caller here aggregates or projects per row)."""
+    partitioning (every caller here aggregates or projects per row).
+    When Spark cannot plan the partition count, ``df`` is returned
+    unchanged with a warning."""
     try:
-        sc = df.sparkSession.sparkContext
-        target = min_parallelism or sc.defaultParallelism
+        target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
         n = df.rdd.getNumPartitions()
-    except Exception:
+    except (Py4JError, PySparkException) as e:
+        log.warning("input partition count unknown, scan not widened: %s", e)
         return df
     if n >= target or target <= 1:
         return df

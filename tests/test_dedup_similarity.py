@@ -242,3 +242,26 @@ def test_spread_input_adaptive(spark):
 
     wide = spark.range(1000).repartition(spark.sparkContext.defaultParallelism + 4)
     assert spread_input(wide) is wide
+
+
+def test_spread_input_warns_instead_of_hiding_errors(caplog):
+    # a Spark-side planning failure leaves the input unwidened and says
+    # so; any other error is a bug and propagates
+    from pyspark.errors import PySparkException
+
+    from logstash_filter_aggregate_spark.operators.spread import spread_input
+
+    class Frame:
+        def __init__(self, exc):
+            self.exc = exc
+
+        @property
+        def rdd(self):
+            raise self.exc
+
+    failing = Frame(PySparkException("cannot plan"))
+    with caplog.at_level("WARNING", logger="logstash_filter_aggregate_spark.operators.spread"):
+        assert spread_input(failing, min_parallelism=4) is failing
+    assert "cannot plan" in caplog.text
+    with pytest.raises(TypeError):
+        spread_input(Frame(TypeError("not a DataFrame")), min_parallelism=4)

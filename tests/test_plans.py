@@ -61,6 +61,24 @@ def test_correlation_stage_single_task_exchange(spark, transcripts_path, cfg_fn)
     assert n_task_exchanges == 1, plan
 
 
+def test_exact_scan_is_one_arrow_call_per_partition(spark, transcripts_path):
+    # exact mode scans each partition in one mapInArrow call, not one
+    # pandas call per task: the JVM clusters the rows by task (one hash
+    # exchange) and sorts them in the scan's order, nulls last
+    t = spark.read.parquet(transcripts_path)
+    cfg = example5_config(timeout=600.0, inactivity_timeout=300.0, exact_age_cap=True)
+    plan = _plan(run_pipeline(spark, t, cfg).sessions)
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    below = plan.split("MapInArrow", 1)[1]
+    assert below.count("Exchange hashpartitioning(_task_id") == 1, plan
+    assert re.search(
+        r"Sort \[_task_id#\d+ ASC NULLS LAST, ts#\d+ ASC NULLS LAST, "
+        r"conv_id#\d+ ASC NULLS LAST, turn_idx#\d+ ASC NULLS LAST\]",
+        below,
+    ), plan
+
+
 def test_correlation_scan_prunes_unused_columns(spark, transcripts_path):
     # the correlation branch needs (conv_id, turn_idx, ts, text) — role
     # and tool must be pruned out of the parquet read by Catalyst

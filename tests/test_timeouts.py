@@ -679,3 +679,146 @@ def test_override_scan_beats_reference_on_hot_task():
         # (flakes on loaded hosts); the vectorized-vs-replay ratio is the
         # invariant worth pinning
         assert slow_s / max(v_s, 1e-9) >= min_ratio, (vals, v_s, slow_s)
+
+
+_CLASSIFIED_SCHEMA = (
+    "conv_id string, turn_idx int, ts timestamp, _task_id string, _rule_id string, "
+    "_end_flag int, _action string, _custom_timeout double, _custom_inactivity double, "
+    "_seed_creation_ts timestamp"
+)
+
+
+def _exact_scan_labels(spark, rows, cfg, max_records_per_batch=None):
+    """Run the exact tier over classified ``rows`` (``_CLASSIFIED_SCHEMA``)
+    and collect each row's inputs (timestamps as epoch microseconds) with
+    its scan labels."""
+    from pyspark.sql import functions as F
+
+    from logstash_filter_aggregate_spark.operators.sessionize import sessionize
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    if max_records_per_batch is not None:
+        spark.conf.set(key, str(max_records_per_batch))
+    try:
+        out = sessionize(spark.createDataFrame(rows, _CLASSIFIED_SCHEMA), cfg).select(
+            "_task_id", "conv_id", "turn_idx",
+            F.unix_micros("ts").alias("ts_us"),
+            "_action", "_end_flag", "_custom_timeout", "_custom_inactivity",
+            F.unix_micros("_seed_creation_ts").alias("seed_us"),
+            "_ord", "_end_seg", "_gap_seg", "_age_seg",
+        ).collect()
+    finally:
+        spark.conf.set(key, prev)
+    return sorted(tuple(r) for r in out)
+
+
+def _assert_labels_match_reference(labels, cfg):
+    """Replay every task of ``labels`` in (ts, conv_id, turn_idx) order
+    through ``_reference_scan`` with the scan's seconds arithmetic
+    (int64 ns / 1e9) and compare every label."""
+    import numpy as np
+
+    by_task: dict = {}
+    for r in labels:
+        by_task.setdefault(r[0], []).append(r)
+    for tid, rs in by_task.items():
+        rs.sort(key=lambda r: (r[3], r[1], r[2]))
+        n = len(rs)
+        ts = np.array([r[3] * 1000 for r in rs], dtype="int64") / 1e9
+        seed = np.array(
+            [np.nan if r[8] is None else r[8] * 1000 for r in rs], dtype="float64"
+        )
+        seed[np.isfinite(seed)] /= 1e9
+        cust_to = np.array([np.nan if r[6] is None else r[6] for r in rs])
+        cust_in = np.array([np.nan if r[7] is None else r[7] for r in rs])
+        close = np.array([int(r[5] == 1 or r[6] == 0.0) for r in rs])
+        end_seg = np.concatenate(([0], np.cumsum(close[:-1]))).astype("int64")
+        action = np.array([r[4] for r in rs], dtype=object)
+        age = np.zeros(n, dtype="int32")
+        _reference_scan(
+            ts, end_seg, action, cust_to, cust_in, seed, age,
+            float(cfg.timeout), float(cfg.effective_inactivity_timeout),
+        )
+        got = [(r[9], r[10], r[11], r[12]) for r in rs]
+        want = [(i + 1, int(end_seg[i]), 0, int(age[i])) for i in range(n)]
+        assert got == want, (tid, got, want)
+
+
+def test_exact_scan_tasks_spanning_arrow_batches(spark):
+    # the exact tier scans a whole partition per call and carries the
+    # trailing task of each Arrow batch into the next: with 3-row batches
+    # the hot task spans many batches and several small tasks share one,
+    # and every label must equal the default batching and the per-row
+    # reference replay
+    import random
+
+    rng = random.Random(20261017)
+    cfg = PipelineConfig(
+        task_id="%{taskid}",
+        rules=(CorrelationRule("r", "true", end_of_task=True),),
+        timeout=300.0, inactivity_timeout=120.0, exact_age_cap=True,
+    )
+    rows = []
+
+    def task(tid, n, actions, overrides=False, seeds=False):
+        t = 0.0
+        for i in range(n):
+            t += rng.choice([0, 1, 5, 30, 60, 130, 300])  # 0: ts ties
+            cto = cin = seed = None
+            if overrides:
+                cto = rng.choice([None, None, 0.0, 40.0, 90.0, 200.0])
+                cin = rng.choice([None, None, 20.0, 60.0, 150.0])
+            if seeds and rng.random() < 0.25:
+                seed = T0 + dt.timedelta(seconds=t - rng.choice([0, 50, 250]))
+            rows.append((
+                rng.choice(["a", "b"]), i, T0 + dt.timedelta(seconds=t), tid, "r",
+                int(rng.random() < 0.08), rng.choice(actions), cto, cin, seed,
+            ))
+
+    cou, guarded = ["create_or_update"], ["create", "update", "create_or_update"]
+    task("hot", 60, cou)
+    for k in range(8):
+        task(f"cou{k}", rng.randint(1, 4), cou)
+        task(f"guard{k}", rng.randint(2, 9), guarded)
+        task(f"over{k}", rng.randint(2, 9), guarded, overrides=True)
+        task(f"seed{k}", rng.randint(2, 9), rng.choice([cou, guarded]), seeds=True)
+
+    small = _exact_scan_labels(spark, rows, cfg, max_records_per_batch=3)
+    assert small == _exact_scan_labels(spark, rows, cfg)
+    assert len(small) == len(rows)
+    _assert_labels_match_reference(small, cfg)
+
+
+def test_exact_age_cap_is_strict_at_the_microsecond(spark):
+    # the map expires only when ts - creation > timeout (aggregate.rb:396):
+    # a row exactly `timeout` after creation joins the map, one 1 µs later
+    # starts the next — the scan's seconds arithmetic must keep the two
+    # apart as the reference replay does
+    cfg = PipelineConfig(
+        task_id="%{taskid}",
+        rules=(CorrelationRule("r", "true"),),
+        timeout=600.0, inactivity_timeout=600.0, exact_age_cap=True,
+    )
+    offsets = [dt.timedelta(0), dt.timedelta(seconds=600), dt.timedelta(seconds=600, microseconds=1)]
+    rows = [
+        ("c", i, T0 + off, "t", "r", 0, "create_or_update", None, None, None)
+        for i, off in enumerate(offsets)
+    ]
+    labels = _exact_scan_labels(spark, rows, cfg)
+    assert [r[12] for r in sorted(labels, key=lambda r: r[3])] == [0, 0, 1]
+    _assert_labels_match_reference(labels, cfg)
+
+
+def test_exact_age_cap_rejects_non_timestamp_ts(spark):
+    # the scan's clock arithmetic reads epoch nanoseconds off a timestamp
+    # column; any other ts type is refused before a job starts
+    from logstash_filter_aggregate_spark.operators.sessionize import sessionize
+
+    cfg = PipelineConfig(
+        task_id="%{taskid}", rules=(CorrelationRule("r", "true"),), exact_age_cap=True,
+    )
+    rows = [("c", 0, "2026-01-01 00:00:00", "t", "r", 0, "create_or_update", None, None, None)]
+    df = spark.createDataFrame(rows, _CLASSIFIED_SCHEMA.replace(", ts timestamp,", ", ts string,"))
+    with pytest.raises(TypeError, match="timestamp 'ts' column, got string"):
+        sessionize(df, cfg)
