@@ -1,59 +1,51 @@
-"""Shard-keyed state for the streaming gated tiers (state amortization).
+"""Shard-keyed state: the one state tier of the streaming gated paths.
 
 ``applyInPandasWithState`` pays a fixed per-key-per-micro-batch cost:
 one Python function invocation, one Arrow group, one state-store row
-visit. At transcript cardinalities that floor IS the runtime — the
-sf0.1 bench corpus has ~613k task ids across 2.1M participating rows
-(~3.4 rows per task per run), and an IDENTITY stateful fn over that
-keyed stream costs as much end-to-end as the full gated walk (measured:
-identity 262 s cold vs gated passthrough 133 s warm at 3M turns /
-12 micro-batches). No amount of per-key vectorization recovers that;
-the key space itself must shrink.
+visit, and the pandas set-up of each call (Arrow→pandas framing, rule
+array prep, a sort, a groupby, an output frame). At transcript
+cardinalities that floor IS the runtime — tasks carry ~3 rows per
+micro-batch, so keying state by task id spends ~3 ms of framework per
+task per batch around a ~15 µs state walk. No amount of per-key
+vectorization recovers that; the key space itself must shrink.
 
-This module keys the state by ``hash(task_id) % shards`` instead and
-keeps every live task's cell inside ONE state row per shard (a dict
-``task_id -> [creation, last, nevents, map, eff_to, eff_in]``, stored
-through the compact binary cell-set codec below).
+Every streaming query therefore keys its state by
+``_shard = pmod(xxhash64(task_id), shards)`` and keeps every live
+task's cell inside ONE state row per shard (a dict
+``task_id -> [creation, last, nevents, map, eff_to, eff_in, wall_cap,
+wall_last]``, stored through the compact binary cell-set codec below).
 Each shard invocation sorts its chunk by ``(task, ts)``, preps the rule
-arrays once, and runs the same numpy session-hop (:func:`walk.walk_scan`)
-per task slice — per-task interpreted work is a ~15 µs walk call, not a
-~200 µs framework round-trip. Sessions are numbered globally across the
-chunk's tasks so the aggregation dictionaries still build in one set of
-vectorized passes (:func:`stream._session_agg_maps`).
+arrays once, and runs the numpy session-hop (:func:`walk.walk_scan`)
+per task slice. Sessions are numbered globally across the chunk's tasks
+so the aggregation dictionaries build in one set of vectorized passes
+(:func:`stream._session_agg_maps`).
 
-Timers and eviction: per-key mode registers one event-time timer per
-task; here each shard keeps ONE timer at the min cell expiry, and every
-invocation (data or timer) evicts cells whose expiry is behind the
-current watermark — emitting their timeout rows where the config pushes
-them. That is the same watermark condition per-key timers fire on, so a
-finite replay (availableNow + heartbeat flush) produces identical rows;
-only the micro-batch a timeout lands in can differ.
+Timers and eviction: each shard keeps ONE timer at the min cell expiry,
+and every invocation (data or timer) evicts cells whose expiry is
+behind the current watermark — emitting their timeout rows where the
+config pushes them. That is the condition a per-task event-time timer
+would fire on, so a finite replay (availableNow + heartbeat flush)
+produces the rows a task-keyed state would; only the micro-batch a
+timeout lands in can be later (a shard's expired cell waits for the
+shard's next invocation).
 
-Tradeoffs for cluster users (why this is opt-in):
+Sizing: ``shards`` defaults to :data:`stream.DEFAULT_SHARDS` and is part
+of the checkpoint — every encoded cell set records the count it was
+written under, and a restart with another count fails instead of
+orphaning cells in their old shards. Hot-shard parallelism caps at
+``shards``, so keep it well above the core count. A batch that touches
+a shard rewrites all of its live cells, so for long-lived sparse
+sessions (each batch touches a small fraction of a large live set)
+raise ``shards`` until a shard holds about one live cell.
 
-- a batch that touches a shard decodes/re-encodes ALL its live cells,
-  so state I/O per batch is ~the whole live set, not just touched
-  keys. Eviction bounds the live set exactly as per-key timers do.
-- hot-shard parallelism caps at ``shards``, not #tasks — pick
-  shards >> cores (hundreds to thousands; cells per shard stay small).
-- per-key mode remains the default; the r6 workload matrix
-  (``tools/streaming_matrix.py``, README table) measured shard mode
-  1.5×/5.9×/9.5× faster at 1k/50k/500k tasks on a fixed 1.5M-row
-  corpus where every batch touches a task cross-section (request/job
-  correlation — the reference's natural workload). Per-key wins when
-  each batch touches a SMALL fraction of a large live set (long-lived
-  sparse sessions): a touched shard rewrites its whole cell set,
-  per-key touches only active keys.
-
-Spec parity: same reference hot path as the per-key fns
-(``aggregate.rb:179-255``); equality is pinned by the shards-parametrized
-batch/stream tests and the streaming fuzz family.
+Spec parity: the reference hot path (``aggregate.rb:179-255``); equality
+with the batch engine and across shard counts is pinned by the streaming
+batch-equality tests and the streaming fuzz family.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import struct
 from collections.abc import Iterator
 
@@ -93,22 +85,19 @@ _C, _L, _N, _M, _TO, _IN, _WC, _WL = range(8)
 
 # Cell-set codec. A batch that touches a shard round-trips the shard's
 # ENTIRE live cell set through this codec, so it sits on the per-batch
-# fixed-cost path the r5 probe flagged. The binary layout keeps the
-# numeric fields in one contiguous float64 block (numpy encode/decode,
-# no per-cell stringification) and length-prefixes the task ids; only
-# cells that actually carry an aggregation map pay JSON, batched into a
-# single index-keyed blob. ``SPARK_GRAFT_SHARD_CODEC=json`` keeps the
-# r5 whole-set-JSON behavior for A/B measurement; decode sniffs the
-# magic so either codec can read a running query's state.
-_CODEC = os.environ.get("SPARK_GRAFT_SHARD_CODEC", "binary")
-_MAGIC = b"SGC2"        # 7-wide numeric block (wall fields appended)
-_MAGIC_V1 = b"SGC1"     # r6-interim 5-wide layout, still decodable
+# fixed-cost path. The numeric fields ride in one contiguous float64
+# block (numpy encode/decode, no per-cell stringification), the task ids
+# are length-prefixed, and only cells that carry an aggregation map pay
+# JSON, batched into a single index-keyed blob. The header records the
+# shard count the set was written under, so a restart with another count
+# fails loudly; SGC2 sets (written before the count was recorded) still
+# decode, unchecked.
+_MAGIC = b"SGC3"        # n, len(maps), shards; then the SGC2 body
+_MAGIC_V2 = b"SGC2"     # n, len(maps); 7-wide numeric block
 _NUMW = 7
 
 
-def _encode_cells(cells: dict, codec: str = "binary") -> bytes:
-    if codec == "json":
-        return json.dumps(cells, default=str).encode("utf-8")
+def _encode_cells(cells: dict, shards: int) -> bytes:
     n = len(cells)
     num = np.empty((n, _NUMW), dtype=np.float64)
     tblobs: list[bytes] = []
@@ -127,31 +116,33 @@ def _encode_cells(cells: dict, codec: str = "binary") -> bytes:
     lens = np.fromiter((len(b) for b in tblobs), dtype=np.int32, count=n)
     maps_b = json.dumps(maps, default=str).encode("utf-8") if maps else b""
     return b"".join((
-        _MAGIC, struct.pack("<QQ", n, len(maps_b)),
+        _MAGIC, struct.pack("<QQQ", n, len(maps_b), shards),
         lens.tobytes(), num.tobytes(), b"".join(tblobs), maps_b,
     ))
 
 
-def _decode_cells(raw) -> dict:
+def _decode_cells(raw, shards: int) -> dict:
     raw = bytes(raw)
     magic = raw[:4]
     if magic == _MAGIC:
-        numw = _NUMW
-    elif magic == _MAGIC_V1:
-        numw = 5
-    else:                       # json-codec state (A/B runs)
-        cells = json.loads(raw.decode("utf-8"))
-        for c in cells.values():
-            while len(c) < 8:
-                c.append(None)
-        return cells
-    n, mlen = struct.unpack_from("<QQ", raw, 4)
-    off = 20
+        n, mlen, stored = struct.unpack_from("<QQQ", raw, 4)
+        if stored != shards:
+            raise ValueError(
+                f"streaming state was written with shards={stored} but the query "
+                f"now runs with shards={shards}: restart it with shards={stored}, "
+                f"or drain it and start a fresh checkpoint"
+            )
+        off = 28
+    elif magic == _MAGIC_V2:
+        n, mlen = struct.unpack_from("<QQ", raw, 4)
+        off = 20
+    else:
+        raise ValueError(f"unknown shard cell-set header {magic!r}")
     lens = np.frombuffer(raw, dtype=np.int32, count=n, offset=off)
     off += 4 * n
-    num = np.frombuffer(raw, dtype=np.float64, count=numw * n, offset=off)
-    num = num.reshape(n, numw)
-    off += 8 * numw * n
+    num = np.frombuffer(raw, dtype=np.float64, count=_NUMW * n, offset=off)
+    num = num.reshape(n, _NUMW)
+    off += 8 * _NUMW * n
     tasks: list[str] = []
     for ln in lens.tolist():
         tasks.append(raw[off:off + ln].decode("utf-8"))
@@ -164,8 +155,6 @@ def _decode_cells(raw) -> dict:
     nev = num[:, 2].astype(np.int64).tolist()
 
     def opt(col):
-        if col >= numw:
-            return [None] * n
         return [None if v != v else v for v in num[:, col].tolist()]  # NaN->None
 
     to, in_, wc, wl = opt(3), opt(4), opt(5), opt(6)
@@ -176,11 +165,11 @@ def _decode_cells(raw) -> dict:
     }
 
 
-def _load_cells(state: GroupState) -> dict:
+def _load_cells(state: GroupState, shards: int) -> dict:
     if not state.exists:
         return {}
     raw = state.get[0]
-    return _decode_cells(raw) if raw else {}
+    return _decode_cells(raw, shards) if raw else {}
 
 
 def _cell_expiry_s(cell, timeout_s: float, inactivity_s: float) -> float:
@@ -191,8 +180,8 @@ def _cell_expiry_s(cell, timeout_s: float, inactivity_s: float) -> float:
 
 def _evict_expired(cells: dict, wm_ms: int, timeout_s: float,
                    inactivity_s: float, skip: set) -> list[tuple]:
-    """Remove cells whose expiry is at/behind the watermark (the same
-    condition a per-key event-time timer fires on). Returns the evicted
+    """Remove cells whose expiry is at/behind the watermark (the
+    condition a per-task event-time timer would fire on). Returns the evicted
     ``(task_id, cell)`` pairs so the correlate tier can push them."""
     if wm_ms <= 0 or not cells:
         return []
@@ -207,9 +196,9 @@ def _evict_expired(cells: dict, wm_ms: int, timeout_s: float,
 
 
 def _save(state: GroupState, cells: dict, timeout_s: float, inactivity_s: float,
-          codec: str = "binary") -> None:
+          shards: int) -> None:
     if cells:
-        state.update((_encode_cells(cells, codec),))
+        state.update((_encode_cells(cells, shards),))
         expiry_ms = int(
             min(_cell_expiry_s(c, timeout_s, inactivity_s) for c in cells.values())
             * 1000
@@ -228,8 +217,8 @@ def _wall_remaining_s(cell, now_s: float, inactivity_s: float) -> float:
 def _evict_expired_wall(cells: dict, now_s: float, inactivity_s: float,
                         skip: set) -> list[tuple]:
     """Processing-time analog of :func:`_evict_expired`: a cell whose age
-    cap or inactivity window lapsed by the WALL clock evicts (the same
-    condition the per-key proc-mode fn checks on arrival/timer)."""
+    cap or inactivity window lapsed by the WALL clock evicts, checked on
+    arrival and when the shard's processing-time timer fires."""
     if not cells:
         return []
     out = []
@@ -242,13 +231,25 @@ def _evict_expired_wall(cells: dict, now_s: float, inactivity_s: float,
 
 
 def _save_wall(state: GroupState, cells: dict, now_s: float,
-               inactivity_s: float, codec: str) -> None:
+               inactivity_s: float, shards: int) -> None:
     if cells:
-        state.update((_encode_cells(cells, codec),))
+        state.update((_encode_cells(cells, shards),))
         rem = min(_wall_remaining_s(c, now_s, inactivity_s) for c in cells.values())
         state.setTimeoutDuration(max(int(rem * 1000), 1))
     elif state.exists:
         state.remove()
+
+
+def _column_objects(whole: pd.DataFrame, col: str, pos: np.ndarray,
+                    integral: bool):
+    """``whole[col]`` at ``pos`` as Python objects. pandas upcasts an
+    integral column that holds nulls to float64; ``integral`` (its Spark
+    type) turns those values back into ints so JSON renders ``3``, not
+    ``3.0``, whichever rows share the chunk."""
+    v = whole[col].iloc[pos]
+    if integral and v.dtype.kind == "f":
+        return [None if x != x else int(x) for x in v.tolist()]
+    return v.to_numpy(dtype=object)
 
 
 def _task_slices(tid: np.ndarray):
@@ -294,8 +295,8 @@ def _walk_tasks(whole: pd.DataFrame, rule_attrs: dict, cells: dict,
         if sel.size == 0:
             continue    # transparent rows only: state untouched this batch
         # only tasks whose state actually advanced are exempt from this
-        # invocation's eviction (advice r5: a transparent-only task must
-        # stay evictable, same micro-batch its per-key timer would fire)
+        # invocation's eviction (a transparent-only task must stay
+        # evictable in the micro-batch its expiry is behind the watermark)
         touched.add(task)
         cell = cells.get(task)
         init = None
@@ -342,8 +343,7 @@ def _walk_tasks(whole: pd.DataFrame, rule_attrs: dict, cells: dict,
 def _mask_proc_overrides(whole: pd.DataFrame) -> None:
     """Processing mode: event time never expires maps — keep only
     ``timeout = 0`` instant evictions (clock-independent), drop >0
-    overrides (wall-deadline overrides are event-mode features; same
-    masking as the per-key proc fns)."""
+    overrides (wall-deadline overrides are event-mode features)."""
     whole["_custom_timeout"] = whole["_custom_timeout"].where(
         whole["_custom_timeout"] == 0
     )
@@ -369,15 +369,17 @@ _WALL_INF = float("inf")
 
 
 def make_passthrough_shard_fn(cfg: PipelineConfig, out_cols: list[str],
-                              time_mode: str = "event"):
-    """Shard-keyed variant of :func:`stream._make_passthrough_fn`: same
-    keep/tags contract (O19 + U3, ``aggregate.rb:251-254``), per-task
-    state cells multiplexed into one row per shard.
+                              shards: int, time_mode: str = "event"):
+    """State walk for :func:`stream.streaming_passthrough`'s gated tier:
+    the OUTPUT is the input rows themselves (O19 + U3,
+    ``aggregate.rb:251-254``) — tagged where the code would raise,
+    suppressed where it cancels. Cells carry no aggregation map; they
+    exist for the guard decisions and are reclaimed by eviction.
 
     ``time_mode='processing'``: cells expire by the WALL clock (age cap
     from map creation / inactivity from last arrival), checked on every
     shard invocation plus one processing-time timer per shard at the min
-    remaining cell deadline — the shard analog of the per-key proc mode."""
+    remaining cell deadline."""
     rule_attrs = _build_rule_attrs(cfg)
     req_cols_by_rule = {
         r.rule_id: [
@@ -389,22 +391,20 @@ def make_passthrough_shard_fn(cfg: PipelineConfig, out_cols: list[str],
     timeout_s = float(cfg.timeout)
     inactivity_s = float(cfg.effective_inactivity_timeout)
     proc_mode = time_mode == "processing"
-    codec = _CODEC        # captured at build time: pickled with the fn,
-    # so an A/B can flip shard._CODEC between query builds in one session
     _EXC = ["_aggregateexception"]
     _EMPTY: list = []
 
     def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        cells = _load_cells(state)
+        cells = _load_cells(state, shards)
         now = state.getCurrentProcessingTimeMs() / 1000.0 if proc_mode else 0.0
         if state.hasTimedOut:
             if proc_mode:
                 _evict_expired_wall(cells, now, inactivity_s, set())
-                _save_wall(state, cells, now, inactivity_s, codec)
+                _save_wall(state, cells, now, inactivity_s, shards)
             else:
                 _evict_expired(cells, state.getCurrentWatermarkMs(),
                                timeout_s, inactivity_s, set())
-                _save(state, cells, timeout_s, inactivity_s, codec)
+                _save(state, cells, timeout_s, inactivity_s, shards)
             yield pd.DataFrame(columns=[*out_cols, "tags"]).iloc[0:0]
             return
         chunks = [p for p in pdfs if len(p)]
@@ -452,11 +452,11 @@ def make_passthrough_shard_fn(cfg: PipelineConfig, out_cols: list[str],
         tag_exc = code_ran & exc               # O19: tagged where code ran
 
         if proc_mode:
-            _save_wall(state, cells, now, inactivity_s, codec)
+            _save_wall(state, cells, now, inactivity_s, shards)
         else:
             _evict_expired(cells, state.getCurrentWatermarkMs(),
                            timeout_s, inactivity_s, touched)
-            _save(state, cells, timeout_s, inactivity_s, codec)
+            _save(state, cells, timeout_s, inactivity_s, shards)
 
         kidx = np.flatnonzero(keep)
         out = whole.iloc[kidx][out_cols].copy()
@@ -477,10 +477,14 @@ def make_passthrough_shard_fn(cfg: PipelineConfig, out_cols: list[str],
     return fn
 
 
-def make_correlate_shard_fn(cfg: PipelineConfig, time_mode: str = "event"):
-    """Shard-keyed variant of :func:`stream._make_stateful_fn`: the full
-    map lifecycle (aggregation dictionaries, closes, timeout pushes, O18
-    emit rows) with per-task cells multiplexed into one row per shard.
+def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozenset,
+                            time_mode: str = "event"):
+    """State walk for :func:`stream.streaming_correlate`: the full map
+    lifecycle (aggregation dictionaries, closes, timeout pushes, O18 emit
+    rows) over the reference's filter hot path (``aggregate.rb:179-255``).
+    Agg and emit inputs arrive pre-projected as ``_v_*`` / ``_em_*``
+    columns; ``int_cols`` names those of an integral Spark type, which
+    render as JSON integers whatever dtype pandas gave the chunk.
 
     ``time_mode='processing'``: wall-clock expiry (see
     :func:`make_passthrough_shard_fn`), with evicted cells pushed as
@@ -494,7 +498,6 @@ def make_correlate_shard_fn(cfg: PipelineConfig, time_mode: str = "event"):
     timeout_s = float(cfg.timeout)
     inactivity_s = float(cfg.effective_inactivity_timeout)
     proc_mode = time_mode == "processing"
-    codec = _CODEC        # captured at build time (see passthrough note)
     push = cfg.push_map_as_event_on_timeout
     out_cols = [f.name for f in OUTPUT_SCHEMA.fields]
 
@@ -508,7 +511,7 @@ def make_correlate_shard_fn(cfg: PipelineConfig, time_mode: str = "event"):
 
     def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         out_rows: list[dict] = []
-        cells = _load_cells(state)
+        cells = _load_cells(state, shards)
         now = state.getCurrentProcessingTimeMs() / 1000.0 if proc_mode else 0.0
         if state.hasTimedOut:
             if proc_mode:
@@ -519,9 +522,9 @@ def make_correlate_shard_fn(cfg: PipelineConfig, time_mode: str = "event"):
             if push:
                 out_rows.extend(_timeout_row(t, c) for t, c in evicted)
             if proc_mode:
-                _save_wall(state, cells, now, inactivity_s, codec)
+                _save_wall(state, cells, now, inactivity_s, shards)
             else:
-                _save(state, cells, timeout_s, inactivity_s, codec)
+                _save(state, cells, timeout_s, inactivity_s, shards)
             yield pd.DataFrame(out_rows, columns=out_cols)
             return
 
@@ -557,11 +560,13 @@ def make_correlate_shard_fn(cfg: PipelineConfig, time_mode: str = "event"):
             whole["_rule_id"].to_numpy()[cr_idx]
             if cr_idx.size else np.empty(0, dtype=object)
         )
-        sess_maps = _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess, agg_specs)
+        sess_maps = _session_agg_maps(
+            whole, cr_idx, sess_cr, srid, n_sess, agg_specs, int_cols
+        )
         for base, imap in sess_init_map.items():
             sess_maps[base] = _merge_carried(agg_specs, imap, sess_maps[base])
 
-        # closed sessions -> sink rows (same mapping as the per-key fn)
+        # closed sessions -> sink rows
         for si_, (task, creation, last_ts, kind) in enumerate(sessions):
             if kind == OPEN:
                 continue
@@ -583,8 +588,8 @@ def make_correlate_shard_fn(cfg: PipelineConfig, time_mode: str = "event"):
         # emit rows (O18): one per code-ran row of an emit rule, carrying
         # the state AS OF that row. sess_cr is non-decreasing (chunk is
         # task-then-ts sorted, sessions numbered in walk order), so the
-        # per-session running count is the same group-offset computation
-        # as the per-key fn — plus each session's carried base.
+        # per-session running count is a group-offset computation over
+        # it — plus each session's carried base.
         if emit_rules and cr_idx.size:
             change = np.empty(len(cr_idx), dtype=bool)
             change[0] = True
@@ -602,7 +607,8 @@ def make_correlate_shard_fn(cfg: PipelineConfig, time_mode: str = "event"):
                     continue
                 rows_pos = cr_idx[m]
                 colvals = {
-                    n: whole[c].to_numpy(dtype=object)[rows_pos] for n, c in ems
+                    n: _column_objects(whole, c, rows_pos, c in int_cols)
+                    for n, c in ems
                 }
                 ts_vals = whole["ts"].iloc[rows_pos].to_numpy()
                 s_cre = creations[sess_cr[m]]
@@ -625,13 +631,13 @@ def make_correlate_shard_fn(cfg: PipelineConfig, time_mode: str = "event"):
         if proc_mode:
             _refresh_wall_cells(cells, entry, final_sess_of_task, task_base,
                                 now, timeout_s)
-            _save_wall(state, cells, now, inactivity_s, codec)
+            _save_wall(state, cells, now, inactivity_s, shards)
         else:
             evicted = _evict_expired(cells, state.getCurrentWatermarkMs(),
                                      timeout_s, inactivity_s, touched)
             if push:
                 out_rows.extend(_timeout_row(t, c) for t, c in evicted)
-            _save(state, cells, timeout_s, inactivity_s, codec)
+            _save(state, cells, timeout_s, inactivity_s, shards)
         yield pd.DataFrame(out_rows, columns=out_cols)
 
     return fn

@@ -8,14 +8,17 @@ needs:
   ``F.session_window(ts, gap)`` + watermark. Fully Catalyst-native,
   state handled by Spark's streaming aggregation.
 
-- :func:`streaming_correlate` — the full map lifecycle
-  (``map_action`` guards, ``end_of_task``, duplicate-start, timeouts)
-  via ``applyInPandasWithState`` keyed by task id with
-  ``EventTimeTimeout``: the state cell IS the reference's per-task map
-  (``aggregate.rb:199-246``), so this is the one place the engine runs
-  the reference's serial algorithm — per key, per micro-batch, inside an
-  Arrow batch. The batch engine remains the correctness reference; tests
-  assert the streaming results match it on the same input.
+- :func:`streaming_correlate` / :func:`streaming_passthrough` — the full
+  map lifecycle (``map_action`` guards, ``end_of_task``, duplicate-start,
+  timeouts) via ``applyInPandasWithState``. State is keyed by shard,
+  ``_shard = pmod(xxhash64(_task_id), shards)``: one state row per shard
+  holds the cells of every live task hashing into it, each cell being
+  the reference's per-task map (``aggregate.rb:199-246``). One Python
+  call per shard per micro-batch runs the reference's serial algorithm
+  over every task of the shard (:mod:`streaming.shard`), so the
+  per-call framework cost is paid per shard, not per task. The batch
+  engine remains the correctness reference; tests assert the streaming
+  results match it on the same input.
 
 The parse/classify stages are the same Catalyst expressions as batch —
 they work unchanged on a streaming DataFrame.
@@ -23,18 +26,23 @@ they work unchanged on a streaming DataFrame.
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from logstash_filter_aggregate_spark.config import PipelineConfig
 from logstash_filter_aggregate_spark.operators.classify import classify
 from logstash_filter_aggregate_spark.plans.pipeline import compile_groks, parse
+
+# State shards of every streaming query that keeps task state: 16 per
+# core on a 4-core machine (MIGRATION.md's sizing). A constant, not
+# derived from the session conf, because a task's shard must not move
+# when a checkpoint restarts (the count is recorded in the state and
+# checked on decode).
+DEFAULT_SHARDS = 64
 
 
 def _is_nullish(v) -> bool:
@@ -45,32 +53,14 @@ def _is_nullish(v) -> bool:
     except (TypeError, ValueError):
         return False
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("creation_ts", T.DoubleType()),
-        T.StructField("lastevent_ts", T.DoubleType()),
-        T.StructField("nevents", T.LongType()),
-        T.StructField("map_json", T.StringType()),
-        # per-map custom timeout overrides (O17, aggregate.rb:243-246):
-        # set by user rules mid-map, must survive across micro-batches
-        T.StructField("eff_timeout", T.DoubleType()),
-        T.StructField("eff_inactivity", T.DoubleType()),
-    ]
-)
 
-# processing-time mode (O11/O12 in the reference's DEFAULT time model,
-# aggregate.rb:487 `Time.now`): wall-clock deadlines ride in two extra
-# state fields — the absolute age cap set when the map is created, and
-# the wall time of the last arrival (for inactivity-on-arrival checks)
-PROC_STATE_SCHEMA = T.StructType(
-    list(STATE_SCHEMA.fields)
-    + [
-        T.StructField("wall_cap", T.DoubleType()),
-        T.StructField("wall_last", T.DoubleType()),
-    ]
-)
+def _shard_count(shards: int | None) -> int:
+    if shards is None:
+        return DEFAULT_SHARDS
+    if isinstance(shards, bool) or not isinstance(shards, int) or shards < 1:
+        raise ValueError(f"shards must be a positive int or None, got {shards!r}")
+    return shards
 
-_WALL_INF = float("inf")
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -218,13 +208,15 @@ def _merge_carried(agg_specs: dict, carried: dict, batch: dict) -> dict:
     return out
 
 
-def _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess: int, agg_specs: dict):
+def _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess: int, agg_specs: dict,
+                      int_cols: frozenset):
     """Per-session aggregation dictionaries: one set of vectorized passes
-    per agg name over the code-ran rows. ``sess_cr`` may number sessions
-    across MANY tasks (the shard tier) — the math is identical as long as
-    session ids are globally unique within the chunk."""
-    import numpy as np
-
+    per agg name over the code-ran rows. ``sess_cr`` numbers sessions
+    across every task of the chunk; session ids are unique within it.
+    Values of ``int_cols`` (integral Spark type) aggregate as int64 even
+    when the chunk's nulls made pandas upcast the column to float, so a
+    map renders the same JSON whichever tasks share the chunk (and the
+    batch engine's ``long`` sums)."""
     sess_maps: list[dict] = [dict() for _ in range(n_sess)]
     if not cr_idx.size:
         return sess_maps
@@ -248,10 +240,13 @@ def _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess: int, agg_specs: dict
             nn = v.notna().to_numpy()
             if not nn.any():
                 continue
+            val = v.to_numpy()[nn]
+            if col in int_cols and val.dtype.kind == "f":
+                val = val.astype(np.int64)
             parts.append(pd.DataFrame({
                 "sess": sess_cr[m][nn],
                 "pos": cr_idx[m][nn],
-                "val": v.to_numpy()[nn],
+                "val": val,
             }))
         if not parts:
             continue
@@ -280,245 +275,6 @@ def _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess: int, agg_specs: dict
     return sess_maps
 
 
-def _make_stateful_fn(cfg: PipelineConfig, time_mode: str = "event"):
-    """Build the per-key stateful function: the reference's filter() hot
-    path (aggregate.rb:179-255) over one task's micro-batch rows. Agg
-    inputs arrive pre-projected as ``_v_<rule>_<name>`` columns so SQL
-    expressions (not just plain columns) work as agg sources.
-
-    The state machine runs vectorized (:func:`walk.walk_scan`): the scan
-    yields per-row code-ran flags + per-session close records, the
-    aggregation dictionary is a pandas groupby over the code-ran rows
-    keyed by session (one set of vectorized passes per agg name, not a
-    per-row dict update), and the carried ``map_json`` merges into the
-    carried session's batch aggregate by each function's combine rule.
-    Interpreted work is O(#sessions + #emit rows), not O(rows).
-
-    ``time_mode='processing'`` models the reference's DEFAULT clock
-    (``Time.now``, aggregate.rb:487): maps expire ``timeout`` WALL
-    seconds after creation / ``inactivity_timeout`` after the last
-    arrival, checked on arrival and by processing-time timers — event
-    timestamps never split sessions (see
-    :func:`streaming_correlate` for the semantics note)."""
-    import numpy as np
-
-    from logstash_filter_aggregate_spark.streaming.walk import CT0, END, OPEN, scan_chunk
-
-    rule_attrs = _build_rule_attrs(cfg)
-    agg_specs = _build_agg_specs(cfg)
-    # new_event_block emissions (O18): fire exactly where the code runs —
-    # the state walk IS the guard decision, so gated emit rules work here
-    emit_rules = {
-        r.rule_id: [(n, _emit_value_col(r.rule_id, n)) for n in (r.emit or {})]
-        for r in cfg.rules if r.emit
-    }
-    timeout_s = float(cfg.timeout)
-    inactivity_s = float(cfg.effective_inactivity_timeout)
-    proc_mode = time_mode == "processing"
-    push = cfg.push_map_as_event_on_timeout
-    out_cols = [f.name for f in OUTPUT_SCHEMA.fields]
-
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        task_id = key[0]
-        if task_id is None:
-            # the null-task group: heartbeat/unmatched rows admitted only
-            # to advance the watermark — no map, no state, no output
-            yield pd.DataFrame(columns=out_cols)
-            return
-        out_rows: list[dict] = []
-
-        if state.hasTimedOut:
-            sv = state.get
-            if push:
-                out_rows.append(dict(
-                    task_id=task_id, sink="timeout",
-                    creation_ts=_ts_us(sv[0]), lastevent_ts=_ts_us(sv[1]),
-                    nevents=sv[2], map_json=sv[3],
-                ))
-            state.remove()
-            yield pd.DataFrame(out_rows, columns=out_cols)
-            return
-
-        now = state.getCurrentProcessingTimeMs() / 1000.0 if proc_mode else 0.0
-        init = None
-        init_map: dict = {}
-        carried_cap = None
-        if state.exists:
-            sv = state.get
-            c, l, nv, mj, eto, ein = sv[:6]
-            if proc_mode:
-                # wall-clock expiry on arrival (aggregate.rb:194-199 with
-                # the real-time clock): a map whose age cap or inactivity
-                # window lapsed between batches evicts BEFORE this
-                # chunk's guards run — same push as a fired timer
-                wall_cap, wall_last = sv[6], sv[7]
-                if now >= wall_cap or now - wall_last >= inactivity_s:
-                    if push:
-                        out_rows.append(dict(
-                            task_id=task_id, sink="timeout",
-                            creation_ts=_ts_us(c), lastevent_ts=_ts_us(l),
-                            nevents=nv, map_json=mj,
-                        ))
-                    state.remove()
-                else:
-                    init = (c, l, nv, _WALL_INF, _WALL_INF)
-                    init_map = json.loads(mj) if mj else {}
-                    carried_cap = wall_cap
-            else:
-                init = (
-                    c, l, nv,
-                    eto if eto is not None else timeout_s,
-                    ein if ein is not None else inactivity_s,
-                )
-                init_map = json.loads(mj) if mj else {}
-
-        # Spark gives NO ordering guarantee across the Arrow chunks of one
-        # key's group (a task whose micro-batch exceeds
-        # arrow.maxRecordsPerBatch arrives as several chunks) — materialize
-        # and sort ONCE so hot tasks keep event-time order end-to-end.
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            yield pd.DataFrame(columns=out_cols)
-            return
-        whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        whole = whole.sort_values(["ts", "conv_id", "turn_idx"], kind="mergesort")
-        nrows = len(whole)
-
-        if proc_mode:
-            # event time never expires maps here: keep only timeout=0
-            # instant evictions (clock-independent), drop >0 overrides
-            # (wall-deadline overrides are event-mode features — doc'd)
-            whole["_custom_timeout"] = whole["_custom_timeout"].where(
-                whole["_custom_timeout"] == 0
-            )
-            whole["_custom_inactivity"] = np.nan
-            code_ran, res, sub_idx = scan_chunk(
-                whole, rule_attrs, init, _WALL_INF, _WALL_INF
-            )
-        else:
-            code_ran, res, sub_idx = scan_chunk(
-                whole, rule_attrs, init, timeout_s, inactivity_s
-            )
-        if sub_idx is None:
-            sess_full = res.sess_id
-        else:
-            sess_full = np.full(nrows, -1, dtype=np.int32)
-            sess_full[sub_idx] = res.sess_id
-        n_sess = len(res.sessions)
-        cr_idx = np.flatnonzero(code_ran)
-        sess_cr = sess_full[cr_idx]
-
-        # per-session aggregation dictionaries: one set of vectorized
-        # passes per agg name over the code-ran rows
-        srid = whole["_rule_id"].to_numpy()[cr_idx] if cr_idx.size else np.empty(0, dtype=object)
-        sess_maps = _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess, agg_specs)
-        if init is not None and n_sess:
-            sess_maps[0] = _merge_carried(agg_specs, init_map, sess_maps[0])
-
-        # closed sessions -> sink rows
-        for si_, (creation, last_ts, kind, _crow) in enumerate(res.sessions):
-            if kind == OPEN:
-                continue
-            if kind == END:
-                sink = "completed"               # aggregate.rb:240
-            elif kind == CT0:
-                # map_meta.timeout = 0: immediate eviction, pushed only
-                # when configured (spec:392-409; aggregate.rb:259-274)
-                sink = "inline" if push else None
-            else:
-                sink = "timeout" if push else None
-            if sink is None:
-                continue
-            out_rows.append(dict(
-                task_id=task_id, sink=sink,
-                creation_ts=_ts_us(creation), lastevent_ts=_ts_us(last_ts),
-                nevents=int(res.nevents[si_]),
-                map_json=json.dumps(sess_maps[si_], default=str),
-            ))
-
-        # emit rows (sink='emit'): one per code-ran row of an emit rule,
-        # carrying the state AS OF that row (nevents so far, own ts)
-        if emit_rules and cr_idx.size:
-            nev_sofar = np.empty(len(cr_idx), dtype="int64")
-            if len(cr_idx):
-                change = np.empty(len(cr_idx), dtype=bool)
-                change[0] = True
-                change[1:] = sess_cr[1:] != sess_cr[:-1]
-                grp_start = np.flatnonzero(change)
-                sizes = np.diff(np.append(grp_start, len(cr_idx)))
-                offsets = np.repeat(grp_start, sizes)
-                nev_sofar = np.arange(len(cr_idx), dtype="int64") - offsets + 1
-                if init is not None:
-                    nev_sofar[sess_cr == 0] += int(init[2])
-            creations = np.asarray([s[0] for s in res.sessions])
-            for rid_, ems in emit_rules.items():
-                m = (srid == rid_).astype(bool)
-                if not m.any():
-                    continue
-                rows_pos = cr_idx[m]
-                # None/NaN/NaT normalize to real JSON null (batch inline
-                # emissions carry SQL nulls; pandas NaN would survive
-                # json.dumps as a non-standard NaN token and NaT would
-                # stringify via default=str)
-                colvals = {
-                    n: whole[c].to_numpy(dtype=object)[rows_pos] for n, c in ems
-                }
-                ts_vals = whole["ts"].iloc[rows_pos].to_numpy()
-                s_cre = creations[sess_cr[m]]
-                s_nev = nev_sofar[m]
-                for k in range(len(rows_pos)):
-                    payload = {n: _norm(colvals[n][k]) for n, _c in ems}
-                    out_rows.append(dict(
-                        task_id=task_id, sink="emit",
-                        creation_ts=_ts_us(float(s_cre[k])),
-                        lastevent_ts=pd.Timestamp(ts_vals[k]),
-                        nevents=int(s_nev[k]),
-                        map_json=json.dumps(payload, default=str),
-                    ))
-
-        if res.final is not None:
-            creation, last, nev, eff_to, eff_in = res.final
-            mj_out = json.dumps(sess_maps[n_sess - 1], default=str)
-            if proc_mode:
-                # the open session keeps its creation-time age cap; a map
-                # created THIS batch gets now + timeout (wall clock)
-                cap = (
-                    carried_cap
-                    if carried_cap is not None and n_sess == 1
-                    else now + timeout_s
-                )
-                state.update((
-                    creation, last, int(nev), mj_out, None, None, cap, now,
-                ))
-                state.setTimeoutDuration(
-                    max(int(min(inactivity_s, cap - now) * 1000), 1)
-                )
-            else:
-                state.update((
-                    creation, last, int(nev), mj_out, eff_to, eff_in,
-                ))
-                state.setTimeoutTimestamp(
-                    _clamped_expiry_ms(min(creation + eff_to, last + eff_in), state)
-                )
-        elif state.exists:
-            state.remove()
-        yield pd.DataFrame(out_rows, columns=out_cols)
-
-    return fn
-
-
-def _clamped_expiry_ms(expiry_s: float, state: GroupState) -> int:
-    """Event-time timers must land strictly after the current watermark:
-    a short custom-timeout override can put a map's expiry behind a
-    watermark other keys have already advanced, and Spark rejects such a
-    setTimeoutTimestamp call outright (failing the whole query). Clamp to
-    watermark+1 ms — the map is already expired, so the earliest legal
-    firing (next micro-batch) is the right semantics."""
-    expiry_ms = int(expiry_s * 1000)
-    wm_ms = state.getCurrentWatermarkMs()
-    return max(expiry_ms, wm_ms + 1)
-
-
 def streaming_correlate(
     stream_df: DataFrame,
     cfg: PipelineConfig,
@@ -531,12 +287,14 @@ def streaming_correlate(
     per closed map with a ``sink`` column; split to routed sinks with
     ``foreachBatch`` filters.
 
-    ``shards``: opt-in state amortization for high-cardinality task ids —
-    key the state by ``hash(task_id) % shards`` instead of per task,
-    multiplexing every live task's cell into one state row per shard
-    (see :mod:`streaming.shard` for the measured per-key floor this
-    removes and the tradeoffs). Identical output rows; a timeout push can
-    land a micro-batch later than per-key mode.
+    ``shards``: the number of state shards (``None`` = :data:`DEFAULT_SHARDS`).
+    Each task's cell lives in the state row of shard
+    ``pmod(xxhash64(task_id), shards)``; one Python call per touched shard
+    per micro-batch walks all of its tasks (see :mod:`streaming.shard`).
+    The count is part of the checkpoint: restarting a query with another
+    count raises. A timeout push lands in the first micro-batch that
+    invokes the expired task's shard. Raise ``shards`` for long-lived
+    sparse sessions, where each batch touches few of many live tasks.
 
     ``time_mode``: ``'event'`` (default) expires maps by EVENT time —
     the deterministic model the batch engine replays and the oracles
@@ -545,16 +303,17 @@ def streaming_correlate(
     expires ``timeout`` WALL seconds after it was created or
     ``inactivity_timeout`` after its last arrival, regardless of event
     timestamps — checked on arrival and via
-    ``GroupStateTimeout.ProcessingTimeTimeout`` timers, so a LIVE stream
-    honors it exactly where the batch engine can only model its
-    instantaneous-replay limit. Documented divergences: timings depend
-    on the wall clock (tests assert structure, not latencies);
-    ``map_meta.timeout = 0`` instant eviction still fires, but >0
-    per-map overrides are event-mode features and are ignored. Composes
-    with ``shards`` (r6): cells expire by the wall clock with one
-    processing-time timer per shard at the min remaining deadline."""
-    if time_mode not in ("event", "processing"):
-        raise ValueError(f"time_mode must be 'event' or 'processing', got {time_mode!r}")
+    ``GroupStateTimeout.ProcessingTimeTimeout`` timers (one per shard at
+    the min remaining cell deadline), so a LIVE stream honors it exactly
+    where the batch engine can only model its instantaneous-replay limit.
+    Documented divergences: timings depend on the wall clock (tests
+    assert structure, not latencies); ``map_meta.timeout = 0`` instant
+    eviction still fires, but >0 per-map overrides are event-mode
+    features and are ignored."""
+    from logstash_filter_aggregate_spark.streaming.shard import make_correlate_shard_fn
+
+    _check_time_mode(time_mode)
+    shards = _shard_count(shards)
     parsed = parse(stream_df, groks or compile_groks())
     classified = classify(parsed, cfg)
     value_cols = [
@@ -567,7 +326,7 @@ def streaming_correlate(
     # Heartbeat rows (conv_id == HEARTBEAT_CONV, matching no rule) pass
     # the match filter so they can advance the event-time watermark —
     # the mechanism replay_routed uses to flush state timeouts on a
-    # finite corpus. They reach the stateful fn as the null-task group,
+    # finite corpus. They reach the stateful fn with a null task id,
     # which emits nothing and keeps no state. (A filter predicate alone
     # can't protect the watermark: Catalyst splits conjunctions and
     # pushes the non-ts conjuncts below the EventTimeWatermark node.)
@@ -587,43 +346,38 @@ def streaming_correlate(
             "_custom_timeout", "_custom_inactivity", *value_cols,
         )
     )
-    if shards:
-        from logstash_filter_aggregate_spark.streaming.shard import (
-            SHARD_STATE_SCHEMA,
-            make_correlate_shard_fn,
-        )
+    int_cols = frozenset(
+        f.name for f in part.schema.fields
+        if f.name.startswith(("_v_", "_em_")) and isinstance(f.dataType, T.IntegralType)
+    )
+    fn = make_correlate_shard_fn(cfg, shards, int_cols, time_mode=time_mode)
+    return _shard_keyed(part, fn, OUTPUT_SCHEMA, shards, time_mode)
 
-        return (
-            part.withColumn(
-                "_shard", F.pmod(F.xxhash64("_task_id"), F.lit(int(shards)))
-            )
-            .groupBy("_shard")
-            .applyInPandasWithState(
-                make_correlate_shard_fn(cfg, time_mode=time_mode),
-                outputStructType=OUTPUT_SCHEMA,
-                stateStructType=SHARD_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=(
-                    GroupStateTimeout.ProcessingTimeTimeout
-                    if time_mode == "processing"
-                    else GroupStateTimeout.EventTimeTimeout
-                ),
-            )
-        )
-    if time_mode == "processing":
-        return part.groupBy("_task_id").applyInPandasWithState(
-            _make_stateful_fn(cfg, time_mode="processing"),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=PROC_STATE_SCHEMA,
+
+def _check_time_mode(time_mode: str) -> None:
+    if time_mode not in ("event", "processing"):
+        raise ValueError(f"time_mode must be 'event' or 'processing', got {time_mode!r}")
+
+
+def _shard_keyed(part: DataFrame, fn, out_schema: T.StructType, shards: int,
+                 time_mode: str) -> DataFrame:
+    """``part`` grouped by its task's state shard through the stateful ``fn``."""
+    from logstash_filter_aggregate_spark.streaming.shard import SHARD_STATE_SCHEMA
+
+    return (
+        part.withColumn("_shard", F.pmod(F.xxhash64("_task_id"), F.lit(shards)))
+        .groupBy("_shard")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=out_schema,
+            stateStructType=SHARD_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=(
+                GroupStateTimeout.ProcessingTimeTimeout
+                if time_mode == "processing"
+                else GroupStateTimeout.EventTimeTimeout
+            ),
         )
-    return part.groupBy("_task_id").applyInPandasWithState(
-        _make_stateful_fn(cfg),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -737,31 +491,26 @@ def streaming_passthrough(
       streaming frame (stateless, no watermark, full Catalyst codegen).
     - **guard-gated cancel / required-agg rules**: whether the code ran
       depends on per-task map state, so PARTICIPATING rows ride the same
-      keyed state walk as :func:`streaming_correlate` (expiry-on-arrival
-      before the guard, duplicate-create and no-map-update suppression,
-      ``map_meta`` overrides, ``end_of_task`` deletion — mirroring
-      ``aggregate.rb:179-246``), emitting each input row back out with
-      its tags, or not at all when cancelled. Non-participating rows
-      (no rule / unresolved task id) take a stateless branch that is
-      unioned in — a self-union of the source, so each branch tracks the
-      same files independently.
+      shard-keyed state walk as :func:`streaming_correlate`
+      (expiry-on-arrival before the guard, duplicate-create and
+      no-map-update suppression, ``map_meta`` overrides, ``end_of_task``
+      deletion — mirroring ``aggregate.rb:179-246``), emitting each input
+      row back out with its tags, or not at all when cancelled.
+      Non-participating rows (no rule / unresolved task id) take a
+      stateless branch that is unioned in — a self-union of the source,
+      so each branch tracks the same files independently.
 
     Scale note: the gated tier serializes the participating rows
     (full width) through one Arrow round-trip per micro-batch — the
     price of reference-exact guard decisions on a stream; the batch
-    engine remains the cheap path for bulk replays. When the corpus has
-    MANY tasks with FEW rows each, the per-key-per-batch framework cost
-    of ``applyInPandasWithState`` dominates; pass ``shards`` to key the
-    state by ``hash(task_id) % shards`` and amortize it (identical
-    output; see :mod:`streaming.shard`; measured at 613k tasks / 3M
-    turns: 20.9k → 59.6k turns/s with shards=512).
+    engine remains the cheap path for bulk replays.
 
-    ``time_mode='processing'``: wall-clock state expiry (the reference's
-    default clock) — see :func:`streaming_correlate` for semantics and
-    documented divergences; composes with ``shards``.
+    ``shards`` and ``time_mode``: as for :func:`streaming_correlate`.
     """
-    if time_mode not in ("event", "processing"):
-        raise ValueError(f"time_mode must be 'event' or 'processing', got {time_mode!r}")
+    from logstash_filter_aggregate_spark.streaming.shard import make_passthrough_shard_fn
+
+    _check_time_mode(time_mode)
+    shards = _shard_count(shards)
     parsed = parse(stream_df, groks or compile_groks())
     classified = classify(parsed, cfg)
     gated_relevant = [
@@ -800,190 +549,8 @@ def streaming_passthrough(
         wm.where(participates)
         .select(*classified.columns, *req_cols)
     )
-    if shards:
-        from logstash_filter_aggregate_spark.streaming.shard import (
-            SHARD_STATE_SCHEMA,
-            make_passthrough_shard_fn,
-        )
-
-        walked = (
-            part.withColumn(
-                "_shard", F.pmod(F.xxhash64("_task_id"), F.lit(int(shards)))
-            )
-            .groupBy("_shard")
-            .applyInPandasWithState(
-                make_passthrough_shard_fn(cfg, out_cols, time_mode=time_mode),
-                outputStructType=out_schema,
-                stateStructType=SHARD_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=(
-                    GroupStateTimeout.ProcessingTimeTimeout
-                    if time_mode == "processing"
-                    else GroupStateTimeout.EventTimeTimeout
-                ),
-            )
-        )
-        return walked.unionByName(stateless)
-    fn = _make_passthrough_fn(cfg, out_cols, time_mode=time_mode)
-    proc = time_mode == "processing"
-    walked = part.groupBy("_task_id").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=PROC_STATE_SCHEMA if proc else STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if proc else GroupStateTimeout.EventTimeTimeout
-        ),
-    )
-    return walked.unionByName(stateless)
-
-
-def _make_passthrough_fn(cfg: PipelineConfig, out_cols: list[str],
-                         time_mode: str = "event"):
-    """Per-key walk for :func:`streaming_passthrough`'s gated tier: the
-    same state transitions as :func:`_make_stateful_fn` (the reference
-    filter hot path), but the OUTPUT is the input rows themselves —
-    tagged where the code would raise, suppressed where it cancels. The
-    state cell reuses STATE_SCHEMA with an empty map (aggregates are the
-    session engine's concern, not the passthrough's); event-time timers
-    are registered purely so dead tasks' state is reclaimed.
-
-    The state machine runs vectorized (:func:`walk.walk_scan` — the
-    numpy session-hop shared with the batch exact tiers' structure), so
-    a hot key's million-row micro-batch costs O(#sessions · log n)
-    interpreted work plus numpy passes, not a per-row Python loop."""
-    import numpy as np
-
-    from logstash_filter_aggregate_spark.streaming.walk import scan_chunk
-
-    rule_attrs = {
-        r.rule_id: dict(
-            map_action=r.map_action,
-            end_of_task=r.end_of_task,
-            cancel=bool(r.cancel),
-            has_custom_timeout=r.custom_timeout is not None,
-            has_custom_inactivity=r.custom_inactivity_timeout is not None,
-            req_cols=[
-                _agg_value_col(r.rule_id, s.name)
-                for s in r.aggs if s.required and s.col
-            ],
-        )
-        for r in cfg.rules
-    }
-    cancel_map = {r: a["cancel"] for r, a in rule_attrs.items()}
-    timeout_s = float(cfg.timeout)
-    inactivity_s = float(cfg.effective_inactivity_timeout)
-    proc_mode = time_mode == "processing"
-    n_out = len(out_cols) + 1
-    _EXC = ["_aggregateexception"]
-    _EMPTY: list = []
-
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[*out_cols, "tags"]).iloc[0:0]
-            return
-        now = state.getCurrentProcessingTimeMs() / 1000.0 if proc_mode else 0.0
-        init = None
-        carried_cap = None
-        if state.exists:
-            sv = state.get
-            c, l, n, _mj, eto, ein = sv[:6]
-            if proc_mode:
-                wall_cap, wall_last = sv[6], sv[7]
-                if now >= wall_cap or now - wall_last >= inactivity_s:
-                    state.remove()     # wall expiry on arrival: state only
-                else:
-                    init = (c, l, n, _WALL_INF, _WALL_INF)
-                    carried_cap = wall_cap
-            else:
-                init = (
-                    c, l, n,
-                    eto if eto is not None else timeout_s,
-                    ein if ein is not None else inactivity_s,
-                )
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            yield pd.DataFrame(columns=[*out_cols, "tags"]).iloc[0:0]
-            return
-        # Spark gives NO ordering guarantee across the Arrow chunks of one
-        # key's group — materialize and sort ONCE (hot tasks keep
-        # event-time order end-to-end)
-        whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        whole = whole.sort_values(["ts", "conv_id", "turn_idx"], kind="mergesort")
-        nrows = len(whole)
-
-        if proc_mode:
-            whole["_custom_timeout"] = whole["_custom_timeout"].where(
-                whole["_custom_timeout"] == 0
-            )
-            whole["_custom_inactivity"] = np.nan
-            code_ran, res, _sub = scan_chunk(
-                whole, rule_attrs, init, _WALL_INF, _WALL_INF
-            )
-        else:
-            code_ran, res, _sub = scan_chunk(
-                whole, rule_attrs, init, timeout_s, inactivity_s
-            )
-        rid_np = whole["_rule_id"].to_numpy()
-        cancel_arr = (
-            whole["_rule_id"].map(cancel_map).fillna(False).to_numpy(dtype=bool)
-        )
-        exc = np.zeros(nrows, dtype=bool)
-        for rule_id, a in rule_attrs.items():
-            if not a["req_cols"]:
-                continue
-            m = (rid_np == rule_id).astype(bool)
-            if not m.any():
-                continue
-            bad = np.zeros(nrows, dtype=bool)
-            for c in a["req_cols"]:
-                bad |= whole[c].isna().to_numpy()
-            exc |= m & bad
-
-        keep = ~(code_ran & cancel_arr)        # U3: consumed where code ran
-        tag_exc = code_ran & exc               # O19: tagged where code ran
-
-        if res.final is not None:
-            creation, last, nev, eff_to, eff_in = res.final
-            if proc_mode:
-                n_sess = len(res.sessions)
-                cap = (
-                    carried_cap
-                    if carried_cap is not None and n_sess == 1
-                    else now + timeout_s
-                )
-                state.update((creation, last, int(nev), "{}", None, None, cap, now))
-                state.setTimeoutDuration(
-                    max(int(min(inactivity_s, cap - now) * 1000), 1)
-                )
-            else:
-                state.update((creation, last, int(nev), "{}", eff_to, eff_in))
-                state.setTimeoutTimestamp(
-                    _clamped_expiry_ms(min(creation + eff_to, last + eff_in), state)
-                )
-        elif state.exists:
-            state.remove()
-
-        kidx = np.flatnonzero(keep)
-        out = whole.iloc[kidx][out_cols].copy()
-        pt = whole["parse_tags"].to_numpy(dtype=object)
-        te = tag_exc[kidx]
-        tags_out: list = []
-        ap = tags_out.append
-        for b, e in zip(pt[kidx], te):
-            if b is None or len(b) == 0:
-                ap(_EXC if e else _EMPTY)
-            elif e:
-                ap(list(b) + _EXC)
-            else:
-                ap(list(b))
-        out["tags"] = pd.Series(tags_out, index=out.index, dtype=object)
-        assert len(out.columns) == n_out
-        yield out
-
-    return fn
+    fn = make_passthrough_shard_fn(cfg, out_cols, shards, time_mode=time_mode)
+    return _shard_keyed(part, fn, out_schema, shards, time_mode).unionByName(stateless)
 
 
 def replay_push_previous(
@@ -1199,10 +766,12 @@ def replay_routed(
     ``checkpoint`` directory when upgrading; likewise delete any
     sentinel file an older build appended INSIDE ``input_dir`` (current
     builds never write there, but a leftover one would be re-read as
-    data).
+    data). ``shards`` is recorded in the checkpoint too (see
+    :func:`streaming_correlate`): pass the same count on every call.
     """
     import re as _re
 
+    shards = _shard_count(shards)
     schema = spark.read.parquet(input_dir).schema
     hb_dir = f"{base_path}/_heartbeat_src"
     # the union source must exist from the FIRST cycle: a checkpoint pins

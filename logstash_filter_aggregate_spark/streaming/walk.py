@@ -1,11 +1,11 @@
-"""Vectorized per-key state walk for the streaming gated tiers.
+"""Vectorized per-task state walk for the streaming gated tiers.
 
-The keyed stateful functions in :mod:`streaming.stream` replay the
-reference's filter hot path (``aggregate.rb:179-246``) over one task's
-micro-batch. Through round 4 that replay was a per-row interpreted
-Python loop (~1 s per million rows on a hot key, one task slot). This
-module runs the identical state machine as a numpy session-hop — the
-same regime-hop structure as the batch exact tiers
+The shard-keyed stateful functions in :mod:`streaming.shard` replay the
+reference's filter hot path (``aggregate.rb:179-246``) over each task's
+slice of a micro-batch. Through round 4 that replay was a per-row
+interpreted Python loop (~1 s per million rows on a hot key, one task
+slot). This module runs the identical state machine as a numpy
+session-hop — the same regime-hop structure as the batch exact tiers
 (``operators/sessionize.py``), extended with what a micro-batch walk
 needs:
 
@@ -73,26 +73,6 @@ def prep_rule_arrays(whole, rule_attrs: dict):
         gate_in, whole["_custom_inactivity"].to_numpy(dtype="float64", na_value=nan), nan
     )
     return known, ts_s, is_create, is_update, end_flag, ct, ci
-
-
-def scan_chunk(whole, rule_attrs: dict, init, timeout: float, inactivity: float):
-    """prep + walk_scan with unknown-rule rows made transparent: returns
-    ``(code_ran_full, result)`` where ``code_ran_full`` is aligned to
-    ``whole`` (False on unknown-rule rows) and ``result.sess_id`` /
-    session records are aligned to the KNOWN subset when one exists."""
-    known, ts_s, is_create, is_update, end_flag, ct, ci = prep_rule_arrays(
-        whole, rule_attrs
-    )
-    if known.all():
-        res = walk_scan(ts_s, is_create, is_update, end_flag, ct, ci,
-                        init, timeout, inactivity)
-        return res.code_ran, res, None
-    idx = np.flatnonzero(known)
-    res = walk_scan(ts_s[idx], is_create[idx], is_update[idx], end_flag[idx],
-                    ct[idx], ci[idx], init, timeout, inactivity)
-    code_ran = np.zeros(len(whole), dtype=bool)
-    code_ran[idx] = res.code_ran
-    return code_ran, res, idx
 
 
 class WalkResult:

@@ -244,9 +244,10 @@ def test_stream_to_routed_sinks_matches_batch_and_replays_idempotent(spark, stre
 def test_replay_routed_final_flush_matches_batch(spark, tmp_path, shards):
     # a finite replay must flush the tail: streaming timeout sink ==
     # batch timeout ∪ open (the reference's flush(final: true) pushes
-    # every remaining map, aggregate.rb:154-175). The shards leg drives
-    # the heartbeat final flush through the SHARD timers (one per shard,
-    # min cell expiry): the sentinel watermark must evict every cell.
+    # every remaining map, aggregate.rb:154-175). Both legs (the default
+    # shard count and 5 shards) drive the heartbeat final flush through
+    # the shard timers (one per shard, min cell expiry): the sentinel
+    # watermark must evict every cell.
     from logstash_filter_aggregate_spark.streaming.stream import replay_routed
 
     p = str(tmp_path / "in")
@@ -616,7 +617,7 @@ def test_streaming_passthrough_matches_batch_gated(spark, tmp_path, shards):
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
     out = streaming_passthrough(src, cfg, shards=shards)
-    name = f"st_passthrough_gated_{shards or 'key'}"
+    name = f"st_passthrough_gated_{shards or 'default'}"
     q = (
         out.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(availableNow=True).start()

@@ -1,16 +1,17 @@
-"""Shard-keyed streaming state (streaming/shard.py) vs the per-key tier.
+"""Shard-keyed streaming state (streaming/shard.py).
 
-The shard tier multiplexes every live task's state cell into one
-state-store row per ``hash(task_id) % shards`` group (state
-amortization for high-cardinality task ids — see the module docstring
-for the measured per-key floor). These tests pin output equality with
-the per-key tier / batch engine across every sink kind, carried state
-across micro-batches, and the watermark-eviction path that replaces
-per-key timers.
+Every streaming query multiplexes its live tasks' state cells into one
+state-store row per ``pmod(xxhash64(task_id), shards)`` group. These
+tests pin output equality across shard counts (one shard for every
+task, the default, and about one cell per shard) and with the batch
+engine across every sink kind, carried state across micro-batches, the
+watermark-eviction path that stands in for per-task timers, the shard
+count recorded in the checkpoint, and the plan shape.
 """
 
 import datetime as dt
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,24 +36,23 @@ def _run_stream(spark, path, df_fn, name, max_files=None):
     return spark.table(name)
 
 
-def _canon_correlate(df):
-    """Sink rows up to JSON numeric formatting: the shard tier's chunk
-    spans many tasks, so pandas dtype upcasts can render a sum as 0.0
-    where the per-key chunk rendered 0 — numerically identical maps."""
-    def _n(v):
-        return float(v) if isinstance(v, (int, float)) and not isinstance(v, bool) else v
+# one shard for every task, the default, and about one cell per shard
+SHARD_COUNTS = (1, None, 4096)
 
+
+def _sink_rows(df):
+    """Sink rows with ``map_json`` compared as rendered text: the JSON of
+    a map must not depend on which tasks shared its shard's chunk."""
     return sorted(
-        (r.task_id, r.sink, r.creation_ts, r.lastevent_ts, r.nevents,
-         tuple(sorted((k, json.dumps(_n(v), default=str))
-                      for k, v in json.loads(r.map_json).items())))
+        (r.task_id, r.sink, r.creation_ts, r.lastevent_ts, r.nevents, r.map_json)
         for r in df.collect()
     )
 
 
 def test_shard_correlate_equals_per_key_multibatch(spark, tmp_path):
-    # full-lifecycle equality on a generated corpus driven through
-    # several micro-batches (carried cells, expiry-on-arrival, completes)
+    # full-lifecycle equality across shard counts on a generated corpus
+    # driven through several micro-batches (carried cells,
+    # expiry-on-arrival, completes), byte-equal map_json included
     from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
 
     p = str(tmp_path / "in")
@@ -62,24 +62,28 @@ def test_shard_correlate_equals_per_key_multibatch(spark, tmp_path):
     # order; the default 10-min watermark would fire timers against that
     # replay artifact nondeterministically (file listing order), which
     # can evict every map before its end event arrives. A watermark
-    # beyond the corpus span keeps mid-replay timers quiet in BOTH modes
+    # beyond the corpus span keeps mid-replay timers quiet in every leg
     # so the equality (and non-emptiness) is deterministic.
     wm = "30 days"
-    per_key = _canon_correlate(_run_stream(
-        spark, p, lambda s: streaming_correlate(s, cfg, watermark=wm),
-        "shard_co_a", max_files=1,
-    ))
-    sharded = _canon_correlate(_run_stream(
-        spark, p, lambda s: streaming_correlate(s, cfg, watermark=wm, shards=7),
-        "shard_co_b", max_files=1,
-    ))
-    assert per_key and per_key == sharded
+    legs = [
+        _sink_rows(_run_stream(
+            spark, p, lambda s, n=n: streaming_correlate(s, cfg, watermark=wm, shards=n),
+            f"shard_co_{n or 'default'}", max_files=1,
+        ))
+        for n in SHARD_COUNTS
+    ]
+    assert legs[0] and all(leg == legs[0] for leg in legs[1:])
+    # sql_duration sums a long column (null on other rules' rows): it
+    # renders as a JSON integer, like the batch engine's long column
+    sums = [json.loads(r[-1])["sql_duration"] for r in legs[0] if r[1] == "completed"]
+    assert sums and all(type(v) is int for v in sums)
+    assert not any(re.search(r'"sql_duration": -?\d+\.', r[-1]) for r in legs[0])
 
 
 def test_shard_correlate_custom_timeouts(spark, tmp_path):
     # O17 through the shard tier: custom_timeout=0 -> inline eviction,
-    # >0 override -> expiry-on-arrival push (same scenario as the
-    # per-key test_streaming_custom_timeouts_match_reference)
+    # >0 override -> expiry-on-arrival push (same scenario as
+    # test_streaming_custom_timeouts_match_reference, at 3 shards)
     from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
 
     cfg = PipelineConfig(
@@ -120,7 +124,7 @@ def test_shard_correlate_custom_timeouts(spark, tmp_path):
 
 
 def test_shard_gated_emissions_match_per_key(spark, tmp_path):
-    # O18 emit rows through the shard tier: fire exactly where the code
+    # O18 emit rows at every shard count: fire exactly where the code
     # runs (update-before-create and duplicate-create suppressed), with
     # globally-numbered sessions feeding the per-row running count
     from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
@@ -165,14 +169,17 @@ def test_shard_gated_emissions_match_per_key(spark, tmp_path):
         ]
         return sorted(rows_)
 
-    per_key = run(None, "shard_emit_a")
-    sharded = run(2, "shard_emit_b")
-    assert per_key == sharded
-    assert len(per_key) == 4  # 2 start emits + E504 + E701
+    legs = [run(n, f"shard_emit_{n or 'default'}") for n in SHARD_COUNTS]
+    assert all(leg == legs[0] for leg in legs[1:])
+    assert len(legs[0]) == 4  # 2 start emits + E504 + E701
+    # err_code is a long column, null on the start rows sharing the
+    # chunk: its payload renders as a JSON integer
+    codes = [dict(m)["code"] for _t, _n, m in legs[0] if "code" in dict(m)]
+    assert sorted(codes) == [504, 701] and all(type(c) is int for c in codes)
 
 
 def test_shard_eviction_pushes_timeout_on_shardmates_batch(spark, tmp_path):
-    # the shard tier replaces per-key timers with watermark eviction:
+    # the shard tier replaces per-task timers with watermark eviction:
     # an expired task's timeout row is pushed when ITS SHARD is next
     # invoked — here by a different task hashing into the same shard
     # (shards=1 forces the collision)
@@ -283,9 +290,12 @@ def test_shard_passthrough_fuzz_carried_state(spark, tmp_path):
 def test_cell_codec_roundtrip_fuzz():
     # property fuzz for the binary cell-set codec (no Spark): arbitrary
     # task ids (unicode), finite clocks, optional maps/overrides must
-    # survive encode->decode exactly; json-codec blobs decode too
+    # survive encode->decode exactly; SGC2 blobs (no recorded shard
+    # count) still decode, and an SGC3 blob refuses another count
     import json as _json
+    import struct as _struct
 
+    import numpy as _np
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -313,43 +323,134 @@ def test_cell_codec_roundtrip_fuzz():
     cells_st = st.dictionaries(st.text(min_size=1, max_size=64), cell, max_size=32)
 
     @settings(max_examples=300, deadline=None)
-    @given(cells_st)
-    def check(cells):
+    @given(cells_st, st.integers(1, 1 << 20))
+    def check(cells, shards):
         # empty maps normalize to None on encode (c[_M] falsy) — mirror
         # that in the expectation
         expect = {
             t: [c[0], c[1], c[2], (c[3] or None), *c[4:]]
             for t, c in cells.items()
         }
-        assert _decode_cells(_encode_cells(cells)) == expect
-        # json-codec blobs (the A/B switch) decode through the same entry
-        assert _decode_cells(_json.dumps(cells, default=str).encode()) == cells
-        # r6-interim SGC1 blobs (5-wide numeric block) decode with None
-        # wall fields
-        legacy = {t: c[:6] for t, c in cells.items()}
-        import struct as _struct
-
-        import numpy as _np
-
-        n = len(legacy)
-        num = _np.empty((n, 5), dtype=_np.float64)
-        tblobs = []
-        maps = {}
-        for i, (t, c) in enumerate(legacy.items()):
-            tblobs.append(t.encode())
-            num[i] = [c[0], c[1], c[2],
-                      _np.nan if c[4] is None else c[4],
-                      _np.nan if c[5] is None else c[5]]
-            if c[3]:
-                maps[i] = c[3]
-        lens = _np.fromiter((len(b) for b in tblobs), dtype=_np.int32, count=n)
-        mb = _json.dumps(maps).encode() if maps else b""
-        blob = b"".join((b"SGC1", _struct.pack("<QQ", n, len(mb)),
-                         lens.tobytes(), num.tobytes(), b"".join(tblobs), mb))
-        got = _decode_cells(blob)
-        assert got == {
-            t: [c[0], c[1], c[2], (c[3] or None), c[4], c[5], None, None]
-            for t, c in legacy.items()
-        }
+        blob = _encode_cells(cells, shards)
+        assert blob[:4] == b"SGC3"
+        assert _decode_cells(blob, shards) == expect
+        with pytest.raises(ValueError, match=rf"shards={shards}\b.*shards={shards + 1}\b"):
+            _decode_cells(blob, shards + 1)
+        # SGC2: the same body behind a header without the shard count
+        n, mlen, _stored = _struct.unpack_from("<QQQ", blob, 4)
+        legacy = b"SGC2" + _struct.pack("<QQ", n, mlen) + blob[28:]
+        assert _decode_cells(legacy, shards + 1) == expect
 
     check()
+    with pytest.raises(ValueError, match="unknown shard cell-set header"):
+        _decode_cells(_json.dumps({"t": [0, 0, 1]}).encode(), 1)
+    assert _np.frombuffer(_encode_cells({}, 3)[4:28], dtype="<u8").tolist() == [0, 0, 3]
+
+
+def _stream_src(spark, path):
+    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+
+
+def _gated_passthrough_cfg():
+    import warnings
+
+    from logstash_filter_aggregate_spark.config import GuardedWindowModeWarning
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", GuardedWindowModeWarning)
+        return example1_config(timeout=3600.0)
+
+
+def test_shard_count_must_be_a_positive_int(spark, tmp_path):
+    # shards=0 used to be falsy and silently select task-keyed state;
+    # every entry point now rejects it before building a plan or a job
+    from logstash_filter_aggregate_spark.streaming.stream import (
+        replay_routed,
+        streaming_correlate,
+        streaming_passthrough,
+    )
+
+    p = str(tmp_path / "in")
+    make_transcript(spark, [(0, "INFO - t - TASK_START - s", 0)]).write.parquet(p)
+    cfg = _gated_passthrough_cfg()
+    for bad in (0, -3, 2.0, True, "8"):
+        with pytest.raises(ValueError, match="shards must be a positive int"):
+            streaming_correlate(_stream_src(spark, p), cfg, shards=bad)
+        with pytest.raises(ValueError, match="shards must be a positive int"):
+            streaming_passthrough(_stream_src(spark, p), cfg, shards=bad)
+    with pytest.raises(ValueError, match="shards must be a positive int"):
+        replay_routed(spark, p, cfg, str(tmp_path / "out"), str(tmp_path / "cp"), shards=0)
+    assert not (tmp_path / "out").exists()
+
+
+def test_restart_with_another_shard_count_fails_loudly(spark, tmp_path):
+    # a checkpoint records its shard count: resuming it with another
+    # count would strand the live cells in their old shards (pushed
+    # later as timeouts while the same tasks restart fresh elsewhere),
+    # so the restart fails and names both counts
+    from pyspark.errors import StreamingQueryException
+
+    from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
+
+    cfg = example1_config(timeout=3600.0)
+    sch = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    tasks = [f"k{i}" for i in range(12)]
+    src, cp, out = (str(tmp_path / d) for d in ("src", "cp", "out"))
+
+    def append(rows):
+        spark.createDataFrame(rows, sch).repartition(1).write.mode("append").parquet(src)
+
+    def run(shards):
+        q = (
+            streaming_correlate(_stream_src(spark, src), cfg, watermark="30 days",
+                                shards=shards)
+            .writeStream.format("parquet").option("path", out)
+            .option("checkpointLocation", cp)
+            .outputMode("append").trigger(availableNow=True).start()
+        )
+        return q.awaitTermination(300)
+
+    append([(t, 0, "user", f"INFO - {t} - TASK_START - s", "none", T0) for t in tasks])
+    assert run(3)
+    append([(t, 1, "user", f"INFO - {t} - SQL - q - 5", "none", T0 + dt.timedelta(seconds=1))
+            for t in tasks])
+    with pytest.raises(StreamingQueryException, match=r"shards=3\b.*shards=5\b"):
+        run(5)
+    # the recorded count resumes the query and completes nothing yet
+    assert run(3)
+    append([(t, 2, "user", f"INFO - {t} - TASK_END - e", "none", T0 + dt.timedelta(seconds=2))
+            for t in tasks])
+    assert run(3)
+    done = spark.read.parquet(out).where("sink = 'completed'").collect()
+    assert sorted(r.task_id for r in done) == sorted(tasks)
+    assert {json.loads(r.map_json)["sql_duration"] for r in done} == {5}
+
+
+def _stateful_group_keys(df) -> list[str]:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return re.findall(r"FlatMapGroupsInPandasWithState fn\(.*?\)#\d+, \[(\w+)#", plan)
+
+
+def test_default_streaming_plans_key_state_by_shard(spark, tmp_path):
+    # the one state tier: the default correlate and gated passthrough
+    # plans group their stateful function by _shard, never by _task_id,
+    # with the default shard count in the shard expression
+    from logstash_filter_aggregate_spark.streaming.stream import (
+        DEFAULT_SHARDS,
+        streaming_correlate,
+        streaming_passthrough,
+    )
+
+    p = str(tmp_path / "in")
+    make_transcript(spark, [(0, "INFO - t - TASK_START - s", 0)]).write.parquet(p)
+    cfg = _gated_passthrough_cfg()
+    for time_mode in ("event", "processing"):
+        for df in (
+            streaming_correlate(_stream_src(spark, p), cfg, time_mode=time_mode),
+            streaming_passthrough(_stream_src(spark, p), cfg, time_mode=time_mode),
+        ):
+            assert _stateful_group_keys(df) == ["_shard"]
+            plan = df._jdf.queryExecution().analyzed().toString()
+            assert re.search(
+                rf"pmod\(xxhash64\(_task_id#\d+, 42\), cast\({DEFAULT_SHARDS} as bigint\)\)", plan
+            )

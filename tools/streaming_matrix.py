@@ -1,7 +1,7 @@
-"""Workload matrix for the streaming state-keying choice (per-key vs
-shard): sweep TASK CARDINALITY at a fixed row count and measure both
-tiers, producing the crossover guidance the shard.py docstring promises
-("per-key when few long-lived tasks, shard when many short ones").
+"""Workload matrix for the streaming state shard count: sweep TASK
+CARDINALITY at a fixed row count and measure ``streaming_correlate`` at
+the default shard count (``stream.DEFAULT_SHARDS``) and at
+``SPARK_GRAFT_STREAM_SHARDS`` (512 unless set).
 
 Corpus: ``n_rows`` fixed; ``n_tasks`` ∈ {1k, 50k, 600k(ish)}. Each task
 is one start → updates → end lifecycle; arrival order round-robins
@@ -11,6 +11,8 @@ time advances with arrival order so the watermark moves and state
 evicts.
 
 Usage: python tools/streaming_matrix.py [n_rows=1500000] [out.json]
+       SPARK_GRAFT_CPUS (default 32) sets local[N] and the shuffle
+       partitions.
 """
 
 from __future__ import annotations
@@ -101,7 +103,7 @@ def main() -> None:
         static = spark.read.parquet(path)
         n = static.count()
         row = {"n_tasks": n_tasks, "rows": n, "rows_per_task": n // n_tasks}
-        for label, sh in (("per_key", None), ("sharded", shards)):
+        for label, sh in (("default", None), ("sharded", shards)):
             wall = drive(spark, path, static.schema, sh,
                          f"{n_tasks}_{label}")
             row[label] = {
@@ -109,12 +111,12 @@ def main() -> None:
                 "turns_per_sec": round(n / wall, 1),
             }
         row["shard_speedup"] = round(
-            row["per_key"]["wall_s"] / row["sharded"]["wall_s"], 2
+            row["default"]["wall_s"] / row["sharded"]["wall_s"], 2
         )
         print(json.dumps(row), flush=True)
         results.append(row)
     doc = {
-        "metric": "per-key vs shard-keyed streaming correlate by task cardinality",
+        "metric": "streaming correlate by task cardinality: default vs explicit shard count",
         "n_rows_target": n_rows,
         "cpus": cpus,
         "shards": shards,

@@ -17,8 +17,8 @@ noop and reads the engine's own per-batch accounting
   this is the JVM store), ``commitTimeMs`` (delta file write),
   ``numRowsTotal`` (live state rows).
 
-Usage: python tools/streaming_probe.py [turns=3000000] [out.json]
-       SPARK_GRAFT_STREAM_QUERIES / _SHARDS / _CODEC honored.
+Usage: python tools/streaming_probe.py [slope|rocksdb|fsync] [turns=3000000] [out.json]
+       SPARK_GRAFT_CPUS / SPARK_GRAFT_STREAM_SHARDS honored.
 Runs max_files in {64, 8, 2} (≈1 / 8 / 32 micro-batches on the
 64-file corpus) so the fixed-vs-variable split falls out of the slope.
 """
@@ -53,14 +53,8 @@ STATE_KEYS = [
 
 
 def run_leg(spark, src_path, schema, shards: int, max_files: int,
-            cp_root: str = WORK, codec: str | None = None) -> dict:
-    from logstash_filter_aggregate_spark.streaming import shard
-
-    if codec is not None:
-        # flipped at QUERY BUILD time: the fn captures the codec, so one
-        # session can interleave json/binary legs (decode sniffs magic)
-        shard._CODEC = codec
-    cp = f"{cp_root}/cp_{max_files}_{codec or 'd'}"
+            cp_root: str = WORK) -> dict:
+    cp = f"{cp_root}/cp_{max_files}"
     shutil.rmtree(cp, ignore_errors=True)
     src = (
         spark.readStream.schema(schema)
@@ -124,12 +118,6 @@ def main() -> None:
         # fixed-vs-variable split: same corpus at ~1/8/32 micro-batches
         for max_files in (64, 8, 2):
             legs.append(run_leg(spark, src_path, static.schema, shards, max_files))
-    elif mode == "ab":
-        # same-session interleaved codec A/B at the slope-sensitive point
-        for codec in ("json", "binary", "json", "binary"):
-            legs.append(run_leg(
-                spark, src_path, static.schema, shards, 2, codec=codec
-            ))
     elif mode == "rocksdb":
         # r5 rejected RocksDB WITHOUT changelog checkpointing (per-batch
         # full-snapshot maintenance dominated). Changelog checkpointing
@@ -152,7 +140,7 @@ def main() -> None:
                 )
             legs.append(run_leg(
                 spark, src_path, static.schema, shards, 2,
-                cp_root=f"{WORK}_{provider}_{changelog}", codec="binary",
+                cp_root=f"{WORK}_{provider}_{changelog}",
             ))
             legs[-1]["provider"] = provider
             legs[-1]["changelog"] = changelog
@@ -164,7 +152,6 @@ def main() -> None:
                         WORK, "/dev/shm/spark_graft_streamprobe"):
             legs.append(run_leg(
                 spark, src_path, static.schema, shards, 2, cp_root=cp_root,
-                codec="binary",
             ))
             legs[-1]["cp_root"] = cp_root
     for leg in legs:
