@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from logstash_filter_aggregate_spark.sqltext import all_of, case, ident, quote
+
 # Base pattern dictionary — the public grok core pattern NAMES, each
 # re-derived from scratch as a plain regex valid in both the Java and
 # Python dialects (no atomic groups, no possessive quantifiers). Composites
@@ -315,8 +317,19 @@ def compile_grok(
     )
 
 
+# The seed of the shuffle() optimizer barrier (see apply_grok_jvm). A
+# one-element array shuffles to itself whatever the seed, but the seed is
+# part of the generated code: a fixed one lets every run reuse the
+# compiled parse stage instead of compiling a new class per query.
+_BARRIER_SEED = 0
+
+
 def _cast(col: Column, dtype: T.DataType) -> Column:
     return col.cast(dtype) if not isinstance(dtype, T.StringType) else col
+
+
+def _cast_sql(expr: str, dtype: T.DataType) -> str:
+    return expr if isinstance(dtype, T.StringType) else f"CAST({expr} AS {dtype.simpleString()})"
 
 
 def _group_indices(regex: str) -> tuple[int, dict[str, int]]:
@@ -434,56 +447,58 @@ def _apply_grok_jvm_combined(
     per-pattern path; tests pin equivalence on all three backends."""
     regex, total, wrapper_idx, cap_idx = comb
     DELIM = "\x01"
-    text = F.col(text_col)
+    text = ident(text_col)
+    base = df.columns
     rep = DELIM.join(f"${i}" for i in range(1, total + 1))
     # shuffle() on a 1-element array: the same optimizer barrier as the
     # per-pattern path (see apply_grok_jvm) — without it the expensive
     # extraction is inlined into every downstream consumer
-    ca_expr = F.element_at(
-        F.shuffle(F.array(F.split(F.regexp_replace(text, regex, rep), DELIM, -1))), 1
+    df = df.selectExpr(
+        "*",
+        f"element_at(shuffle(array(split(regexp_replace({text}, {quote(regex)}, "
+        f"{quote(rep)}), {quote(DELIM)}, -1)), {_BARRIER_SEED}), 1) AS _ca",
     )
-    df = df.select("*", ca_expr.alias("_ca"))
-    ca = F.col("_ca")
-    clean = F.size(ca) == F.lit(total)
+    clean = f"size(_ca) = {total}"
 
-    winner_cols: list[Column] = []
-    no_earlier: Column = F.lit(True)
+    # the winner flags get a projection of their own: each is read by
+    # several captures, so the optimizer keeps them computed once
+    winner_cols: list[str] = []
+    earlier: list[str] = []  # NOT (earlier pattern matches)
     for pi, g in enumerate(groks):
-        fallback = text.rlike(g.regex) & no_earlier
-        no_earlier = no_earlier & ~text.rlike(g.regex)
-        winner_cols.append(
-            F.when(clean, F.element_at(ca, wrapper_idx[pi]) == text)
-            .otherwise(fallback)
-            .alias(f"_w_{g.name}")
-        )
-    df = df.select("*", *winner_cols)
+        match = f"{text} RLIKE {quote(g.regex)}"
+        fallback = all_of([match, all_of(earlier)]) if earlier else match
+        earlier.append(f"NOT ({match})")
+        winner = case([(clean, f"element_at(_ca, {wrapper_idx[pi]}) = {text}")], fallback)
+        winner_cols.append(f"{winner} AS {ident('_w_' + g.name)}")
+    df = df.selectExpr("*", *winner_cols)
 
-    all_caps = _all_caps_typed(groks)
-    cap_cols: list[Column] = []
-    for cap, dtype in all_caps.items():
-        expr: Column = F.lit(None).cast(dtype)
+    cap_cols: list[str] = []
+    for cap, dtype in _all_caps_typed(groks).items():
+        expr = f"CAST(NULL AS {dtype.simpleString()})"
         for pi in reversed(range(len(groks))):  # earlier patterns win
             g = groks[pi]
             if cap not in g.captures:
                 continue
-            raw = F.when(clean, F.element_at(ca, cap_idx[(pi, cap)])).otherwise(
-                F.regexp_extract(text, g.regex, g.group_index[cap])
+            raw = case(
+                [(clean, f"element_at(_ca, {cap_idx[(pi, cap)]})")],
+                f"regexp_extract({text}, {quote(g.regex)}, {g.group_index[cap]})",
             )
-            val = _cast(F.nullif(raw, F.lit("")), dtype)
-            expr = F.when(F.col(f"_w_{g.name}"), val).otherwise(expr)
-        cap_cols.append(expr.alias(cap))
+            val = _cast_sql(f"nullif({raw}, '')", dtype)
+            expr = case([(ident("_w_" + g.name), val)], expr)
+        cap_cols.append(f"{expr} AS {ident(cap)}")
 
-    matched_name = F.lit(None).cast(T.StringType())
+    matched_name = "CAST(NULL AS STRING)"
     for g in reversed(groks):
-        matched_name = F.when(F.col(f"_w_{g.name}"), F.lit(g.name)).otherwise(matched_name)
+        matched_name = case([(ident("_w_" + g.name), quote(g.name))], matched_name)
 
-    return df.select(
-        *[c for c in df.columns if not c.startswith("_w_") and c != "_ca"],
+    return df.selectExpr(
+        *[ident(c) for c in base],
         *cap_cols,
-        matched_name.alias("grok_pattern"),
-        F.when(matched_name.isNull(), F.array(F.lit("_grokparsefailure")))
-        .otherwise(F.array().cast(T.ArrayType(T.StringType())))
-        .alias("parse_tags"),
+        f"{matched_name} AS grok_pattern",
+        case(
+            [(f"{matched_name} IS NULL", "array('_grokparsefailure')")],
+            "CAST(array() AS ARRAY<STRING>)",
+        ) + " AS parse_tags",
     )
 
 
@@ -553,7 +568,7 @@ def apply_grok_jvm(df: DataFrame, text_col: str, groks: list[CompiledGrok]) -> D
             F.split(F.regexp_replace(text, g.regex, rep), DELIM, -1),
         )
         arr_cols.append(
-            F.element_at(F.shuffle(F.array(extracted)), 1).alias(f"_a_{g.name}")
+            F.element_at(F.shuffle(F.array(extracted), _BARRIER_SEED), 1).alias(f"_a_{g.name}")
         )
 
     df = df.select("*", *match_flags)

@@ -25,69 +25,84 @@ from logstash_filter_aggregate_spark.config import (
     TASK_ID_COL,
     PipelineConfig,
 )
+from logstash_filter_aggregate_spark.sqltext import case, ident, quote, with_columns
 
 _TASK_ID_SPLIT = re.compile(r"(%\{[A-Za-z_][A-Za-z0-9_]*\})")
 
 
-def task_id_expr(pattern: str) -> Column:
+def task_id_sql(pattern: str) -> str:
     """Compile ``"%{a}-%{b}"`` to a concat that is NULL when any referenced
     column is NULL (so unresolved patterns drop out, ``aggregate.rb:183``).
     Numeric columns coerce to string — integer task ids behave identically
     (``spec/filters/aggregate_spec.rb:135-141``)."""
-    parts: list[Column] = []
-    refs: list[Column] = []
+    parts: list[str] = []
+    refs: list[str] = []
     for tok in _TASK_ID_SPLIT.split(pattern):
         if not tok:
             continue
         if tok.startswith("%{"):
-            c = F.col(tok[2:-1]).cast("string")
+            c = f"CAST({ident(tok[2:-1])} AS STRING)"
             parts.append(c)
             refs.append(c)
         else:
-            parts.append(F.lit(tok))
-    expr = F.concat(*parts) if len(parts) > 1 else parts[0]
+            parts.append(quote(tok))
+    expr = f"concat({', '.join(parts)})" if len(parts) > 1 else parts[0]
     # concat already yields NULL if any part is NULL; guard the all-literal
     # case (rejected by config validation anyway).
     for r in refs:
-        expr = F.when(r.isNull(), F.lit(None)).otherwise(expr)
+        expr = case([(f"{r} IS NULL", "NULL")], expr)
     return expr
+
+
+def task_id_expr(pattern: str) -> Column:
+    """:func:`task_id_sql` as a Column."""
+    return F.expr(task_id_sql(pattern))
 
 
 def classify(parsed: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Add ``_rule_id`` (first matching rule or NULL), ``_task_id``, and
     per-rule attribute columns (``_end_flag``, ``_action``, ``_cancel``,
-    ``_custom_timeout``, ``_custom_inactivity``).
+    ``_custom_timeout``, ``_custom_inactivity``), in one projection.
 
     A row participates in correlation iff ``_rule_id`` and ``_task_id``
     are both non-NULL; everything else passes through untouched
     (the reference simply never routes such events into the filter).
     """
-    rule_id: Column = F.lit(None).cast("string")
-    end_flag: Column = F.lit(0)
-    action: Column = F.lit(None).cast("string")
-    cancel: Column = F.lit(False)
-    custom_timeout: Column = F.lit(None).cast("double")
-    custom_inactivity: Column = F.lit(None).cast("double")
-    for r in reversed(cfg.rules):  # reversed so earlier rules win the CASE chain
-        m = F.expr(r.match)
-        rule_id = F.when(m, F.lit(r.rule_id)).otherwise(rule_id)
-        end_flag = F.when(m, F.lit(1 if r.end_of_task else 0)).otherwise(end_flag)
-        action = F.when(m, F.lit(r.map_action)).otherwise(action)
-        cancel = F.when(m, F.lit(r.cancel)).otherwise(cancel)
-        if r.custom_timeout is not None:
-            custom_timeout = F.when(m, F.expr(r.custom_timeout).cast("double")).otherwise(custom_timeout)
-        if r.custom_inactivity_timeout is not None:
-            custom_inactivity = F.when(m, F.expr(r.custom_inactivity_timeout).cast("double")).otherwise(custom_inactivity)
+    matches = [f"({r.match})" for r in cfg.rules]
 
-    out = parsed.withColumns(
+    def first_match(value, otherwise: str, only=lambda r: True) -> str:
+        # first-match-wins over the rules, in filter-block order
+        expr = otherwise
+        for m, r in reversed(list(zip(matches, cfg.rules))):
+            if only(r):
+                expr = case([(m, value(r))], expr)
+        return expr
+
+    rule_id = first_match(lambda r: quote(r.rule_id), "CAST(NULL AS STRING)")
+    matched = f"{rule_id} IS NOT NULL"
+    return with_columns(
+        parsed,
         {
             KIND_COL: rule_id,
-            TASK_ID_COL: F.when(rule_id.isNotNull(), task_id_expr(cfg.task_id)),
-            "_end_flag": F.when(rule_id.isNotNull(), end_flag).otherwise(F.lit(0)),
-            "_action": action,
-            "_cancel": F.when(rule_id.isNotNull(), cancel).otherwise(F.lit(False)),
-            "_custom_timeout": custom_timeout,
-            "_custom_inactivity": custom_inactivity,
-        }
+            TASK_ID_COL: case([(matched, task_id_sql(cfg.task_id))]),
+            "_end_flag": case(
+                [(matched, first_match(lambda r: "1" if r.end_of_task else "0", "0"))], "0"
+            ),
+            "_action": first_match(lambda r: quote(r.map_action), "CAST(NULL AS STRING)"),
+            "_cancel": case(
+                [(matched, first_match(lambda r: "true" if r.cancel else "false", "false"))],
+                "false",
+            ),
+            # override columns take the first matching rule that SETS one
+            "_custom_timeout": first_match(
+                lambda r: f"CAST(({r.custom_timeout}) AS DOUBLE)",
+                "CAST(NULL AS DOUBLE)",
+                only=lambda r: r.custom_timeout is not None,
+            ),
+            "_custom_inactivity": first_match(
+                lambda r: f"CAST(({r.custom_inactivity_timeout}) AS DOUBLE)",
+                "CAST(NULL AS DOUBLE)",
+                only=lambda r: r.custom_inactivity_timeout is not None,
+            ),
+        },
     )
-    return out

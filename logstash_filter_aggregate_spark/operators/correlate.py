@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logstash_filter_aggregate_spark.config import (
@@ -27,6 +27,7 @@ from logstash_filter_aggregate_spark.config import (
     CorrelationRule,
     PipelineConfig,
 )
+from logstash_filter_aggregate_spark.sqltext import case, double, ident, quote, with_columns
 
 SESSION_KEY = [TASK_ID_COL, "_end_seg", "_gap_seg", "_age_seg"]
 SEED_RULE = "_seed"  # rule id of partial rows (resume seeds / prereduce super-rows)
@@ -51,7 +52,7 @@ def apply_guards(sessions: DataFrame, cfg: PipelineConfig) -> DataFrame:
     is propagated forward with the running latest-group-start trick, so
     per-segment creator detection is a subtraction of running counts.
     """
-    from logstash_filter_aggregate_spark.operators.sessionize import _running, _w, seg_start_flag
+    from logstash_filter_aggregate_spark.operators.sessionize import _running, seg_start_flag
 
     if all(r.map_action == "create_or_update" for r in cfg.rules):
         # every matched row both creates and updates (aggregate.rb:202:
@@ -61,24 +62,23 @@ def apply_guards(sessions: DataFrame, cfg: PipelineConfig) -> DataFrame:
         # where the mapInArrow scan's output reports no partitioning: with
         # no post-scan window, the only shuffle after the scan carries
         # per-session aggregation PARTIALS instead of the event stream.
-        return sessions.withColumn("_included", F.lit(True))
+        return with_columns(sessions, {"_included": "true"})
 
-    w = _w()
-    cc = (F.col("_action") != "update").cast("int")
-    cc_incl = F.coalesce(_running(F.sum(cc)), F.lit(0))          # can-creates at/before me (task-wide)
-    cc_before_seg = _running(
-        F.max(F.when(seg_start_flag(), F.struct(F.col(ORDER_COL).alias("o"), (cc_incl - cc).alias("v"))))
-    )["v"]                                                        # can-creates strictly before my segment
-    sessions = sessions.withColumn("_cc_in_seg", cc_incl - cc_before_seg)
-    # _cc_in_seg counts can-create rows in my segment at-or-before me
-    prior_cc = F.col("_cc_in_seg") - cc
-    included = (
-        F.when((cc == 1) & (prior_cc == 0), F.lit(True))          # I create the map
-        .when(F.col("_action") == "create", F.lit(False))         # duplicate start: no-op (spec:52-68)
-        .otherwise(F.col("_cc_in_seg") >= 1)                      # update/c-o-u after a creator
+    cc = "CAST((_action <> 'update') AS INT)"
+    cc_incl = f"coalesce({_running(f'sum({cc})')}, 0)"         # can-creates at/before me (task-wide)
+    cc_before_seg = _running(                                     # can-creates strictly before my segment
+        f"max(CASE WHEN {seg_start_flag()} THEN struct({ORDER_COL} AS o, {cc_incl} - {cc} AS v) END)"
     )
-    _ = w
-    return sessions.withColumn("_included", included).drop("_cc_in_seg")
+    sessions = with_columns(sessions, {"_cc_in_seg": f"{cc_incl} - ({cc_before_seg}).v"})
+    # _cc_in_seg counts can-create rows in my segment at-or-before me
+    included = case(
+        [
+            (f"{cc} = 1 AND _cc_in_seg - {cc} = 0", "true"),     # I create the map
+            ("_action = 'create'", "false"),                      # duplicate start: no-op (spec:52-68)
+        ],
+        "_cc_in_seg >= 1",                                        # update/c-o-u after a creator
+    )
+    return with_columns(sessions, {"_included": included}, drop=["_cc_in_seg"])
 
 
 def _merged_agg_specs(cfg: PipelineConfig) -> dict[str, tuple[str, list[tuple[str, str]]]]:
@@ -99,12 +99,20 @@ def _merged_agg_specs(cfg: PipelineConfig) -> dict[str, tuple[str, list[tuple[st
     return merged
 
 
-def _value_expr(sources: list[tuple[str, str]], projected: bool = False) -> Column:
-    expr: Column = F.lit(None)
+def _value_sql(sources: list[tuple[str, str]], projected: bool = False) -> str:
+    """Each row's input to one merged aggregate: the source of the rule
+    that matched it (its pre-evaluated ``_v_*`` column when
+    ``projected``), NULL for other rows."""
+    expr = "NULL"
     for rid, col in sources:
-        src = F.col(value_col_name(rid, col)) if projected else F.expr(col)
-        expr = F.when(F.col("_rule_id") == rid, src).otherwise(expr)
+        src = ident(value_col_name(rid, col)) if projected else f"({col})"
+        expr = case([(f"_rule_id = {quote(rid)}", src)], expr)
     return expr
+
+
+def _value_expr(sources: list[tuple[str, str]], projected: bool = False) -> Column:
+    """:func:`_value_sql` as a Column."""
+    return F.expr(_value_sql(sources, projected))
 
 
 def _hashed_col(prefix: str, rule_id: str, key: str) -> str:
@@ -140,25 +148,22 @@ def narrow_for_correlation(classified: DataFrame, cfg: PipelineConfig) -> DataFr
     task-id exchange: the shuffle and the window sort then carry narrow
     rows instead of raw text + every parsed capture — the columnar
     equivalent of predicate/projection pushdown for the stateful stage."""
-    vcols: dict[str, Column] = {}
+    vcols: dict[str, str] = {}
     for r in cfg.rules:
-        for s in r.aggs:
-            if not s.col:
-                continue
-            name = value_col_name(r.rule_id, s.col)
-            if name not in vcols:
-                vcols[name] = F.when(F.col(KIND_COL) == r.rule_id, F.expr(s.col)).alias(name)
+        matched = f"{KIND_COL} = {quote(r.rule_id)}"
+        for sp in r.aggs:
+            if sp.col:
+                vcols.setdefault(value_col_name(r.rule_id, sp.col), case([(matched, f"({sp.col})")]))
         if r.emit and r.map_action != "create_or_update":
             # guard-gated emit rule: the emission fires only for _included
             # rows, decided post-sessionize — pre-evaluate the emit
             # expressions here so the inline bucket reads them off the
             # guarded frame without a second pass over the raw stream
             for out_name, e in r.emit.items():
-                cname = emit_col_name(r.rule_id, out_name)
-                vcols[cname] = F.when(F.col(KIND_COL) == r.rule_id, F.expr(e)).alias(cname)
-    seed_cols = [c for c in classified.columns if c.startswith("_seed_")]
+                vcols[emit_col_name(r.rule_id, out_name)] = case([(matched, f"({e})")])
+    seed_cols = [ident(c) for c in classified.columns if c.startswith("_seed_")]
 
-    narrow_base: list[Column | str] = list(NARROW_BASE)
+    narrow_base = list(NARROW_BASE)
     import re as _re
 
     m = _re.fullmatch(r"%\{(\w+)\}", cfg.task_id)
@@ -173,17 +178,19 @@ def narrow_for_correlation(classified: DataFrame, cfg: PipelineConfig) -> DataFr
         # expressions, so a table bucketed by this column runs the entire
         # correlation stage with ZERO event-stream exchange
         # (tests/test_plans.py::test_bucketed_table_elides_task_exchange).
-        narrow_base[narrow_base.index(TASK_ID_COL)] = F.col(field).alias(TASK_ID_COL)
-    return classified.select(*narrow_base, *seed_cols, *vcols.values())
+        narrow_base[narrow_base.index(TASK_ID_COL)] = f"{ident(field)} AS {TASK_ID_COL}"
+    return classified.selectExpr(
+        *narrow_base, *seed_cols, *[f"{e} AS {ident(n)}" for n, e in vcols.items()]
+    )
 
 
 def _agg_column(
     name: str, fn: str, sources: list[tuple[str, str]], with_seeds: bool,
     projected: bool = False,
-) -> Column:
+) -> str:
     """The aggregation dictionary (O6) — every entry a Catalyst built-in
     with map-side partial aggregation. Order-sensitive fns (`first`,
-    `last`, `collect_list`) ride on ``_ord`` via struct min/max /
+    `last`, `collect_list`) ride on ``_ord`` via min_by/max_by /
     sort_array, so results are independent of partitioning (the departure
     from the reference's arrival-order ``-w 1`` mode).
 
@@ -192,98 +199,86 @@ def _agg_column(
     ``aggregate.rb:136-140``) carrying the prior partial aggregate in
     ``_seed_<name>``; each fn merges it with its natural combiner."""
     # count never evaluates its source (and "1" is not projected)
-    val = _value_expr(sources, projected) if fn != "count" else F.lit(None)
-    inc = F.col("_included")
-    is_seed = F.col("_rule_id") == SEED_RULE
-    seed_val = F.col(f"_seed_{name}") if with_seeds else F.lit(None)
+    val = _value_sql(sources, projected) if fn != "count" else "NULL"
+    inc = "_included"
+    is_seed = f"_rule_id = {quote(SEED_RULE)}"
+    seed_val = ident(f"_seed_{name}") if with_seeds else "NULL"
     if with_seeds and fn in ("sum", "min", "max", "first", "last"):
-        val = F.when(is_seed, seed_val).otherwise(val)
-    val = F.when(inc, val)
-    rule_match = F.when(inc & F.col("_rule_id").isin([r for r, _ in sources]), 1)
+        val = case([(is_seed, seed_val)], val)
+    val = case([(inc, val)])
+    in_rules = ", ".join(quote(r) for r, _ in sources)
+    rule_match = case([(f"{inc} AND _rule_id IN ({in_rules})", "1")])
     if fn == "sum":
-        return F.sum(val).alias(name)
-    if fn == "count":
+        agg = f"sum({val})"
+    elif fn == "count":
         if with_seeds:
             # count merges as a sum of weights: seed weight = prior count
-            return F.sum(
-                F.when(inc & is_seed, F.coalesce(seed_val.cast("long"), F.lit(0)))
-                .when(rule_match.isNotNull(), F.lit(1))
-                .otherwise(F.lit(0))
-            ).alias(name)
-        return F.count(rule_match).alias(name)
-    if fn == "min":
-        return F.min(val).alias(name)
-    if fn == "max":
-        return F.max(val).alias(name)
-    if fn == "avg":
+            agg = "sum(" + case(
+                [
+                    (f"{inc} AND {is_seed}", f"coalesce(CAST({seed_val} AS BIGINT), 0)"),
+                    (f"{rule_match} IS NOT NULL", "1"),
+                ],
+                "0",
+            ) + ")"
+        else:
+            agg = f"count({rule_match})"
+    elif fn in ("min", "max"):
+        agg = f"{fn}({val})"
+    elif fn == "avg":
         # handled via _avg_partials in aggregate_sessions (sum+count
         # helpers make avg resumable across runs)
         raise AssertionError("avg is expanded by aggregate_sessions, not _agg_column")
-    if fn == "first":
+    elif fn in ("first", "last"):
         # ||= first non-null in turn order (docs/index.asciidoc:136); a
         # seed row has the minimum _ord in its session, so it wins here.
         # min_by instead of min-of-struct: no per-row struct allocation,
         # ~20% cheaper in the aggregate stage; _ord is unique per session
         # so the tie-order caveat of min_by cannot bite.
-        return F.min_by(val, F.when(val.isNotNull(), F.col(ORDER_COL))).alias(name)
-    if fn == "last":
-        return F.max_by(val, F.when(val.isNotNull(), F.col(ORDER_COL))).alias(name)
-    if fn in ("collect_list", "collect_set"):
+        by = "min_by" if fn == "first" else "max_by"
+        agg = f"{by}({val}, CASE WHEN {val} IS NOT NULL THEN {ORDER_COL} END)"
+    elif fn in ("collect_list", "collect_set"):
         # map['towns'] << {...} in arrival order (docs/index.asciidoc:231-233)
-        new_items = F.transform(
-            F.sort_array(
-                F.collect_list(
-                    F.when(val.isNotNull() & ~is_seed, F.struct(F.col(ORDER_COL).alias("o"), val.alias("v")))
-                )
-            ),
-            lambda x: x["v"],
-        )
+        item = case([(f"{val} IS NOT NULL AND NOT ({is_seed})", f"struct({ORDER_COL} AS o, {val} AS v)")])
+        agg = f"transform(sort_array(collect_list({item})), x -> x.v)"
         if with_seeds:
             # seed carries the prior array; prepend it (seed is earliest).
-            # at most one seed per session, so an unordered first is fine
-            prior = F.first(F.when(inc & is_seed, seed_val), ignorenulls=True)
-            new_items = F.concat(_empty_if_null(prior, new_items), new_items)
+            # at most one seed per session, so an unordered first is fine;
+            # an empty slice of the new items types a missing prior
+            prior = f"first({case([(f'{inc} AND {is_seed}', seed_val)])}, true)"
+            agg = f"concat(coalesce({prior}, slice({agg}, 1, 0)), {agg})"
         if fn == "collect_set":
-            return F.array_distinct(new_items).alias(name)
-        return new_items.alias(name)
-    raise ConfigurationError(f"unhandled agg fn {fn!r}")
-
-
-def _empty_if_null(arr: Column, like: Column) -> Column:
-    # empty array of the same element type as `like`
-    return F.coalesce(arr, F.slice(like, 1, 0))
+            agg = f"array_distinct({agg})"
+    else:
+        raise ConfigurationError(f"unhandled agg fn {fn!r}")
+    return f"{agg} AS {ident(name)}"
 
 
 def _avg_partials(
     name: str, sources: list[tuple[str, str]], with_seeds: bool, projected: bool,
     available: set[str],
-) -> list[Column]:
+) -> list[str]:
     """avg decomposed into ``_avg_sum_<name>`` / ``_avg_cnt_<name>``
     partials so the OPEN bucket carries mergeable state — resumed runs
     combine seed sum+count with the new rows' (the reference's map would
     hold the running sum and count explicitly; a bare average is not a
     mergeable aggregate). The visible ``<name>`` column is derived after
     the groupBy."""
-    val = (_value_expr(sources, projected) if sources else F.lit(None)).cast("double")
-    inc = F.col("_included")
-    is_seed = F.col("_rule_id") == SEED_RULE
+    val = f"CAST({_value_sql(sources, projected) if sources else 'NULL'} AS DOUBLE)"
+    is_seed = f"_rule_id = {quote(SEED_RULE)}"
+    counted = case([(f"{val} IS NOT NULL", "1")], "0")
     if with_seeds:
         if f"_seed__avg_sum_{name}" not in available:
             raise ConfigurationError(
                 f"agg {name!r}: resuming avg needs _avg_sum_/_avg_cnt_ helper "
                 "columns in the open-maps input — was it produced by an older config?"
             )
-        sum_src = F.when(is_seed, F.col(f"_seed__avg_sum_{name}")).otherwise(val)
-        cnt_src = (
-            F.when(is_seed, F.coalesce(F.col(f"_seed__avg_cnt_{name}"), F.lit(0)))
-            .otherwise(F.when(val.isNotNull(), F.lit(1)).otherwise(F.lit(0)))
-        )
+        sum_src = case([(is_seed, ident(f"_seed__avg_sum_{name}"))], val)
+        cnt_src = case([(is_seed, f"coalesce({ident(f'_seed__avg_cnt_{name}')}, 0)")], counted)
     else:
-        sum_src = val
-        cnt_src = F.when(val.isNotNull(), F.lit(1)).otherwise(F.lit(0))
+        sum_src, cnt_src = val, counted
     return [
-        F.sum(F.when(inc, sum_src)).alias(f"_avg_sum_{name}"),
-        F.sum(F.when(inc, cnt_src).otherwise(F.lit(0))).cast("long").alias(f"_avg_cnt_{name}"),
+        f"sum(CASE WHEN _included THEN {sum_src} END) AS {ident(f'_avg_sum_{name}')}",
+        f"CAST(sum(CASE WHEN _included THEN {cnt_src} ELSE 0 END) AS BIGINT) AS {ident(f'_avg_cnt_{name}')}",
     ]
 
 
@@ -293,69 +288,62 @@ def aggregate_sessions(guarded: DataFrame, cfg: PipelineConfig) -> DataFrame:
     session closed. Seed rows from a resumed run (plans/resume.py)
     contribute their prior creation time / event count."""
     merged = _merged_agg_specs(cfg)
-    with_seeds = "_seed_nevents" in guarded.columns
-    projected = any(c.startswith("_v_") for c in guarded.columns)
-    inc = F.col("_included")
-    ord_c = F.col(ORDER_COL)
+    available = set(guarded.columns)
+    with_seeds = "_seed_nevents" in available
+    projected = any(c.startswith("_v_") for c in available)
 
-    creation_src = (
-        F.coalesce(F.col("_seed_creation_ts"), F.col("ts")) if with_seeds else F.col("ts")
-    )
+    creation_src = "coalesce(_seed_creation_ts, ts)" if with_seeds else "ts"
     lastevent_src = (
-        F.coalesce(F.col("_seed_lastevent_ts"), F.col("ts"))
-        if with_seeds and "_seed_lastevent_ts" in guarded.columns
-        else F.col("ts")
+        "coalesce(_seed_lastevent_ts, ts)"
+        if with_seeds and "_seed_lastevent_ts" in available
+        else "ts"
     )
-    nevents_w = (
-        F.coalesce(F.col("_seed_nevents"), F.lit(1)) if with_seeds else F.lit(1)
-    )
+    nevents_w = "coalesce(_seed_nevents, 1)" if with_seeds else "1"
+    closing = "_included AND _close_flag = 1"
     aggs = [
-        F.min(F.when(inc, creation_src)).alias("creation_ts"),       # O4 aggregate.rb:525-528
-        F.max(F.when(inc, lastevent_src)).alias("lastevent_ts"),     # O5 aggregate.rb:220-221
-        F.sum(F.when(inc, nevents_w).otherwise(F.lit(0))).alias("nevents"),
+        f"min(CASE WHEN _included THEN {creation_src} END) AS creation_ts",    # O4 aggregate.rb:525-528
+        f"max(CASE WHEN _included THEN {lastevent_src} END) AS lastevent_ts",  # O5 aggregate.rb:220-221
+        f"sum(CASE WHEN _included THEN {nevents_w} ELSE 0 END) AS nevents",
         # min_by/max_by instead of min/max-of-struct: same value (_ord is
         # unique within a session), no per-row struct allocation
-        F.min_by(F.col("conv_id"), F.when(inc, ord_c)).alias("conv_id"),
+        f"min_by(conv_id, CASE WHEN _included THEN {ORDER_COL} END) AS conv_id",
         # the close row is by construction the last row of its segment
-        F.max(
-            F.when(
-                inc & (F.col("_close_flag") == 1),
-                F.when(F.col("_end_flag") == 1, F.lit("end")).otherwise(F.lit("custom0")),
-            )
-        ).alias("close_kind"),
-        F.max(F.when(inc & (F.col("_close_flag") == 1), F.col("ts"))).alias("end_ts"),
-        F.max(F.when(inc & (F.col("_close_flag") == 1), F.col("turn_idx"))).alias("end_turn_idx"),
+        f"max(CASE WHEN {closing} THEN CASE WHEN _end_flag = 1 THEN 'end' ELSE 'custom0' END END) AS close_kind",
+        f"max(CASE WHEN {closing} THEN ts END) AS end_ts",
+        f"max(CASE WHEN {closing} THEN turn_idx END) AS end_turn_idx",
         # last-set per-map override wins (aggregate.rb:243-246)
-        F.max_by(
-            F.col("_custom_timeout"), F.when(inc & (F.col("_custom_timeout") > 0), ord_c)
-        ).alias("_session_timeout"),
-        F.max_by(
-            F.col("_custom_inactivity"), F.when(inc & (F.col("_custom_inactivity") > 0), ord_c)
-        ).alias("_session_inactivity"),
+        f"max_by(_custom_timeout, CASE WHEN _included AND _custom_timeout > 0 THEN {ORDER_COL} END)"
+        " AS _session_timeout",
+        f"max_by(_custom_inactivity, CASE WHEN _included AND _custom_inactivity > 0 THEN {ORDER_COL} END)"
+        " AS _session_inactivity",
+    ]
+    names = [
+        "creation_ts", "lastevent_ts", "nevents", "conv_id", "close_kind", "end_ts",
+        "end_turn_idx", "_session_timeout", "_session_inactivity",
     ]
     avg_names: list[str] = []
-    available = set(guarded.columns)
     for n, (fn, srcs) in merged.items():
         if fn == "avg":
             avg_names.append(n)
             aggs.extend(_avg_partials(n, srcs, with_seeds, projected, available))
+            names += [f"_avg_sum_{n}", f"_avg_cnt_{n}"]
         else:
             aggs.append(_agg_column(n, fn, srcs, with_seeds, projected))
-    out = (
+            names.append(n)
+    avgs = [
+        f"CASE WHEN {ident(f'_avg_cnt_{n}')} > 0 THEN {ident(f'_avg_sum_{n}')} / {ident(f'_avg_cnt_{n}')} END"
+        f" AS {ident(n)}"
+        for n in avg_names
+    ]
+    return (
         guarded.groupBy(*SESSION_KEY)
-        .agg(*aggs)
-        .where(F.col("nevents") > 0)  # sessions with no creating row never made a map
-        .withColumn("pattern_id", F.lit(cfg.pattern_id))
-        .withColumnRenamed(TASK_ID_COL, "task_id")
-    )
-    for n in avg_names:
-        out = out.withColumn(
-            n,
-            F.when(
-                F.col(f"_avg_cnt_{n}") > 0, F.col(f"_avg_sum_{n}") / F.col(f"_avg_cnt_{n}")
-            ),
+        .agg(*[F.expr(a) for a in aggs])
+        .where("nevents > 0")  # sessions with no creating row never made a map
+        .selectExpr(
+            f"{TASK_ID_COL} AS task_id", *SESSION_KEY[1:], *[ident(n) for n in names],
+            f"{quote(cfg.pattern_id)} AS pattern_id", *avgs,
         )
-    return out
+    )
 
 
 @dataclass
@@ -395,10 +383,9 @@ def close_sessions(
     have been pushed by the periodic flush (``aggregate.rb:386-416``),
     live maps survive to shutdown (``aggregate.rb:154-175``).
     """
-    w_task = W.partitionBy("pattern_id", "task_id")
-    seg = F.struct("_end_seg", "_gap_seg", "_age_seg")
-    is_last = (F.max(seg).over(w_task) == seg).cast("boolean")
-    sessions = sessions.withColumn("_is_last", is_last)
+    seg = "struct(_end_seg, _gap_seg, _age_seg)"
+    is_last = f"CAST(max({seg}) OVER (PARTITION BY pattern_id, task_id) = {seg} AS BOOLEAN)"
+    sessions = with_columns(sessions, {"_is_last": is_last})
 
     # End-of-input "now" (the event-time analog of the final flush's
     # Time.now, aggregate.rb:388-390). Computed from the RAW input when
@@ -406,52 +393,64 @@ def close_sessions(
     # `sessions`, which would recompute the whole pipeline a second time
     # just to produce one scalar.
     if watermark_df is not None:
-        wm = watermark_df.agg(F.max("ts").alias("_watermark"))
+        wm = watermark_df.agg(F.expr("max(ts) AS _watermark"))
     else:
-        wm = sessions.agg(F.max("lastevent_ts").alias("_watermark"))
+        wm = sessions.agg(F.expr("max(lastevent_ts) AS _watermark"))
     sessions = sessions.crossJoin(F.broadcast(wm))
 
-    eff_timeout = F.coalesce(F.col("_session_timeout"), F.lit(float(cfg.timeout)))
-    eff_inact = F.coalesce(
-        F.col("_session_inactivity"), F.lit(float(cfg.effective_inactivity_timeout))
-    )
-    wm_s = F.col("_watermark").cast("timestamp").cast("double")
-    age_expired = wm_s - F.col("creation_ts").cast("timestamp").cast("double") > eff_timeout
-    gap_expired = wm_s - F.col("lastevent_ts").cast("timestamp").cast("double") > eff_inact
     if cfg.timeout_timestamp_field is None:
         # processing-time mode: no wall clock passes during the replay, so
         # nothing is expired at the final flush either (config.py docs)
-        age_expired = F.lit(False)
-        gap_expired = F.lit(False)
+        expired = "false"
+    else:
+        def age(c: str) -> str:
+            return f"CAST(CAST(_watermark AS TIMESTAMP) AS DOUBLE) - CAST(CAST({c} AS TIMESTAMP) AS DOUBLE)"
 
-    reason = (
-        F.when(F.col("close_kind") == "end", F.lit("completed"))
-        .when(F.col("close_kind") == "custom0", F.lit("inline"))
-        .when(~F.col("_is_last"), F.lit("timeout"))          # expired on next arrival
-        .when(age_expired | gap_expired, F.lit("timeout"))   # expired vs watermark
-        .otherwise(F.lit("open"))
+        eff_timeout = f"coalesce(_session_timeout, {double(cfg.timeout)})"
+        eff_inact = f"coalesce(_session_inactivity, {double(cfg.effective_inactivity_timeout)})"
+        expired = f"{age('creation_ts')} > {eff_timeout} OR {age('lastevent_ts')} > {eff_inact}"
+
+    reason = case(
+        [
+            ("close_kind = 'end'", "'completed'"),
+            ("close_kind = 'custom0'", "'inline'"),
+            ("NOT _is_last", "'timeout'"),                     # expired on next arrival
+            (expired, "'timeout'"),                            # expired vs watermark
+        ],
+        "'open'",
     )
-    return sessions.withColumn("close_reason", reason)
+    return with_columns(sessions, {"close_reason": reason})
 
 
 def split_sessions(sessions: DataFrame, cfg: PipelineConfig) -> RoutedSessions:
     """The buckets of a :func:`close_sessions` frame, each a filter over
     it: a persisted closed frame feeds every bucket without recomputing
     the correlation or re-scanning the input for the watermark."""
-    def _as_open(df: DataFrame) -> DataFrame:
+    cols = sessions.columns
+    route = {c.lower() for c in _ROUTE_COLS}
+
+    def bucket(reason: str) -> DataFrame:
+        return sessions.where(f"close_reason = {quote(reason)}")
+
+    def without_route(df: DataFrame) -> DataFrame:
+        return df.selectExpr(*[ident(c) for c in cols if c.lower() not in route])
+
+    def as_open(df: DataFrame) -> DataFrame:
         # the OPEN bucket is the persistence analog of aggregate_maps_path
         # (O21): it must carry the map's effective custom timeout
         # overrides (the reference Marshal-dumps map_meta too,
         # aggregate.rb:125-140) — a resumed map must keep its overridden
         # clocks, not fall back to the pattern defaults
-        keep = [d for d in _ROUTE_COLS if d not in ("_session_timeout", "_session_inactivity")]
-        return (
-            df.drop(*keep)
-            .withColumnRenamed("_session_timeout", "map_custom_timeout")
-            .withColumnRenamed("_session_inactivity", "map_custom_inactivity")
-        )
+        renamed = {"_session_timeout": "map_custom_timeout", "_session_inactivity": "map_custom_inactivity"}
+        return df.selectExpr(*[
+            f"{c} AS {renamed[c]}" if c in renamed else ident(c)
+            for c in cols if c in renamed or c.lower() not in route
+        ])
 
-    completed = sessions.where(F.col("close_reason") == "completed").drop(*_ROUTE_COLS)
+    # close_reason survives the route columns: a plain bucket filters the
+    # route-free frame (the optimizer runs the filter below the projection)
+    routed = without_route(sessions)
+    completed = routed.where("close_reason = 'completed'")
 
     if cfg.push_previous_map_as_event:
         # O16 (aggregate.rb:205-208,314-320,341-344): with ≤1 live map
@@ -460,62 +459,62 @@ def split_sessions(sessions: DataFrame, cfg: PipelineConfig) -> RoutedSessions:
         # next map creation (pop), by same-task expiry-on-arrival, or at
         # final flush; only the globally last-created map gets the
         # shutdown tag (aggregate.rb:348-351, O20).
-        pushed = sessions.where(F.col("close_reason").isin("timeout", "open"))
+        pushed = sessions.where("close_reason IN ('timeout', 'open')")
         # globally-last-created map via broadcast agg (a partition-less
         # window would drag every session through one partition)
-        glast = pushed.agg(F.max(F.struct("creation_ts", "task_id")).alias("_g"))
-        pushed = pushed.crossJoin(F.broadcast(glast)).withColumn(
-            "_g_last", F.col("_g") == F.struct("creation_ts", "task_id")
-        ).drop("_g")
-        timeout = _timeout_event(pushed, cfg, final_col="_g_last").drop(*_ROUTE_COLS, "_g_last")
-        inline_rows = sessions.where(F.col("close_reason") == "inline")
-        inline = _timeout_event(inline_rows, cfg, final_col=None).drop(*_ROUTE_COLS)
-        open_maps = _as_open(sessions.where(F.lit(False)))
+        glast = pushed.agg(F.expr("max(struct(creation_ts, task_id)) AS _g"))
+        pushed = with_columns(
+            pushed.crossJoin(F.broadcast(glast)),
+            {"_g_last": "_g = struct(creation_ts, task_id)"},
+            drop=["_g"],
+        )
+        timeout = _timeout_event(pushed, cfg, final_col="_g_last", drop=[*_ROUTE_COLS, "_g_last"])
+        inline = _timeout_event(bucket("inline"), cfg, final_col=None, drop=_ROUTE_COLS)
         return RoutedSessions(
             completed=completed, timeout=timeout, inline=inline,
-            open=open_maps, sessions=sessions.drop(*_ROUTE_COLS),
+            open=as_open(sessions.where("false")), sessions=routed,
         )
 
-    timeout_rows = sessions.where(F.col("close_reason") == "timeout")
-    inline_rows = sessions.where(F.col("close_reason") == "inline")
     if cfg.push_map_as_event_on_timeout:
-        timeout = _timeout_event(timeout_rows, cfg, final_col=None).drop(*_ROUTE_COLS)
-        inline = _timeout_event(inline_rows, cfg, final_col=None).drop(*_ROUTE_COLS)
+        timeout = _timeout_event(bucket("timeout"), cfg, final_col=None, drop=_ROUTE_COLS)
+        inline = _timeout_event(bucket("inline"), cfg, final_col=None, drop=_ROUTE_COLS)
     else:
         # without push, expired maps are silently discarded
         # (aggregate.rb:399-400 only collects events when configured)
-        timeout = timeout_rows.limit(0).drop(*_ROUTE_COLS)
-        inline = inline_rows.limit(0).drop(*_ROUTE_COLS)
+        timeout = routed.limit(0)
+        inline = routed.limit(0)
 
-    open_maps = _as_open(sessions.where(F.col("close_reason") == "open"))
     return RoutedSessions(
         completed=completed,
         timeout=timeout,
         inline=inline,
-        open=open_maps,
-        sessions=sessions.drop(*_ROUTE_COLS),
+        open=as_open(bucket("open")),
+        sessions=routed,
     )
 
 
-def _timeout_event(df: DataFrame, cfg: PipelineConfig, final_col: str | None) -> DataFrame:
+def _timeout_event(
+    df: DataFrame, cfg: PipelineConfig, final_col: str | None, drop=()
+) -> DataFrame:
     """Timeout-event construction (O13/O14, ``aggregate.rb:281-311``):
     the event is built from the map alone; ``timeout_task_id_field``
     receives the task id, ``timeout_tags`` are appended, ``timeout_code``
-    runs as plain column expressions. Rows where ``final_col`` is true
-    additionally get ``_aggregatefinalflush`` (``aggregate.rb:348-351``)."""
-    if cfg.timeout_task_id_field:
-        df = df.withColumn(cfg.timeout_task_id_field, F.col("task_id"))
+    runs as plain column expressions, each seeing the ones before it.
+    Rows where ``final_col`` is true additionally get
+    ``_aggregatefinalflush`` (``aggregate.rb:348-351``). The ``drop``
+    columns are removed once the code has run."""
     base = (
-        F.array(*[F.lit(t) for t in cfg.timeout_tags])
+        f"array({', '.join(quote(t) for t in cfg.timeout_tags)})"
         if cfg.timeout_tags
-        else F.array().cast("array<string>")
+        else "CAST(array() AS ARRAY<STRING>)"
     )
     tags = base
     if final_col is not None:
-        tags = F.when(
-            F.col(final_col), F.array_union(base, F.array(F.lit("_aggregatefinalflush")))
-        ).otherwise(base)
-    df = df.withColumn("tags", tags)
-    for name, expr in (cfg.timeout_code or {}).items():
-        df = df.withColumn(name, F.expr(expr))
+        tags = case([(ident(final_col), f"array_union({base}, array('_aggregatefinalflush'))")], base)
+    steps = [{"tags": tags}]
+    if cfg.timeout_task_id_field:
+        steps[0] = {cfg.timeout_task_id_field: "task_id", **steps[0]}
+    steps += [{name: f"({expr})"} for name, expr in (cfg.timeout_code or {}).items()]
+    for i, step in enumerate(steps):
+        df = with_columns(df, step, drop=drop if i == len(steps) - 1 else ())
     return df

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from logstash_filter_aggregate_spark.config import ORDER_COL, TASK_ID_COL, PipelineConfig
+from logstash_filter_aggregate_spark.sqltext import any_of, double, with_columns
 
 # Total order within a task partition: event time first (the reference's
 # arrival order under the deterministic event-time mode, spec:374-390),
@@ -44,24 +45,37 @@ SCAN_COLS = (ORDER_COL, "_end_seg", "_gap_seg", "_age_seg")
 
 
 def _w():
+    """The task window as a WindowSpec, for Column-API callers; the engine's
+    own stages use the SQL text of :data:`_W`."""
     return W.partitionBy(TASK_ID_COL).orderBy(*ORDER_BY)
 
 
-def _running(col: Column) -> Column:
-    return col.over(_w().rowsBetween(W.unboundedPreceding, 0))
+# the task window: every window of the stage shares it (one exchange + sort)
+_W = f"PARTITION BY {TASK_ID_COL} ORDER BY {', '.join(ORDER_BY)}"
 
 
-def _ts_sec() -> Column:
-    return F.col("ts").cast("timestamp").cast("double")  # microsecond-precise
+def _over(fn: str, frame: str = "") -> str:
+    return f"{fn} OVER ({_W}{frame})"
+
+
+def _running(agg: str) -> str:
+    return _over(agg, " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
+
+
+def _lag(c: str) -> str:
+    return _over(f"lag({c})")
+
+
+def _ts_sec() -> str:
+    return "CAST(CAST(ts AS TIMESTAMP) AS DOUBLE)"  # microsecond-precise
 
 
 def sessionize(classified: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Add ``_ord``, ``_end_seg``, ``_gap_seg``, ``_age_seg`` to rows that
     participate in correlation. Single task-partition exchange (plus one
-    range exchange when ``push_previous_exact`` needs the global index)."""
-    part = classified.where(
-        F.col(TASK_ID_COL).isNotNull() & F.col("_rule_id").isNotNull()
-    )
+    range exchange when ``push_previous_exact`` needs the global index).
+    Each level of dependent windows is one projection over SQL text."""
+    part = classified.where(f"{TASK_ID_COL} IS NOT NULL AND _rule_id IS NOT NULL")
 
     # statically no rule can close a map (no end_of_task rows, no
     # custom_timeout expression that could evaluate to 0): _close_flag
@@ -71,12 +85,8 @@ def sessionize(classified: DataFrame, cfg: PipelineConfig) -> DataFrame:
     no_closes = not any(r.end_of_task for r in cfg.rules) and all(
         r.custom_timeout is None for r in cfg.rules
     )
-    close_flag = (
-        F.lit(0)
-        if no_closes
-        else ((F.col("_end_flag") == 1) | (F.col("_custom_timeout") == 0.0)).cast("int")
-    )
-    part = part.withColumn("_close_flag", close_flag)
+    close_flag = "0" if no_closes else "CAST(((_end_flag = 1) OR (_custom_timeout = 0.0D)) AS INT)"
+    part = with_columns(part, {"_close_flag": close_flag})
 
     if cfg.exact_age_cap and cfg.timeout_timestamp_field is not None:
         # Window-free exact path: the scan's session-hop subsumes every
@@ -100,88 +110,72 @@ def sessionize(classified: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
         part = with_global_index(part, ORDER_BY)
 
-    w = _w()
-    part = part.withColumn(ORDER_COL, F.row_number().over(w))
     # segment splits AFTER a close row: count closes strictly before me
-    part = part.withColumn(
-        "_end_seg",
-        F.lit(0)
-        if no_closes
-        else F.coalesce(
-            F.sum("_close_flag").over(w.rowsBetween(W.unboundedPreceding, -1)),
-            F.lit(0),
-        ).cast("int"),
+    end_seg = "0" if no_closes else (
+        "CAST(coalesce("
+        + _over("sum(_close_flag)", " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")
+        + ", 0) AS INT)"
     )
+    part = with_columns(part, {ORDER_COL: _over("row_number()"), "_end_seg": end_seg})
 
     run_break = None
+    drop = ()
     if cfg.push_previous_exact:
-        prev_g = F.lag("_gidx").over(w)
-        run_break = (prev_g.isNotNull() & (F.col("_gidx") - prev_g > 1)).cast("int")
+        run_break = f"CAST(({_lag('_gidx')} IS NOT NULL AND (_gidx - {_lag('_gidx')} > 1)) AS INT)"
+        drop = ("_gidx",)
 
     if cfg.timeout_timestamp_field is None:
         # processing-time mode: no wall clock passes during a batch replay
         # (config.py PipelineConfig docs) — only end/custom0 closes and
         # push_previous run breaks (not time-based) split
-        if run_break is not None:
-            part = part.withColumn(
-                "_gap_seg",
-                F.coalesce(_running(F.sum(F.coalesce(run_break, F.lit(0)))), F.lit(0)).cast("int"),
-            ).drop("_gidx")
-        else:
-            part = part.withColumn("_gap_seg", F.lit(0))
-        return part.withColumn("_age_seg", F.lit(0))
+        gap_seg = "0" if run_break is None else _running_count(run_break)
+        return with_columns(part, {"_gap_seg": gap_seg, "_age_seg": "0"}, drop=drop)
 
-    inactivity = float(cfg.effective_inactivity_timeout)
+    inactivity = double(cfg.effective_inactivity_timeout)
     ts_sec = _ts_sec()
     # partial rows (resume seeds / skew pre-reduction super-rows) span
     # [ts, _seed_lastevent_ts]; the gap to the NEXT row measures from
     # their last event, not their arrival position
     if "_seed_lastevent_ts" in part.columns:
-        eff_last = F.coalesce(
-            F.col("_seed_lastevent_ts").cast("timestamp").cast("double"), ts_sec
-        )
+        eff_last = f"coalesce(CAST(CAST(_seed_lastevent_ts AS TIMESTAMP) AS DOUBLE), {ts_sec})"
     else:
         eff_last = ts_sec
-    gap_core = ts_sec - F.lag(eff_last).over(w) > F.lit(inactivity)
+    gap_core = f"{ts_sec} - {_lag(eff_last)} > {inactivity}"
     if no_closes:
         # _end_seg is constant 0: same-segment is trivially true, and the
         # first row's lag(eff_last) NULL already nulls the comparison
-        gap_flag = gap_core.cast("int")
+        gap_flag = f"CAST(({gap_core}) AS INT)"
     else:
-        same_end = F.lag("_end_seg").over(w) == F.col("_end_seg")
-        gap_flag = (same_end & gap_core).cast("int")
+        gap_flag = f"CAST(({_lag('_end_seg')} = _end_seg AND ({gap_core})) AS INT)"
     if run_break is not None:
         # a push_previous run break pops the map exactly like
         # expiry-on-arrival — fold it into the gap split
-        gap_flag = F.greatest(gap_flag, run_break)
+        gap_flag = f"greatest({gap_flag}, {run_break})"
     # non-resetting cumulative count: ids only need to be unique within
     # (task, end_seg), which a task-wide running sum already is
-    part = part.withColumn(
-        "_gap_seg",
-        F.coalesce(_running(F.sum(F.coalesce(gap_flag, F.lit(0)))), F.lit(0)).cast("int"),
-    )
-    if run_break is not None:
-        part = part.drop("_gidx")
+    part = with_columns(part, {"_gap_seg": _running_count(gap_flag)}, drop=drop)
 
     return _window_age_seg(part, cfg, passes=2, no_closes=no_closes)
 
 
-def seg_start_flag(with_end_seg: bool = True, with_age_seg: bool = True) -> Column:
+def _running_count(flag: str) -> str:
+    """Running sum of a 0/1 flag over the task window, NULL flags as 0."""
+    return f"CAST(coalesce({_running(f'sum(coalesce({flag}, 0))')}, 0) AS INT)"
+
+
+def seg_start_flag(with_end_seg: bool = True, with_age_seg: bool = True) -> str:
     """True on the first row of a (end, gap, age) segment — lag-based, so
     it stays on the single task-partition window. Callers that can prove
     a component constant (``_end_seg`` when no rule closes, ``_age_seg``
     on the first age pass) drop its lag from the check — each flag saves
     one window-function evaluation per row."""
-    w = _w()
     cols = ["_gap_seg"]
     if with_end_seg:
         cols.insert(0, "_end_seg")
     if with_age_seg:
         cols.append("_age_seg")
-    changed = F.lag(cols[0]).over(w).isNull()  # first row of the task
-    for c in cols:
-        changed = changed | (F.lag(c).over(w) != F.col(c))
-    return changed
+    first_row = f"{_lag(cols[0])} IS NULL"  # first row of the task
+    return any_of([first_row, *[f"NOT ({_lag(c)} = {c})" for c in cols]])
 
 
 def _window_age_seg(
@@ -193,7 +187,7 @@ def _window_age_seg(
     most *p* times. Strict comparison matches the reference's
     ``creation + timeout < now`` (``aggregate.rb:396``). All passes stay
     on the single task-partition window."""
-    timeout = float(cfg.timeout)
+    timeout = double(cfg.timeout)
     ts_sec = _ts_sec()
     # a resume seed row carries the prior run's true creation time; the map
     # ages from THAT, not from the seed's position ts (= prior lastevent_ts)
@@ -201,23 +195,20 @@ def _window_age_seg(
     # run splits late and resume(chunk2, open(chunk1)) diverges from the
     # single full run (the invariant plans/resume.py documents as tested).
     if "_seed_creation_ts" in part.columns:
-        creation_src = F.coalesce(
-            F.col("_seed_creation_ts").cast("timestamp").cast("double"), ts_sec
-        )
+        creation_src = f"coalesce(CAST(CAST(_seed_creation_ts AS TIMESTAMP) AS DOUBLE), {ts_sec})"
     else:
         creation_src = ts_sec
-    part = part.withColumn("_age_seg", F.lit(0))
     for p in range(passes):
         # pass 0 sees the constant initial _age_seg — skip its lag; and
         # with no closing rules _end_seg is constant 0 in every pass
         grp_start = seg_start_flag(with_end_seg=not no_closes, with_age_seg=p > 0)
         creation = _running(
-            F.max(F.when(grp_start, F.struct(F.col(ORDER_COL).alias("o"), creation_src.alias("t"))))
-        )["t"]
-        crossed = ts_sec - creation > F.lit(timeout)
-        part = part.withColumn(
-            "_age_seg",
-            (F.col("_age_seg") * 2 + F.when(crossed, 1).otherwise(0)).cast("int"),
+            f"max(CASE WHEN {grp_start} THEN struct({ORDER_COL} AS o, {creation_src} AS t) END)"
+        )
+        crossed = f"{ts_sec} - ({creation}).t > {timeout}"
+        prev = "_age_seg" if p else "0"
+        part = with_columns(
+            part, {"_age_seg": f"CAST({prev} * 2 + CASE WHEN {crossed} THEN 1 ELSE 0 END AS INT)"}
         )
     return part
 
@@ -272,7 +263,7 @@ def _exact_age_seg(part: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
     return (
         part.repartition(TASK_ID_COL)
-        .sortWithinPartitions(*[F.col(c).asc_nulls_last() for c in (TASK_ID_COL, *ORDER_BY)])
+        .sortWithinPartitions(*[F.asc_nulls_last(c) for c in (TASK_ID_COL, *ORDER_BY)])
         .mapInArrow(scan, out_schema)
     )
 

@@ -37,6 +37,7 @@ from logstash_filter_aggregate_spark.operators.correlate import (
     split_sessions,
 )
 from logstash_filter_aggregate_spark.operators.sessionize import sessionize
+from logstash_filter_aggregate_spark.sqltext import all_of, any_of, case, ident, quote, with_columns
 
 
 # Frames the most recent run_pipeline persisted: the guarded frame of
@@ -115,7 +116,7 @@ def enrich(df: DataFrame, dims: dict[str, DataFrame] | None = None) -> DataFrame
     return df
 
 
-def _code_ran(r: CorrelationRule, with_incl: bool) -> F.Column:
+def _code_ran(r: CorrelationRule, with_incl: bool) -> str:
     """True where the reference would actually RUN this rule's codeblock
     (``aggregate.rb:226``): the rule matched, the task id resolved
     (``aggregate.rb:183`` returns before the code otherwise), and the
@@ -125,32 +126,28 @@ def _code_ran(r: CorrelationRule, with_incl: bool) -> F.Column:
     three gate on this. For guard-gated rules the inclusion bit arrives
     pre-joined as ``_g_included`` (NULL ⇒ the row never reached the
     sessionized stream ⇒ the code did not run)."""
-    cond = (F.col("_rule_id") == r.rule_id) & F.col("_task_id").isNotNull()
+    cond = [f"_rule_id = {quote(r.rule_id)}", "_task_id IS NOT NULL"]
     if r.map_action != "create_or_update" and with_incl:
-        cond = cond & F.coalesce(F.col("_g_included"), F.lit(False))
-    return cond
+        cond.append("coalesce(_g_included, false)")
+    return all_of(cond)
 
 
-def _exception_flag(cfg: PipelineConfig, with_incl: bool, with_tagged: bool = False) -> F.Column:
+def _exception_flag(cfg: PipelineConfig, with_incl: bool, with_tagged: bool = False) -> str:
     """O19: a row whose codeblock RAN with a NULL required agg input — the
     reference's code would raise and tag ``_aggregateexception``
     (``aggregate.rb:229-237``). Gated rules' contribution arrives either
     as the joined ``_g_included`` bit (``with_incl``) or pre-decided as
     the broadcast ``_g_tagged`` key set (``with_tagged``)."""
-    flag = (
-        F.coalesce(F.col("_g_tagged"), F.lit(False)) if with_tagged else F.lit(False)
-    )
+    flags = ["coalesce(_g_tagged, false)"] if with_tagged else []
     for r in cfg.rules:
         req = [s for s in r.aggs if s.required and s.col]
         if not req:
             continue
         if r.map_action != "create_or_update" and with_tagged:
             continue  # handled by the _g_tagged key set
-        nulls = F.lit(False)
-        for s in req:
-            nulls = nulls | F.expr(s.col).isNull()
-        flag = flag | (_code_ran(r, with_incl) & nulls)
-    return flag
+        nulls = any_of([f"({s.col}) IS NULL" for s in req])
+        flags.append(all_of([_code_ran(r, with_incl), nulls]))
+    return any_of(flags)
 
 
 def tagged_exception_keys(guarded: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -162,20 +159,17 @@ def tagged_exception_keys(guarded: DataFrame, cfg: PipelineConfig) -> DataFrame:
     without shuffling the event stream."""
     from logstash_filter_aggregate_spark.operators.correlate import value_col_name
 
-    cond = F.lit(False)
+    raises = []
     for r in cfg.rules:
         if r.map_action == "create_or_update":
             continue
         req = [s for s in r.aggs if s.required and s.col]
         if not req:
             continue
-        nulls = F.lit(False)
-        for s in req:
-            nulls = nulls | F.col(value_col_name(r.rule_id, s.col)).isNull()
-        cond = cond | ((F.col("_rule_id") == r.rule_id) & nulls)
-    return (
-        guarded.where(F.col("_included") & cond)
-        .select("conv_id", "turn_idx", F.lit(True).alias("_g_tagged"))
+        nulls = any_of([f"{ident(value_col_name(r.rule_id, s.col))} IS NULL" for s in req])
+        raises.append(all_of([f"_rule_id = {quote(r.rule_id)}", nulls]))
+    return guarded.where(all_of(["_included", any_of(raises)])).selectExpr(
+        "conv_id", "turn_idx", "true AS _g_tagged"
     )
 
 
@@ -210,18 +204,18 @@ def passthrough_stream(
     elif tagged_df is not None:
         df = df.join(F.broadcast(tagged_df), ["conv_id", "turn_idx"], "left")
     with_incl = incl_df is not None
-    cancel = F.lit(False)
-    for r in cfg.rules:
-        if r.cancel:
-            cancel = cancel | _code_ran(r, with_incl)
-    df = df.where(~cancel)
+    cancels = [_code_ran(r, with_incl) for r in cfg.rules if r.cancel]
+    if cancels:
+        df = df.where(f"NOT {any_of(cancels)}")
     exc = _exception_flag(cfg, with_incl, with_tagged=tagged_df is not None and incl_df is None)
-    tags = F.col("parse_tags")
-    tags = F.when(exc, F.array_union(tags, F.array(F.lit("_aggregateexception")))).otherwise(tags)
-    df = df.withColumn("tags", tags)
-    return df.drop(
-        "_rule_id", "_task_id", "_end_flag", "_action", "_cancel",
-        "_custom_timeout", "_custom_inactivity", "parse_tags", "_g_included", "_g_tagged",
+    tags = case([(exc, "array_union(parse_tags, array('_aggregateexception'))")], "parse_tags")
+    return with_columns(
+        df,
+        {"tags": tags},
+        drop=[
+            "_rule_id", "_task_id", "_end_flag", "_action", "_cancel",
+            "_custom_timeout", "_custom_inactivity", "parse_tags", "_g_included", "_g_tagged",
+        ],
     )
 
 
@@ -251,18 +245,18 @@ def inline_emissions(
         if not r.emit:
             continue
         if r.map_action != "create_or_update" and guarded is not None:
-            rows = guarded.where((F.col("_rule_id") == r.rule_id) & F.col("_included"))
+            rows = guarded.where(f"_rule_id = {quote(r.rule_id)} AND _included")
             outs.append(
-                rows.select(*[F.col(emit_col_name(r.rule_id, n)).alias(n) for n in r.emit])
+                rows.selectExpr(*[f"{ident(emit_col_name(r.rule_id, n))} AS {ident(n)}" for n in r.emit])
             )
-        elif r.map_action != "create_or_update" and incl_df is not None:
+            continue
+        if r.map_action != "create_or_update" and incl_df is not None:
             rows = classified.join(incl_df, ["conv_id", "turn_idx"], "left").where(
                 _code_ran(r, with_incl=True)
             )
-            outs.append(rows.select(*[F.expr(e).alias(n) for n, e in r.emit.items()]))
         else:
             rows = classified.where(_code_ran(r, with_incl=False))
-            outs.append(rows.select(*[F.expr(e).alias(n) for n, e in r.emit.items()]))
+        outs.append(rows.selectExpr(*[f"({e}) AS {ident(n)}" for n, e in r.emit.items()]))
     if not outs:
         return None
     df = outs[0]
@@ -366,8 +360,8 @@ def run_pipeline(
             r.rule_id for r in gated
             if r.cancel or any(s.required and s.col for s in r.aggs)
         ]
-        incl_df = guarded.where(F.col("_rule_id").isin(gated_ids)).select(
-            "conv_id", "turn_idx", F.col("_included").alias("_g_included")
+        incl_df = guarded.where(f"_rule_id IN ({', '.join(map(quote, gated_ids))})").selectExpr(
+            "conv_id", "turn_idx", "_included AS _g_included"
         )
     elif gated_req:
         tagged_df = tagged_exception_keys(guarded, cfg)

@@ -1,11 +1,11 @@
 """Routed sinks + run metrics + lineage manifest (SURVEY.md U5, O21, O22).
 
 Each pipeline output bucket (completed / timeout / inline / open /
-passthrough) writes to its own directory under a run-scoped path; row
-counts per sink are captured with ``Observation`` (no extra counting
-jobs — the metric rides the write action), and a JSON lineage manifest
-records the input files, config fingerprint, per-sink counts, and
-completion marker. Re-running the same (input, config) run_id skips
+passthrough) writes to its own directory under a run-scoped path, the
+buckets after the first as concurrent Spark jobs; row counts per sink
+are captured with ``Observation`` (no extra counting jobs — the metric
+rides the write action), and a JSON lineage manifest records the input
+files, config fingerprint, per-sink counts, and completion marker. Re-running the same (input, config) run_id skips
 completed sinks — idempotent, resumable writes (the batch analog of the
 reference's ``aggregate_maps_path`` persistence, ``aggregate.rb:125-140``).
 
@@ -20,10 +20,13 @@ import hashlib
 import json
 import logging
 import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 
 from py4j.protocol import Py4JError
+from pyspark import inheritable_thread_target
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -99,6 +102,16 @@ def write_routed(
     - sink path: ``{base_path}/{sink}/run_id={run_id}`` — reruns overwrite
       their own run scope only (idempotent).
     - already-done sinks (per the manifest) are skipped.
+    - the pending sinks write as concurrent Spark jobs, one thread each, so
+      the driver plans and commits them side by side. The first one writes
+      alone and materializes the frames ``run_pipeline`` persisted and its
+      lazy checkpoint; the others then start together and read those
+      blocks: nothing is computed twice. Each thread keeps the caller's
+      local properties (job group, job description); a write with no
+      caller description is described as ``write_routed:<sink>``.
+    - the manifest is checkpointed as each sink lands, its sinks listed in
+      output order. A failing sink does not stop the others: they land
+      and checkpoint, then the first error in output order is raised.
     - per-sink row counts via ``Observation`` — no separate count() jobs.
     - the frames ``run_pipeline`` persisted are released when the writes
       end, whether they succeed or raise.
@@ -115,26 +128,58 @@ def write_routed(
                 config_fingerprint=config_fingerprint(cfg),
                 started_at=time.time(),
             )
-        for sink, df in outputs.items():
-            if sink == "sessions":
-                continue
-            if manifest.sinks.get(sink, {}).get("done"):
-                continue  # resumable: this sink already landed for this run_id
+        order = [s for s in outputs if s != "sessions"]
+        # resumable: a sink already landed for this run_id is not rewritten
+        pending = [s for s in order if not manifest.sinks.get(s, {}).get("done")]
+        lock = threading.Lock()
+
+        def write(sink: str, description: str | None) -> None:
+            if description is not None:
+                outputs[sink].sparkSession.sparkContext.setJobDescription(description)
             path = f"{base_path}/{sink}/run_id={run_id}"
             obs = Observation(f"rows_{sink}")
             t0 = time.perf_counter()
-            observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            observed = outputs[sink].observe(obs, F.count(F.lit(1)).alias("rows"))
             writer = observed.write.mode("overwrite").format(fmt)
             for col in (partition_by or {}).get(sink, []):
                 writer = writer.partitionBy(col)
             writer.save(path)
-            manifest.sinks[sink] = {
+            landed = {
                 "rows": obs.get["rows"],
                 "path": path,
                 "wall_s": round(time.perf_counter() - t0, 3),
                 "done": True,
             }
-            manifest.save(base_path)  # checkpoint after every sink
+            with lock:  # checkpoint after every sink
+                done = {**manifest.sinks, sink: landed}
+                manifest.sinks = {s: done.pop(s) for s in order if s in done} | done
+                manifest.save(base_path)
+
+        if pending:
+            spark = outputs[pending[0]].sparkSession
+            described = spark.sparkContext.getLocalProperty("spark.job.description") is not None
+            with ThreadPoolExecutor(max_workers=len(pending)) as pool:
+
+                def submit(sink: str):
+                    # one wrapper per sink: each thread gets its own copy
+                    # of the caller's local properties
+                    return pool.submit(
+                        inheritable_thread_target(spark)(write),
+                        sink, None if described else f"write_routed:{sink}",
+                    )
+
+                # The first sink writes alone: it materializes the frames
+                # every later sink reads (the lazy checkpoint, the guarded
+                # and the closed frames). A query that starts while a
+                # persisted frame is still being built runs a stage of its
+                # own to wait for it; started after, it reads the blocks.
+                first = submit(pending[0])
+                first.exception()
+                futures = [first, *map(submit, pending[1:])]
+            errors = [f.exception() for f in futures]
+            first_error = next((e for e in errors if e is not None), None)
+            if first_error is not None:
+                raise first_error
         manifest.finished_at = time.time()
         manifest.save(base_path)
         return manifest

@@ -304,3 +304,131 @@ def test_resume_roundtrips_through_parquet(spark, tmp_path):
     b = run_pipeline(spark, c2, cfg, open_maps=spark.read.parquet(p))
     assert sorted(_fp(a.timeout) + _fp(b.timeout)) == _fp(ref.timeout)
     assert _fp(b.open) == _fp(ref.open)
+
+
+def _routed_inputs(spark, tmp_path):
+    path = str(tmp_path / "in")
+    generate_transcripts(spark, n_convs=24, hot_convs=0).write.parquet(path)
+    return path, example1_config(timeout=3600.0)
+
+
+def test_sink_writes_keep_the_callers_local_properties(spark, tmp_path):
+    # the sinks write from their own threads: every write still carries
+    # the caller's job group and description, which is how an event log
+    # attributes the run's stages; a caller without a description gets
+    # each write described by its sink
+    from logstash_filter_aggregate_spark.sinks import SINKS, write_routed
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def writes_since(before):
+        seq = store.executionsList()
+        new = [seq.apply(i) for i in range(seq.size())]
+        return [e for e in new if e.executionId() not in before and e.jobs().size() > 0]
+
+    def execution_ids():
+        seq = store.executionsList()
+        return {seq.apply(i).executionId() for i in range(seq.size())}
+
+    path, cfg = _routed_inputs(spark, tmp_path)
+    before = execution_ids()
+    sc.setJobGroup("routed-group", "routed-run")
+    try:
+        out = run_pipeline(spark, spark.read.parquet(path), cfg)
+        write_routed(out.as_dict(), str(tmp_path / "grouped"), cfg, input_desc="grouped")
+        grouped = set(sc.statusTracker().getJobIdsForGroup("routed-group"))
+    finally:
+        sc._jsc.clearJobGroup()
+    writes = writes_since(before)
+    assert len(writes) == 5
+    for e in writes:
+        assert e.description() == "routed-run"
+        it, jobs = e.jobs().keysIterator(), set()
+        while it.hasNext():
+            jobs.add(it.next())
+        assert jobs and jobs <= grouped, (jobs, grouped)
+
+    before = execution_ids()
+    out = run_pipeline(spark, spark.read.parquet(path), cfg)
+    write_routed(out.as_dict(), str(tmp_path / "plain"), cfg, input_desc="plain")
+    assert sorted(e.description() for e in writes_since(before)) == sorted(
+        f"write_routed:{s}" for s in SINKS
+    )
+    assert sc.getLocalProperty("spark.job.description") is None
+
+
+def test_concurrent_sink_writes_recompute_nothing(spark, tmp_path):
+    # the concurrent writes share the persisted frames and the lazy
+    # checkpoint: the run completes exactly the stages, and reads exactly
+    # the input records, that writing one sink after another did (the
+    # pinned values were measured with serial writes)
+    from logstash_filter_aggregate_spark.sinks import write_routed
+
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+    path, cfg = _routed_inputs(spark, tmp_path)
+    t = spark.read.parquet(path)
+    sc.setLocalProperty("spark.jobGroup.id", "recompute")
+    try:
+        out = run_pipeline(spark, t, cfg)
+        write_routed(out.as_dict(), str(tmp_path / "sinks"), cfg, input_desc="recompute")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = status.jobsList(None)
+    stage_ids = set()
+    for job in (jobs.apply(i) for i in range(jobs.size())):
+        if job.jobGroup().isDefined() and job.jobGroup().get() == "recompute":
+            stage_ids |= {job.stageIds().apply(k) for k in range(job.stageIds().size())}
+    stages = [status.lastStageAttempt(i) for i in stage_ids]
+    done = [s for s in stages if s.status().toString() == "COMPLETE"]
+    assert (len(done), sum(s.inputRecords() for s in done)) == (11, 244)
+
+
+def test_failed_sink_lets_the_others_land_and_reruns_alone(spark, tmp_path):
+    # a middle sink fails: the sinks around it still land and checkpoint,
+    # the first error is raised, and a rerun writes only the failed sink
+    from logstash_filter_aggregate_spark.sinks import SINKS, run_id_for, write_routed
+
+    path, cfg = _routed_inputs(spark, tmp_path)
+    base = str(tmp_path / "sinks")
+    out = run_pipeline(spark, spark.read.parquet(path), cfg)
+    with pytest.raises(Exception, match="no_such_column"):
+        write_routed(
+            out.as_dict(), base, cfg, input_desc="middle",
+            partition_by={"inline": ["no_such_column"]},
+        )
+    first = RunManifest.load(base, run_id_for("middle", cfg))
+    assert list(first.sinks) == [s for s in SINKS if s != "inline"]
+    assert first.finished_at is None
+
+    out = run_pipeline(spark, spark.read.parquet(path), cfg)
+    second = write_routed(out.as_dict(), base, cfg, input_desc="middle")
+    assert list(second.sinks) == list(SINKS)
+    assert second.finished_at is not None
+    for s in SINKS:
+        if s != "inline":
+            assert second.sinks[s] == first.sinks[s]  # untouched -> skipped
+    assert spark.read.parquet(second.sinks["inline"]["path"]).count() == second.sinks["inline"]["rows"]
+
+
+def test_concurrent_manifest_updates_lose_no_sink(spark, tmp_path):
+    # more writer threads than cores, switching as often as the
+    # interpreter allows: every sink still lands in the manifest, with
+    # its own row count, listed in output order
+    import sys
+
+    from logstash_filter_aggregate_spark.sinks import write_routed
+
+    cfg = example1_config()
+    outputs = {f"s{i:02d}": spark.range(i + 1) for i in range(12)}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        m = write_routed(outputs, str(tmp_path / "stress"), cfg, input_desc="stress")
+    finally:
+        sys.setswitchinterval(interval)
+    for manifest in (m, RunManifest.load(str(tmp_path / "stress"), m.run_id)):
+        assert list(manifest.sinks) == list(outputs)
+        assert [v["rows"] for v in manifest.sinks.values()] == list(range(1, 13))
