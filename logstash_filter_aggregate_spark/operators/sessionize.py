@@ -54,12 +54,12 @@ def _w():
 _W = f"PARTITION BY {TASK_ID_COL} ORDER BY {', '.join(ORDER_BY)}"
 
 
-def _over(fn: str, frame: str = "") -> str:
-    return f"{fn} OVER ({_W}{frame})"
+def _over(fn: str, frame: str | None = None) -> str:
+    return f"{fn} OVER ({_W}{'' if frame is None else ' ' + frame})"
 
 
 def _running(agg: str) -> str:
-    return _over(agg, " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
+    return _over(agg, "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
 
 
 def _lag(c: str) -> str:
@@ -113,7 +113,7 @@ def sessionize(classified: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # segment splits AFTER a close row: count closes strictly before me
     end_seg = "0" if no_closes else (
         "CAST(coalesce("
-        + _over("sum(_close_flag)", " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")
+        + _over("sum(_close_flag)", "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")
         + ", 0) AS INT)"
     )
     part = with_columns(part, {ORDER_COL: _over("row_number()"), "_end_seg": end_seg})

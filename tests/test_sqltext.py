@@ -1,7 +1,6 @@
 """The SQL text the routed stages are built from: literals that reach the
 engine unchanged, and a plan built in few Py4J round trips."""
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
