@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from logstash_filter_aggregate_spark.sqltext import all_of, case, ident, quote
+from logstash_filter_aggregate_spark.sqltext import all_of, case, check_literals, ident, quote
 
 # Base pattern dictionary — the public grok core pattern NAMES, each
 # re-derived from scratch as a plain regex valid in both the Java and
@@ -445,6 +445,7 @@ def _apply_grok_jvm_combined(
     '' captures become true NULLs (``nullif``), covering both empty
     optional groups and unmatched branches — identical to the
     per-pattern path; tests pin equivalence on all three backends."""
+    check_literals(df)
     regex, total, wrapper_idx, cap_idx = comb
     DELIM = "\x01"
     text = ident(text_col)

@@ -25,7 +25,7 @@ from logstash_filter_aggregate_spark.config import (
     TASK_ID_COL,
     PipelineConfig,
 )
-from logstash_filter_aggregate_spark.sqltext import case, ident, quote, with_columns
+from logstash_filter_aggregate_spark.sqltext import case, check_literals, ident, quote, with_columns
 
 _TASK_ID_SPLIT = re.compile(r"(%\{[A-Za-z_][A-Za-z0-9_]*\})")
 
@@ -68,6 +68,7 @@ def classify(parsed: DataFrame, cfg: PipelineConfig) -> DataFrame:
     are both non-NULL; everything else passes through untouched
     (the reference simply never routes such events into the filter).
     """
+    check_literals(parsed)
     matches = [f"({r.match})" for r in cfg.rules]
 
     def first_match(value, otherwise: str, only=lambda r: True) -> str:

@@ -8,8 +8,9 @@ one ``selectExpr``: one analysis and a handful of round trips per stage.
 The rule conditions and aggregation inputs of a config are SQL text
 already, so they compose directly.
 
-Literals assume the default SQL parser
-(``spark.sql.parser.escapedStringLiterals=false``).
+String literals rely on the default SQL parser, which unescapes
+backslashes (``spark.sql.parser.escapedStringLiterals=false``);
+:func:`check_literals` rejects a session that parses them verbatim.
 """
 
 from __future__ import annotations
@@ -17,6 +18,18 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame
+
+from logstash_filter_aggregate_spark.config import ConfigurationError
+
+
+def check_literals(df: DataFrame) -> None:
+    """Raise unless ``df``'s session unescapes string literals: under
+    ``spark.sql.parser.escapedStringLiterals=true`` every :func:`quote`
+    literal would keep its doubled backslashes, and a regex like ``\\d``
+    would silently match nothing."""
+    conf = "spark.sql.parser.escapedStringLiterals"
+    if df.sparkSession.conf.get(conf, "false").strip().lower() == "true":
+        raise ConfigurationError(f"{conf}=true is unsupported: the engine's SQL text needs escaped literals")
 
 
 def quote(s: str) -> str:
