@@ -84,13 +84,14 @@ def with_columns(df: DataFrame, cols: dict[str, str], drop=()) -> DataFrame:
     """``df.withColumns(cols).drop(*drop)`` over SQL text, as one
     projection: a column whose name exists (case-insensitively, as Spark
     resolves it) is replaced in place, the others are appended in order."""
-    have = [c.lower() for c in df.columns]
+    current = df.columns
+    have = [c.lower() for c in current]
     gone = {d.lower() for d in drop}
     if not gone and not any(n.lower() in have for n in cols):
         return df.selectExpr("*", *[f"{e} AS {ident(n)}" for n, e in cols.items()])
     new = {n.lower(): (n, e) for n, e in cols.items()}
     sel = []
-    for c, low in zip(df.columns, have):
+    for c, low in zip(current, have):
         if low in gone:
             continue
         n, e = new.pop(low, (None, None))
