@@ -322,17 +322,15 @@ def test_sink_writes_keep_the_callers_local_properties(spark, tmp_path):
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
 
-    def writes_since(before):
+    def executions():
         seq = store.executionsList()
-        new = [seq.apply(i) for i in range(seq.size())]
-        return [e for e in new if e.executionId() not in before and e.jobs().size() > 0]
+        return [seq.apply(i) for i in range(seq.size())]
 
-    def execution_ids():
-        seq = store.executionsList()
-        return {seq.apply(i).executionId() for i in range(seq.size())}
+    def writes_since(before):
+        return [e for e in executions() if e.executionId() not in before and e.jobs().size() > 0]
 
     path, cfg = _routed_inputs(spark, tmp_path)
-    before = execution_ids()
+    before = {e.executionId() for e in executions()}
     sc.setJobGroup("routed-group", "routed-run")
     try:
         out = run_pipeline(spark, spark.read.parquet(path), cfg)
@@ -349,7 +347,7 @@ def test_sink_writes_keep_the_callers_local_properties(spark, tmp_path):
             jobs.add(it.next())
         assert jobs and jobs <= grouped, (jobs, grouped)
 
-    before = execution_ids()
+    before = {e.executionId() for e in executions()}
     out = run_pipeline(spark, spark.read.parquet(path), cfg)
     write_routed(out.as_dict(), str(tmp_path / "plain"), cfg, input_desc="plain")
     assert sorted(e.description() for e in writes_since(before)) == sorted(
