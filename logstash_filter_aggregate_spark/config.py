@@ -22,16 +22,21 @@ class ConfigurationError(ValueError):
 
 
 class GuardedWindowModeWarning(UserWarning):
-    """Config-time disclosure of the one known default-mode divergence
-    from the reference (STATUS.md "Known divergences"): in the default
-    window-based sessionization, the inactivity-gap clock counts every
-    matched row — including rows the map-action guards later discard — so
-    a duplicate ``create`` (or an ``update`` with no live map) refreshes
-    the gap clock, where the reference returns BEFORE touching
-    ``lastevent_timestamp`` (``aggregate.rb:216``/``:203`` precede
-    ``:220``). Set ``exact_age_cap=True`` to replay the reference's
-    per-event ordering exactly (the vectorized guarded scan keeps that
-    tier O(sessions·log n), not per-row Python)."""
+    """Config-time disclosure of the known default-mode divergences from
+    the reference (STATUS.md "Known divergences"). The default
+    window-based sessionization splits and clocks maps on every matched
+    row, including rows the map-action guards later discard, where the
+    reference returns BEFORE the discarded row touches the map
+    (``aggregate.rb:216``/``:203`` precede ``:220`` and ``:240``):
+
+    - a duplicate ``create`` (or an ``update`` with no live map)
+      refreshes the inactivity-gap clock;
+    - a duplicate ``create`` whose ``custom_timeout`` evaluates to 0
+      splits the live map as if it were evicted.
+
+    Set ``exact_age_cap=True`` to replay the reference's per-event
+    ordering exactly (the vectorized session-hop keeps that tier
+    O(sessions·log n), not per-row Python)."""
 
 
 _TASK_ID_REF = re.compile(r"%\{([A-Za-z_][A-Za-z0-9_]*)\}")
@@ -215,9 +220,11 @@ class PipelineConfig:
                 "guarded map_action rules with the default window-mode "
                 "sessionization: rows discarded by the guards (duplicate "
                 "create / no-map update) still refresh the inactivity-gap "
-                "clock, diverging from the reference on that corner "
-                "(aggregate.rb:216/:203 return before :220). Set "
-                "exact_age_cap=True for reference-exact replay.",
+                "clock, and a duplicate create whose custom_timeout is 0 "
+                "still splits the live map, diverging from the reference "
+                "on those corners (aggregate.rb:216/:203 return before "
+                ":220 and :240). Set exact_age_cap=True for "
+                "reference-exact replay.",
                 GuardedWindowModeWarning,
                 stacklevel=2,
             )

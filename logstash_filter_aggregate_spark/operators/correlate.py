@@ -1,5 +1,5 @@
-"""Map-action guards, the aggregation dictionary, and session routing
-(SURVEY.md O3, O4-O7, O13-O15, O19, O20).
+"""The aggregation dictionary and session routing (SURVEY.md O4-O7,
+O13-O15, O19, O20); the map-action guards (O3) run in ``sessionize``.
 
 One ``groupBy`` over the session key ``(_task_id, _end_seg, _gap_seg,
 _age_seg)`` replaces the reference's per-event map mutation
@@ -38,47 +38,10 @@ META_COLS = {
 
 
 def apply_guards(sessions: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """``map_action`` semantics (O3, ``aggregate.rb:202-217``):
-
-    - the map is created by the first row in the session whose action can
-      create (``create`` / ``create_or_update``);
-    - ``update`` rows before creation are no-ops (``spec:72-84``);
-    - ``create`` rows after creation are no-ops — duplicate start keeps
-      the first map (``spec:52-68``);
-    - sessions with no creating row never materialize a map at all.
-
-    Stays on the single task-partition exchange (no shuffle on the full
-    SESSION_KEY): the count of can-create rows seen *at the segment start*
-    is propagated forward with the running latest-group-start trick, so
-    per-segment creator detection is a subtraction of running counts.
-    """
-    from logstash_filter_aggregate_spark.operators.sessionize import _running, seg_start_flag
-
-    if all(r.map_action == "create_or_update" for r in cfg.rules):
-        # every matched row both creates and updates (aggregate.rb:202:
-        # create_or_update never hits a guard return): the first row of
-        # each segment creates the map and every row is included — no
-        # guard windows needed. This matters most in exact_age_cap mode,
-        # where the mapInArrow scan's output reports no partitioning: with
-        # no post-scan window, the only shuffle after the scan carries
-        # per-session aggregation PARTIALS instead of the event stream.
-        return with_columns(sessions, {"_included": "true"})
-
-    cc = "CAST((_action <> 'update') AS INT)"
-    cc_incl = f"coalesce({_running(f'sum({cc})')}, 0)"         # can-creates at/before me (task-wide)
-    cc_before_seg = _running(                                     # can-creates strictly before my segment
-        f"max(CASE WHEN {seg_start_flag()} THEN struct({ORDER_COL} AS o, {cc_incl} - {cc} AS v) END)"
-    )
-    sessions = with_columns(sessions, {"_cc_in_seg": f"{cc_incl} - ({cc_before_seg}).v"})
-    # _cc_in_seg counts can-create rows in my segment at-or-before me
-    included = case(
-        [
-            (f"{cc} = 1 AND _cc_in_seg - {cc} = 0", "true"),     # I create the map
-            ("_action = 'create'", "false"),                      # duplicate start: no-op (spec:52-68)
-        ],
-        "_cc_in_seg >= 1",                                        # update/c-o-u after a creator
-    )
-    return with_columns(sessions, {"_included": included}, drop=["_cc_in_seg"])
+    """The ``map_action`` guards (O3) run inside :func:`sessionize`, which
+    emits ``_included`` in both modes; this returns its input, for
+    callers of the former two-step ``apply_guards(sessionize(...))``."""
+    return sessions
 
 
 def _merged_agg_specs(cfg: PipelineConfig) -> dict[str, tuple[str, list[tuple[str, str]]]]:
@@ -132,7 +95,7 @@ def emit_col_name(rule_id: str, out_name: str) -> str:
     """Pre-evaluated ``emit`` output column (``_e_*``, O18) riding the
     narrow correlation stream — needed when the emit rule is guard-gated
     (``map_action`` create/update), because the emission then depends on
-    ``_included``, which only exists after sessionize+guards."""
+    ``_included``, which only exists after sessionize."""
     return _hashed_col("_e", rule_id, out_name)
 
 

@@ -74,9 +74,9 @@ def prereduce_eligible(cfg: PipelineConfig) -> bool:
 
 
 def _pre_guard_included(w) -> Column:
-    """Guard inclusion resolved in the pre-window (same semantics as
-    correlate.apply_guards, same single-exchange running-count trick):
-    the first can-create row of an end-segment creates the map, later
+    """Guard inclusion resolved in the pre-window (same semantics as the
+    window sessionizer's guards, same single-exchange running-count
+    trick): the first can-create row of an end-segment creates the map, later
     ``create`` rows are duplicate-start no-ops, ``update`` rows before the
     creator are no-ops."""
     run = w.rowsBetween(W.unboundedPreceding, 0)
@@ -100,7 +100,7 @@ def guard_inclusion_frame(classified: DataFrame, cfg: PipelineConfig) -> DataFra
     """Per-row guard inclusion ``(conv_id, turn_idx, _g_included)`` for
     guard-gated rules, resolved directly on the classified stream with the
     same narrow pre-window :func:`prereduce` uses — the prereduce-path
-    substitute for ``apply_guards``'s ``_included`` (which only exists at
+    substitute for ``sessionize``'s ``_included`` (which only exists at
     per-row grain on the NON-prereduced sessionized frame). Valid under
     prereduce's own precondition (no mid-segment gap/age expiry, enforced
     by :func:`prereduce`); joins back to the full-width stream on the

@@ -1,7 +1,7 @@
 """End-to-end pipeline composition (SURVEY.md §3.6):
 
-``parse (U1) -> enrich (U4) -> classify (U2) -> sessionize (O8-O12) ->
-guards (O3) -> aggregate (O4-O6) -> route (O13-O16, U5)`` plus the
+``parse (U1) -> enrich (U4) -> classify (U2) -> sessionize and guards
+(O8-O12, O3) -> aggregate (O4-O6) -> route (O13-O16, U5)`` plus the
 passthrough event stream (tags O19, cancel U3) and inline emissions
 (O18). The logical plan is declared once; Catalyst/AQE pick the
 physical strategy. Two shuffles total on the hot path: the
@@ -32,7 +32,6 @@ from logstash_filter_aggregate_spark.functions.grok import (
 from logstash_filter_aggregate_spark.operators.classify import classify
 from logstash_filter_aggregate_spark.operators.correlate import (
     aggregate_sessions,
-    apply_guards,
     close_sessions,
     split_sessions,
 )
@@ -334,7 +333,7 @@ def run_pipeline(
         correlated_in = narrow_for_correlation(classified, cfg)
     correlated_in = inject_seeds(correlated_in, open_maps, cfg)
 
-    guarded = apply_guards(sessionize(correlated_in, cfg), cfg)
+    guarded = sessionize(correlated_in, cfg)
     if prereduce_s is None and (gated_emit or gated_cancel or gated_req):
         # the gated side effects read the guarded frame besides the session
         # aggregate: persisting it runs the task exchange, the windows and

@@ -593,7 +593,6 @@ def replay_push_previous(
     from logstash_filter_aggregate_spark.operators.correlate import (
         _timeout_event,
         aggregate_sessions,
-        apply_guards,
         narrow_for_correlation,
     )
     from logstash_filter_aggregate_spark.operators.sessionize import sessionize
@@ -634,7 +633,7 @@ def replay_push_previous(
         corr = corr.where(
             F.col(TASK_ID_COL).isNotNull() & F.col("_rule_id").isNotNull()
         )
-        sessions = aggregate_sessions(apply_guards(sessionize(corr, cfg), cfg), cfg)
+        sessions = aggregate_sessions(sessionize(corr, cfg), cfg)
         sessions = sessions.persist()
         try:
             completed = sessions.where(F.col("close_kind") == "end")

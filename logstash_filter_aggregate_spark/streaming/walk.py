@@ -1,29 +1,31 @@
-"""Vectorized per-task state walk for the streaming gated tiers.
+"""Vectorized per-task state walk: the one implementation of the
+reference's filter hot path (``aggregate.rb:179-246``) that batch and
+streaming share.
 
-The shard-keyed stateful functions in :mod:`streaming.shard` replay the
-reference's filter hot path (``aggregate.rb:179-246``) over each task's
-slice of a micro-batch. Through round 4 that replay was a per-row
-interpreted Python loop (~1 s per million rows on a hot key, one task
-slot). This module runs the identical state machine as a numpy
-session-hop — the same regime-hop structure as the batch exact tiers
-(``operators/sessionize.py``), extended with what a micro-batch walk
-needs:
+The shard-keyed stateful functions in :mod:`streaming.shard` run it
+over each task's slice of a micro-batch, and the exact batch tier
+(``operators/sessionize.py``) over each task of a sorted partition.
+Through round 4 the streaming replay was a per-row interpreted Python
+loop (~1 s per million rows on a hot key, one task slot); this module
+runs the identical state machine as a numpy session-hop, with:
 
 - a **carried state cell** entering the scan (creation / lastevent /
   nevents / effective clocks from previous micro-batches);
 - **dynamic closes**: ``end_of_task`` and ``map_meta.timeout = 0``
   fire only where the codeblock runs (a duplicate ``create`` never
-  runs it), so they cannot be precomputed as static segment splits
-  the way the batch engine's ``_end_seg`` is;
+  runs it), so they cannot be precomputed as static segment splits;
+- per-row **partial rows** (batch only): a resume seed re-creates a
+  map with its carried creation time, and a pre-reduced super-row
+  refreshes the gap clock to its last event, not its arrival position;
 - per-row ``code_ran`` labels and per-session close records coming
   out — the streaming outputs are passthrough rows and closed maps,
-  not generation labels.
+  the batch output is ``_included`` plus the session labels.
 
 Python-level work is O(#sessions + #override events + #closes), each
 step O(log n); every per-row computation is numpy. Fuzz-pinned against
-an independent per-row reference simulator
-(``tests/test_streaming_walk.py``) and by the engine-level streaming
-batch-equality tests.
+independent per-row reference simulators (``tests/test_streaming_walk.py``
+and ``tests/test_timeouts.py::_reference_scan``) and by the engine-level
+streaming batch-equality tests.
 """
 
 from __future__ import annotations
@@ -98,6 +100,8 @@ def walk_scan(
     init: tuple | None,
     timeout: float,
     inactivity: float,
+    row_creation: np.ndarray | None = None,
+    row_last: np.ndarray | None = None,
 ) -> WalkResult:
     """Run the reference state machine over one sorted task chunk.
 
@@ -106,7 +110,12 @@ def walk_scan(
     ``cust_to`` / ``cust_in`` per-row override values (NaN = none;
     ``cust_to == 0`` is the instant-eviction marker), ``init`` the
     carried state ``(creation, last, nevents, eff_to, eff_in)`` or
-    None, and the pattern-default clocks.
+    None, and the pattern-default clocks. Batch partial rows add two
+    optional per-row inputs: ``row_creation``, the creation time a row
+    gives the map it creates (a resume seed's carried creation, at any
+    position), and ``row_last``, the row's last-event time, which the gap
+    clock measures from once the row ran the code (a pre-reduced
+    super-row's last event). Both default to ``ts``.
 
     Semantics reproduced exactly (see ``_reference_scan`` in
     tests/test_timeouts.py and the per-row walk this replaced):
@@ -117,6 +126,10 @@ def walk_scan(
     ``timeout=0`` close only where the codeblock runs.
     """
     n = len(ts)
+    if row_creation is None:
+        row_creation = ts
+    if row_last is None:
+        row_last = ts
     code_ran = np.zeros(n, dtype=bool)
     sess_id = np.full(n, -1, dtype=np.int32)
     sessions: list[tuple] = []
@@ -131,19 +144,23 @@ def walk_scan(
             nev = np.asarray([int(nv0)], dtype="int64")
         return WalkResult(code_ran, sess_id, sessions, nev, final)
 
-    is_cc = ~is_update                       # can-create rows
-    cc_rows = np.flatnonzero(is_cc)
-    cc_ss, n_cc = cc_rows.searchsorted, len(cc_rows)
+    # the all-create_or_update shape skips the can-create index and the
+    # running max: every row can create, and sorted ts is its own max
+    cc_rows = np.flatnonzero(~is_update) if is_update.any() else None  # can-create rows
 
     def next_cc(i: int) -> int:
-        k = cc_ss(i)
-        return int(cc_rows[k]) if k < n_cc else n
+        if cc_rows is None:
+            return i
+        k = cc_rows.searchsorted(i)
+        return int(cc_rows[k]) if k < len(cc_rows) else n
 
-    # running max of non-create row ts: the gap-clock refresh candidates.
-    # Rows that never ran the code (no-map updates between sessions) are
-    # included but harmless: their ts <= the next session creator's ts,
-    # so max(run_prev, last_floor) floors them out.
-    run = np.maximum.accumulate(np.where(is_create, -np.inf, ts))
+    # running max of non-create row last-event times: the gap-clock
+    # refresh candidates. Rows that never ran the code (no-map updates
+    # between sessions) are included but harmless: their ts <= the next
+    # session creator's, so max(run_prev, last_floor) floors them out.
+    run = np.where(is_create, -np.inf, row_last) if is_create.any() else row_last
+    if run is not ts:
+        run = np.maximum.accumulate(run)
     run_prev = np.empty(n)
     run_prev[0] = -np.inf
     run_prev[1:] = run[:-1]
@@ -204,13 +221,14 @@ def walk_scan(
 
     si = -1                                   # current session index
 
+    not_create = ~is_create
+
     def mark_span(lo: int, hi: int) -> None:
         # in-session rows between hop events: the codeblock runs for every
-        # non-(duplicate-create) row
-        if hi > lo:
-            m = ~is_create[lo:hi]
-            code_ran[lo:hi] = m
-            sess_id[lo:hi][m] = si
+        # non-(duplicate-create) row; sess_id is masked to code_ran rows
+        # once, after the walk
+        code_ran[lo:hi] = not_create[lo:hi]
+        sess_id[lo:hi] = si
 
     s = 0
     carried = init is not None
@@ -234,14 +252,14 @@ def walk_scan(
             # apply, and an end/timeout=0 marker closes the one-row session
             si = len(sessions)
             sessions.append(None)
-            creation = float(ts[s])
-            last_floor = float(ts[s])
+            creation = float(row_creation[s])
+            last_floor = float(row_last[s])
             eff_to = float(cust_to[s]) if has_to[s] else timeout
             eff_in = float(cust_in[s]) if has_in[s] else inactivity
             code_ran[s] = True
             sess_id[s] = si
             if end_flag[s] or ct0[s]:
-                sessions[si] = (creation, float(ts[s]), END if end_flag[s] else CT0, s)
+                sessions[si] = (creation, last_floor, END if end_flag[s] else CT0, s)
                 s = next_cc(s + 1)
                 continue
             p = s
@@ -312,7 +330,7 @@ def walk_scan(
                 # row's own >0 overrides never get to matter
                 code_ran[c] = True
                 sess_id[c] = si
-                sessions[si] = (creation, float(ts[c]), END if end_flag[c] else CT0, c)
+                sessions[si] = (creation, float(row_last[c]), END if end_flag[c] else CT0, c)
                 s = next_cc(c + 1)
                 closed = True
                 break
@@ -333,10 +351,11 @@ def walk_scan(
         if not closed and s >= n:
             break
 
+    np.putmask(sess_id, ~code_ran, -1)
     # per-session code-ran counts (+ carried base on session 0)
     n_sess = len(sessions)
     if n_sess:
-        counts = np.bincount(sess_id[sess_id >= 0], minlength=n_sess).astype("int64")
+        counts = np.bincount(sess_id[code_ran], minlength=n_sess).astype("int64")
     else:
         counts = np.zeros(0, dtype="int64")
     if carried:

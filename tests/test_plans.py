@@ -65,18 +65,30 @@ def test_exact_scan_is_one_arrow_call_per_partition(spark, transcripts_path):
     # exact mode scans each partition in one mapInArrow call, not one
     # pandas call per task: the JVM clusters the rows by task (one hash
     # exchange) and sorts them in the scan's order, nulls last
+    from logstash_filter_aggregate_spark.plans.pipeline import _LIVE_CACHES
+
     t = spark.read.parquet(transcripts_path)
-    cfg = example5_config(timeout=600.0, inactivity_timeout=300.0, exact_age_cap=True)
-    plan = _plan(run_pipeline(spark, t, cfg).sessions)
-    assert "FlatMapGroupsInPandas" not in plan, plan
-    assert plan.count("MapInArrow") == 1, plan
-    below = plan.split("MapInArrow", 1)[1]
-    assert below.count("Exchange hashpartitioning(_task_id") == 1, plan
-    assert re.search(
-        r"Sort \[_task_id#\d+ ASC NULLS LAST, ts#\d+ ASC NULLS LAST, "
-        r"conv_id#\d+ ASC NULLS LAST, turn_idx#\d+ ASC NULLS LAST\]",
-        below,
-    ), plan
+    for cfg in (
+        example5_config(timeout=600.0, inactivity_timeout=300.0, exact_age_cap=True),
+        example1_config(timeout=3600.0, exact_age_cap=True),
+    ):
+        plan = _plan(run_pipeline(spark, t, cfg).sessions)
+        assert "FlatMapGroupsInPandas" not in plan, plan
+        assert plan.count("MapInArrow") == 1, plan
+        below = plan.split("MapInArrow", 1)[1]
+        assert below.count("Exchange hashpartitioning(_task_id") == 1, plan
+        assert re.search(
+            r"Sort \[_task_id#\d+ ASC NULLS LAST, ts#\d+ ASC NULLS LAST, "
+            r"conv_id#\d+ ASC NULLS LAST, turn_idx#\d+ ASC NULLS LAST\]",
+            below,
+        ), plan
+    # example #1's guards: the scan emits _included itself, so the
+    # sessionized frame (persisted for the gated rules) runs no window
+    # and no second task exchange after the scan
+    (guarded,) = [df for df in _LIVE_CACHES if "_included" in df.columns]
+    plan = _plan(guarded)
+    assert len(re.findall(r"Exchange hashpartitioning\(_task_id#\d+, \d+\)", plan)) == 1, plan
+    assert "Window" not in plan, plan
 
 
 def test_correlation_scan_prunes_unused_columns(spark, transcripts_path):

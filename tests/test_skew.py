@@ -138,3 +138,22 @@ def test_prereduce_sum_with_col_matches_plain(spark):
     plain = run_pipeline(spark, t, cfg)
     red = run_pipeline(spark, t, cfg, prereduce_s=120.0)
     assert _fp(plain.sessions) == _fp(red.sessions)
+
+
+def test_prereduced_exact_run_measures_gaps_from_last_event(spark):
+    # a super-row's gap clock runs from its last event, not its arrival
+    # position: the rows at 0 and 599 s share a 600 s bucket, so the row
+    # at 601 s arrives 2 s after the map's last event and joins it — one
+    # open map of 3, exactly as the plain exact run gives
+    from tests.conftest import make_transcript
+
+    cfg = example3_config(timeout=3600.0, inactivity_timeout=600.0, exact_age_cap=True)
+    t = make_transcript(spark, [
+        (0, "INFO - u1 - Clicked One", 0),
+        (1, "INFO - u1 - Clicked Two", 599),
+        (2, "INFO - u1 - Clicked Three", 601),
+    ])
+    plain = run_pipeline(spark, t, cfg)
+    red = run_pipeline(spark, t, cfg, prereduce_s=600.0)
+    assert [(r.close_reason, r.clicks) for r in plain.sessions.collect()] == [("open", 3)]
+    assert _fp(plain.sessions) == _fp(red.sessions)

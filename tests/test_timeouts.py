@@ -15,33 +15,35 @@ import datetime as dt
 
 
 def _reference_scan(
-    ts, end_seg, action, cust_to, cust_in, seed_creation, age,
+    ts, close, action, cust_to, cust_in, seed_creation, age,
     timeout: float, inactivity: float,
-) -> None:
+):
     """Independent per-row replay of the reference hot path
-    (aggregate.rb:179-246) — the fuzz ORACLE the vectorized production
-    tiers (_fast_scan/_guarded_scan/_override_scan) are pinned against.
+    (aggregate.rb:179-246) — the fuzz ORACLE the exact tier's kernel
+    (streaming/walk.py::walk_scan) is pinned against.
     Test-only: the engine itself has no per-row Python tier left.
     Orderings preserved (see _exact_age_seg): expiry-before-guard
     (aggregate.rb:194-199), duplicate-create returns before the
     lastevent refresh (rb:216 < rb:220), no-map update is a no-op
     (rb:203), overrides last-write-wins where the codeblock runs
-    (rb:243-246,396-397). Resume seeds: a creating row with finite
-    seed_creation ages from that carried ts (at ANY position —
-    overlapping resumes inject several per task)."""
+    (rb:243-246,396-397), and a ``close`` row (end_of_task or
+    map_meta.timeout = 0) deletes the map only where the codeblock runs
+    (rb:216 returns before rb:240), as simulate_walk in
+    tests/test_streaming_walk.py does. Resume seeds: a creating row with
+    finite seed_creation ages from that carried ts (at ANY position —
+    overlapping resumes inject several per task). Fills ``age``
+    (expiries since the last close) and returns ``(end_seg, included)``:
+    the closes strictly before each row and whether its codeblock ran."""
     n = len(ts)
     cur = 0
     has_map = False
     creation = last = 0.0
     eff_to, eff_in = timeout, inactivity
-    prev_end = None
+    blk = 0
+    end_seg = [0] * n
+    included = [False] * n
     for i in range(n):
-        if end_seg[i] != prev_end:
-            # hard boundary: previous map deleted by end_of_task/custom0
-            cur = 0
-            has_map = False
-            eff_to, eff_in = timeout, inactivity
-            prev_end = end_seg[i]
+        end_seg[i] = blk
         # event-time expiry on arrival runs BEFORE the guard: the expired
         # map dies even if this row then fails its map_action guard
         if has_map and ((ts[i] - creation > eff_to) or (ts[i] - last > eff_in)):
@@ -51,8 +53,7 @@ def _reference_scan(
         if not has_map:
             if action[i] == "update":
                 # no-op: no map created, no clock started; labeled with
-                # the upcoming generation, where the guard stage excludes
-                # it (no prior creator in that segment)
+                # the upcoming generation, and not included
                 age[i] = cur
                 continue
             sc = seed_creation[i] if seed_creation is not None else None
@@ -63,7 +64,7 @@ def _reference_scan(
             if action[i] == "create":
                 # duplicate start: return BEFORE the lastevent update —
                 # the inactivity clock is NOT refreshed, and the
-                # codeblock (overrides) never runs
+                # codeblock (overrides, closes) never runs
                 age[i] = cur
                 continue
             last = ts[i]
@@ -74,6 +75,61 @@ def _reference_scan(
         if cust_in[i] == cust_in[i] and cust_in[i] > 0:
             eff_in = float(cust_in[i])
         age[i] = cur
+        included[i] = True
+        if close[i]:
+            # end_of_task / timeout=0: the map is deleted after its code ran
+            has_map = False
+            eff_to, eff_in = timeout, inactivity
+            cur = 0
+            blk += 1
+    return end_seg, included
+
+
+def _block_closes(end_seg):
+    """Per-row close flags from static end blocks: the last row of each
+    block closes (its map is deleted where its codeblock runs)."""
+    import numpy as np
+
+    return np.append(end_seg[1:] != end_seg[:-1], False)
+
+
+def _action_flags(action):
+    """``(is_create, is_update)`` of an action array — the engine reads
+    them off Arrow before the kernel runs."""
+    return (action == "create").astype(bool), (action == "update").astype(bool)
+
+
+def _scan_labels(ts, close, flags, cust_to, cust_in, seed, timeout, inactivity):
+    """The exact tier's kernel on one task, as ``_scan_tasks`` runs it:
+    ``walk_scan`` plus the label pass, over ``_action_flags`` ``flags``.
+    Returns ``(end_seg, age, included)``."""
+    import numpy as np
+
+    from logstash_filter_aggregate_spark.operators.sessionize import _label_breaks, _session_labels
+    from logstash_filter_aggregate_spark.streaming.walk import walk_scan
+
+    n = len(ts)
+    creation = None if seed is None else np.where(np.isnan(seed), ts, seed)
+    res = walk_scan(ts, *flags, close, cust_to, cust_in, None, timeout, inactivity, creation)
+    breaks = _label_breaks(res.sessions, 0, n)
+    _, end_seg, age = _session_labels(np.zeros(1, dtype=np.int64), breaks, n)
+    return end_seg, age, res.code_ran
+
+
+def _assert_scan_matches_reference(ts, close, action, cust_to, cust_in, seed, timeout, inactivity, ctx=()):
+    """The kernel's labels and inclusion equal the per-row replay's."""
+    import numpy as np
+
+    end_seg, age, included = _scan_labels(
+        ts, close, _action_flags(action), cust_to, cust_in, seed, timeout, inactivity
+    )
+    ref_age = np.zeros(len(ts), dtype="int32")
+    ref_end, ref_incl = _reference_scan(
+        ts, close, action, cust_to, cust_in, seed, ref_age, timeout, inactivity
+    )
+    assert np.array_equal(included, ref_incl), (*ctx, np.flatnonzero(included != np.asarray(ref_incl))[:5])
+    assert np.array_equal(end_seg, ref_end), (*ctx, np.flatnonzero(end_seg != np.asarray(ref_end))[:5])
+    assert np.array_equal(age, ref_age), (*ctx, np.flatnonzero(age != ref_age)[:5])
 
 
 def test_event_time_expiry_and_timestamp_inheritance(spark):
@@ -316,6 +372,31 @@ def test_duplicate_create_does_not_refresh_inactivity_exact(spark):
     assert [r.n for r in out.open.collect()] == [1]
 
 
+def test_duplicate_create_with_zero_timeout_keeps_the_map_exact(spark):
+    # a duplicate create returns before its codeblock (aggregate.rb:216
+    # precedes :240 and the timeout=0 eviction), so its
+    # map_meta.timeout = 0 never fires: click, duplicate start, click
+    # stay one live map of two clicks
+    cfg = PipelineConfig(
+        task_id="%{taskid}",
+        rules=(
+            CorrelationRule(
+                "start", "logger = 'TASK_START'", map_action="create", custom_timeout="0",
+            ),
+            CorrelationRule("click", "click_target is not null", aggs=(AggSpec("clicks", "count"),)),
+        ),
+        timeout=600.0, exact_age_cap=True, push_map_as_event_on_timeout=True,
+    )
+    rows = [
+        (0, "INFO - t - Clicked One", 0),
+        (1, "INFO - t - TASK_START - begin", 10),   # duplicate: the map is live
+        (2, "INFO - t - Clicked Two", 20),
+    ]
+    out = run_pipeline(spark, make_transcript(spark, rows), cfg)
+    got = [(r.clicks, r.nevents, r.close_reason) for r in out.sessions.collect()]
+    assert got == [(2, 2, "open")], got
+
+
 def test_processing_time_mode_no_midstream_expiry(spark):
     # processing-time mode (the reference default, Time.now): a batch
     # replay is instantaneous in wall clock, so huge EVENT-time gaps must
@@ -370,8 +451,9 @@ def test_processing_time_custom_zero_still_evicts(spark):
 
 
 def test_exact_scan_fast_path_equals_slow_and_is_faster():
-    # 1M-row single hot task: the session-hop fast path must produce the
-    # per-row state machine's exact result and beat it by >= 10x
+    # 1M-row single all-create_or_update hot task: the session-hop kernel
+    # must produce the per-row state machine's exact result and beat it
+    # by >= 10x
     import time
 
     import numpy as np
@@ -389,24 +471,30 @@ def test_exact_scan_fast_path_equals_slow_and_is_faster():
     end_seg[n // 2:] = 1  # one end-marker boundary mid-stream
     timeout, inactivity = 600.0, 300.0
 
-    # best-of-3: the fast path runs in ~30ms, so a single sample is at the
-    # mercy of whatever else the CI box is doing (observed flake under a
-    # concurrent Spark JVM); the min is the honest cost of the code path
-    age_fast = np.zeros(n, dtype="int32")
+    close = _block_closes(end_seg)
+    action = np.full(n, "create_or_update", dtype=object)
+    flags = _action_flags(action)
+    nan = np.full(n, np.nan)
+
+    # best-of-3: the kernel runs in tens of ms, so a single sample is at
+    # the mercy of whatever else the CI box is doing (observed flake under
+    # a concurrent Spark JVM); the min is the honest cost of the code path
     fast_s = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
-        _fast_scan(ts, end_seg, None, age_fast, timeout, inactivity)
+        _, age_fast, _ = _scan_labels(ts, close, flags, nan, nan, None, timeout, inactivity)
         fast_s = min(fast_s, time.perf_counter() - t0)
 
     age_slow = np.zeros(n, dtype="int32")
-    action = np.full(n, "create_or_update", dtype=object)
-    nan = np.full(n, np.nan)
     t0 = time.perf_counter()
-    _reference_scan(ts, end_seg, action, nan, nan, None, age_slow, timeout, inactivity)
+    _reference_scan(ts, close, action, nan, nan, None, age_slow, timeout, inactivity)
     slow_s = time.perf_counter() - t0
 
     assert np.array_equal(age_fast, age_slow)
+    # the hot-task kernel timing's entry point runs the same kernel
+    age_shim = np.zeros(n, dtype="int32")
+    _fast_scan(ts, end_seg, None, age_shim, timeout, inactivity)
+    assert np.array_equal(age_shim, age_slow)
     assert slow_s / max(fast_s, 1e-9) >= 10, (fast_s, slow_s)
 
 
@@ -430,14 +518,12 @@ def _fuzz_seed_array(rng, np, n, ts, action):
 
 
 def test_guarded_scan_equals_reference_fuzz():
-    # the vectorized guarded session-hop (tier B) must reproduce the
-    # per-row reference replay exactly on randomized guarded streams:
-    # mixed create/update/create_or_update actions, end blocks, gap and
-    # age crossings, duplicate-create runs, dead update zones, and
-    # resume seeds at arbitrary positions (overlapping resumes)
+    # the kernel must reproduce the per-row reference replay exactly on
+    # randomized guarded streams without overrides: mixed
+    # create/update/create_or_update actions, end closes, gap and age
+    # crossings, duplicate-create runs, dead update zones, and resume
+    # seeds at arbitrary positions (overlapping resumes)
     import numpy as np
-
-    from logstash_filter_aggregate_spark.operators.sessionize import _guarded_scan
 
     rng = np.random.RandomState(20260817)
     for trial in range(60):
@@ -454,25 +540,19 @@ def test_guarded_scan_equals_reference_fuzz():
         inactivity = min(inactivity, timeout)
         seed = _fuzz_seed_array(rng, np, n, ts, action)
 
-        age_g = np.zeros(n, dtype="int32")
-        _guarded_scan(ts, end_seg, action, seed, age_g, timeout, inactivity)
-        age_s = np.zeros(n, dtype="int32")
         nan = np.full(n, np.nan)
-        _reference_scan(ts, end_seg, action, nan, nan, seed, age_s, timeout, inactivity)
-        assert np.array_equal(age_g, age_s), (
-            trial, timeout, inactivity,
-            np.flatnonzero(age_g != age_s)[:5],
+        _assert_scan_matches_reference(
+            ts, _block_closes(end_seg), action, nan, nan, seed, timeout, inactivity,
+            ctx=(trial, timeout, inactivity),
         )
 
 
 def test_fast_scan_equals_reference_fuzz_with_seeds():
-    # tier A (all create_or_update) with resume seeds at arbitrary
-    # positions — the overlapping-resume corner that used to fall back
-    # to a per-row replay now rides the fast hop; pin it against the
-    # independent reference simulator
+    # all create_or_update with resume seeds at arbitrary positions —
+    # the overlapping-resume corner, where a seed re-creates a map with
+    # its carried creation time; pin the kernel against the independent
+    # reference simulator
     import numpy as np
-
-    from logstash_filter_aggregate_spark.operators.sessionize import _fast_scan
 
     rng = np.random.RandomState(20260819)
     for trial in range(60):
@@ -485,25 +565,19 @@ def test_fast_scan_equals_reference_fuzz_with_seeds():
         inactivity = min(float(rng.choice([60.0, 300.0, timeout])), timeout)
         seed = _fuzz_seed_array(rng, np, n, ts, action)
 
-        age_f = np.zeros(n, dtype="int32")
-        _fast_scan(ts, end_seg, seed, age_f, timeout, inactivity)
-        age_s = np.zeros(n, dtype="int32")
         nan = np.full(n, np.nan)
-        _reference_scan(ts, end_seg, action, nan, nan, seed, age_s, timeout, inactivity)
-        assert np.array_equal(age_f, age_s), (
-            trial, timeout, inactivity,
-            np.flatnonzero(age_f != age_s)[:5],
+        _assert_scan_matches_reference(
+            ts, _block_closes(end_seg), action, nan, nan, seed, timeout, inactivity,
+            ctx=(trial, timeout, inactivity),
         )
 
 
 def test_guarded_scan_beats_reference_10x_on_hot_task():
-    # 1M-row guarded hot task (VERDICT r2 item 4): the vectorized tier
-    # must match the per-row replay and beat it by >= 10x
+    # 1M-row guarded hot task (VERDICT r2 item 4): the kernel must match
+    # the per-row replay and beat it by >= 8x
     import time
 
     import numpy as np
-
-    from logstash_filter_aggregate_spark.operators.sessionize import _guarded_scan
 
     n = 1_000_000
     rng = np.random.RandomState(13)
@@ -516,23 +590,25 @@ def test_guarded_scan_beats_reference_10x_on_hot_task():
         size=n, p=[0.05, 0.4, 0.55],
     )
     timeout, inactivity = 600.0, 300.0
+    close = _block_closes(end_seg)
+    flags = _action_flags(action)
+    nan = np.full(n, np.nan)
 
-    age_g = np.zeros(n, dtype="int32")
     g_s = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
-        _guarded_scan(ts, end_seg, action, None, age_g, timeout, inactivity)
+        labels = _scan_labels(ts, close, flags, nan, nan, None, timeout, inactivity)
         g_s = min(g_s, time.perf_counter() - t0)
 
     age_s = np.zeros(n, dtype="int32")
-    nan = np.full(n, np.nan)
     slow_s = float("inf")
     for _ in range(2):
         t0 = time.perf_counter()
-        _reference_scan(ts, end_seg, action, nan, nan, None, age_s, timeout, inactivity)
+        ref = _reference_scan(ts, close, action, nan, nan, None, age_s, timeout, inactivity)
         slow_s = min(slow_s, time.perf_counter() - t0)
 
-    assert np.array_equal(age_g, age_s)
+    assert np.array_equal(labels[1], age_s)
+    assert np.array_equal(labels[0], ref[0]) and np.array_equal(labels[2], ref[1])
     # warm-vs-warm (both sides best-of-N): measured ~12x on an idle box;
     # >=8 rides out scheduler noise under a loaded full-suite run
     assert slow_s / max(g_s, 1e-9) >= 8, (g_s, slow_s)
@@ -568,17 +644,11 @@ def test_custom_inactivity_override_exact_mode(spark):
 
 
 def test_override_scan_equals_reference_fuzz():
-    # tier C (live per-map overrides) must reproduce the per-row replay
-    # exactly: mixed actions, sparse/dense overrides, varying and
+    # live per-map overrides: the kernel must reproduce the per-row
+    # replay exactly — mixed actions, sparse/dense overrides, varying and
     # constant values, overrides on create rows (must NOT apply when the
-    # create is a duplicate), end blocks, seeds at arbitrary positions
+    # create is a duplicate), end closes, seeds at arbitrary positions
     import numpy as np
-
-    from logstash_filter_aggregate_spark.operators.sessionize import (
-        _constant_override_clocks,
-        _guarded_scan,
-        _override_scan,
-    )
 
     rng = np.random.RandomState(20260818)
     for trial in range(80):
@@ -608,25 +678,15 @@ def test_override_scan_equals_reference_fuzz():
         cust_to, cust_in = mk_override(), mk_override()
         seed = _fuzz_seed_array(rng, np, n, ts, action)
 
-        age_v = np.zeros(n, dtype="int32")
-        eff = _constant_override_clocks(cust_to, cust_in, timeout, inactivity)
-        if eff is not None:
-            _guarded_scan(ts, end_seg, action, seed, age_v, eff[0], eff[1])
-        else:
-            _override_scan(
-                ts, end_seg, action, cust_to, cust_in, seed, age_v, timeout, inactivity
-            )
-        age_s = np.zeros(n, dtype="int32")
-        _reference_scan(ts, end_seg, action, cust_to, cust_in, seed, age_s, timeout, inactivity)
-        assert np.array_equal(age_v, age_s), (
-            trial, timeout, inactivity,
-            np.flatnonzero(age_v != age_s)[:5],
+        _assert_scan_matches_reference(
+            ts, _block_closes(end_seg), action, cust_to, cust_in, seed, timeout, inactivity,
+            ctx=(trial, timeout, inactivity),
         )
 
 
 def test_override_scan_beats_reference_on_hot_task():
     # 1M-row hot task with a 1%-of-rows override rule (VERDICT r3 item
-    # 3): the regime-hop tier must match the per-row replay exactly and
+    # 3): the kernel's regime hop must match the per-row replay exactly and
     # beat it decisively. Two shapes: a CONSTANT override value (the
     # common "rule always sets the same map_meta.timeout" config — the
     # clocks_final shortcut skips re-asserting events) and ALTERNATING
@@ -640,8 +700,6 @@ def test_override_scan_beats_reference_on_hot_task():
 
     import numpy as np
 
-    from logstash_filter_aggregate_spark.operators.sessionize import _override_scan
-
     n = 1_000_000
     rng = np.random.RandomState(29)
     deltas = rng.choice([1.0, 2.0, 400.0], size=n, p=[0.7985, 0.2, 0.0015])
@@ -653,6 +711,8 @@ def test_override_scan_beats_reference_on_hot_task():
         size=n, p=[0.05, 0.4, 0.55],
     )
     timeout, inactivity = 600.0, 300.0
+    close = _block_closes(end_seg)
+    flags = _action_flags(action)
 
     for vals, min_ratio in (([450.0], 6.0), ([450.0, 900.0], 4.0)):
         cust_to = np.full(n, np.nan)
@@ -660,20 +720,19 @@ def test_override_scan_beats_reference_on_hot_task():
         cust_to[mask] = rng.choice(vals, size=int(mask.sum()))
         cust_in = np.full(n, np.nan)
 
-        age_v = np.zeros(n, dtype="int32")
-        age_s = np.zeros(n, dtype="int32")
-        _override_scan(ts, end_seg, action, cust_to, cust_in, None, age_v, timeout, inactivity)
-        _reference_scan(ts, end_seg, action, cust_to, cust_in, None, age_s, timeout, inactivity)
-        assert np.array_equal(age_v, age_s), vals
+        _assert_scan_matches_reference(
+            ts, close, action, cust_to, cust_in, None, timeout, inactivity, ctx=tuple(vals)
+        )
 
         v_s = slow_s = float("inf")
+        age_s = np.zeros(n, dtype="int32")
         for _ in range(3):
             t0 = time.perf_counter()
-            _override_scan(ts, end_seg, action, cust_to, cust_in, None, age_v, timeout, inactivity)
+            _scan_labels(ts, close, flags, cust_to, cust_in, None, timeout, inactivity)
             v_s = min(v_s, time.perf_counter() - t0)
         for _ in range(2):
             t0 = time.perf_counter()
-            _reference_scan(ts, end_seg, action, cust_to, cust_in, None, age_s, timeout, inactivity)
+            _reference_scan(ts, close, action, cust_to, cust_in, None, age_s, timeout, inactivity)
             slow_s = min(slow_s, time.perf_counter() - t0)
         # ratio-only: an absolute wall bound here is machine-dependent
         # (flakes on loaded hosts); the vectorized-vs-replay ratio is the
@@ -706,7 +765,7 @@ def _exact_scan_labels(spark, rows, cfg, max_records_per_batch=None):
             F.unix_micros("ts").alias("ts_us"),
             "_action", "_end_flag", "_custom_timeout", "_custom_inactivity",
             F.unix_micros("_seed_creation_ts").alias("seed_us"),
-            "_ord", "_end_seg", "_gap_seg", "_age_seg",
+            "_ord", "_end_seg", "_gap_seg", "_age_seg", "_included",
         ).collect()
     finally:
         spark.conf.set(key, prev)
@@ -716,7 +775,7 @@ def _exact_scan_labels(spark, rows, cfg, max_records_per_batch=None):
 def _assert_labels_match_reference(labels, cfg):
     """Replay every task of ``labels`` in (ts, conv_id, turn_idx) order
     through ``_reference_scan`` with the scan's seconds arithmetic
-    (int64 ns / 1e9) and compare every label."""
+    (int64 ns / 1e9) and compare every label and ``_included``."""
     import numpy as np
 
     by_task: dict = {}
@@ -732,16 +791,15 @@ def _assert_labels_match_reference(labels, cfg):
         seed[np.isfinite(seed)] /= 1e9
         cust_to = np.array([np.nan if r[6] is None else r[6] for r in rs])
         cust_in = np.array([np.nan if r[7] is None else r[7] for r in rs])
-        close = np.array([int(r[5] == 1 or r[6] == 0.0) for r in rs])
-        end_seg = np.concatenate(([0], np.cumsum(close[:-1]))).astype("int64")
+        close = np.array([r[5] == 1 or r[6] == 0.0 for r in rs])
         action = np.array([r[4] for r in rs], dtype=object)
         age = np.zeros(n, dtype="int32")
-        _reference_scan(
-            ts, end_seg, action, cust_to, cust_in, seed, age,
+        end_seg, included = _reference_scan(
+            ts, close, action, cust_to, cust_in, seed, age,
             float(cfg.timeout), float(cfg.effective_inactivity_timeout),
         )
-        got = [(r[9], r[10], r[11], r[12]) for r in rs]
-        want = [(i + 1, int(end_seg[i]), 0, int(age[i])) for i in range(n)]
+        got = [(r[9], r[10], r[11], r[12], r[13]) for r in rs]
+        want = [(i + 1, end_seg[i], 0, int(age[i]), included[i]) for i in range(n)]
         assert got == want, (tid, got, want)
 
 

@@ -13,7 +13,8 @@ import datetime as dt
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# validate the tree this script belongs to, wherever it is checked out
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import queries, oracle_sql  # noqa: E402
 from logstash_filter_aggregate_spark import get_spark  # noqa: E402
