@@ -1663,30 +1663,57 @@ def oracle_sql() -> dict[str, str]:
                run_id = (SELECT max(run_id) FROM agg) AS final_flush
         FROM agg
     """
-    o["pipe_custom_timeout"] = """
-        WITH e AS (
-          SELECT user_id, ts, event_id, event_type, CAST(floor(value) AS BIGINT) AS val,
-                 COALESCE(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS seg
+    # per-row replay of the reference with per-map clocks (a recursive
+    # CTE, one step per row of a user): a row first expires the live map
+    # on arrival when the map's own clocks ran out (aggregate.rb:194-199,
+    # 420-445), then its codeblock runs on the live or new map: signup
+    # sets map_meta.timeout = 3600 (aggregate.rb:243-246), error sets 0
+    # and evicts the map after its code (aggregate.rb:259-274). The
+    # task's last map is checked against the end-of-input watermark.
+    o["pipe_custom_timeout"] = f"""
+        WITH RECURSIVE base AS (
+          SELECT user_id, ts, event_type, CAST(floor(value) AS BIGINT) AS val,
+                 extract(epoch FROM ts) AS tsec,
+                 row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
           FROM events WHERE event_type IS NOT NULL
         ),
-        agg AS (
-          SELECT CAST(user_id AS VARCHAR) AS uid, user_id, seg,
-                 CAST(sum(CASE WHEN event_type NOT IN ('error', 'signup') THEN 1 ELSE 0 END) AS BIGINT) AS n_ev,
-                 CAST(COALESCE(sum(CASE WHEN event_type NOT IN ('error', 'signup') THEN val END), 0) AS BIGINT) AS val_total,
-                 min(ts) AS creation_ts, max(ts) AS lastevent_ts,
-                 bool_or(event_type = 'error') AS has_err,
-                 bool_or(event_type = 'signup') AS has_sign
-          FROM e GROUP BY user_id, seg
+        rec AS (
+          SELECT user_id, rn, tsec, CAST(1 AS BIGINT) AS sid, tsec AS creation,
+                 CASE WHEN event_type = 'signup' THEN 3600.0 ELSE {BIG_TIMEOUT} END AS eff_to,
+                 event_type <> 'error' AS alive
+          FROM base WHERE rn = 1
+          UNION ALL
+          SELECT b.user_id, b.rn, b.tsec, r.sid + CAST(n.fresh AS BIGINT) AS sid,
+                 CASE WHEN n.fresh THEN b.tsec ELSE r.creation END AS creation,
+                 CASE WHEN b.event_type = 'signup' THEN 3600.0
+                      WHEN n.fresh THEN {BIG_TIMEOUT} ELSE r.eff_to END AS eff_to,
+                 b.event_type <> 'error' AS alive
+          FROM rec r
+          JOIN base b ON b.user_id = r.user_id AND b.rn = r.rn + 1
+          CROSS JOIN LATERAL (
+            SELECT NOT r.alive
+                   OR b.tsec - r.creation > r.eff_to
+                   OR b.tsec - r.tsec > {BIG_TIMEOUT} AS fresh
+          ) n
         ),
-        wm AS (SELECT max(lastevent_ts) AS w FROM agg)
-        SELECT CASE WHEN has_err THEN 'inline'
-                    WHEN has_sign AND extract(epoch FROM wm.w) - extract(epoch FROM creation_ts) > 3600
-                         THEN 'timeout'
+        maps AS (
+          SELECT r.user_id, r.sid,
+                 CAST(count(*) FILTER (WHERE b.event_type NOT IN ('error', 'signup')) AS BIGINT) AS n_ev,
+                 CAST(COALESCE(sum(b.val) FILTER (WHERE b.event_type NOT IN ('error', 'signup')), 0) AS BIGINT) AS val_total,
+                 min(b.ts) AS creation_ts, max(b.ts) AS lastevent_ts,
+                 bool_or(b.event_type = 'error') AS evicted,
+                 arg_max(r.eff_to, r.rn) AS eff_to
+          FROM rec r JOIN base b ON b.user_id = r.user_id AND b.rn = r.rn
+          GROUP BY r.user_id, r.sid
+        ),
+        wm AS (SELECT max(extract(epoch FROM ts)) AS w FROM events)
+        SELECT CASE WHEN evicted THEN 'inline'
+                    WHEN sid < max(sid) OVER (PARTITION BY user_id) THEN 'timeout'
+                    WHEN wm.w - extract(epoch FROM creation_ts) > eff_to
+                      OR wm.w - extract(epoch FROM lastevent_ts) > {BIG_TIMEOUT} THEN 'timeout'
                     ELSE 'open' END AS bucket,
-               uid, n_ev, val_total, creation_ts, lastevent_ts
-        FROM agg, wm
+               CAST(user_id AS VARCHAR) AS uid, n_ev, val_total, creation_ts, lastevent_ts
+        FROM maps, wm
     """
     o["pipe_route_counts"] = """
         WITH last_ev AS (

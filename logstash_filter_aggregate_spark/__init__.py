@@ -10,9 +10,9 @@ multi-turn conversation/agent transcripts
 Where the reference is a single-threaded, mutex-guarded state machine
 (``lib/logstash/filters/aggregate.rb``), this engine is order-independent
 and distributed: grok parse runs as JVM regex / Arrow-vectorized pandas
-UDFs, the map lifecycle becomes window functions over
-``(task_id ordered by turn order)`` plus ``groupBy`` aggregations with
-session-gap timeout flags, and results fan out to routed sinks.
+UDFs, the map lifecycle becomes one exact per-task scan over Arrow
+batches after a task-key exchange plus ``groupBy`` aggregations, and
+results fan out to routed sinks.
 """
 
 from logstash_filter_aggregate_spark.config import (

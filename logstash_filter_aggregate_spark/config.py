@@ -21,24 +21,6 @@ class ConfigurationError(ValueError):
     (``aggregate.rb:86-133``)."""
 
 
-class GuardedWindowModeWarning(UserWarning):
-    """Config-time disclosure of the known default-mode divergences from
-    the reference (STATUS.md "Known divergences"). The default
-    window-based sessionization splits and clocks maps on every matched
-    row, including rows the map-action guards later discard, where the
-    reference returns BEFORE the discarded row touches the map
-    (``aggregate.rb:216``/``:203`` precede ``:220`` and ``:240``):
-
-    - a duplicate ``create`` (or an ``update`` with no live map)
-      refreshes the inactivity-gap clock;
-    - a duplicate ``create`` whose ``custom_timeout`` evaluates to 0
-      splits the live map as if it were evicted.
-
-    Set ``exact_age_cap=True`` to replay the reference's per-event
-    ordering exactly (the vectorized session-hop keeps that tier
-    O(sessions·log n), not per-row Python)."""
-
-
 _TASK_ID_REF = re.compile(r"%\{([A-Za-z_][A-Za-z0-9_]*)\}")
 
 # The aggregation dictionary replacing the reference's eval'd `code`
@@ -144,19 +126,18 @@ class PipelineConfig:
     # default) merges non-contiguous same-id events into one map — exact
     # for the documented contiguous-run use case (example #4) and
     # shuffle-free; True reproduces the run semantics exactly via a
-    # distributed global index (operators/order.py) — one extra range
-    # exchange + a per-partition stats pass.
+    # distributed global index (operators/order.py), whose jumps the
+    # scan reads as run breaks — one extra range exchange + a
+    # per-partition stats pass.
     push_previous_exact: bool = False
     timeout_task_id_field: str | None = None       # aggregate.rb:33 (O13)
     timeout_tags: tuple[str, ...] = ()             # aggregate.rb:43 (O13)
     # timeout_code (O14, aggregate.rb:94-96): output-column -> SQL expr
     # over the aggregated timeout event, e.g. {"several_clicks": "clicks > 1"}.
     timeout_code: dict[str, str] | None = None
-    # exact age-cap sessionization (SURVEY.md §7 hard part 1): the
-    # window-based split is exact for gap/end splits; the absolute-age cap
-    # within a session is iterative. False = single-pass approximation
-    # (age measured from each gap-session's creation); True = exact
-    # per-task scan, one mapInArrow call per task-clustered partition.
+    # Deprecated no-op: every batch run is the exact per-task scan
+    # (operators/sessionize.py). Accepted so existing callers keep
+    # working; True warns with a DeprecationWarning.
     exact_age_cap: bool = False
 
     def __post_init__(self) -> None:
@@ -178,11 +159,10 @@ class PipelineConfig:
             if r.end_of_task and r.map_action == "create":
                 # A duplicate `create` on a live map returns BEFORE the
                 # end_of_task deletion (aggregate.rb:216 precedes :240), so
-                # such a row must neither close nor split the map — but the
-                # engine's segment split (sessionize) runs before guard
-                # resolution and would split on it, diverging. The reference
-                # accepts the combination but never tests it; rejecting it
-                # is honest where silent divergence would not be.
+                # such a row must neither close nor split the map. The
+                # reference accepts the combination but never tests it, and
+                # no oracle here pins it: rejecting it is honest where an
+                # untested promise would not be.
                 raise ConfigurationError(
                     f"rule {r.rule_id!r}: end_of_task with map_action='create' "
                     "is unsupported (a duplicate create must not close the "
@@ -200,33 +180,14 @@ class PipelineConfig:
             raise ConfigurationError(
                 "push_previous_exact requires push_previous_map_as_event=True"
             )
-        if self.push_previous_exact and self.exact_age_cap:
-            # the exact age scan folds gap splits into _age_seg and would
-            # discard the run-break splits
-            raise ConfigurationError(
-                "push_previous_exact cannot be combined with exact_age_cap"
-            )
-        if (
-            self.timeout_timestamp_field is not None
-            and not self.exact_age_cap
-            and any(r.map_action != "create_or_update" for r in self.rules)
-        ):
-            # guarded config in event-time mode on the default window
-            # sessionizer: disclose the guard/gap-clock divergence once
-            # per process (see GuardedWindowModeWarning)
+        if self.exact_age_cap:
             import warnings
 
             warnings.warn(
-                "guarded map_action rules with the default window-mode "
-                "sessionization: rows discarded by the guards (duplicate "
-                "create / no-map update) still refresh the inactivity-gap "
-                "clock, and a duplicate create whose custom_timeout is 0 "
-                "still splits the live map, diverging from the reference "
-                "on those corners (aggregate.rb:216/:203 return before "
-                ":220 and :240). Set exact_age_cap=True for "
-                "reference-exact replay.",
-                GuardedWindowModeWarning,
-                stacklevel=2,
+                "exact_age_cap is a no-op: every batch run replays the "
+                "reference exactly with the per-task scan",
+                DeprecationWarning,
+                stacklevel=3,
             )
 
     @property

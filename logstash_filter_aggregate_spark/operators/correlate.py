@@ -108,7 +108,7 @@ NARROW_BASE = [
 def narrow_for_correlation(classified: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Project the correlation stream down to the engine columns plus
     pre-evaluated aggregation inputs (``_v_<rule>_<hash>``) BEFORE the
-    task-id exchange: the shuffle and the window sort then carry narrow
+    task-id exchange: the shuffle and the scan's sort then carry narrow
     rows instead of raw text + every parsed capture — the columnar
     equivalent of predicate/projection pushdown for the stateful stage."""
     vcols: dict[str, str] = {}
@@ -133,7 +133,7 @@ def narrow_for_correlation(classified: DataFrame, cfg: PipelineConfig) -> DataFr
     field = m.group(1) if m else None
     if field in classified.columns and dict(classified.dtypes).get(field) == "string":
         # Single string-field task id: downstream, rows with a NULL
-        # _task_id or _rule_id are dropped before any window (sessionize),
+        # _task_id or _rule_id are dropped before the scan (sessionize),
         # and for matched rows the classify CASE equals the raw attribute
         # — so aliasing the ATTRIBUTE here is semantically identical. It
         # matters for bucketed tables: Catalyst propagates the scan's
@@ -279,10 +279,12 @@ def aggregate_sessions(guarded: DataFrame, cfg: PipelineConfig) -> DataFrame:
         " AS _session_timeout",
         f"max_by(_custom_inactivity, CASE WHEN _included AND _custom_inactivity > 0 THEN {ORDER_COL} END)"
         " AS _session_inactivity",
+        # the scan marks the rows of each task's last map
+        "bool_or(_is_last) AS _is_last",
     ]
     names = [
         "creation_ts", "lastevent_ts", "nevents", "conv_id", "close_kind", "end_ts",
-        "end_turn_idx", "_session_timeout", "_session_inactivity",
+        "end_turn_idx", "_session_timeout", "_session_inactivity", "_is_last",
     ]
     avg_names: list[str] = []
     for n, (fn, srcs) in merged.items():
@@ -339,17 +341,14 @@ def close_sessions(
     """Set each map's ``close_reason``.
 
     Expiry is event-time (the reference's only deterministic mode,
-    ``spec:374-390``): a non-last session of a task was by construction
-    expired by the arrival of the task's next event
-    (``aggregate.rb:420-445``); the last session is checked against the
-    end-of-input watermark ``max(lastevent_ts)`` — expired maps would
-    have been pushed by the periodic flush (``aggregate.rb:386-416``),
-    live maps survive to shutdown (``aggregate.rb:154-175``).
+    ``spec:374-390``): a map that is not its task's last (``_is_last``,
+    which the scan sets) was by construction expired by the arrival of
+    the task's next event (``aggregate.rb:420-445``); the last map is
+    checked against the end-of-input watermark ``max(lastevent_ts)`` —
+    expired maps would have been pushed by the periodic flush
+    (``aggregate.rb:386-416``), live maps survive to shutdown
+    (``aggregate.rb:154-175``).
     """
-    seg = "struct(_end_seg, _gap_seg, _age_seg)"
-    is_last = f"CAST(max({seg}) OVER (PARTITION BY pattern_id, task_id) = {seg} AS BOOLEAN)"
-    sessions = with_columns(sessions, {"_is_last": is_last})
-
     # End-of-input "now" (the event-time analog of the final flush's
     # Time.now, aggregate.rb:388-390). Computed from the RAW input when
     # provided — a scan-only, column-pruned subtree — instead of from

@@ -1,12 +1,12 @@
 """Skew handling for hot conversations (north-star "salted-key
 repartitioning and AQE skew handling").
 
-The per-task window sort is the one stage a hot task (one conv_id with
+The per-task scan's sort is the one stage a hot task (one conv_id with
 100-1000x the median turns) can straggle: all its rows land in a single
 partition's sort run. :func:`prereduce` collapses rows into per
-``(task, time-bucket)`` *partial rows* BEFORE the task window — the
+``(task, time-bucket)`` *partial rows* BEFORE the task scan — the
 heavy shuffle is keyed by ``(task, bucket)`` (the salt), so a hot task
-spreads across the cluster; the subsequent ordered window then sees at
+spreads across the cluster; the subsequent ordered scan then sees at
 most ``span/bucket`` rows per task instead of millions.
 
 Exactness:
@@ -74,11 +74,22 @@ def prereduce_eligible(cfg: PipelineConfig) -> bool:
 
 
 def _pre_guard_included(w) -> Column:
-    """Guard inclusion resolved in the pre-window (same semantics as the
-    window sessionizer's guards, same single-exchange running-count
-    trick): the first can-create row of an end-segment creates the map, later
+    """Guard inclusion resolved in the pre-window with running counts:
+    the first can-create row of an end-segment creates the map, later
     ``create`` rows are duplicate-start no-ops, ``update`` rows before the
-    creator are no-ops."""
+    creator are no-ops. Exact under prereduce's precondition that no map
+    expires mid-segment.
+
+    Why this is a window and not the scan's ``_included``: prereduce
+    must drop guard-rejected rows *before* it collapses rows into
+    partial rows, since a super-row no longer knows which of its rows
+    ran the code. The scan runs after the task exchange, and its input
+    here is the super-rows. Asking the scan instead would mean a second
+    full-volume task exchange plus a Python pass over the hot task
+    before the salted one, which is exactly the serial cost prereduce
+    exists to avoid. The window runs on a narrow projection, on the JVM,
+    in the one pre-window prereduce already needs for its end-marker
+    split."""
     run = w.rowsBetween(W.unboundedPreceding, 0)
     cc = (F.col("_action") != "update").cast("int")
     cc_incl = F.coalesce(F.sum(cc).over(run), F.lit(0))

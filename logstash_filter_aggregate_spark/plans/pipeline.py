@@ -5,10 +5,9 @@
 passthrough event stream (tags O19, cancel U3) and inline emissions
 (O18). The logical plan is declared once; Catalyst/AQE pick the
 physical strategy. Two shuffles total on the hot path: the
-``_task_id`` window exchange (reused by every window and the groupBy,
-which are co-partitioned) and the small session-level routing window.
-Gated configs add one exchange of the narrow guarded rows, since the
-groupBy reads them from a persisted frame (see :func:`run_pipeline`).
+``_task_id`` exchange of the narrow event rows ahead of the per-task
+scan, and the exchange of per-session partial rows under the session
+aggregate (see :func:`run_pipeline`).
 """
 
 from __future__ import annotations
@@ -291,7 +290,7 @@ def run_pipeline(
 
     ``prereduce_s``: hot-conversation skew handling (operators/skew.py):
     collapse correlation rows into per-(task, bucket) partial rows before
-    the task-ordered window. Exact for gap splits when ``prereduce_s <=
+    the per-task scan. Exact for gap splits when ``prereduce_s <=
     inactivity_timeout``; absolute-age splits quantize to bucket
     boundaries (opting in accepts that).
 
@@ -336,8 +335,8 @@ def run_pipeline(
     guarded = sessionize(correlated_in, cfg)
     if prereduce_s is None and (gated_emit or gated_cancel or gated_req):
         # the gated side effects read the guarded frame besides the session
-        # aggregate: persisting it runs the task exchange, the windows and
-        # the guards once for the job set. Narrow = engine cols +
+        # aggregate: persisting it runs the task exchange and the scan
+        # once for the job set. Narrow = engine cols +
         # pre-evaluated agg inputs only (no text), so the footprint is a
         # small fraction of the input.
         guarded = _persisted(guarded)
@@ -367,7 +366,7 @@ def run_pipeline(
 
     # watermark from the raw input: scan-only (ts column pruned down to
     # the parquet reader). The closed frame is persisted, so the buckets
-    # share one aggregate, one routing window and one watermark scan.
+    # share one aggregate and one watermark scan.
     closed = _persisted(
         close_sessions(aggregate_sessions(guarded, cfg), cfg, watermark_df=transcripts)
     )

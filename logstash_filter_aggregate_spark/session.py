@@ -41,6 +41,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # a table bucketed by the task-id column keeps its bucketing even
+        # where no operator asks for it: the exact scan then reads it
+        # without a task exchange (operators/sessionize.py)
+        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

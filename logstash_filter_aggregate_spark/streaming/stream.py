@@ -602,7 +602,7 @@ def replay_push_previous(
         raise ValueError("cfg must set push_previous_map_as_event=True")
     schema = spark.read.parquet(input_dir).schema
     state_root = f"{base_path}/_pp_state"
-    seg_drop = ["_end_seg", "_gap_seg", "_age_seg", "close_kind"]
+    seg_drop = ["_end_seg", "_gap_seg", "_age_seg", "_is_last", "close_kind"]
 
     def _latest_state(before: int) -> str | None:
         if not os.path.isdir(state_root):

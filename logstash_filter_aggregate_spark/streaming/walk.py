@@ -80,12 +80,13 @@ def prep_rule_arrays(whole, rule_attrs: dict):
 class WalkResult:
     """Plain result bundle (no dataclass import churn in the hot path)."""
 
-    __slots__ = ("code_ran", "sess_id", "sessions", "nevents", "final")
+    __slots__ = ("code_ran", "sess_id", "sessions", "aged", "nevents", "final")
 
-    def __init__(self, code_ran, sess_id, sessions, nevents, final):
+    def __init__(self, code_ran, sess_id, sessions, aged, nevents, final):
         self.code_ran = code_ran    # bool[n]: the codeblock ran for this row
         self.sess_id = sess_id      # int32[n]: session index, -1 where code didn't run
         self.sessions = sessions    # list[(creation, last_ts, kind, close_row)]
+        self.aged = aged            # set: indices of the EXPIRY sessions the age clock closed
         self.nevents = nevents      # int64[#sessions], carried base included
         self.final = final          # (creation, last, nevents, eff_to, eff_in) | None
 
@@ -102,6 +103,7 @@ def walk_scan(
     inactivity: float,
     row_creation: np.ndarray | None = None,
     row_last: np.ndarray | None = None,
+    row_break: np.ndarray | None = None,
 ) -> WalkResult:
     """Run the reference state machine over one sorted task chunk.
 
@@ -115,7 +117,9 @@ def walk_scan(
     gives the map it creates (a resume seed's carried creation, at any
     position), and ``row_last``, the row's last-event time, which the gap
     clock measures from once the row ran the code (a pre-reduced
-    super-row's last event). Both default to ``ts``.
+    super-row's last event). Both default to ``ts``. ``row_break``
+    flags rows whose arrival pops the live map before their guard, like
+    an expiry (push_previous's run breaks); None means no row does.
 
     Semantics reproduced exactly (see ``_reference_scan`` in
     tests/test_timeouts.py and the per-row walk this replaced):
@@ -123,7 +127,9 @@ def walk_scan(
     neither refreshes the gap clock nor runs the codeblock; an
     ``update`` with no live map is a total no-op; overrides are
     last-write-wins where the codeblock runs; ``end_of_task`` /
-    ``timeout=0`` close only where the codeblock runs.
+    ``timeout=0`` close only where the codeblock runs. An expiry whose
+    row crossed the age clock and neither the inactivity clock nor a
+    break is listed in ``aged``.
     """
     n = len(ts)
     if row_creation is None:
@@ -133,6 +139,7 @@ def walk_scan(
     code_ran = np.zeros(n, dtype=bool)
     sess_id = np.full(n, -1, dtype=np.int32)
     sessions: list[tuple] = []
+    aged: set = set()
     final = None
 
     if n == 0:
@@ -142,7 +149,7 @@ def walk_scan(
             sessions.append((float(c0), float(l0), OPEN, -1))
             final = (float(c0), float(l0), int(nv0), float(et0), float(ei0))
             nev = np.asarray([int(nv0)], dtype="int64")
-        return WalkResult(code_ran, sess_id, sessions, nev, final)
+        return WalkResult(code_ran, sess_id, sessions, aged, nev, final)
 
     # the all-create_or_update shape skips the can-create index and the
     # running max: every row can create, and sorted ts is its own max
@@ -175,6 +182,7 @@ def walk_scan(
     close_cand = (end_flag | ct0) & ~is_create
     close_rows = np.flatnonzero(close_cand)
     cl_ss, n_cl = close_rows.searchsorted, len(close_rows)
+    brk_rows = np.flatnonzero(row_break) if row_break is not None else None
 
     ts_ss = ts.searchsorted
     # override EVENTS (non-create rows carrying a live override value):
@@ -306,7 +314,12 @@ def walk_scan(
                 gi = gi_dyn
             if gi < g_n:
                 g = int(g_rows[gi])
-            d = a if a < g else g              # expiry row
+            b = n
+            if brk_rows is not None:
+                bi = brk_rows.searchsorted(p + 1)
+                if bi < len(brk_rows):
+                    b = int(brk_rows[bi])
+            d = min(a, g, b)                   # expiry row
             evt = min(d, c, o, n)
             mark_span(p + 1, evt)
             if evt >= n:
@@ -321,6 +334,8 @@ def walk_scan(
                 # d itself may immediately create the next map
                 last_ts = max(last_floor, float(run[d - 1])) if d > 0 else last_floor
                 sessions[si] = (creation, last_ts, EXPIRY, d)
+                if a < g and a < b:
+                    aged.add(si)
                 s = next_cc(d)
                 closed = True
                 break
@@ -362,4 +377,4 @@ def walk_scan(
         counts[0] += int(init[2])
     if final is not None:
         final = (final[0], final[1], int(counts[n_sess - 1]), final[2], final[3])
-    return WalkResult(code_ran, sess_id, sessions, counts, final)
+    return WalkResult(code_ran, sess_id, sessions, aged, counts, final)

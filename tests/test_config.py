@@ -69,26 +69,26 @@ def test_inactivity_defaults_to_timeout():
 
 
 def test_guarded_window_mode_warns_once_at_config_time():
-    # the one known default-mode divergence (STATUS.md): guarded rules +
-    # event-time window sessionization -> disclosed via
-    # GuardedWindowModeWarning naming the duplicate-create gap-refresh
-    # corner and pointing at exact_age_cap=True
+    # every batch run replays the reference exactly (the per-task scan),
+    # so no config warns about a divergence: guarded rules build quietly
+    # in both time modes. The one config-time warning left is the
+    # deprecation of the no-op exact_age_cap flag, raised once per build.
     import warnings
 
-    from logstash_filter_aggregate_spark.config import GuardedWindowModeWarning
+    import logstash_filter_aggregate_spark.config as config
 
-    with pytest.warns(GuardedWindowModeWarning, match="exact_age_cap"):
-        PipelineConfig(task_id="%{x}", rules=(_rule(map_action="update"),))
-
-    # no warning when the config cannot diverge: exact replay mode,
-    # ungated rules, or processing-time mode (no gap splits at all)
+    assert not hasattr(config, "GuardedWindowModeWarning")
     with warnings.catch_warnings():
-        warnings.simplefilter("error", GuardedWindowModeWarning)
-        PipelineConfig(
-            task_id="%{x}", rules=(_rule(map_action="update"),), exact_age_cap=True
-        )
+        warnings.simplefilter("error")
+        PipelineConfig(task_id="%{x}", rules=(_rule(map_action="update"),))
         PipelineConfig(task_id="%{x}", rules=(_rule(),))
         PipelineConfig(
             task_id="%{x}", rules=(_rule(map_action="update"),),
             timeout_timestamp_field=None,
         )
+    with pytest.warns(DeprecationWarning, match="exact_age_cap is a no-op") as rec:
+        cfg = PipelineConfig(
+            task_id="%{x}", rules=(_rule(map_action="update"),), exact_age_cap=True
+        )
+    assert len(rec) == 1 and rec[0].filename == __file__
+    assert cfg.exact_age_cap

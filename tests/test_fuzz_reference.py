@@ -673,17 +673,12 @@ def test_fuzz_streaming_passthrough_matches_simulator(spark, tmp_path):
     # micro-batches split at a ts boundary (carried state cell crosses
     # the restart). Every row of every stream is accounted for: kept
     # rows carry exactly the expected tags, cancelled rows are absent.
-    import warnings
-
-    from logstash_filter_aggregate_spark.config import GuardedWindowModeWarning
     from logstash_filter_aggregate_spark.streaming.stream import streaming_passthrough
 
     rng = random.Random(20260823)
     schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     for shape, (cfg_kw, sim_rules, kinds) in _pt_shapes().items():
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", GuardedWindowModeWarning)
-            cfg = PipelineConfig(task_id="%{taskid}", **cfg_kw)
+        cfg = PipelineConfig(task_id="%{taskid}", **cfg_kw)
         streams = {
             f"sp{shape}{i:02d}": _scenario_rows(rng, kinds, n_max=25) for i in range(10)
         }
@@ -752,19 +747,14 @@ def test_fuzz_streaming_passthrough_matches_simulator(spark, tmp_path):
 
 
 def test_streaming_passthrough_window_corner_matches_reference(spark, tmp_path):
-    # PIN the documented asymmetry (STATUS.md "Known divergences"): on the
-    # duplicate-create gap-refresh corner the STREAM (and batch
-    # exact_age_cap) match the reference where the batch window default
-    # approximates. Scenario: create at t=0, duplicate create at t=90
+    # The duplicate-create gap-refresh corner, on which the former window
+    # tier diverged: batch (default config) and stream both match the
+    # reference. Scenario: create at t=0, duplicate create at t=90
     # (reference: no-op, clock NOT refreshed), cancel-rule row at t=150.
     # Reference: gap 150s > 120 -> map expired on arrival -> cancel code
-    # never runs -> row KEPT. Window default: the pre-guard lag counts
-    # the duplicate create, gap 60s -> map alive -> row CANCELLED.
-    import warnings
-
+    # never runs -> row KEPT.
     from pyspark.sql import functions as F  # noqa: F401
 
-    from logstash_filter_aggregate_spark.config import GuardedWindowModeWarning
     from logstash_filter_aggregate_spark.plans.pipeline import run_pipeline
     from logstash_filter_aggregate_spark.streaming.stream import streaming_passthrough
     from tests.conftest import make_transcript
@@ -789,34 +779,31 @@ def test_streaming_passthrough_window_corner_matches_reference(spark, tmp_path):
     make_transcript(spark, rows).write.parquet(p)
     t = spark.read.parquet(p)
 
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", GuardedWindowModeWarning)
-        cfg_window = PipelineConfig(task_id="%{taskid}", rules=rules,
-                                    timeout=600.0, inactivity_timeout=120.0)
-    cfg_exact = PipelineConfig(task_id="%{taskid}", rules=rules,
-                               timeout=600.0, inactivity_timeout=120.0,
-                               exact_age_cap=True)
+    cfg = PipelineConfig(task_id="%{taskid}", rules=rules,
+                         timeout=600.0, inactivity_timeout=120.0)
 
-    # batch exact mode: reference-exact -> all three rows kept
-    exact_idx = sorted(
-        r.turn_idx for r in run_pipeline(spark, t, cfg_exact).passthrough.collect()
+    # the batch default is reference-exact -> all three rows kept
+    batch_idx = sorted(
+        r.turn_idx for r in run_pipeline(spark, t, cfg).passthrough.collect()
     )
-    assert exact_idx == [0, 1, 2]
-
-    # batch window default: the disclosed approximation cancels row 2
-    window_idx = sorted(
-        r.turn_idx for r in run_pipeline(spark, t, cfg_window).passthrough.collect()
+    assert batch_idx == [0, 1, 2]
+    # in processing time no clock runs out during the replay: the map is
+    # still live at the click, whose cancel code runs and drops it
+    proc = PipelineConfig(task_id="%{taskid}", rules=rules, timeout=600.0,
+                          inactivity_timeout=120.0, timeout_timestamp_field=None)
+    proc_idx = sorted(
+        r.turn_idx for r in run_pipeline(spark, t, proc).passthrough.collect()
     )
-    assert window_idx == [0, 1]
+    assert proc_idx == [0, 1]
 
-    # the STREAM sides with the reference, not the batch default
+    # the stream matches the reference too
     src = (
         spark.readStream.schema(t.schema).parquet(p)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
     name = "st_pt_window_corner"
     q = (
-        streaming_passthrough(src, cfg_window)
+        streaming_passthrough(src, cfg)
         .writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(availableNow=True).start()
     )

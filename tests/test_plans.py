@@ -41,39 +41,47 @@ def transcripts_path(spark, tmp_path_factory):
     "cfg_fn",
     [
         lambda: example5_config(timeout=600.0, inactivity_timeout=300.0),
-        lambda: example1_config(timeout=3600.0),  # guards add more windows — same key
+        lambda: example1_config(timeout=3600.0),  # gated: the scanned frame is persisted
     ],
 )
 def test_correlation_stage_single_task_exchange(spark, transcripts_path, cfg_fn):
-    # the whole sessionize/guard/aggregate stage must share ONE hash
-    # exchange on the task key: every window and the session groupBy are
-    # co-partitioned (the claim BENCH/BASELINE.md's scaling rests on).
-    # Gated configs persist the guarded frame: its windows and guards
-    # share the one task exchange, pinned on its plan, and the session
-    # groupBy over the cache re-exchanges the narrow rows (PLANS.md).
-    from logstash_filter_aggregate_spark.plans.pipeline import _LIVE_CACHES
-
+    # the event stream crosses ONE exchange, on the task key alone, ahead
+    # of the exact scan (the claim BENCH/BASELINE.md's scaling rests on).
+    # The scan's output carries no known partitioning, so the session
+    # groupBy exchanges again on the full session key: that exchange must
+    # sit directly on the aggregate's partial stage, so it moves one row
+    # per map per partition, never event rows. Gated configs persist the
+    # scanned frame; the closed frame's plan prints it, so the walk below
+    # covers it too.
     t = spark.read.parquet(transcripts_path)
     out = run_pipeline(spark, t, cfg_fn())
-    guarded = [df for df in _LIVE_CACHES if "_included" in df.columns]
-    plan = _plan(guarded[0] if guarded else out.sessions)
-    n_task_exchanges = plan.count("Exchange hashpartitioning(_task_id")
-    assert n_task_exchanges == 1, plan
+    lines = _plan(out.sessions).splitlines()
+    event_rows, partials = 0, 0
+    for i, ln in enumerate(lines):
+        if "Exchange hashpartitioning(_task_id" not in ln:
+            continue
+        if re.search(r"Exchange hashpartitioning\(_task_id#\d+, \d+\)", ln):
+            event_rows += 1
+        else:
+            assert "Aggregate" in lines[i + 1] and "partial_" in lines[i + 1], "\n".join(lines)
+            partials += 1
+    assert (event_rows, partials) == (1, 1), "\n".join(lines)
 
 
 def test_exact_scan_is_one_arrow_call_per_partition(spark, transcripts_path):
-    # exact mode scans each partition in one mapInArrow call, not one
-    # pandas call per task: the JVM clusters the rows by task (one hash
+    # the scan runs each partition in one mapInArrow call, not one pandas
+    # call per task: the JVM clusters the rows by task (one hash
     # exchange) and sorts them in the scan's order, nulls last
     from logstash_filter_aggregate_spark.plans.pipeline import _LIVE_CACHES
 
     t = spark.read.parquet(transcripts_path)
     for cfg in (
-        example5_config(timeout=600.0, inactivity_timeout=300.0, exact_age_cap=True),
-        example1_config(timeout=3600.0, exact_age_cap=True),
+        example5_config(timeout=600.0, inactivity_timeout=300.0),
+        example1_config(timeout=3600.0),
     ):
         plan = _plan(run_pipeline(spark, t, cfg).sessions)
         assert "FlatMapGroupsInPandas" not in plan, plan
+        assert "Window" not in plan, plan
         assert plan.count("MapInArrow") == 1, plan
         below = plan.split("MapInArrow", 1)[1]
         assert below.count("Exchange hashpartitioning(_task_id") == 1, plan
@@ -146,10 +154,12 @@ def test_guard_gated_passthrough_plan_shapes(spark, transcripts_path):
         ),
         timeout=3600.0,
     )
-    # cancellation joins per-row inclusion (whatever join the planner
-    # picks), but both sides still read the one checkpointed stream
+    # cancellation joins per-row inclusion from the scan (whatever join
+    # the planner picks), but both sides still read the one checkpointed
+    # stream
     cancel_plan = _plan(run_pipeline(spark, t, cancel_cfg).passthrough)
-    assert "Join" in cancel_plan and "Window" in cancel_plan, cancel_plan
+    assert "Join" in cancel_plan and "MapInArrow" in cancel_plan, cancel_plan
+    assert "Window" not in cancel_plan, cancel_plan
     assert "Scan parquet" not in cancel_plan, cancel_plan
 
     # ungated configs plan no join and no window at all on the passthrough

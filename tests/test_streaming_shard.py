@@ -224,9 +224,7 @@ def test_shard_passthrough_fuzz_carried_state(spark, tmp_path):
     # micro-batches (cells cross the restart inside multiplexed state
     # rows), verified against the independent per-row reference simulator
     import random
-    import warnings
 
-    from logstash_filter_aggregate_spark.config import GuardedWindowModeWarning
     from logstash_filter_aggregate_spark.streaming.stream import streaming_passthrough
     from tests.test_fuzz_reference import (
         _LINES,
@@ -238,9 +236,7 @@ def test_shard_passthrough_fuzz_carried_state(spark, tmp_path):
     rng = random.Random(20260824)
     schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     shape, (cfg_kw, sim_rules, kinds) = next(iter(_pt_shapes().items()))
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", GuardedWindowModeWarning)
-        cfg = PipelineConfig(task_id="%{taskid}", **cfg_kw)
+    cfg = PipelineConfig(task_id="%{taskid}", **cfg_kw)
     streams = {f"sh{i:02d}": _scenario_rows(rng, kinds, n_max=25) for i in range(8)}
     data, wm = [], 0.0
     for tid, rows in streams.items():
@@ -352,13 +348,7 @@ def _stream_src(spark, path):
 
 
 def _gated_passthrough_cfg():
-    import warnings
-
-    from logstash_filter_aggregate_spark.config import GuardedWindowModeWarning
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", GuardedWindowModeWarning)
-        return example1_config(timeout=3600.0)
+    return example1_config(timeout=3600.0)
 
 
 def test_shard_count_must_be_a_positive_int(spark, tmp_path):

@@ -16,7 +16,7 @@ import datetime as dt
 
 def _reference_scan(
     ts, close, action, cust_to, cust_in, seed_creation, age,
-    timeout: float, inactivity: float,
+    timeout: float, inactivity: float, gap=None,
 ):
     """Independent per-row replay of the reference hot path
     (aggregate.rb:179-246) — the fuzz ORACLE the exact tier's kernel
@@ -32,10 +32,12 @@ def _reference_scan(
     tests/test_streaming_walk.py does. Resume seeds: a creating row with
     finite seed_creation ages from that carried ts (at ANY position —
     overlapping resumes inject several per task). Fills ``age``
-    (expiries since the last close) and returns ``(end_seg, included)``:
-    the closes strictly before each row and whether its codeblock ran."""
+    (expiries since the last close) and, when given, ``gap`` (those of
+    them where the inactivity clock ran out), and returns ``(end_seg,
+    included)``: the closes strictly before each row and whether its
+    codeblock ran."""
     n = len(ts)
-    cur = 0
+    cur = cur_gap = 0
     has_map = False
     creation = last = 0.0
     eff_to, eff_in = timeout, inactivity
@@ -48,8 +50,11 @@ def _reference_scan(
         # map dies even if this row then fails its map_action guard
         if has_map and ((ts[i] - creation > eff_to) or (ts[i] - last > eff_in)):
             has_map = False
+            cur_gap += ts[i] - last > eff_in
             eff_to, eff_in = timeout, inactivity
             cur += 1
+        if gap is not None:
+            gap[i] = cur_gap
         if not has_map:
             if action[i] == "update":
                 # no-op: no map created, no clock started; labeled with
@@ -80,7 +85,7 @@ def _reference_scan(
             # end_of_task / timeout=0: the map is deleted after its code ran
             has_map = False
             eff_to, eff_in = timeout, inactivity
-            cur = 0
+            cur = cur_gap = 0
             blk += 1
     return end_seg, included
 
@@ -99,10 +104,10 @@ def _action_flags(action):
     return (action == "create").astype(bool), (action == "update").astype(bool)
 
 
-def _scan_labels(ts, close, flags, cust_to, cust_in, seed, timeout, inactivity):
+def _scan_split_labels(ts, close, flags, cust_to, cust_in, seed, timeout, inactivity):
     """The exact tier's kernel on one task, as ``_scan_tasks`` runs it:
     ``walk_scan`` plus the label pass, over ``_action_flags`` ``flags``.
-    Returns ``(end_seg, age, included)``."""
+    Returns ``(end_seg, gap, age, included)``."""
     import numpy as np
 
     from logstash_filter_aggregate_spark.operators.sessionize import _label_breaks, _session_labels
@@ -111,25 +116,36 @@ def _scan_labels(ts, close, flags, cust_to, cust_in, seed, timeout, inactivity):
     n = len(ts)
     creation = None if seed is None else np.where(np.isnan(seed), ts, seed)
     res = walk_scan(ts, *flags, close, cust_to, cust_in, None, timeout, inactivity, creation)
-    breaks = _label_breaks(res.sessions, 0, n)
-    _, end_seg, age = _session_labels(np.zeros(1, dtype=np.int64), breaks, n)
-    return end_seg, age, res.code_ran
+    breaks, _ = _label_breaks(res, 0, n)
+    _, end_seg, gap, age = _session_labels(np.zeros(1, dtype=np.int64), breaks, n)
+    return end_seg, gap, age, res.code_ran
+
+
+def _scan_labels(ts, close, flags, cust_to, cust_in, seed, timeout, inactivity):
+    """:func:`_scan_split_labels` with the two expiry counts summed:
+    ``(end_seg, expiries since the last close, included)``."""
+    end_seg, gap, age, included = _scan_split_labels(
+        ts, close, flags, cust_to, cust_in, seed, timeout, inactivity
+    )
+    return end_seg, gap + age, included
 
 
 def _assert_scan_matches_reference(ts, close, action, cust_to, cust_in, seed, timeout, inactivity, ctx=()):
     """The kernel's labels and inclusion equal the per-row replay's."""
     import numpy as np
 
-    end_seg, age, included = _scan_labels(
+    end_seg, gap, age, included = _scan_split_labels(
         ts, close, _action_flags(action), cust_to, cust_in, seed, timeout, inactivity
     )
     ref_age = np.zeros(len(ts), dtype="int32")
+    ref_gap = np.zeros(len(ts), dtype="int32")
     ref_end, ref_incl = _reference_scan(
-        ts, close, action, cust_to, cust_in, seed, ref_age, timeout, inactivity
+        ts, close, action, cust_to, cust_in, seed, ref_age, timeout, inactivity, gap=ref_gap
     )
     assert np.array_equal(included, ref_incl), (*ctx, np.flatnonzero(included != np.asarray(ref_incl))[:5])
     assert np.array_equal(end_seg, ref_end), (*ctx, np.flatnonzero(end_seg != np.asarray(ref_end))[:5])
-    assert np.array_equal(age, ref_age), (*ctx, np.flatnonzero(age != ref_age)[:5])
+    assert np.array_equal(gap, ref_gap), (*ctx, np.flatnonzero(gap != ref_gap)[:5])
+    assert np.array_equal(gap + age, ref_age), (*ctx, np.flatnonzero(gap + age != ref_age)[:5])
 
 
 def test_event_time_expiry_and_timestamp_inheritance(spark):
@@ -794,12 +810,13 @@ def _assert_labels_match_reference(labels, cfg):
         close = np.array([r[5] == 1 or r[6] == 0.0 for r in rs])
         action = np.array([r[4] for r in rs], dtype=object)
         age = np.zeros(n, dtype="int32")
+        gap = np.zeros(n, dtype="int32")
         end_seg, included = _reference_scan(
             ts, close, action, cust_to, cust_in, seed, age,
-            float(cfg.timeout), float(cfg.effective_inactivity_timeout),
+            float(cfg.timeout), float(cfg.effective_inactivity_timeout), gap=gap,
         )
         got = [(r[9], r[10], r[11], r[12], r[13]) for r in rs]
-        want = [(i + 1, end_seg[i], 0, int(age[i]), included[i]) for i in range(n)]
+        want = [(i + 1, end_seg[i], int(gap[i]), int(age[i] - gap[i]), included[i]) for i in range(n)]
         assert got == want, (tid, got, want)
 
 
@@ -880,3 +897,106 @@ def test_exact_age_cap_rejects_non_timestamp_ts(spark):
     df = spark.createDataFrame(rows, _CLASSIFIED_SCHEMA.replace(", ts timestamp,", ", ts string,"))
     with pytest.raises(TypeError, match="timestamp 'ts' column, got string"):
         sessionize(df, cfg)
+
+
+def test_scan_labels_name_the_clock_and_the_last_map(spark):
+    # an inactivity expiry bumps _gap_seg and an age expiry bumps
+    # _age_seg (a row that crosses both counts as a gap); _is_last marks
+    # the rows of each task's last map only — here the end-closed map,
+    # not the trailing segment of no-op updates after it
+    from logstash_filter_aggregate_spark.operators.sessionize import sessionize
+
+    cfg = PipelineConfig(
+        task_id="%{taskid}", rules=(CorrelationRule("r", "true"),),
+        timeout=100.0, inactivity_timeout=30.0,
+    )
+    cou, upd = "create_or_update", "update"
+    t_rows = [  # (offset s, action, end flag)
+        (0, cou, 0),     # creates map A
+        (40, cou, 0),    # gap 40 > 30: A expires, map B
+        (60, cou, 0), (80, cou, 0), (100, cou, 0), (120, cou, 0),
+        (141, cou, 0),   # age 101 > 100 (gap 21): B expires, map C
+        (150, upd, 1),   # ends C
+        (155, upd, 0), (160, upd, 0),  # no map: no-ops
+    ]
+    rows = [
+        ("c", i, T0 + dt.timedelta(seconds=off), "t", "r", end, act, None, None, None)
+        for i, (off, act, end) in enumerate(t_rows)
+    ] + [("c", 100, T0, "u", "r", 0, cou, None, None, None)]
+    got = sessionize(spark.createDataFrame(rows, _CLASSIFIED_SCHEMA), cfg).select(
+        "_task_id", "turn_idx", "_end_seg", "_gap_seg", "_age_seg", "_included", "_is_last",
+    ).orderBy("_task_id", "turn_idx").collect()
+    labels = [tuple(r)[2:] for r in got if r._task_id == "t"]
+    assert labels == [
+        (0, 0, 0, True, False),
+        *[(0, 1, 0, True, False)] * 5,
+        (0, 1, 1, True, True), (0, 1, 1, True, True),
+        (1, 0, 0, False, False), (1, 0, 0, False, False),
+    ]
+    assert [tuple(r)[2:] for r in got if r._task_id == "u"] == [(0, 0, 0, True, True)]
+
+
+def test_custom_timeout_override_expires_maps_on_arrival_by_default(spark):
+    # a per-map custom_timeout > 0 is the map's own age clock: the next
+    # event of the task expires the map when that clock ran out, before
+    # its codeblock (aggregate.rb:194-199,420-445). The default-config
+    # buckets equal a per-row replay of the reference.
+    import random
+
+    import numpy as np
+
+    from tests.test_streaming_walk import simulate_walk
+
+    cfg = PipelineConfig(
+        task_id="%{taskid}",
+        rules=(
+            CorrelationRule("err", "logger = 'ERR'", custom_timeout="0.0"),
+            CorrelationRule("sign", "logger = 'SIGN'", custom_timeout="60.0"),
+            CorrelationRule("sql", "logger = 'SQL'"),
+        ),
+        timeout=600.0, inactivity_timeout=300.0,
+        push_map_as_event_on_timeout=True,
+    )
+    rng = random.Random(20261018)
+    rows, by_task = [], {}
+    for k in range(12):
+        tid, off = f"t{k}", 0
+        for i in range(rng.randint(2, 9)):
+            off += rng.choice([5, 30, 70, 150, 400])
+            kind = rng.choice(["ERR", "SIGN", "SQL", "SQL"])
+            rows.append((tid, i, f"INFO - {tid} - {kind} - x", off))
+            by_task.setdefault(tid, []).append((off, kind))
+    wm = max(off for _, _, _, off in rows)
+
+    want = []
+    for tid, evs in by_task.items():
+        ts = np.array([float(o) for o, _ in evs])
+        ct = np.array([0.0 if k == "ERR" else 60.0 if k == "SIGN" else np.nan for _, k in evs])
+        n = len(evs)
+        _, _, sessions, nevents, final = simulate_walk(
+            ts, np.full(n, "create_or_update", dtype=object), np.zeros(n, dtype=bool),
+            ct, np.full(n, np.nan), None, cfg.timeout, cfg.effective_inactivity_timeout,
+        )
+        for (creation, last, kind, _), nev in zip(sessions, nevents):
+            if kind == "ct0":
+                bucket = "inline"
+            elif kind == "expiry":
+                bucket = "timeout"
+            else:
+                _, _, _, eff_to, eff_in = final
+                expired = wm - creation > eff_to or wm - last > eff_in
+                bucket = "timeout" if expired else "open"
+            want.append((bucket, tid, creation, last, nev))
+
+    out = run_pipeline(spark, make_transcript(spark, rows), cfg)
+
+    def offsets(df, bucket):
+        return [
+            (bucket, r.task_id, (r.creation_ts - T0).total_seconds(),
+             (r.lastevent_ts - T0).total_seconds(), r.nevents)
+            for r in df.collect()
+        ]
+
+    got = offsets(out.inline, "inline") + offsets(out.timeout, "timeout") + offsets(out.open, "open")
+    assert sorted(got) == sorted(want)
+    assert any(b == "timeout" for b, *_ in want)  # the override expired maps mid-run

@@ -60,7 +60,7 @@ def main() -> None:
         "push_previous_exact": lambda: _o16_push_previous_interleaved(spark, SF_DIR),
         "exact_age_hot_task": lambda: run_pipeline(
             spark, hot1m,
-            example3_config(timeout=600.0, inactivity_timeout=600.0, exact_age_cap=True),
+            example3_config(timeout=600.0, inactivity_timeout=600.0),
         ).sessions,
         "dedup_minhash": lambda: dedup.minhash_lsh_candidates(docs, k=3, num_hashes=16, bands=8),
         "dedup_exact": lambda: dedup.exact_dedup(docs),
