@@ -285,32 +285,10 @@ def compile_grok(
     regex = _GROK_REF.sub(_sub, pattern)
     if anchored:
         regex = f"^{regex}$"
-    # Group indexes: count '(' that open capturing groups, in order,
-    # exactly as the Java engine will — skipping escaped \( and ( inside
-    # character classes, and (?: (?= (?! (?<= (?<! non-capturing opens.
-    group_index: dict[str, int] = {}
-    idx = 0
-    i, n, in_class = 0, len(regex), False
-    while i < n:
-        c = regex[i]
-        if c == "\\":
-            i += 2
-            continue
-        if in_class:
-            if c == "]":
-                in_class = False
-        elif c == "[":
-            in_class = True
-        elif c == "(":
-            rest = regex[i + 1 : i + 4]
-            named = re.match(r"\?<(\w+)>", regex[i + 1 :])
-            if named:
-                idx += 1
-                group_index[alias[named.group(1)]] = idx
-            elif not rest.startswith("?"):
-                idx += 1  # plain user-written capturing group
-            # (?:…) (?=…) (?!…) (?<=…) (?<!…) open no group
-        i += 1
+    # group indexes as the Java engine numbers them: the $N
+    # back-references and the extract fallback address groups by number
+    _, named = _group_indices(regex)
+    group_index = {alias[g]: named[g] for g in alias}
     return CompiledGrok(
         name=name, regex=regex, captures=tuple(captures), types=types,
         group_index=group_index, alias=alias, anchored=anchored,
@@ -334,9 +312,9 @@ def _cast_sql(expr: str, dtype: T.DataType) -> str:
 
 def _group_indices(regex: str) -> tuple[int, dict[str, int]]:
     """Total capturing-group count and named-group -> 1-based index for a
-    regex, counted exactly as the Java engine numbers them (same scanner
-    as compile_grok: skips escapes, character classes, and (?: (?= (?!
-    (?<= (?<! non-capturing opens)."""
+    regex, counted exactly as the Java engine numbers them: skips escapes,
+    ``(`` inside character classes, and (?: (?= (?! (?<= (?<!
+    non-capturing opens."""
     named: dict[str, int] = {}
     idx = 0
     i, n, in_class = 0, len(regex), False
@@ -575,16 +553,8 @@ def apply_grok_jvm(df: DataFrame, text_col: str, groks: list[CompiledGrok]) -> D
     df = df.select("*", *match_flags)
     df = df.select("*", *winner_flags, *arr_cols)
 
-    all_caps: dict[str, T.DataType] = {}
-    for g in groks:
-        for c in g.captures:
-            prev = all_caps.get(c)
-            if prev is not None and prev != g.types[c]:
-                raise ValueError(f"capture {c!r} has conflicting types across patterns")
-            all_caps.setdefault(c, g.types[c])
-
     cap_cols: list[Column] = []
-    for cap, dtype in all_caps.items():
+    for cap, dtype in _all_caps_typed(groks).items():
         expr: Column = F.lit(None).cast(dtype)
         # reversed: earlier patterns win (grok break_on_match)
         for g in reversed(groks):

@@ -71,13 +71,15 @@ def classify(parsed: DataFrame, cfg: PipelineConfig) -> DataFrame:
     check_literals(parsed)
     matches = [f"({r.match})" for r in cfg.rules]
 
-    def first_match(value, otherwise: str, only=lambda r: True) -> str:
+    def first_match(value, otherwise: str) -> str:
         # first-match-wins over the rules, in filter-block order
         expr = otherwise
         for m, r in reversed(list(zip(matches, cfg.rules))):
-            if only(r):
-                expr = case([(m, value(r))], expr)
+            expr = case([(m, value(r))], expr)
         return expr
+
+    def override(expr: str | None) -> str:
+        return "CAST(NULL AS DOUBLE)" if expr is None else f"CAST(({expr}) AS DOUBLE)"
 
     rule_id = first_match(lambda r: quote(r.rule_id), "CAST(NULL AS STRING)")
     matched = f"{rule_id} IS NOT NULL"
@@ -94,16 +96,10 @@ def classify(parsed: DataFrame, cfg: PipelineConfig) -> DataFrame:
                 [(matched, first_match(lambda r: "true" if r.cancel else "false", "false"))],
                 "false",
             ),
-            # override columns take the first matching rule that SETS one
-            "_custom_timeout": first_match(
-                lambda r: f"CAST(({r.custom_timeout}) AS DOUBLE)",
-                "CAST(NULL AS DOUBLE)",
-                only=lambda r: r.custom_timeout is not None,
-            ),
+            # the overrides of the rule _rule_id names, NULL where it sets none
+            "_custom_timeout": first_match(lambda r: override(r.custom_timeout), "CAST(NULL AS DOUBLE)"),
             "_custom_inactivity": first_match(
-                lambda r: f"CAST(({r.custom_inactivity_timeout}) AS DOUBLE)",
-                "CAST(NULL AS DOUBLE)",
-                only=lambda r: r.custom_inactivity_timeout is not None,
+                lambda r: override(r.custom_inactivity_timeout), "CAST(NULL AS DOUBLE)"
             ),
         },
     )

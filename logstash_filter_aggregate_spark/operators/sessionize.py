@@ -31,7 +31,7 @@ from pyspark.sql.types import (
 
 from logstash_filter_aggregate_spark.config import ORDER_COL, TASK_ID_COL, PipelineConfig
 from logstash_filter_aggregate_spark.sqltext import any_of, double, with_columns
-from logstash_filter_aggregate_spark.streaming.walk import EXPIRY, OPEN, walk_scan
+from logstash_filter_aggregate_spark.streaming.walk import EXPIRY, OPEN, walk_inputs, walk_scan
 
 logger = logging.getLogger(__name__)
 
@@ -248,30 +248,17 @@ def _scan_tasks(pending: list, clocks: tuple[float, float] | None):
     input columns pass through untouched, except the global index
     ``_gidx``, which the scan consumes as run breaks."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     tbl = pa.Table.from_batches([b for b, _ in pending])
     n = tbl.num_rows
     starts = np.flatnonzero(np.concatenate([s for _, s in pending]))
     bounds = np.append(starts, n)
 
-    def floats(name):
-        return pc.fill_null(tbl.column(name), np.nan).to_numpy()
-
-    def flags(mask):
-        return pc.fill_null(mask, False).to_numpy(zero_copy_only=False)
-
-    action = tbl.column("_action")
-    is_create, is_update = flags(pc.equal(action, "create")), flags(pc.equal(action, "update"))
-    end_flag = flags(pc.equal(tbl.column("_end_flag"), 1))
-    cust_to, cust_in = floats("_custom_timeout"), floats("_custom_inactivity")
+    is_create, is_update, end_flag, cust_to, cust_in = walk_inputs(tbl.column, processing=clocks is None)
     if clocks is None:
-        # processing time: no clock runs out, so only a timeout = 0
-        # override (an eviction, not a clock) acts; every row reads ts 0
+        # processing time: no clock runs out; every row reads ts 0
         timeout = inactivity = math.inf
         ts = np.zeros(n)
-        cust_to = np.where(cust_to == 0.0, 0.0, np.nan)
-        cust_in = np.full(n, np.nan)
         partial = [None, None]
     else:
         timeout, inactivity = clocks

@@ -24,7 +24,6 @@ def run_multi(
     configs: list[PipelineConfig],
     groks=None,
     parse_backend: str = "jvm",
-    share_parse: bool = True,
     **kwargs,
 ) -> dict[str, PipelineOutputs]:
     """One outputs bundle per pattern_id. Same task-id value under two
@@ -32,13 +31,12 @@ def run_multi(
 
     The grok parse — the most expensive stage — is built ONCE and shared
     by every pattern's pipeline (the reference also parses upstream of
-    all its aggregate filters): with ``share_parse=True`` (the default)
-    and more than one pattern, the parsed frame is lazily
-    ``localCheckpoint``-ed, so M patterns' consuming actions MATERIALIZE
-    the parse once instead of re-executing the regex subtree M times
-    (the lineage-truncation tradeoff is PLANS.md's). Each pattern then
-    takes it ``pre_parsed`` and checkpoints nothing again. Otherwise each
-    pattern runs its own :func:`run_pipeline` on ``transcripts``.
+    all its aggregate filters): with more than one pattern, the parsed
+    frame is lazily ``localCheckpoint``-ed, so M patterns' consuming
+    actions MATERIALIZE the parse once instead of re-executing the regex
+    subtree M times (the lineage-truncation tradeoff is PLANS.md's). Each
+    pattern then takes it ``pre_parsed`` and checkpoints nothing again. A
+    single pattern runs :func:`run_pipeline` on ``transcripts``.
 
     Each ``run_pipeline`` releases the frames the previous one persisted,
     so only the last pattern's buckets read persisted frames; the others
@@ -46,7 +44,7 @@ def run_multi(
     from logstash_filter_aggregate_spark.plans.pipeline import parse
 
     validate_configs(configs)
-    shared = share_parse and len(configs) > 1
+    shared = len(configs) > 1
     if shared:
         transcripts = parse(transcripts, groks, backend=parse_backend).localCheckpoint(eager=False)
     return {

@@ -3,7 +3,7 @@
 ``applyInPandasWithState`` pays a fixed per-key-per-micro-batch cost:
 one Python function invocation, one Arrow group, one state-store row
 visit, and the pandas set-up of each call (Arrow→pandas framing, rule
-array prep, a sort, a groupby, an output frame). At transcript
+input arrays, a sort, a groupby, an output frame). At transcript
 cardinalities that floor IS the runtime — tasks carry ~3 rows per
 micro-batch, so keying state by task id spends ~3 ms of framework per
 task per batch around a ~15 µs state walk. No amount of per-key
@@ -14,20 +14,33 @@ Every streaming query therefore keys its state by
 task's cell inside ONE state row per shard (a dict
 ``task_id -> [creation, last, nevents, map, eff_to, eff_in, wall_cap,
 wall_last]``, stored through the compact binary cell-set codec below).
-Each shard invocation sorts its chunk by ``(task, ts)``, preps the rule
-arrays once, and runs the numpy session-hop (:func:`walk.walk_scan`)
-per task slice. Sessions are numbered globally across the chunk's tasks
-so the aggregation dictionaries build in one set of vectorized passes
+
+One shard step (:func:`_shard_step`) runs every invocation of both
+stateful functions. It loads the shard's cells, sorts the chunk by
+``(task, ts)``, builds the walk's rule inputs once from the columns
+``classify`` gave the rows (:func:`walk.walk_inputs`, as the batch scan
+does), runs the numpy session-hop (:func:`walk.walk_scan`) per task
+slice, evicts the cells that are due and saves the rest. The functions
+differ only in the output they build from the walk:
+:func:`make_correlate_shard_fn` the closed maps, timeout pushes and emit
+rows, :func:`make_passthrough_shard_fn` the input rows, tagged or
+cancelled. Sessions are numbered globally across the chunk's tasks so
+the aggregation dictionaries build in one set of vectorized passes
 (:func:`stream._session_agg_maps`).
 
-Timers and eviction: each shard keeps ONE timer at the min cell expiry,
-and every invocation (data or timer) evicts cells whose expiry is
-behind the current watermark — emitting their timeout rows where the
-config pushes them. That is the condition a per-task event-time timer
-would fire on, so a finite replay (availableNow + heartbeat flush)
-produces the rows a task-keyed state would; only the micro-batch a
-timeout lands in can be later (a shard's expired cell waits for the
-shard's next invocation).
+Clocks, timers and eviction: one :class:`_Clock` gives each cell a
+deadline. In event time (the default) it is the map's own age or
+inactivity expiry, due once the watermark reaches it, the condition a
+per-task event-time timer would fire on; the step evicts after the
+walk and skips the tasks the walk touched. In processing time it is the
+map's wall-clock age cap or inactivity window, due once the
+processing-time clock reaches it; the step evicts on arrival, before
+the walk. Each shard keeps ONE timer at its earliest cell deadline, a
+timer invocation evicts every due cell, and evicted maps are pushed as
+timeout rows where the config asks for it. A finite event-time replay
+(availableNow + heartbeat flush) thus produces the rows a task-keyed
+state would; only the micro-batch a timeout lands in can be later (a
+shard's expired cell waits for the shard's next invocation).
 
 Sizing: ``shards`` defaults to :data:`stream.DEFAULT_SHARDS` and is part
 of the checkpoint — every encoded cell set records the count it was
@@ -46,21 +59,26 @@ batch-equality tests and the streaming fuzz family.
 from __future__ import annotations
 
 import json
+import math
 import struct
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState
 
 from logstash_filter_aggregate_spark.config import PipelineConfig
+from logstash_filter_aggregate_spark.operators.correlate import (
+    _merged_agg_specs,
+    emit_col_name,
+    value_col_name,
+)
 from logstash_filter_aggregate_spark.streaming.stream import (
     OUTPUT_SCHEMA,
-    _agg_value_col,
-    _build_agg_specs,
-    _build_rule_attrs,
-    _emit_value_col,
+    _map_json,
     _merge_carried,
     _norm,
     _session_agg_maps,
@@ -70,7 +88,7 @@ from logstash_filter_aggregate_spark.streaming.walk import (
     CT0,
     END,
     OPEN,
-    prep_rule_arrays,
+    walk_inputs,
     walk_scan,
 )
 
@@ -172,70 +190,61 @@ def _load_cells(state: GroupState, shards: int) -> dict:
     return _decode_cells(raw, shards) if raw else {}
 
 
-def _cell_expiry_s(cell, timeout_s: float, inactivity_s: float) -> float:
-    to = cell[_TO] if cell[_TO] is not None else timeout_s
-    in_ = cell[_IN] if cell[_IN] is not None else inactivity_s
-    return min(cell[_C] + to, cell[_L] + in_)
+class _Clock:
+    """The clock a shard's cells expire by, read once per invocation.
 
+    Event time: a cell's deadline is its map's age or inactivity expiry
+    in event seconds (its own ``map_meta`` overrides, else the pattern's
+    clocks), due once the watermark reaches it (the condition a per-task
+    event-time timer would fire on). Processing time: the wall-clock age
+    cap set at map creation or the inactivity window from the last
+    arrival, due once the processing-time clock reaches it; the walk then
+    runs with infinite event-time clocks."""
 
-def _evict_expired(cells: dict, wm_ms: int, timeout_s: float,
-                   inactivity_s: float, skip: set) -> list[tuple]:
-    """Remove cells whose expiry is at/behind the watermark (the
-    condition a per-task event-time timer would fire on). Returns the evicted
-    ``(task_id, cell)`` pairs so the correlate tier can push them."""
-    if wm_ms <= 0 or not cells:
-        return []
-    out = []
-    for task in list(cells):
-        if task in skip:
-            continue
-        cell = cells[task]
-        if _cell_expiry_s(cell, timeout_s, inactivity_s) * 1000 <= wm_ms:
-            out.append((task, cells.pop(task)))
-    return out
-
-
-def _save(state: GroupState, cells: dict, timeout_s: float, inactivity_s: float,
-          shards: int) -> None:
-    if cells:
-        state.update((_encode_cells(cells, shards),))
-        expiry_ms = int(
-            min(_cell_expiry_s(c, timeout_s, inactivity_s) for c in cells.values())
-            * 1000
+    def __init__(self, state: GroupState, processing: bool, cfg: PipelineConfig):
+        self.processing = processing
+        self.timeout_s = float(cfg.timeout)
+        self.inactivity_s = float(cfg.effective_inactivity_timeout)
+        self.walk_clocks = (math.inf, math.inf) if processing else (self.timeout_s, self.inactivity_s)
+        self.now_ms = (
+            state.getCurrentProcessingTimeMs() if processing else state.getCurrentWatermarkMs()
         )
-        state.setTimeoutTimestamp(max(expiry_ms, state.getCurrentWatermarkMs() + 1))
-    elif state.exists:
-        state.remove()
+
+    def deadline_s(self, cell) -> float:
+        if self.processing:
+            wc = math.inf if cell[_WC] is None else cell[_WC]
+            wl = self.now_ms / 1000.0 if cell[_WL] is None else cell[_WL]
+            return min(wc, wl + self.inactivity_s)
+        to = self.timeout_s if cell[_TO] is None else cell[_TO]
+        in_ = self.inactivity_s if cell[_IN] is None else cell[_IN]
+        return min(cell[_C] + to, cell[_L] + in_)
+
+    def due(self, cell) -> bool:
+        # event time: nothing is due before the first watermark
+        if not self.processing and self.now_ms <= 0:
+            return False
+        return self.deadline_s(cell) * 1000 <= self.now_ms
+
+    def arm(self, state: GroupState, deadline_s: float) -> None:
+        """Set the shard's one timer at the earliest cell deadline."""
+        if self.processing:
+            state.setTimeoutDuration(max(int(deadline_s * 1000 - self.now_ms), 1))
+        else:
+            state.setTimeoutTimestamp(max(int(deadline_s * 1000), self.now_ms + 1))
 
 
-def _wall_remaining_s(cell, now_s: float, inactivity_s: float) -> float:
-    wc = cell[_WC] if cell[_WC] is not None else float("inf")
-    wl = cell[_WL] if cell[_WL] is not None else now_s
-    return min(wc - now_s, wl + inactivity_s - now_s)
+def _evict(cells: dict, clock: _Clock, skip=frozenset()) -> list[tuple]:
+    """Remove the cells whose deadline is due, except ``skip``'s; returns
+    the evicted ``(task_id, cell)`` pairs so the correlate tier can push
+    them."""
+    due = [t for t, c in cells.items() if t not in skip and clock.due(c)]
+    return [(t, cells.pop(t)) for t in due]
 
 
-def _evict_expired_wall(cells: dict, now_s: float, inactivity_s: float,
-                        skip: set) -> list[tuple]:
-    """Processing-time analog of :func:`_evict_expired`: a cell whose age
-    cap or inactivity window lapsed by the WALL clock evicts, checked on
-    arrival and when the shard's processing-time timer fires."""
-    if not cells:
-        return []
-    out = []
-    for task in list(cells):
-        if task in skip:
-            continue
-        if _wall_remaining_s(cells[task], now_s, inactivity_s) <= 0:
-            out.append((task, cells.pop(task)))
-    return out
-
-
-def _save_wall(state: GroupState, cells: dict, now_s: float,
-               inactivity_s: float, shards: int) -> None:
+def _save(state: GroupState, cells: dict, clock: _Clock, shards: int) -> None:
     if cells:
         state.update((_encode_cells(cells, shards),))
-        rem = min(_wall_remaining_s(c, now_s, inactivity_s) for c in cells.values())
-        state.setTimeoutDuration(max(int(rem * 1000), 1))
+        clock.arm(state, min(clock.deadline_s(c) for c in cells.values()))
     elif state.exists:
         state.remove()
 
@@ -259,45 +268,51 @@ def _task_slices(tid: np.ndarray):
     return starts, ends
 
 
-def _walk_tasks(whole: pd.DataFrame, rule_attrs: dict, cells: dict,
-                timeout_s: float, inactivity_s: float):
-    """Run the session-hop walk for every task slice of a sorted shard
-    chunk. Returns chunk-aligned ``code_ran`` / global ``sess_full``
-    arrays, the global session table, and per-task bookkeeping; updates
-    ``cells`` in place (final-open sessions persist, closed ones drop).
+class _Walk(NamedTuple):
+    """One chunk's walk: chunk-aligned ``code_ran`` and global session
+    labels ``sess_full`` (-1 where the code did not run), the global
+    session table ``(task_id, creation, last, kind)`` with each session's
+    event count and carried count base, the carried map entering each
+    carried session, the cell each open session persists into, and the
+    tasks walked."""
 
-    The walk sees only KNOWN-rule rows (unknown rules are transparent:
-    no state effect). Rule arrays are prepped ONCE for the whole chunk;
-    per-task work is one :func:`walk_scan` call on numpy slices."""
+    code_ran: np.ndarray
+    sess_full: np.ndarray
+    sessions: list
+    sess_nev: list
+    sess_carry: list
+    sess_init_map: dict
+    open_cells: dict
+    touched: set
+
+
+def _walk_tasks(whole: pd.DataFrame, cells: dict, clock: _Clock) -> _Walk:
+    """Run the session-hop walk for every task slice of a sorted shard
+    chunk; updates ``cells`` in place (final-open sessions persist,
+    closed ones drop). The rule inputs are built once for the whole
+    chunk from classify's columns; per-task work is one
+    :func:`walk_scan` call on numpy slices. Heartbeat rows carry no task
+    and are skipped.
+
+    Processing time stamps each open cell's wall clocks: a map carried in
+    keeps its creation-time age cap, a map created this batch gets
+    ``now + timeout``, and every open map's last arrival is now."""
     n = len(whole)
-    known, ts_s, is_create, is_update, end_flag, ct, ci = prep_rule_arrays(
-        whole, rule_attrs
+    timeout_s, inactivity_s = clock.walk_clocks
+    now_s = clock.now_ms / 1000.0
+    is_create, is_update, end_flag, ct, ci = walk_inputs(
+        lambda c: pa.Array.from_pandas(whole[c]), processing=clock.processing
     )
+    ts_s = whole["ts"].astype("datetime64[ns]").astype("int64").to_numpy() / 1e9
     tid = whole["_task_id"].to_numpy()
-    code_ran = np.zeros(n, dtype=bool)
-    sess_full = np.full(n, -1, dtype=np.int64)
-    sessions: list[tuple] = []      # (task_id, creation, last, kind)
-    sess_nev: list[int] = []
-    sess_carry: list[int] = []      # carried nevents base per session (emit math)
-    sess_init_map: dict[int, dict] = {}   # global sess idx -> carried map
-    final_sess_of_task: dict = {}   # task -> global sess idx of its open session
-    task_base: dict = {}            # task -> its first session's global idx
-    touched: set = set()
+    walk = _Walk(np.zeros(n, dtype=bool), np.full(n, -1, dtype=np.int64), [], [], [], {}, {}, set())
+    sessions = walk.sessions
     starts, ends = _task_slices(tid)
-    for lo, hi in zip(starts, ends):
+    for lo, hi in zip(starts.tolist(), ends.tolist()):
         task = tid[lo]
         if task is None:
-            continue                 # watermark-advance rows: no state
-        sel = np.arange(lo, hi)
-        km = known[lo:hi]
-        if not km.all():
-            sel = sel[km]
-        if sel.size == 0:
-            continue    # transparent rows only: state untouched this batch
-        # only tasks whose state actually advanced are exempt from this
-        # invocation's eviction (a transparent-only task must stay
-        # evictable in the micro-batch its expiry is behind the watermark)
-        touched.add(task)
+            continue                 # heartbeat rows: no state
+        walk.touched.add(task)
         cell = cells.get(task)
         init = None
         if cell is not None:
@@ -307,65 +322,68 @@ def _walk_tasks(whole: pd.DataFrame, rule_attrs: dict, cells: dict,
                 cell[_IN] if cell[_IN] is not None else inactivity_s,
             )
         res = walk_scan(
-            ts_s[sel], is_create[sel], is_update[sel], end_flag[sel],
-            ct[sel], ci[sel], init, timeout_s, inactivity_s,
+            ts_s[lo:hi], is_create[lo:hi], is_update[lo:hi], end_flag[lo:hi],
+            ct[lo:hi], ci[lo:hi], init, timeout_s, inactivity_s,
         )
         base = len(sessions)
-        task_base[task] = base
-        code_ran[sel] = res.code_ran
+        walk.code_ran[lo:hi] = res.code_ran
         lab = res.sess_id.astype(np.int64)
-        sess_full[sel] = np.where(lab >= 0, lab + base, -1)
+        walk.sess_full[lo:hi] = np.where(lab >= 0, lab + base, -1)
         carried_n = int(cell[_N]) if cell is not None else 0
         for k, (creation, last_ts, kind, _crow) in enumerate(res.sessions):
             sessions.append((task, creation, last_ts, kind))
-            sess_nev.append(int(res.nevents[k]))
-            sess_carry.append(carried_n if (k == 0 and cell is not None) else 0)
+            walk.sess_nev.append(int(res.nevents[k]))
+            walk.sess_carry.append(carried_n if (k == 0 and cell is not None) else 0)
         if cell is not None:
-            sess_init_map[base] = cell[_M] or {}
-        if res.final is not None:
-            creation, last, nev, eff_to, eff_in = res.final
-            cells[task] = [
-                creation, last, int(nev), None,
-                eff_to if eff_to != timeout_s else None,
-                eff_in if eff_in != inactivity_s else None,
-                # wall-clock fields ride through untouched; the proc-mode
-                # caller refreshes them per arrival (carried-vs-new cap)
-                cell[_WC] if cell is not None else None,
-                cell[_WL] if cell is not None else None,
-            ]
-            final_sess_of_task[task] = len(sessions) - 1
-        else:
+            walk.sess_init_map[base] = cell[_M] or {}
+        if res.final is None:
             cells.pop(task, None)
-    return (code_ran, sess_full, sessions, sess_nev, sess_carry,
-            sess_init_map, final_sess_of_task, task_base, touched)
+            continue
+        creation, last, nev, eff_to, eff_in = res.final
+        wall = (None, None)
+        if clock.processing:
+            carried = cell is not None and len(res.sessions) == 1 and cell[_WC] is not None
+            wall = (cell[_WC] if carried else now_s + clock.timeout_s, now_s)
+        cells[task] = walk.open_cells[len(sessions) - 1] = [
+            creation, last, int(nev), None,
+            eff_to if eff_to != timeout_s else None,
+            eff_in if eff_in != inactivity_s else None,
+            *wall,
+        ]
+    return walk
 
 
-def _mask_proc_overrides(whole: pd.DataFrame) -> None:
-    """Processing mode: event time never expires maps — keep only
-    ``timeout = 0`` instant evictions (clock-independent), drop >0
-    overrides (wall-deadline overrides are event-mode features)."""
-    whole["_custom_timeout"] = whole["_custom_timeout"].where(
-        whole["_custom_timeout"] == 0
-    )
-    whole["_custom_inactivity"] = np.nan
+def _shard_step(state: GroupState, pdfs: Iterator[pd.DataFrame], cfg: PipelineConfig,
+                processing: bool, shards: int, build):
+    """One shard invocation, shared by both stateful functions: load the
+    cells, sort the chunk, walk its tasks, evict the due cells and save
+    the rest. ``build(whole, walk, evicted)`` makes the output frame from
+    the sorted chunk, its :class:`_Walk` and the evicted ``(task_id,
+    cell)`` pairs, and may update the open cells before they are saved;
+    ``whole`` and ``walk`` are None on a timer invocation.
 
-
-def _refresh_wall_cells(cells: dict, entry: set, final_sess_of_task: dict,
-                        task_base: dict, now_s: float, timeout_s: float) -> None:
-    """Per-arrival wall bookkeeping for open cells: a CARRIED map (the
-    task had a cell at entry and its final open session is its first)
-    keeps its creation-time age cap; a map created this batch gets
-    ``now + timeout``. Every open cell's last-arrival wall time becomes
-    ``now``."""
-    for task, si in final_sess_of_task.items():
-        c = cells[task]
-        carried = task in entry and si == task_base[task] and c[_WC] is not None
-        if not carried:
-            c[_WC] = now_s + timeout_s
-        c[_WL] = now_s
-
-
-_WALL_INF = float("inf")
+    Processing time evicts on arrival, before the walk, as the reference
+    checks a map when its task's next event comes (``aggregate.rb:194-199``).
+    Event time evicts after the walk, skipping the tasks it touched: the
+    walk already expired or advanced their maps by their own events."""
+    clock = _Clock(state, processing, cfg)
+    cells = _load_cells(state, shards)
+    if state.hasTimedOut:
+        evicted = _evict(cells, clock)
+        _save(state, cells, clock, shards)
+        return build(None, None, evicted)
+    chunks = [p for p in pdfs if len(p)]
+    if not chunks:
+        return build(None, None, [])
+    whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    whole = whole.sort_values(["_task_id", "ts", "conv_id", "turn_idx"], kind="mergesort")
+    evicted = _evict(cells, clock) if processing else []
+    walk = _walk_tasks(whole, cells, clock)
+    if not processing:
+        evicted = _evict(cells, clock, skip=walk.touched)
+    out = build(whole, walk, evicted)
+    _save(state, cells, clock, shards)
+    return out
 
 
 def make_passthrough_shard_fn(cfg: PipelineConfig, out_cols: list[str],
@@ -374,64 +392,26 @@ def make_passthrough_shard_fn(cfg: PipelineConfig, out_cols: list[str],
     the OUTPUT is the input rows themselves (O19 + U3,
     ``aggregate.rb:251-254``) — tagged where the code would raise,
     suppressed where it cancels. Cells carry no aggregation map; they
-    exist for the guard decisions and are reclaimed by eviction.
+    exist for the guard decisions and are reclaimed by eviction, which
+    emits nothing here.
 
     ``time_mode='processing'``: cells expire by the WALL clock (age cap
     from map creation / inactivity from last arrival), checked on every
     shard invocation plus one processing-time timer per shard at the min
     remaining cell deadline."""
-    rule_attrs = _build_rule_attrs(cfg)
     req_cols_by_rule = {
-        r.rule_id: [
-            _agg_value_col(r.rule_id, s.name) for s in r.aggs if s.required and s.col
-        ]
+        r.rule_id: [value_col_name(r.rule_id, s.col) for s in r.aggs if s.required and s.col]
         for r in cfg.rules
     }
     cancel_map = {r.rule_id: bool(r.cancel) for r in cfg.rules}
-    timeout_s = float(cfg.timeout)
-    inactivity_s = float(cfg.effective_inactivity_timeout)
-    proc_mode = time_mode == "processing"
+    processing = time_mode == "processing"
     _EXC = ["_aggregateexception"]
     _EMPTY: list = []
 
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        cells = _load_cells(state, shards)
-        now = state.getCurrentProcessingTimeMs() / 1000.0 if proc_mode else 0.0
-        if state.hasTimedOut:
-            if proc_mode:
-                _evict_expired_wall(cells, now, inactivity_s, set())
-                _save_wall(state, cells, now, inactivity_s, shards)
-            else:
-                _evict_expired(cells, state.getCurrentWatermarkMs(),
-                               timeout_s, inactivity_s, set())
-                _save(state, cells, timeout_s, inactivity_s, shards)
-            yield pd.DataFrame(columns=[*out_cols, "tags"]).iloc[0:0]
-            return
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            yield pd.DataFrame(columns=[*out_cols, "tags"]).iloc[0:0]
-            return
-        whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        whole = whole.sort_values(
-            ["_task_id", "ts", "conv_id", "turn_idx"], kind="mergesort"
-        )
+    def build(whole, walk, _evicted) -> pd.DataFrame:
+        if whole is None:
+            return pd.DataFrame(columns=[*out_cols, "tags"])
         nrows = len(whole)
-
-        if proc_mode:
-            # wall expiry on arrival BEFORE guards (state reclaim only —
-            # the passthrough emits no timeout rows)
-            _evict_expired_wall(cells, now, inactivity_s, set())
-            _mask_proc_overrides(whole)
-            entry = set(cells)
-            (code_ran, _sess_full, _sessions, _nev, _carry, _imap, fin,
-             task_base, _touched) = _walk_tasks(
-                whole, rule_attrs, cells, _WALL_INF, _WALL_INF)
-            _refresh_wall_cells(cells, entry, fin, task_base, now, timeout_s)
-        else:
-            (code_ran, _sess_full, _sessions, _nev, _carry, _imap, _fin,
-             _tb, touched) = _walk_tasks(
-                whole, rule_attrs, cells, timeout_s, inactivity_s)
-
         rid_np = whole["_rule_id"].to_numpy()
         cancel_arr = (
             whole["_rule_id"].map(cancel_map).fillna(False).to_numpy(dtype=bool)
@@ -448,15 +428,8 @@ def make_passthrough_shard_fn(cfg: PipelineConfig, out_cols: list[str],
                 bad |= whole[c].isna().to_numpy()
             exc |= m & bad
 
-        keep = ~(code_ran & cancel_arr)        # U3: consumed where code ran
-        tag_exc = code_ran & exc               # O19: tagged where code ran
-
-        if proc_mode:
-            _save_wall(state, cells, now, inactivity_s, shards)
-        else:
-            _evict_expired(cells, state.getCurrentWatermarkMs(),
-                           timeout_s, inactivity_s, touched)
-            _save(state, cells, timeout_s, inactivity_s, shards)
+        keep = ~(walk.code_ran & cancel_arr)        # U3: consumed where code ran
+        tag_exc = walk.code_ran & exc               # O19: tagged where code ran
 
         kidx = np.flatnonzero(keep)
         out = whole.iloc[kidx][out_cols].copy()
@@ -472,7 +445,10 @@ def make_passthrough_shard_fn(cfg: PipelineConfig, out_cols: list[str],
             else:
                 ap(list(b))
         out["tags"] = pd.Series(tags_out, index=out.index, dtype=object)
-        yield out
+        return out
+
+    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        yield _shard_step(state, pdfs, cfg, processing, shards, build)
 
     return fn
 
@@ -482,22 +458,23 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
     """State walk for :func:`stream.streaming_correlate`: the full map
     lifecycle (aggregation dictionaries, closes, timeout pushes, O18 emit
     rows) over the reference's filter hot path (``aggregate.rb:179-255``).
-    Agg and emit inputs arrive pre-projected as ``_v_*`` / ``_em_*``
-    columns; ``int_cols`` names those of an integral Spark type, which
-    render as JSON integers whatever dtype pandas gave the chunk.
+    Agg and emit inputs arrive pre-projected as the batch engine's
+    ``value_col_name`` / ``emit_col_name`` columns; ``int_cols`` names
+    those of an integral Spark type, which render as JSON integers
+    whatever dtype pandas gave the chunk.
 
     ``time_mode='processing'``: wall-clock expiry (see
     :func:`make_passthrough_shard_fn`), with evicted cells pushed as
     timeout rows where the config asks for it."""
-    rule_attrs = _build_rule_attrs(cfg)
-    agg_specs = _build_agg_specs(cfg)
+    agg_specs = {
+        name: (fn_, [(rid, value_col_name(rid, col)) for rid, col in sources])
+        for name, (fn_, sources) in _merged_agg_specs(cfg).items()
+    }
     emit_rules = {
-        r.rule_id: [(n, _emit_value_col(r.rule_id, n)) for n in (r.emit or {})]
+        r.rule_id: [(n, emit_col_name(r.rule_id, n)) for n in r.emit]
         for r in cfg.rules if r.emit
     }
-    timeout_s = float(cfg.timeout)
-    inactivity_s = float(cfg.effective_inactivity_timeout)
-    proc_mode = time_mode == "processing"
+    processing = time_mode == "processing"
     push = cfg.push_map_as_event_on_timeout
     out_cols = [f.name for f in OUTPUT_SCHEMA.fields]
 
@@ -506,55 +483,15 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
             task_id=task, sink="timeout",
             creation_ts=_ts_us(cell[_C]), lastevent_ts=_ts_us(cell[_L]),
             nevents=int(cell[_N]),
-            map_json=json.dumps(cell[_M] or {}, default=str),
+            map_json=_map_json(agg_specs, cell[_M] or {}),
         )
 
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        out_rows: list[dict] = []
-        cells = _load_cells(state, shards)
-        now = state.getCurrentProcessingTimeMs() / 1000.0 if proc_mode else 0.0
-        if state.hasTimedOut:
-            if proc_mode:
-                evicted = _evict_expired_wall(cells, now, inactivity_s, set())
-            else:
-                evicted = _evict_expired(cells, state.getCurrentWatermarkMs(),
-                                         timeout_s, inactivity_s, set())
-            if push:
-                out_rows.extend(_timeout_row(t, c) for t, c in evicted)
-            if proc_mode:
-                _save_wall(state, cells, now, inactivity_s, shards)
-            else:
-                _save(state, cells, timeout_s, inactivity_s, shards)
-            yield pd.DataFrame(out_rows, columns=out_cols)
-            return
-
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            yield pd.DataFrame(out_rows, columns=out_cols)
-            return
-        whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        whole = whole.sort_values(
-            ["_task_id", "ts", "conv_id", "turn_idx"], kind="mergesort"
-        )
-
-        if proc_mode:
-            # wall expiry on arrival BEFORE guards, pushing evicted maps
-            evicted = _evict_expired_wall(cells, now, inactivity_s, set())
-            if push:
-                out_rows.extend(_timeout_row(t, c) for t, c in evicted)
-            _mask_proc_overrides(whole)
-            entry = set(cells)
-            (code_ran, sess_full, sessions, sess_nev, sess_carry, sess_init_map,
-             final_sess_of_task, task_base, touched) = _walk_tasks(
-                whole, rule_attrs, cells, _WALL_INF, _WALL_INF
-            )
-        else:
-            (code_ran, sess_full, sessions, sess_nev, sess_carry, sess_init_map,
-             final_sess_of_task, _tb, touched) = _walk_tasks(
-                whole, rule_attrs, cells, timeout_s, inactivity_s
-            )
+    def _walk_rows(whole, walk: _Walk, out_rows: list) -> None:
+        """Append the closed maps and emit rows of one walked chunk, and
+        persist the open maps into their cells."""
+        sessions, sess_full = walk.sessions, walk.sess_full
         n_sess = len(sessions)
-        cr_idx = np.flatnonzero(code_ran)
+        cr_idx = np.flatnonzero(walk.code_ran)
         sess_cr = sess_full[cr_idx]
         srid = (
             whole["_rule_id"].to_numpy()[cr_idx]
@@ -563,7 +500,7 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
         sess_maps = _session_agg_maps(
             whole, cr_idx, sess_cr, srid, n_sess, agg_specs, int_cols
         )
-        for base, imap in sess_init_map.items():
+        for base, imap in walk.sess_init_map.items():
             sess_maps[base] = _merge_carried(agg_specs, imap, sess_maps[base])
 
         # closed sessions -> sink rows
@@ -581,8 +518,8 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
             out_rows.append(dict(
                 task_id=task, sink=sink,
                 creation_ts=_ts_us(creation), lastevent_ts=_ts_us(last_ts),
-                nevents=int(sess_nev[si_]),
-                map_json=json.dumps(sess_maps[si_], default=str),
+                nevents=int(walk.sess_nev[si_]),
+                map_json=_map_json(agg_specs, sess_maps[si_]),
             ))
 
         # emit rows (O18): one per code-ran row of an emit rule, carrying
@@ -598,7 +535,7 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
             sizes = np.diff(np.append(grp_start, len(cr_idx)))
             offsets = np.repeat(grp_start, sizes)
             nev_sofar = np.arange(len(cr_idx), dtype="int64") - offsets + 1
-            nev_sofar += np.asarray(sess_carry, dtype="int64")[sess_cr]
+            nev_sofar += np.asarray(walk.sess_carry, dtype="int64")[sess_cr]
             creations = np.asarray([s[1] for s in sessions])
             tasks_of = np.asarray([s[0] for s in sessions], dtype=object)
             for rid_, ems in emit_rules.items():
@@ -625,19 +562,16 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
                     ))
 
         # persist the open sessions' accumulated maps into their cells
-        for task, si_ in final_sess_of_task.items():
-            cells[task][_M] = sess_maps[si_]
+        for si_, cell in walk.open_cells.items():
+            cell[_M] = sess_maps[si_]
 
-        if proc_mode:
-            _refresh_wall_cells(cells, entry, final_sess_of_task, task_base,
-                                now, timeout_s)
-            _save_wall(state, cells, now, inactivity_s, shards)
-        else:
-            evicted = _evict_expired(cells, state.getCurrentWatermarkMs(),
-                                     timeout_s, inactivity_s, touched)
-            if push:
-                out_rows.extend(_timeout_row(t, c) for t, c in evicted)
-            _save(state, cells, timeout_s, inactivity_s, shards)
-        yield pd.DataFrame(out_rows, columns=out_cols)
+    def build(whole, walk, evicted) -> pd.DataFrame:
+        out_rows = [_timeout_row(t, c) for t, c in evicted] if push else []
+        if walk is not None:
+            _walk_rows(whole, walk, out_rows)
+        return pd.DataFrame(out_rows, columns=out_cols)
+
+    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        yield _shard_step(state, pdfs, cfg, processing, shards, build)
 
     return fn

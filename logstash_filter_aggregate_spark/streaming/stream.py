@@ -26,6 +26,8 @@ they work unchanged on a streaming DataFrame.
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -35,6 +37,12 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from logstash_filter_aggregate_spark.config import PipelineConfig
 from logstash_filter_aggregate_spark.operators.classify import classify
+from logstash_filter_aggregate_spark.operators.correlate import (
+    _merged_agg_specs,
+    _value_expr,
+    emit_col_name,
+    value_col_name,
+)
 from logstash_filter_aggregate_spark.plans.pipeline import compile_groks, parse
 
 # State shards of every streaming query that keeps task state: 16 per
@@ -82,9 +90,6 @@ def session_window_aggregate(
 ) -> DataFrame:
     """Gap sessions with the built-in session_window (O10 streaming form).
     Emits one row per closed session once the watermark passes its end."""
-    from logstash_filter_aggregate_spark.operators.classify import task_id_expr
-    from logstash_filter_aggregate_spark.operators.correlate import _merged_agg_specs, _value_expr
-
     parsed = parse(stream_df, groks or compile_groks())
     classified = classify(parsed, cfg)
     part = classified.where(F.col("_task_id").isNotNull() & F.col("_rule_id").isNotNull())
@@ -131,14 +136,6 @@ def session_window_aggregate(
     )
 
 
-def _agg_value_col(rule_id: str, name: str) -> str:
-    return f"_v_{rule_id}_{name}"
-
-
-def _emit_value_col(rule_id: str, name: str) -> str:
-    return f"_em_{rule_id}_{name}"
-
-
 def _norm(v):
     if v is None or _is_nullish(v):
         return None
@@ -151,32 +148,6 @@ def _ts_us(sec: float) -> pd.Timestamp:
     # Arrow's safe µs cast rejects it — round("us") recovers the
     # original microsecond exactly
     return pd.Timestamp(sec, unit="s").round("us")
-
-
-def _build_rule_attrs(cfg: PipelineConfig) -> dict:
-    return {
-        r.rule_id: dict(
-            map_action=r.map_action,
-            end_of_task=r.end_of_task,
-            has_custom_timeout=r.custom_timeout is not None,
-            has_custom_inactivity=r.custom_inactivity_timeout is not None,
-        )
-        for r in cfg.rules
-    }
-
-
-def _build_agg_specs(cfg: PipelineConfig) -> dict[str, tuple]:
-    """Agg specs merged by name across rules (a shared name accumulates
-    into ONE map entry, interleaved in event order — spec parity with
-    the per-row walk the vectorized scan replaced)."""
-    agg_specs: dict[str, tuple] = {}
-    for r in cfg.rules:
-        for s in r.aggs:
-            fn_, pairs = agg_specs.setdefault(s.name, (s.fn, []))
-            pairs.append(
-                (r.rule_id, _agg_value_col(r.rule_id, s.name) if s.col else None)
-            )
-    return agg_specs
 
 
 def _merge_carried(agg_specs: dict, carried: dict, batch: dict) -> dict:
@@ -198,6 +169,8 @@ def _merge_carried(agg_specs: dict, carried: dict, batch: dict) -> dict:
             out[name] = max(out[name], v)
         elif fn_ == "first":
             pass                            # carried first wins
+        elif fn_ == "avg":                  # [sum, count] partials
+            out[name] = [out[name][0] + v[0], out[name][1] + v[1]]
         elif fn_ == "collect_list":
             out[name] = list(out[name]) + list(v)
         elif fn_ == "collect_set":
@@ -206,6 +179,15 @@ def _merge_carried(agg_specs: dict, carried: dict, batch: dict) -> dict:
         else:                               # last
             out[name] = v
     return out
+
+
+def _map_json(agg_specs: dict, m: dict) -> str:
+    """A map as the sinks carry it: JSON, each ``avg`` entry rendered as
+    the mean of its ``[sum, count]`` partials."""
+    return json.dumps(
+        {k: v[0] / v[1] if agg_specs.get(k, ("last",))[0] == "avg" else v for k, v in m.items()},
+        default=str,
+    )
 
 
 def _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess: int, agg_specs: dict,
@@ -231,8 +213,6 @@ def _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess: int, agg_specs: dict
             continue
         parts = []
         for rid_, col in pairs:
-            if col is None:
-                continue
             m = (srid == rid_).astype(bool)
             if not m.any():
                 continue
@@ -254,6 +234,13 @@ def _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess: int, agg_specs: dict
             parts, ignore_index=True
         ).sort_values("pos", kind="mergesort")
         g = dfp.groupby("sess")["val"]
+        if fn_ == "avg":
+            # [sum, count] partials, so a map carried across micro-batches
+            # merges exactly; rendered as their mean (_map_json)
+            sums, cnts = g.sum(), g.count()
+            for si_, s_, c_ in zip(sums.index, sums.tolist(), cnts.tolist()):
+                sess_maps[int(si_)][name] = [s_, c_]
+            continue
         if fn_ == "sum":
             agg_res = g.sum()
         elif fn_ == "min":
@@ -314,15 +301,18 @@ def streaming_correlate(
 
     _check_time_mode(time_mode)
     shards = _shard_count(shards)
+    # the batch engine's agg specs and pre-projected input columns: a
+    # config batch rejects is rejected here too
+    value_cols = {
+        value_col_name(rid, col): col
+        for fn_, sources in _merged_agg_specs(cfg).values() if fn_ != "count"
+        for rid, col in sources
+    }
+    value_cols.update(
+        (emit_col_name(r.rule_id, n), e) for r in cfg.rules for n, e in (r.emit or {}).items()
+    )
     parsed = parse(stream_df, groks or compile_groks())
     classified = classify(parsed, cfg)
-    value_cols = [
-        F.expr(sp.col).alias(_agg_value_col(r.rule_id, sp.name))
-        for r in cfg.rules for sp in r.aggs if sp.col
-    ] + [
-        F.expr(e).alias(_emit_value_col(r.rule_id, n))
-        for r in cfg.rules for n, e in (r.emit or {}).items()
-    ]
     # Heartbeat rows (conv_id == HEARTBEAT_CONV, matching no rule) pass
     # the match filter so they can advance the event-time watermark —
     # the mechanism replay_routed uses to flush state timeouts on a
@@ -342,13 +332,13 @@ def streaming_correlate(
             | (F.col("conv_id") == HEARTBEAT_CONV)
         )
         .select(
-            "_task_id", "_rule_id", "conv_id", "turn_idx", "ts",
-            "_custom_timeout", "_custom_inactivity", *value_cols,
+            "_task_id", "_rule_id", "conv_id", "turn_idx", "ts", "_action", "_end_flag",
+            "_custom_timeout", "_custom_inactivity",
+            *[F.expr(e).alias(n) for n, e in value_cols.items()],
         )
     )
     int_cols = frozenset(
-        f.name for f in part.schema.fields
-        if f.name.startswith(("_v_", "_em_")) and isinstance(f.dataType, T.IntegralType)
+        n for n in value_cols if isinstance(part.schema[n].dataType, T.IntegralType)
     )
     fn = make_correlate_shard_fn(cfg, shards, int_cols, time_mode=time_mode)
     return _shard_keyed(part, fn, OUTPUT_SCHEMA, shards, time_mode)
@@ -524,8 +514,10 @@ def streaming_passthrough(
         return passthrough_stream(classified, cfg)
 
     req_cols = [
-        F.expr(s.col).alias(_agg_value_col(r.rule_id, s.name))
-        for r in cfg.rules for s in r.aggs if s.required and s.col
+        F.expr(col).alias(name) for name, col in {
+            value_col_name(r.rule_id, s.col): s.col
+            for r in cfg.rules for s in r.aggs if s.required and s.col
+        }.items()
     ]
     participates = F.col("_task_id").isNotNull() & F.col("_rule_id").isNotNull()
     out_cols = [

@@ -41,40 +41,34 @@ EXPIRY = "expiry"  # event-time expiry on arrival (aggregate.rb:194-199)
 OPEN = "open"      # survives the micro-batch -> state cell
 
 
-def prep_rule_arrays(whole, rule_attrs: dict):
-    """Extract the walk_scan input arrays from one sorted micro-batch
-    chunk. ``rule_attrs``: rule_id -> dict(map_action, end_of_task,
-    has_custom_timeout, has_custom_inactivity). Returns
-    ``(known, ts_s, is_create, is_update, end_flag, ct, ci)`` — rows
-    whose ``_rule_id`` is not in ``rule_attrs`` have ``known`` False
-    and must be excluded from the scan (they are transparent: no state
-    effect, passed through untouched)."""
-    rid = whole["_rule_id"]
-    act = rid.map({r: a["map_action"] for r, a in rule_attrs.items()})
-    known = act.notna().to_numpy(dtype=bool)
-    is_create = (act == "create").to_numpy(dtype=bool)
-    is_update = (act == "update").to_numpy(dtype=bool)
-    end_flag = (
-        rid.map({r: a["end_of_task"] for r, a in rule_attrs.items()})
-        .fillna(False).to_numpy(dtype=bool)
-    )
-    ts_s = whole["ts"].astype("datetime64[ns]").astype("int64").to_numpy() / 1e9
-    nan = np.nan
-    gate_to = (
-        rid.map({r: a["has_custom_timeout"] for r, a in rule_attrs.items()})
-        .fillna(False).to_numpy(dtype=bool)
-    )
-    gate_in = (
-        rid.map({r: a["has_custom_inactivity"] for r, a in rule_attrs.items()})
-        .fillna(False).to_numpy(dtype=bool)
-    )
-    ct = np.where(
-        gate_to, whole["_custom_timeout"].to_numpy(dtype="float64", na_value=nan), nan
-    )
-    ci = np.where(
-        gate_in, whole["_custom_inactivity"].to_numpy(dtype="float64", na_value=nan), nan
-    )
-    return known, ts_s, is_create, is_update, end_flag, ct, ci
+def walk_inputs(column, processing: bool):
+    """:func:`walk_scan`'s per-row rule inputs for one sorted chunk, from
+    the columns ``classify`` gave its rows; ``column(name)`` returns one as
+    an Arrow array: ``_action`` (the matched rule's ``map_action``),
+    ``_end_flag`` (1 on ``end_of_task`` rows) and the matched rule's
+    ``_custom_timeout`` / ``_custom_inactivity`` (NULL where it sets
+    none). Returns numpy ``(is_create, is_update, end_flag, cust_to,
+    cust_in)``, NaN where no override is set.
+
+    ``processing``: no event-time clock runs out, so of the overrides
+    only ``timeout = 0`` (an eviction, not a clock) is kept."""
+    import pyarrow.compute as pc
+
+    def flags(mask):
+        return pc.fill_null(mask, False).to_numpy(zero_copy_only=False)
+
+    def floats(name):
+        return pc.fill_null(column(name), np.nan).to_numpy(zero_copy_only=False)
+
+    action = column("_action")
+    is_create, is_update = flags(pc.equal(action, "create")), flags(pc.equal(action, "update"))
+    end_flag = flags(pc.equal(column("_end_flag"), 1))
+    cust_to = floats("_custom_timeout")
+    if processing:
+        cust_to, cust_in = np.where(cust_to == 0.0, 0.0, np.nan), np.full(len(cust_to), np.nan)
+    else:
+        cust_in = floats("_custom_inactivity")
+    return is_create, is_update, end_flag, cust_to, cust_in
 
 
 class WalkResult:

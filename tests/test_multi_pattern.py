@@ -49,7 +49,7 @@ def test_same_task_id_isolated_across_patterns(spark):
 
 
 def test_run_multi_checkpoints_one_shared_parse(spark, tmp_path):
-    # share_parse (default for >1 pattern): every pattern's consuming
+    # more than one pattern shares the parse: every pattern's consuming
     # action reads the lazily checkpointed parsed blocks — the regex
     # parse subtree materializes ONCE for the whole pattern set instead
     # of once per pattern-action

@@ -173,6 +173,7 @@ def test_streaming_custom_timeouts_match_reference(spark, tmp_path):
     cfg = PipelineConfig(
         task_id="%{taskid}",
         rules=(
+            CorrelationRule("db", "err_tool = 'db'", aggs=(AggSpec("errors", "count"),)),
             CorrelationRule(
                 "err", "err_code is not null",
                 aggs=(AggSpec("errors", "count"),), custom_timeout="0",
@@ -193,6 +194,12 @@ def test_streaming_custom_timeouts_match_reference(spark, tmp_path):
         ("c2", 0, "user", "INFO - u - Clicked One", "none", T0),
         ("c2", 1, "user", "INFO - u - Clicked Two", "none", T0 + dt.timedelta(seconds=50)),
         ("c2", 2, "user", "INFO - u - Clicked Three", "none", T0 + dt.timedelta(seconds=55)),
+        # task v: the db error's rule sets no map_meta.timeout; the err rule
+        # after it, which also matches the row, sets 0 but does not apply
+        # (first match wins), so the map stays open with 3 events
+        ("c3", 0, "user", "INFO - v - Clicked One", "none", T0 + dt.timedelta(seconds=53)),
+        ("c3", 1, "tool", "ERROR - v - TOOL - db - E500", "db", T0 + dt.timedelta(seconds=54)),
+        ("c3", 2, "user", "INFO - v - Clicked Two", "none", T0 + dt.timedelta(seconds=55)),
     ]
     p = str(tmp_path / "in")
     spark.createDataFrame(
@@ -207,6 +214,16 @@ def test_streaming_custom_timeouts_match_reference(spark, tmp_path):
     pushed = by[("u", "timeout")]
     assert json.loads(pushed.map_json) == {"clicks": 1}  # expired by the 10s override
     assert ("u", "inline") not in by and ("u", "completed") not in by
+    assert not [k for k in by if k[0] == "v"]
+
+    batch = run_pipeline(spark, spark.read.parquet(p), cfg)
+    closed = sorted(
+        (r.task_id, sink, r.nevents)
+        for sink in ("completed", "timeout", "inline")
+        for r in getattr(batch, sink).collect()
+    )
+    assert closed == sorted((t, sink, r.nevents) for (t, sink), r in by.items())
+    assert sorted((r.task_id, r.nevents) for r in batch.open.collect()) == [("u", 2), ("v", 3)]
 
 
 def test_stream_to_routed_sinks_matches_batch_and_replays_idempotent(spark, stream_dir, tmp_path):

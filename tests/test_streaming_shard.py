@@ -416,6 +416,65 @@ def test_restart_with_another_shard_count_fails_loudly(spark, tmp_path):
     assert {json.loads(r.map_json)["sql_duration"] for r in done} == {5}
 
 
+def test_streaming_avg_across_micro_batches_matches_batch(spark, tmp_path):
+    # an avg map carried across two micro-batches keeps [sum, count]
+    # partials in its cell and renders their mean: durations 2, 2 | 8
+    # give 4.0, the batch engine's value (not the mean of the two means)
+    from logstash_filter_aggregate_spark.plans.pipeline import run_pipeline
+    from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
+
+    cfg = example1_config(
+        timeout=3600.0,
+        rules=(
+            CorrelationRule("start", "logger = 'TASK_START'", map_action="create"),
+            CorrelationRule(
+                "sql", "logger = 'SQL'", map_action="update",
+                aggs=(AggSpec("avg_ms", "avg", "duration"),),
+            ),
+            CorrelationRule("end", "logger = 'TASK_END'", map_action="update", end_of_task=True),
+        ),
+    )
+    p = str(tmp_path / "in")
+    for rows in (
+        [(0, "INFO - t - TASK_START - s", 0), (1, "INFO - t - SQL - q - 2", 1),
+         (2, "INFO - t - SQL - q - 2", 2)],
+        [(3, "INFO - t - SQL - q - 8", 3), (4, "INFO - t - TASK_END - e", 4)],
+    ):
+        make_transcript(spark, rows).coalesce(1).write.mode("append").parquet(p)
+    got = _run_stream(
+        spark, p, lambda s: streaming_correlate(s, cfg, shards=3), "shard_avg", max_files=1
+    ).collect()
+    assert [(r.task_id, r.sink, r.nevents) for r in got] == [("t", "completed", 5)]
+    batch = run_pipeline(spark, spark.read.parquet(p), cfg).completed.collect()
+    assert [r.avg_ms for r in batch] == [4.0]
+    assert json.loads(got[0].map_json) == {"avg_ms": 4.0}
+
+
+@pytest.mark.parametrize("aggs", [
+    # one agg name under two fns
+    ((AggSpec("x", "sum", "duration"),), (AggSpec("x", "max", "duration"),)),
+    # an agg name that collides with a sink column
+    ((AggSpec("nevents", "count"),), ()),
+], ids=["conflicting_fn", "reserved_name"])
+def test_streaming_rejects_configs_batch_rejects(spark, tmp_path, aggs):
+    # streaming builds its agg specs with the batch engine's merge, so a
+    # config the batch engine rejects fails here too, before any job runs
+    from logstash_filter_aggregate_spark.config import ConfigurationError
+    from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
+
+    p = str(tmp_path / "in")
+    make_transcript(spark, [(0, "INFO - t - TASK_START - s", 0)]).write.parquet(p)
+    cfg = PipelineConfig(
+        task_id="%{taskid}",
+        rules=(
+            CorrelationRule("start", "logger = 'TASK_START'", aggs=aggs[0]),
+            CorrelationRule("sql", "logger = 'SQL'", aggs=aggs[1]),
+        ),
+    )
+    with pytest.raises(ConfigurationError):
+        streaming_correlate(_stream_src(spark, p), cfg)
+
+
 def _stateful_group_keys(df) -> list[str]:
     plan = df._jdf.queryExecution().analyzed().toString()
     return re.findall(r"FlatMapGroupsInPandasWithState fn\(.*?\)#\d+, \[(\w+)#", plan)
