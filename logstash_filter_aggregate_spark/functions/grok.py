@@ -4,18 +4,16 @@ The reference's docs always pair the aggregate filter with a grok parse
 (``docs/index.asciidoc:50-52``: ``%{LOGLEVEL:loglevel} - %{NOTSPACE:taskid}
 - %{NOTSPACE:logger} - %{WORD:label}( - %{INT:duration:int})?``). Here a
 grok expression compiles to a plain regex with named captures and typed
-casts, applied either:
+casts, and :func:`apply_grok_jvm` applies a first-match-wins pattern
+list as SQL text: one projection that runs in whole-stage codegen, with
+no Python on the row path.
 
-- ``backend="jvm"`` (default): one ``F.regexp_extract`` per capture —
-  stays inside whole-stage codegen, no Python in the hot path at all; or
-- ``backend="pandas"``: a single Arrow-vectorized pandas UDF doing
-  ``Series.str.extract`` once per pattern — one pass over the text, used
-  when Python-only regex features are needed.
-
-Both produce identical columns; tests assert equivalence. Rows matching
-no pattern get a ``_grokparsefailure`` tag (logstash grok convention)
-and NULL captures — they flow through un-extracted (FIXTURES.md
-"freeform" kind).
+Every regex stays in the subset both the Java and the Python dialects
+read the same way: the JVM runs the parse, while the empty-match screen
+of the combined alternation and the tests' reference extractor use
+Python ``re``. Rows matching no pattern get a ``_grokparsefailure`` tag
+(logstash grok convention) and NULL captures — they flow through
+un-extracted (FIXTURES.md "freeform" kind).
 """
 
 from __future__ import annotations
@@ -23,11 +21,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from logstash_filter_aggregate_spark.sqltext import all_of, case, check_literals, ident, quote
 
@@ -216,6 +211,26 @@ class CompiledGrok:
     anchored: bool = True           # ^...$ wrapped (single-pass extraction eligible)
 
 
+def _resolve_refs(dictionary: dict[str, str], names) -> dict[str, str]:
+    """The ``names`` entries of ``dictionary`` with every unnamed
+    ``%{REF}`` expanded (depth first, each entry once)."""
+    done: dict[str, str] = {}
+
+    def expand(name: str, path: tuple[str, ...]) -> str:
+        if name in done:
+            return done[name]
+        if name in path:
+            cycle = " -> ".join(path[path.index(name):] + (name,))
+            raise ValueError(f"grok pattern reference cycle: {cycle}")
+        body = dictionary.get(name)
+        if body is None:
+            raise KeyError(f"unknown grok base pattern %{{{name}}}")
+        done[name] = re.sub(r"%\{(\w+)\}", lambda m: f"(?:{expand(m.group(1), path + (name,))})", body)
+        return done[name]
+
+    return {n: expand(n, ()) for n in names}
+
+
 def compile_grok(
     name: str,
     pattern: str,
@@ -230,27 +245,13 @@ def compile_grok(
     matching grok semantics — e.g. ``( - %{INT:duration:int})?``).
     ``extra_patterns`` adds/overrides base-dictionary entries, like
     logstash's ``patterns_dir`` custom pattern files; entries may
-    themselves reference other patterns (one level of recursion per pass,
-    resolved to a fixpoint).
+    themselves reference other patterns (unnamed ``%{REF}`` only),
+    resolved to any depth. A reference cycle raises ``ValueError``.
     """
+    dictionary = BASE_PATTERNS
     if extra_patterns:
         dictionary = dict(BASE_PATTERNS, **extra_patterns)
-        # resolve %{REF} inside custom definitions (unnamed only)
-        for _ in range(5):
-            changed = False
-            for k, v in dictionary.items():
-                def _res(m: re.Match[str]) -> str:
-                    base = dictionary.get(m.group(1))
-                    if base is None:
-                        raise KeyError(f"unknown grok base pattern %{{{m.group(1)}}}")
-                    return f"(?:{base})"
-                nv = re.sub(r"%\{(\w+)\}", _res, v)
-                if nv != v:
-                    dictionary[k], changed = nv, True
-            if not changed:
-                break
-    else:
-        dictionary = BASE_PATTERNS
+        dictionary.update(_resolve_refs(dictionary, extra_patterns))
     captures: list[str] = []
     types: dict[str, T.DataType] = {}
     alias: dict[str, str] = {}
@@ -302,10 +303,6 @@ def compile_grok(
 _BARRIER_SEED = 0
 
 
-def _cast(col: Column, dtype: T.DataType) -> Column:
-    return col.cast(dtype) if not isinstance(dtype, T.StringType) else col
-
-
 def _cast_sql(expr: str, dtype: T.DataType) -> str:
     return expr if isinstance(dtype, T.StringType) else f"CAST({expr} AS {dtype.simpleString()})"
 
@@ -347,24 +344,30 @@ def _combined_alternation(groks: list[CompiledGrok]):
     ``(combined_regex, total_groups, wrapper_idx[i], cap_idx[(i, cap)])``
     or ``None`` when ineligible:
 
-    - every pattern must be anchored (the single-pass replace+split is
-      only sound anchored — see apply_grok_jvm);
+    - every pattern must be anchored: an unanchored mid-string match
+      would glue the unmatched prefix/suffix onto the first/last capture
+      without changing the split count, so the fallback check could not
+      detect it;
     - no pattern may match the empty string (a matched branch is then
       detected by its wrapper group equalling the full line, which the
-      empty match would make ambiguous with "no match").
+      empty match would make ambiguous with "no match");
+    - no pattern may use a backreference (wrapping renumbers groups);
+    - the list must have at least two groups in all: with one (a single
+      pattern without captures) the matched replacement is the whole
+      line, the same as the unchanged no-match line.
 
     Branch wrapper groups are named ``w<i>``; pattern-local named groups
     are uniquified with a ``q<i>`` prefix (Java requires unique names in
     one regex). Alternation order = list order, and Java alternation
     prefers the leftmost matching branch, which is exactly
     break_on_match."""
-    if len(groks) < 2 or not all(g.anchored for g in groks):
+    if not groks or not all(g.anchored for g in groks):
         return None
     bodies: list[str] = []
     for pi, g in enumerate(groks):
         body = g.regex[1:-1]  # strip the ^...$ wrap
         if re.search(r"\\\d|\\k<", body):
-            return None  # backreferences would renumber — per-pattern path
+            return None  # backreferences would renumber
         py = re.sub(r"\(\?<([A-Za-z])", r"(?P<\1", body)
         try:
             if re.fullmatch(py, "") is not None:
@@ -374,11 +377,13 @@ def _combined_alternation(groks: list[CompiledGrok]):
         bodies.append(re.sub(r"\(\?<([A-Za-z])", rf"(?<q{pi}\1", body))
     combined = "^(?:" + "|".join(f"(?<w{pi}>{b})" for pi, b in enumerate(bodies)) + ")$"
     total, named = _group_indices(combined)
+    if total < 2:
+        return None
     wrapper_idx: list[int] = []
     cap_idx: dict[tuple[int, str], int] = {}
     for pi, g in enumerate(groks):
         if f"w{pi}" not in named:
-            return None  # name mangling failed — use the per-pattern path
+            return None  # name mangling failed
         wrapper_idx.append(named[f"w{pi}"])
         for sanitized, cap in g.alias.items():
             key = f"q{pi}{sanitized}"
@@ -399,15 +404,18 @@ def _all_caps_typed(groks: list[CompiledGrok]) -> dict[str, T.DataType]:
     return all_caps
 
 
-def _apply_grok_jvm_combined(
-    df: DataFrame, text_col: str, groks: list[CompiledGrok], comb
-) -> DataFrame:
-    """Single-regex-run fast path for an anchored multi-pattern list: one
-    ``regexp_replace`` over the combined alternation rewrites the row into
-    a ``\\x01``-joined list of EVERY pattern's capture groups (the engine
-    stops at the first matching branch, so a row costs only the failed
-    prefixes plus its winner — vs. the per-pattern path's P ``rlike``
-    full runs PLUS a winner re-run). Then:
+def apply_grok_jvm(df: DataFrame, text_col: str, groks: list[CompiledGrok]) -> DataFrame:
+    """First-match-wins over the pattern list (grok break_on_match); all
+    captures become columns, ``grok_pattern`` names the winner and
+    ``parse_tags`` holds ``_grokparsefailure`` for rows no pattern matches.
+
+    SQL text only, so the parse runs in whole-stage codegen with no
+    Python on the row path. For an eligible list (:func:`_combined_alternation`)
+    one ``regexp_replace`` over the combined alternation rewrites the row
+    into a ``\\x01``-joined list of EVERY pattern's capture groups (the
+    engine stops at the first matching branch, so a row costs only the
+    failed prefixes plus its winner), and one ``split`` turns it into the
+    ``_ca`` array. Then:
 
     - match detection: the split count equals the combined group count
       (a no-match replace returns the input line unchanged);
@@ -417,27 +425,35 @@ def _apply_grok_jvm_combined(
       bytes can never have a split PIECE equal to the WHOLE line, so it
       safely reads as no-match);
     - rows whose captured values legitimately contain ``\\x01`` (split
-      count disagrees) fall back to per-capture ``regexp_extract`` +
-      ``rlike`` winner flags, evaluated lazily only on those rows.
+      count disagrees) fall back to ``rlike`` winner flags and
+      per-capture ``regexp_extract``, evaluated lazily only on those rows.
 
-    '' captures become true NULLs (``nullif``), covering both empty
-    optional groups and unmatched branches — identical to the
-    per-pattern path; tests pin equivalence on all three backends."""
+    An ineligible list (unanchored, empty-matchable or backreferencing
+    patterns) emits no ``_ca``: every row takes the fallback. '' captures
+    become true NULLs (``nullif``), covering both empty optional groups
+    and unmatched branches."""
     check_literals(df)
-    regex, total, wrapper_idx, cap_idx = comb
-    DELIM = "\x01"
     text = ident(text_col)
     base = df.columns
-    rep = DELIM.join(f"${i}" for i in range(1, total + 1))
-    # shuffle() on a 1-element array: the same optimizer barrier as the
-    # per-pattern path (see apply_grok_jvm) — without it the expensive
-    # extraction is inlined into every downstream consumer
-    df = df.selectExpr(
-        "*",
-        f"element_at(shuffle(array(split(regexp_replace({text}, {quote(regex)}, "
-        f"{quote(rep)}), {quote(DELIM)}, -1)), {_BARRIER_SEED}), 1) AS _ca",
-    )
-    clean = f"size(_ca) = {total}"
+    comb = _combined_alternation(groks)
+    clean = None
+    if comb is not None:
+        regex, total, wrapper_idx, cap_idx = comb
+        DELIM = "\x01"
+        rep = DELIM.join(f"${i}" for i in range(1, total + 1))
+        # shuffle() on a 1-element array is a semantic identity but is
+        # marked non-deterministic, so Catalyst's CollapseProject /
+        # predicate pushdown do NOT inline this expensive extraction into
+        # every downstream consumer (observed without the barrier: 51
+        # textual copies of the regexp_replace in the executed correlation
+        # plan, tripling the stage; a plain rand()>-1 guard gets
+        # constant-folded away). Retries recompute identical values.
+        df = df.selectExpr(
+            "*",
+            f"element_at(shuffle(array(split(regexp_replace({text}, {quote(regex)}, "
+            f"{quote(rep)}), {quote(DELIM)}, -1)), {_BARRIER_SEED}), 1) AS _ca",
+        )
+        clean = f"size(_ca) = {total}"
 
     # the winner flags get a projection of their own: each is read by
     # several captures, so the optimizer keeps them computed once
@@ -445,9 +461,10 @@ def _apply_grok_jvm_combined(
     earlier: list[str] = []  # NOT (earlier pattern matches)
     for pi, g in enumerate(groks):
         match = f"{text} RLIKE {quote(g.regex)}"
-        fallback = all_of([match, all_of(earlier)]) if earlier else match
+        winner = all_of([match, all_of(earlier)]) if earlier else match
         earlier.append(f"NOT ({match})")
-        winner = case([(clean, f"element_at(_ca, {wrapper_idx[pi]}) = {text}")], fallback)
+        if clean is not None:
+            winner = case([(clean, f"element_at(_ca, {wrapper_idx[pi]}) = {text}")], winner)
         winner_cols.append(f"{winner} AS {ident('_w_' + g.name)}")
     df = df.selectExpr("*", *winner_cols)
 
@@ -458,10 +475,9 @@ def _apply_grok_jvm_combined(
             g = groks[pi]
             if cap not in g.captures:
                 continue
-            raw = case(
-                [(clean, f"element_at(_ca, {cap_idx[(pi, cap)]})")],
-                f"regexp_extract({text}, {quote(g.regex)}, {g.group_index[cap]})",
-            )
+            raw = f"regexp_extract({text}, {quote(g.regex)}, {g.group_index[cap]})"
+            if clean is not None:
+                raw = case([(clean, f"element_at(_ca, {cap_idx[(pi, cap)]})")], raw)
             val = _cast_sql(f"nullif({raw}, '')", dtype)
             expr = case([(ident("_w_" + g.name), val)], expr)
         cap_cols.append(f"{expr} AS {ident(cap)}")
@@ -479,176 +495,3 @@ def _apply_grok_jvm_combined(
             "CAST(array() AS ARRAY<STRING>)",
         ) + " AS parse_tags",
     )
-
-
-def apply_grok_jvm(df: DataFrame, text_col: str, groks: list[CompiledGrok]) -> DataFrame:
-    """First-match-wins over the pattern list; all captures become columns.
-
-    JVM-side, zero Python, whole-stage codegen throughout. The winning
-    pattern's groups are all extracted in a SINGLE regex execution: an
-    anchored ``regexp_replace`` rewrites the matched line into a
-    ``\\x01``-joined list of its capture groups (``$1..$N`` Java
-    back-references — unmatched optional groups substitute ''), then one
-    ``split`` + ``element_at`` per capture. That is 1 regex run per row
-    for extraction instead of one ``regexp_extract`` (= one full match)
-    per capture — on the canonical 5-capture task pattern the parse
-    stage drops from ~8 to ~4 regex executions per row.
-
-    Captures are gated behind winner flags (``rlike`` match minus any
-    earlier pattern's match — grok break_on_match), so only the winning
-    pattern pays its replace. '' captures become true NULLs (``nullif``),
-    covering both empty optional groups and no-match. If a matched line
-    legitimately contains the \\x01 delimiter byte inside a captured
-    value, the split count disagrees with the group count and that row
-    falls back to per-capture ``regexp_extract`` — correct on any input,
-    fast on the 100%-of-real-logs path.
-    """
-    comb = _combined_alternation(groks)
-    if comb is not None:
-        # anchored multi-pattern list: one combined-alternation regex run
-        # per row replaces P rlikes + a winner replace (guide §1.2 "per-
-        # task work"); ineligible lists (unanchored, empty-matchable,
-        # backreferences) keep the per-pattern path below
-        return _apply_grok_jvm_combined(df, text_col, groks, comb)
-
-    DELIM = "\x01"
-    text = F.col(text_col)
-    match_flags = [text.rlike(g.regex).alias(f"_m_{g.name}") for g in groks]
-
-    # winner flag per pattern: matched AND no earlier pattern matched
-    winner_flags: list[Column] = []
-    no_earlier: Column = F.lit(True)
-    for g in groks:
-        winner_flags.append((F.col(f"_m_{g.name}") & no_earlier).alias(f"_w_{g.name}"))
-        no_earlier = no_earlier & ~F.col(f"_m_{g.name}")
-
-    # highest named-group index per pattern (groups past it are never read)
-    max_idx = {g.name: (max(g.group_index.values()) if g.group_index else 0) for g in groks}
-    arr_cols: list[Column] = []
-    for g in groks:
-        # the replace+split single pass is only sound for ANCHORED groks:
-        # an unanchored mid-string match would glue the unmatched prefix/
-        # suffix onto the first/last capture without changing the split
-        # count, so the fallback check could not detect it — unanchored
-        # patterns use per-capture regexp_extract (correct for substrings)
-        if max_idx[g.name] == 0 or not g.anchored:
-            continue
-        rep = DELIM.join(f"${i}" for i in range(1, max_idx[g.name] + 1))
-        # shuffle() on a 1-element array is a semantic identity but is
-        # marked non-deterministic, so Catalyst's CollapseProject /
-        # predicate pushdown do NOT inline this expensive extraction into
-        # every downstream consumer (observed without the barrier: 51
-        # textual copies of the regexp_replace in the executed correlation
-        # plan, tripling the stage — the whole point of the single-pass
-        # extraction is ONE regex run per row; a plain rand()>-1 guard gets
-        # constant-folded away). Retries recompute identical values.
-        extracted = F.when(
-            F.col(f"_w_{g.name}"),
-            F.split(F.regexp_replace(text, g.regex, rep), DELIM, -1),
-        )
-        arr_cols.append(
-            F.element_at(F.shuffle(F.array(extracted), _BARRIER_SEED), 1).alias(f"_a_{g.name}")
-        )
-
-    df = df.select("*", *match_flags)
-    df = df.select("*", *winner_flags, *arr_cols)
-
-    cap_cols: list[Column] = []
-    for cap, dtype in _all_caps_typed(groks).items():
-        expr: Column = F.lit(None).cast(dtype)
-        # reversed: earlier patterns win (grok break_on_match)
-        for g in reversed(groks):
-            if cap not in g.captures:
-                continue
-            idx = g.group_index[cap]
-            if g.anchored:
-                arr = F.col(f"_a_{g.name}")
-                raw = F.when(
-                    F.size(arr) == max_idx[g.name], F.element_at(arr, idx)
-                ).otherwise(F.regexp_extract(text, g.regex, idx))
-            else:
-                raw = F.regexp_extract(text, g.regex, idx)
-            val = _cast(F.nullif(raw, F.lit("")), dtype)
-            expr = F.when(F.col(f"_w_{g.name}"), val).otherwise(expr)
-        cap_cols.append(expr.alias(cap))
-
-    matched_name = F.lit(None).cast(T.StringType())
-    for g in reversed(groks):
-        matched_name = F.when(F.col(f"_m_{g.name}"), F.lit(g.name)).otherwise(matched_name)
-
-    out = df.select(
-        *[c for c in df.columns if not c.startswith(("_m_", "_w_", "_a_"))],
-        *cap_cols,
-        matched_name.alias("grok_pattern"),
-        F.when(matched_name.isNull(), F.array(F.lit("_grokparsefailure")))
-        .otherwise(F.array().cast(T.ArrayType(T.StringType())))
-        .alias("parse_tags"),
-    )
-    return out
-
-
-def apply_grok_pandas(df: DataFrame, text_col: str, groks: list[CompiledGrok]) -> DataFrame:
-    """Same semantics via one Arrow-vectorized pandas UDF returning a
-    struct of all captures + matched pattern name — a single pass over
-    the text per pattern (``Series.str.extract``), never per-row Python.
-    """
-    all_caps: dict[str, T.DataType] = {}
-    for g in groks:
-        for c in g.captures:
-            all_caps.setdefault(c, g.types[c])
-    fields = [T.StructField(c, dt, True) for c, dt in all_caps.items()]
-    fields.append(T.StructField("grok_pattern", T.StringType(), True))
-    out_type = T.StructType(fields)
-    # pre-serialize for closure capture
-    # Java uses (?<name>...), Python (?P<name>...) — translate (leaving
-    # lookbehinds (?<= / (?<! untouched).
-    compiled = [
-        (g.name, re.sub(r"\(\?<([A-Za-z])", r"(?P<\1", g.regex), list(g.captures),
-         dict(g.alias), {c: all_caps[c].simpleString() for c in g.captures})
-        for g in groks
-    ]
-
-    @pandas_udf(out_type)
-    def grok_extract(texts: pd.Series) -> pd.DataFrame:
-        out = pd.DataFrame(index=texts.index)
-        for cap in all_caps:
-            out[cap] = pd.Series([None] * len(texts), index=texts.index, dtype=object)
-        out["grok_pattern"] = pd.Series([None] * len(texts), index=texts.index, dtype=object)
-        unmatched = pd.Series(True, index=texts.index)
-        for name, rx, caps, alias_map, cap_types in compiled:
-            if not unmatched.any():
-                break
-            sub = texts[unmatched]
-            hit = sub.str.match(rx, na=False)
-            hit_idx = sub.index[hit]
-            ext = sub.str.extract(rx, expand=True).rename(columns=alias_map) if caps else None
-            for cap in caps:
-                vals = ext.loc[hit_idx, cap]
-                tname = cap_types[cap]
-                if tname in ("bigint", "int"):
-                    vals = pd.to_numeric(vals, errors="coerce").astype("Int64")
-                elif tname == "double":
-                    vals = pd.to_numeric(vals, errors="coerce")
-                out.loc[hit_idx, cap] = vals
-            out.loc[hit_idx, "grok_pattern"] = name
-            unmatched.loc[hit_idx] = False
-        # normalize numeric dtypes for Arrow
-        for cap, dt in all_caps.items():
-            if isinstance(dt, T.LongType):
-                out[cap] = pd.to_numeric(out[cap], errors="coerce").astype("Int64")
-            elif isinstance(dt, T.DoubleType):
-                out[cap] = pd.to_numeric(out[cap], errors="coerce").astype("float64")
-        return out
-
-    struct = grok_extract(F.col(text_col)).alias("_grok")
-    df = df.select("*", struct)
-    caps = [F.col(f"_grok.{c}").alias(c) for c in all_caps]
-    out = df.select(
-        *[c for c in df.columns if c != "_grok"],
-        *caps,
-        F.col("_grok.grok_pattern").alias("grok_pattern"),
-        F.when(F.col("_grok.grok_pattern").isNull(), F.array(F.lit("_grokparsefailure")))
-        .otherwise(F.array().cast(T.ArrayType(T.StringType())))
-        .alias("parse_tags"),
-    )
-    return out

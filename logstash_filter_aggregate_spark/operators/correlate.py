@@ -286,6 +286,11 @@ def aggregate_sessions(guarded: DataFrame, cfg: PipelineConfig) -> DataFrame:
         "creation_ts", "lastevent_ts", "nevents", "conv_id", "close_kind", "end_ts",
         "end_turn_idx", "_session_timeout", "_session_inactivity", "_is_last",
     ]
+    if cfg.push_previous_map_as_event:
+        # the map's last row in arrival order: the final flush tags the
+        # map holding the globally last row (split_sessions)
+        aggs.append(f"max(CASE WHEN _included THEN struct({lastevent_src} AS ts, conv_id, turn_idx) END) AS _last_row")
+        names.append("_last_row")
     avg_names: list[str] = []
     for n, (fn, srcs) in merged.items():
         if fn == "avg":
@@ -332,7 +337,7 @@ def route_sessions(
 
 # helper columns close_sessions adds; every bucket drops them
 _ROUTE_COLS = ["_end_seg", "_gap_seg", "_age_seg", "_is_last", "_watermark",
-               "_session_timeout", "_session_inactivity", "close_kind"]
+               "_session_timeout", "_session_inactivity", "close_kind", "_last_row"]
 
 
 def close_sessions(
@@ -419,15 +424,16 @@ def split_sessions(sessions: DataFrame, cfg: PipelineConfig) -> RoutedSessions:
         # (guaranteed by the pop-on-creation discipline), every
         # non-completed map is pushed via create_timeout_event — by the
         # next map creation (pop), by same-task expiry-on-arrival, or at
-        # final flush; only the globally last-created map gets the
-        # shutdown tag (aggregate.rb:348-351, O20).
+        # final flush. The map live at shutdown is the one holding the
+        # last row in arrival order, if that map was not closed: only it
+        # gets the shutdown tag (aggregate.rb:348-351, O20).
         pushed = sessions.where("close_reason IN ('timeout', 'open')")
-        # globally-last-created map via broadcast agg (a partition-less
-        # window would drag every session through one partition)
-        glast = pushed.agg(F.expr("max(struct(creation_ts, task_id)) AS _g"))
+        # the global last row via broadcast agg (a partition-less window
+        # would drag every session through one partition)
+        glast = sessions.agg(F.expr("max(_last_row) AS _g"))
         pushed = with_columns(
             pushed.crossJoin(F.broadcast(glast)),
-            {"_g_last": "_g = struct(creation_ts, task_id)"},
+            {"_g_last": "_g = _last_row"},
             drop=["_g"],
         )
         timeout = _timeout_event(pushed, cfg, final_col="_g_last", drop=[*_ROUTE_COLS, "_g_last"])

@@ -23,7 +23,6 @@ def run_multi(
     transcripts: DataFrame,
     configs: list[PipelineConfig],
     groks=None,
-    parse_backend: str = "jvm",
     **kwargs,
 ) -> dict[str, PipelineOutputs]:
     """One outputs bundle per pattern_id. Same task-id value under two
@@ -46,11 +45,10 @@ def run_multi(
     validate_configs(configs)
     shared = len(configs) > 1
     if shared:
-        transcripts = parse(transcripts, groks, backend=parse_backend).localCheckpoint(eager=False)
+        transcripts = parse(transcripts, groks).localCheckpoint(eager=False)
     return {
         cfg.pattern_id: run_pipeline(
-            spark, transcripts, cfg, groks=groks, parse_backend=parse_backend,
-            pre_parsed=shared, **kwargs,
+            spark, transcripts, cfg, groks=groks, pre_parsed=shared, **kwargs,
         )
         for cfg in configs
     }

@@ -25,7 +25,6 @@ from logstash_filter_aggregate_spark.config import (
 from logstash_filter_aggregate_spark.functions.grok import (
     CompiledGrok,
     apply_grok_jvm,
-    apply_grok_pandas,
     compile_grok,
 )
 from logstash_filter_aggregate_spark.operators.classify import classify
@@ -98,13 +97,8 @@ def compile_groks(patterns: list[tuple[str, str]] | None = None) -> list[Compile
     return [compile_grok(n, p) for n, p in (patterns or DEFAULT_GROKS)]
 
 
-def parse(df: DataFrame, groks: list[CompiledGrok] | None = None, backend: str = "jvm") -> DataFrame:
-    groks = groks or compile_groks()
-    if backend == "jvm":
-        return apply_grok_jvm(df, "text", groks)
-    if backend == "pandas":
-        return apply_grok_pandas(df, "text", groks)
-    raise ValueError(f"unknown parse backend {backend!r}")
+def parse(df: DataFrame, groks: list[CompiledGrok] | None = None) -> DataFrame:
+    return apply_grok_jvm(df, "text", groks or compile_groks())
 
 
 def enrich(df: DataFrame, dims: dict[str, DataFrame] | None = None) -> DataFrame:
@@ -269,7 +263,6 @@ def run_pipeline(
     cfg: PipelineConfig,
     groks: list[CompiledGrok] | None = None,
     dims: dict[str, DataFrame] | None = None,
-    parse_backend: str = "jvm",
     open_maps: DataFrame | None = None,
     prereduce_s: float | None = None,
     prereduce_assume_no_expiry: bool = False,
@@ -300,7 +293,7 @@ def run_pipeline(
     from logstash_filter_aggregate_spark.plans.resume import inject_seeds
 
     release_pipeline_caches()  # this run persists its own frames below
-    parsed = transcripts if pre_parsed else parse(transcripts, groks, backend=parse_backend)
+    parsed = transcripts if pre_parsed else parse(transcripts, groks)
     parsed = enrich(parsed, dims)
     classified = classify(parsed, cfg)
     # rules whose code side-effects (emit / exception tag / cancel) are

@@ -1,24 +1,16 @@
 """Structured Streaming variant (SURVEY.md §7 item 5).
 
-Two forms, matching how much of the reference's semantics a stream
-needs:
-
-- :func:`session_window_aggregate` — the pure gap-session shape
-  (docs example #3/#5, no end-events): built-in
-  ``F.session_window(ts, gap)`` + watermark. Fully Catalyst-native,
-  state handled by Spark's streaming aggregation.
-
-- :func:`streaming_correlate` / :func:`streaming_passthrough` — the full
-  map lifecycle (``map_action`` guards, ``end_of_task``, duplicate-start,
-  timeouts) via ``applyInPandasWithState``. State is keyed by shard,
-  ``_shard = pmod(xxhash64(_task_id), shards)``: one state row per shard
-  holds the cells of every live task hashing into it, each cell being
-  the reference's per-task map (``aggregate.rb:199-246``). One Python
-  call per shard per micro-batch runs the reference's serial algorithm
-  over every task of the shard (:mod:`streaming.shard`), so the
-  per-call framework cost is paid per shard, not per task. The batch
-  engine remains the correctness reference; tests assert the streaming
-  results match it on the same input.
+:func:`streaming_correlate` / :func:`streaming_passthrough` run the full
+map lifecycle (``map_action`` guards, ``end_of_task``, duplicate-start,
+inactivity and absolute timeouts) via ``applyInPandasWithState``. State
+is keyed by shard, ``_shard = pmod(xxhash64(_task_id), shards)``: one
+state row per shard holds the cells of every live task hashing into it,
+each cell being the reference's per-task map (``aggregate.rb:199-246``).
+One Python call per shard per micro-batch runs the reference's serial
+algorithm over every task of the shard (:mod:`streaming.shard`), so the
+per-call framework cost is paid per shard, not per task. The batch
+engine remains the correctness reference; tests assert the streaming
+results match it on the same input.
 
 The parse/classify stages are the same Catalyst expressions as batch —
 they work unchanged on a streaming DataFrame.
@@ -39,11 +31,11 @@ from logstash_filter_aggregate_spark.config import PipelineConfig
 from logstash_filter_aggregate_spark.operators.classify import classify
 from logstash_filter_aggregate_spark.operators.correlate import (
     _merged_agg_specs,
-    _value_expr,
     emit_col_name,
     value_col_name,
 )
 from logstash_filter_aggregate_spark.plans.pipeline import compile_groks, parse
+from logstash_filter_aggregate_spark.sqltext import with_columns
 
 # State shards of every streaming query that keeps task state: 16 per
 # core on a 4-core machine (MIGRATION.md's sizing). A constant, not
@@ -80,60 +72,6 @@ OUTPUT_SCHEMA = T.StructType(
         T.StructField("map_json", T.StringType()),  # the reference's map, as JSON
     ]
 )
-
-
-def session_window_aggregate(
-    stream_df: DataFrame,
-    cfg: PipelineConfig,
-    watermark: str = "10 minutes",
-    groks=None,
-) -> DataFrame:
-    """Gap sessions with the built-in session_window (O10 streaming form).
-    Emits one row per closed session once the watermark passes its end."""
-    parsed = parse(stream_df, groks or compile_groks())
-    classified = classify(parsed, cfg)
-    part = classified.where(F.col("_task_id").isNotNull() & F.col("_rule_id").isNotNull())
-    gap = f"{cfg.effective_inactivity_timeout} seconds"
-    # event-time order key for order-sensitive fns: streaming aggregation
-    # is unordered, so first/last/collect_list ride on a struct min/max
-    # over this key — same `_ord` discipline as the batch engine.
-    ord_key = F.struct(F.col("ts"), F.col("conv_id"), F.col("turn_idx"))
-    aggs = []
-    for name, (fn, sources) in _merged_agg_specs(cfg).items():
-        val = _value_expr(sources)
-        if fn == "count":
-            aggs.append(F.count(F.when(F.col("_rule_id").isin([r for r, _ in sources]), 1)).alias(name))
-        elif fn == "first":
-            # first non-null in EVENT-TIME order (not min-by-value)
-            aggs.append(
-                F.min(F.when(val.isNotNull(), F.struct(ord_key.alias("o"), val.alias("v"))))["v"].alias(name)
-            )
-        elif fn == "last":
-            aggs.append(
-                F.max(F.when(val.isNotNull(), F.struct(ord_key.alias("o"), val.alias("v"))))["v"].alias(name)
-            )
-        elif fn in ("collect_list", "collect_set"):
-            items = F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.when(val.isNotNull(), F.struct(ord_key.alias("o"), val.alias("v")))
-                    )
-                ),
-                lambda x: x["v"],
-            )
-            aggs.append((F.array_distinct(items) if fn == "collect_set" else items).alias(name))
-        else:
-            aggs.append(getattr(F, fn)(val).alias(name))
-    return (
-        part.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), F.col("_task_id").alias("task_id"))
-        .agg(
-            F.min("ts").alias("creation_ts"),
-            F.max("ts").alias("lastevent_ts"),
-            F.count(F.lit(1)).alias("nevents"),
-            *aggs,
-        )
-    )
 
 
 def _norm(v):
@@ -594,7 +532,7 @@ def replay_push_previous(
         raise ValueError("cfg must set push_previous_map_as_event=True")
     schema = spark.read.parquet(input_dir).schema
     state_root = f"{base_path}/_pp_state"
-    seg_drop = ["_end_seg", "_gap_seg", "_age_seg", "_is_last", "close_kind"]
+    seg_drop = ["_end_seg", "_gap_seg", "_age_seg", "_is_last", "close_kind", "_last_row"]
 
     def _latest_state(before: int) -> str | None:
         if not os.path.isdir(state_root):
@@ -632,38 +570,16 @@ def replay_push_previous(
             inline = sessions.where(F.col("close_kind") == "custom0")
             cand = sessions.where(F.col("close_kind").isNull())
             # The carried map is the one live AFTER the batch's LAST row in
-            # arrival order — i.e. the last (ts, conv_id, turn_idx) row's
-            # task, and that task's ordinally-last session. creation_ts is
-            # NOT a valid arrival proxy (two maps created at the same ts
-            # would tie and the lexically-larger task id would wrongly be
-            # carried — and then wrongly merged with its continuation).
-            lr = corr.agg(
-                F.max(
-                    F.struct("ts", "conv_id", "turn_idx", F.col(TASK_ID_COL).alias("t"))
-                ).alias("m")
-            ).first()["m"]
-            mseg = None
-            if lr is not None:
-                seg = F.struct("_end_seg", "_gap_seg", "_age_seg")
-                # mseg can only be None if every row of the last task was
-                # guard-excluded — impossible under push_previous configs
-                # (all rules create_or_update, validated)
-                mseg = (
-                    sessions.where(F.col("task_id") == lr["t"])
-                    .agg(F.max(seg).alias("m")).first()["m"]
-                )
-            if mseg is None:
-                cand = cand.withColumn("_last", F.lit(False))
-            else:
-                # if the last row's session CLOSED (end/custom0), that seg
-                # is not in cand — no live map is carried, correctly
-                cand = cand.withColumn(
-                    "_last",
-                    (F.col("task_id") == F.lit(lr["t"]))
-                    & (F.col("_end_seg") == F.lit(mseg["_end_seg"]))
-                    & (F.col("_gap_seg") == F.lit(mseg["_gap_seg"]))
-                    & (F.col("_age_seg") == F.lit(mseg["_age_seg"])),
-                )
+            # arrival order: the map holding the max (ts, conv_id, turn_idx)
+            # row, chosen as split_sessions chooses the final-flush map.
+            # If that map CLOSED (end/custom0) it is not in cand, so no
+            # live map is carried.
+            glast = sessions.agg(F.expr("max(_last_row) AS _g"))
+            cand = with_columns(
+                cand.crossJoin(F.broadcast(glast)),
+                {"_last": "coalesce(_g = _last_row, false)"},
+                drop=["_g"],
+            )
             pushed = _timeout_event(
                 cand.where(~F.col("_last")).drop("_last"), cfg, final_col=None
             ).drop(*seg_drop, "_session_timeout", "_session_inactivity")

@@ -1,13 +1,10 @@
-"""Grok compilation + parse backends (U1; docs/index.asciidoc:50-52,165)."""
+"""Grok compilation + the SQL-text parse (U1; docs/index.asciidoc:50-52,165)."""
 
-import pandas as pd
+import re
+
 import pytest
 
-from logstash_filter_aggregate_spark.functions.grok import (
-    apply_grok_jvm,
-    apply_grok_pandas,
-    compile_grok,
-)
+from logstash_filter_aggregate_spark.functions.grok import apply_grok_jvm, compile_grok
 from logstash_filter_aggregate_spark.plans.pipeline import DEFAULT_GROKS, compile_groks
 from tests.conftest import make_transcript
 
@@ -41,25 +38,16 @@ ROWS = [
 ]
 
 
-@pytest.mark.parametrize("backend", ["jvm", "pandas"])
+# one-value parametrization kept only so the test id stays test_parse_captures[jvm]
+@pytest.mark.parametrize("backend", ["jvm"])
 def test_parse_captures(spark, backend):
     df = make_transcript(spark, ROWS)
-    groks = compile_groks()
-    fn = apply_grok_jvm if backend == "jvm" else apply_grok_pandas
-    out = {r.turn_idx: r for r in fn(df, "text", groks).collect()}
+    out = {r.turn_idx: r for r in apply_grok_jvm(df, "text", compile_groks()).collect()}
     assert out[0].logger == "TASK_START" and out[0].duration is None
     assert out[1].duration == 12 and out[1].grok_pattern == "task"
     assert out[2].click_target == "One" and out[2].grok_pattern == "click"
     assert out[3].err_code == 503 and out[3].err_tool == "http"
     assert out[4].grok_pattern is None and out[4].parse_tags == ["_grokparsefailure"]
-
-
-def test_backends_agree(spark):
-    df = make_transcript(spark, ROWS)
-    groks = compile_groks()
-    a = apply_grok_jvm(df, "text", groks).orderBy("turn_idx").toPandas()
-    b = apply_grok_pandas(df, "text", groks).orderBy("turn_idx").toPandas()[a.columns]
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_default_dictionary_order_specific_first():
@@ -75,9 +63,22 @@ def test_custom_pattern_dictionary(spark):
         extra_patterns={"SESSIONID": r"S-%{INT}-%{WORD}"},
     )
     df = make_transcript(spark, [(0, "S-42-abc GET", 0)])
-    from logstash_filter_aggregate_spark.functions.grok import apply_grok_jvm
     r = apply_grok_jvm(df, "text", [g]).first()
     assert r.sid == "S-42-abc" and r.verb == "GET"
+
+
+def test_custom_pattern_cycle_raises():
+    with pytest.raises(ValueError, match="cycle: A -> B -> A"):
+        compile_grok("c", "%{A:x}", extra_patterns={"A": "%{B}", "B": "%{A}"})
+
+
+def test_custom_pattern_deep_chain_resolves():
+    # P0 -> P1 -> ... -> P40 -> INT, declared in chain order
+    extra = {f"P{i}": f"%{{P{i + 1}}}" for i in range(40)}
+    extra["P40"] = "%{INT}"
+    g = compile_grok("deep", "%{P0:v:int}", extra_patterns=extra)
+    assert "%{" not in g.regex
+    assert re.fullmatch(g.regex.replace("(?<", "(?P<"), "42")
 
 
 SAMPLE_LINES = {
@@ -120,14 +121,12 @@ def test_group_index_counting_matches_python_re():
     # extract fallback), so compile_grok's group-index counter must agree
     # with the regex engine exactly — including escaped \( literals, (
     # inside character classes, plain user groups, and lookarounds
-    import re as _re
-
     g = compile_grok(
         "tricky",
         r"\(%{WORD:a}\) [()x]+ (?=u)(u(?:v)?)%{INT:b:int}(?<!y) %{WORD:c}",
         anchored=False,
     )
-    compiled = _re.compile(g.regex.replace("(?<", "(?P<").replace("(?P<=", "(?<=").replace("(?P<!", "(?<!"))
+    compiled = re.compile(g.regex.replace("(?<", "(?P<").replace("(?P<=", "(?<=").replace("(?P<!", "(?<!"))
     # python's numbering of the named groups must equal ours
     py_index = {g.alias[name]: idx for name, idx in compiled.groupindex.items()}
     assert py_index == g.group_index
@@ -160,15 +159,14 @@ def test_delimiter_byte_in_captured_value_falls_back(spark):
 
 
 def test_every_base_pattern_compiles_both_dialects():
-    # every dictionary entry must be valid in BOTH regex dialects the two
-    # backends use: Python re (pandas backend) and, structurally, Java —
-    # approximated by rejecting Python-only constructs ((?P<, (?#, \A..)
-    import re as _re
-
+    # every dictionary entry must be valid in BOTH regex dialects: Java
+    # runs the parse, Python re runs the empty-match screen and the
+    # reference extractor below — Java approximated by rejecting
+    # Python-only constructs ((?P<, (?#, \A..)
     from logstash_filter_aggregate_spark.functions.grok import BASE_PATTERNS
 
     for name, rx in BASE_PATTERNS.items():
-        _re.compile(rx)  # python dialect
+        re.compile(rx)  # python dialect
         assert "(?P<" not in rx and "(?#" not in rx, name
 
 
@@ -202,59 +200,120 @@ def test_common_apache_log_composite(spark):
     assert r.verb == "GET" and r.request == "/apache_pb.gif"
     assert r.response == 200 and r.bytes == 2326
     assert r.referrer == '"http://www.example.com/start.html"'
-    # pandas backend parses the same line identically
-    p = apply_grok_pandas(df, "text", [g]).first()
-    assert (p.clientip, p.verb, p.response, p.bytes) == (r.clientip, r.verb, r.response, r.bytes)
 
 
-def test_combined_alternation_equivalence(spark):
-    """The single-regex-run combined path (multi-pattern anchored lists)
-    must match the per-pattern path and the pandas backend row for row,
-    including the fallback rows (delimiter byte in a capture, empty text,
-    NULL text, no-match with many delimiter bytes)."""
+def _reference_parse(rows, groks):
+    """Grok break_on_match with Python ``re``, one row at a time: the
+    independent reference for the SQL projection. Same output contract:
+    '' captures read as NULL, typed captures cast, unmatched rows tagged."""
+    casts = {"bigint": int, "double": float, "string": str}
+    out = {}
+    for turn_idx, text, _ in rows:
+        got = {"grok_pattern": None, "parse_tags": ["_grokparsefailure"]}
+        for g in groks:
+            for c in g.captures:
+                got.setdefault(c, None)
+        for g in groks:
+            m = None if text is None else re.search(re.sub(r"\(\?<([A-Za-z])", r"(?P<\1", g.regex), text)
+            if m is None:
+                continue
+            for c in g.captures:
+                v = m.group(g.group_index[c])
+                got[c] = casts[g.types[c].simpleString()](v) if v else None
+            got["grok_pattern"], got["parse_tags"] = g.name, []
+            break
+        out[turn_idx] = got
+    return out
+
+
+EQUIVALENCE_ROWS = [
+    (0, "INFO - t1 - TASK_START - begin", 0),
+    (1, "INFO - t1 - SQL - query - 42", 0),
+    (2, "WARN - t2 - TOOL - bash - E17", 0),
+    (3, "INFO - u9 - Clicked checkout", 0),
+    (4, "garbage line", 0),
+    (5, "", 0),
+    (6, None, 0),
+    (7, "INFO - t\x013 - SQL - q - 1", 0),   # delimiter inside taskid
+    (8, "INFO - t1 - SQL - query", 0),        # optional capture absent
+    (9, "\x01\x01" * 20, 0),                  # many delimiters, no match
+]
+
+_CLICK = dict(DEFAULT_GROKS)["click"]
+GROK_LISTS = {
+    "default": lambda: compile_groks(),
+    "single_anchored": lambda: [compile_grok("task", TASK_PATTERN)],
+    # one group in all: the combined replace cannot tell a match from none
+    "single_no_capture": lambda: [compile_grok("lvl", r"%{LOGLEVEL} - .+")],
+    "unanchored_mix": lambda: [
+        compile_grok("tool", r"TOOL - %{WORD:err_tool}", anchored=False),
+        compile_grok("task", TASK_PATTERN),
+    ],
+    "empty_matchable_mix": lambda: [
+        compile_grok("click", _CLICK),
+        compile_grok("any", r"%{DATA:rest}"),
+    ],
+    "backreference_mix": lambda: [
+        compile_grok("click", _CLICK),
+        compile_grok("rep", r"(\S)\1*%{GREEDYDATA:tail}"),
+    ],
+}
+
+
+@pytest.mark.parametrize("shape", sorted(GROK_LISTS))
+def test_parse_matches_python_reference(spark, shape):
+    """The SQL projection equals a per-row Python ``re`` extractor on every
+    list shape: eligible ones run the combined replace+split, ineligible
+    ones the rlike/regexp_extract fallback alone. The rows cover the
+    fallback cases (delimiter byte in a capture, empty text, NULL text,
+    no-match with many delimiter bytes)."""
+    from logstash_filter_aggregate_spark.functions import grok as G
+
+    groks = GROK_LISTS[shape]()
+    eligible = shape in ("default", "single_anchored")
+    assert (G._combined_alternation(groks) is not None) == eligible
+    df = make_transcript(spark, EQUIVALENCE_ROWS)
+    got = {
+        r.turn_idx: {k: r[k] for k in r.asDict() if k not in df.columns}
+        for r in apply_grok_jvm(df, "text", groks).collect()
+    }
+    assert got == _reference_parse(EQUIVALENCE_ROWS, groks)
+
+
+def test_combined_alternation_equivalence(spark, monkeypatch):
+    """The combined replace+split path matches the rlike/regexp_extract
+    fallback that an ineligible list runs, row for row."""
     from logstash_filter_aggregate_spark.functions import grok as G
 
     groks = compile_groks()
     assert G._combined_alternation(groks) is not None
-    rows = [
-        (0, "INFO - t1 - TASK_START - begin", 0),
-        (1, "INFO - t1 - SQL - query - 42", 0),
-        (2, "WARN - t2 - TOOL - bash - E17", 0),
-        (3, "INFO - u9 - Clicked checkout", 0),
-        (4, "garbage line", 0),
-        (5, "", 0),
-        (6, None, 0),
-        (7, "INFO - t\x013 - SQL - q - 1", 0),   # delimiter inside taskid
-        (8, "INFO - t1 - SQL - query", 0),        # optional capture absent
-        (9, "\x01\x01" * 20, 0),                  # many delimiters, no match
-    ]
-    df = make_transcript(spark, rows)
+    df = make_transcript(spark, EQUIVALENCE_ROWS)
     combined = apply_grok_jvm(df, "text", groks).toPandas().sort_values("turn_idx")
-    orig = G._combined_alternation
-    G._combined_alternation = lambda g: None
-    try:
-        legacy = apply_grok_jvm(df, "text", groks).toPandas().sort_values("turn_idx")
-    finally:
-        G._combined_alternation = orig
-    pandas_b = apply_grok_pandas(df, "text", groks).toPandas().sort_values("turn_idx")
+    monkeypatch.setattr(G, "_combined_alternation", lambda g: None)
+    fallback = apply_grok_jvm(df, "text", groks).toPandas().sort_values("turn_idx")
 
     def canon(d):
         d = d[sorted(d.columns)]
         return [tuple(str(v) for v in r) for r in d.itertuples(index=False)]
 
-    assert canon(combined) == canon(legacy)
-    assert canon(combined) == canon(pandas_b)
+    assert canon(combined) == canon(fallback)
 
 
 def test_combined_alternation_ineligible_lists():
     """Unanchored patterns, empty-matchable patterns and backreferences
-    must decline the combined path (they fall back per-pattern)."""
+    decline the combined path (every row takes the fallback); a single
+    anchored pattern with a capture takes it; one without (a single group
+    in all) does not."""
     from logstash_filter_aggregate_spark.functions import grok as G
 
     anchored = compile_grok("a", r"%{INT:x}")
     unanchored = compile_grok("u", r"%{INT:y}", anchored=False)
     empty_ok = compile_grok("e", r"%{DATA:z}")  # matches ""
-    assert G._combined_alternation([anchored]) is None          # single pattern
+    backref = compile_grok("r", r"(\w)\1%{INT:v}")
+    assert G._combined_alternation([anchored]) is not None       # single pattern
+    assert G._combined_alternation([compile_grok("n", r"%{INT}")]) is None
     assert G._combined_alternation([anchored, unanchored]) is None
     assert G._combined_alternation([anchored, empty_ok]) is None
+    assert G._combined_alternation([anchored, backref]) is None
+    assert G._combined_alternation([]) is None
     assert G._combined_alternation([anchored, compile_grok("b", r"%{WORD:w}")]) is not None

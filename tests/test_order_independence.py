@@ -35,14 +35,6 @@ def test_shuffled_input_invariance_timeout_path(spark):
     assert _fingerprint(a.open) == _fingerprint(b.open)
 
 
-def test_parse_backends_produce_identical_pipeline_results(spark):
-    base = generate_transcripts(spark, n_convs=12, hot_convs=0)
-    cfg = example1_config()
-    a = run_pipeline(spark, base, cfg, parse_backend="jvm")
-    b = run_pipeline(spark, base, cfg, parse_backend="pandas")
-    assert _fingerprint(a.completed) == _fingerprint(b.completed)
-
-
 def test_per_turn_text_equality_under_stable_ordering(spark):
     # BASELINE.json invariant: the passthrough stream preserves every
     # turn's text exactly, keyed by the stable (conv_id, turn_idx) order

@@ -134,3 +134,47 @@ def test_push_previous_exact_config_guards():
     with pytest.warns(DeprecationWarning, match="exact_age_cap"):
         cfg = example4_config(push_previous_exact=True, exact_age_cap=True)
     assert cfg.push_previous_exact
+
+
+def _click_count_cfg(*rules):
+    from logstash_filter_aggregate_spark.config import AggSpec, CorrelationRule, PipelineConfig
+
+    return PipelineConfig(
+        task_id="%{taskid}",
+        rules=(
+            CorrelationRule("click", "click_target is not null", aggs=(AggSpec("clicks", "count"),)),
+            *rules,
+        ),
+        timeout=1e9,
+        push_previous_map_as_event=True,
+    )
+
+
+def _pushed(out):
+    return sorted(
+        (r.task_id, r.nevents, "_aggregatefinalflush" in r.tags) for r in out.timeout.collect()
+    )
+
+
+def test_final_flush_tags_map_created_last_on_ts_tie(spark):
+    # two maps created at the same ts: arrival order (ts, conv_id,
+    # turn_idx) makes A the last one created, so A is live at shutdown
+    rows = [(0, "INFO - Z - Clicked x", 100), (1, "INFO - A - Clicked y", 100)]
+    out = run_pipeline(spark, make_transcript(spark, rows), _click_count_cfg())
+    assert _pushed(out) == [("A", 1, True), ("Z", 1, False)]
+
+
+def test_final_flush_tags_nothing_when_last_map_closed(spark):
+    # B's creation pops A; B's end_of_task closes B: no map is live at
+    # shutdown, so no pushed map carries the final-flush tag
+    from logstash_filter_aggregate_spark.config import CorrelationRule
+
+    rows = [
+        (0, "INFO - A - Clicked x", 0),
+        (1, "INFO - B - Clicked y", 1),
+        (2, "INFO - B - TASK_END - done", 2),
+    ]
+    end = CorrelationRule("end", "logger = 'TASK_END'", end_of_task=True)
+    out = run_pipeline(spark, make_transcript(spark, rows), _click_count_cfg(end))
+    assert _pushed(out) == [("A", 1, False)]
+    assert [r.task_id for r in out.completed.collect()] == ["B"]

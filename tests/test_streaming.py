@@ -69,45 +69,6 @@ def test_streaming_gap_expiry_on_arrival(spark, stream_dir):
     assert json.loads(pushed[0].map_json)["total"] == 3  # 1 + 2 pushed; 4 stays open
 
 
-def test_session_window_aggregate_incremental(spark, tmp_path):
-    # append-mode session windows emit once the watermark passes their
-    # end; drive two incremental availableNow runs over one checkpoint
-    # (the streaming analog of the batch resume test)
-    import datetime as dt
-
-    from logstash_filter_aggregate_spark.streaming.stream import session_window_aggregate
-
-    in_dir, out_dir, cp = (str(tmp_path / d) for d in ("in", "out", "cp"))
-    t = generate_transcripts(spark, n_convs=24, hot_convs=0)
-    split = dt.datetime(2026, 1, 1, 0, 1, 0)
-    t.where(F.col("ts") < F.lit(split)).write.mode("overwrite").parquet(in_dir)
-
-    cfg = example3_config(timeout=600.0, inactivity_timeout=60.0)  # window end = last event + gap must precede the final watermark
-    schema = spark.read.parquet(in_dir).schema
-
-    def run_once():
-        src = spark.readStream.schema(schema).parquet(in_dir)
-        q = (
-            session_window_aggregate(src, cfg, watermark="0 seconds")
-            .drop("session_window")
-            .writeStream.format("parquet")
-            .option("path", out_dir).option("checkpointLocation", cp)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    t.where(F.col("ts") >= F.lit(split)).write.mode("append").parquet(in_dir)
-    run_once()
-    run_once()  # no-data run: applies the advanced watermark, flushing state
-
-    got = spark.read.parquet(out_dir)
-    clicks = {r.task_id: r.clicks for r in got.collect()}
-    # chunk-1 click sessions closed once chunk 2 advanced the watermark
-    assert clicks.get("100002") == 3
-    assert all(r.nevents >= 1 for r in got.collect())
-
-
 def test_streaming_hot_key_multichunk_order(spark, tmp_path):
     # a hot task whose micro-batch exceeds arrow maxRecordsPerBatch
     # arrives at the stateful fn as SEVERAL Arrow chunks with no
