@@ -9,10 +9,10 @@ multi-turn conversation/agent transcripts
 
 Where the reference is a single-threaded, mutex-guarded state machine
 (``lib/logstash/filters/aggregate.rb``), this engine is order-independent
-and distributed: grok parse runs as JVM regex / Arrow-vectorized pandas
-UDFs, the map lifecycle becomes one exact per-task scan over Arrow
-batches after a task-key exchange plus ``groupBy`` aggregations, and
-results fan out to routed sinks.
+and distributed: grok parse runs as one SQL-text projection of JVM
+regex functions, the map lifecycle becomes one exact per-task scan over
+Arrow batches after a task-key exchange that returns one row per map,
+and results fan out to routed sinks.
 """
 
 from logstash_filter_aggregate_spark.config import (

@@ -21,6 +21,21 @@ class ConfigurationError(ValueError):
     (``aggregate.rb:86-133``)."""
 
 
+def local_path(path: str) -> str:
+    """``path`` (a plain path or a ``file:`` URI) as a driver-local path.
+
+    Control-plane files (run manifests, the dedup writer lease, the
+    compaction listing, push_previous replay state) go through ``os`` on
+    the driver, where ``s3://b/x`` would become a directory ``./s3:/b/x``
+    that excludes no writer on another host: other schemes raise."""
+    scheme = re.match(r"([A-Za-z][A-Za-z0-9+.-]*):", path)
+    if scheme is None or scheme.group(1).lower() == "file":
+        return re.sub(r"^file:(//[^/]*)?", "", path, flags=re.I)
+    raise ConfigurationError(
+        f"{path!r}: control-plane files need a local or shared-filesystem path or a file: URI"
+    )
+
+
 _TASK_ID_REF = re.compile(r"%\{([A-Za-z_][A-Za-z0-9_]*)\}")
 
 # The aggregation dictionary replacing the reference's eval'd `code`

@@ -1,10 +1,13 @@
 """The aggregation dictionary and session routing (SURVEY.md O4-O7,
 O13-O15, O19, O20); the map-action guards (O3) run in ``sessionize``.
 
-One ``groupBy`` over the session key ``(_task_id, _end_seg, _gap_seg,
-_age_seg)`` replaces the reference's per-event map mutation
-(``aggregate.rb:199-246``): Catalyst runs it partial+final, so the
-"map" never lives on one node. Routing then classifies each session by
+The reference mutates one map per task inside the filter call
+(``aggregate.rb:199-246``). Here the per-task scan of ``sessionize``
+walks each task's rows once and folds them into one session row per map
+with :func:`session_values`, the one aggregation dictionary: batch calls
+it inside the scan, streaming inside its shard step, and both merge
+partial maps (resume seeds, pre-reduced super-rows, streaming's carried
+cells) with the same combiners. Routing then classifies each session by
 how its map died — ``end_of_task`` deletion (``aggregate.rb:240``),
 expiry (``aggregate.rb:396-398,420-445``), immediate ``map_meta.timeout=0``
 eviction (``aggregate.rb:259-274``) — or didn't (still live at
@@ -15,26 +18,26 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField
 
 from logstash_filter_aggregate_spark.config import (
     KIND_COL,
-    ORDER_COL,
     TASK_ID_COL,
-    AggSpec,
     ConfigurationError,
-    CorrelationRule,
     PipelineConfig,
 )
 from logstash_filter_aggregate_spark.sqltext import case, double, ident, quote, with_columns
 
-SESSION_KEY = [TASK_ID_COL, "_end_seg", "_gap_seg", "_age_seg"]
 SEED_RULE = "_seed"  # rule id of partial rows (resume seeds / prereduce super-rows)
-META_COLS = {
-    "pattern_id", "task_id", "conv_id", "creation_ts", "lastevent_ts",
-    "nevents", "close_kind", "end_ts", "end_turn_idx", "tags",
-}
+# the columns of a session row ahead of its aggregation columns
+SESSION_COLS = (
+    "task_id", "_end_seg", "_gap_seg", "_age_seg", "creation_ts", "lastevent_ts", "nevents",
+    "conv_id", "close_kind", "end_ts", "end_turn_idx", "_session_timeout", "_session_inactivity",
+    "_is_last",
+)
 
 
 def apply_guards(sessions: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -51,7 +54,7 @@ def _merged_agg_specs(cfg: PipelineConfig) -> dict[str, tuple[str, list[tuple[st
     merged: dict[str, tuple[str, list[tuple[str, str]]]] = {}
     for r in cfg.rules:
         for s in r.aggs:
-            if s.name in META_COLS or s.name in SESSION_KEY:
+            if s.name in (*SESSION_COLS, "_last_row", "pattern_id", "tags", TASK_ID_COL):
                 raise ConfigurationError(f"agg name {s.name!r} collides with a reserved column")
             fn, sources = merged.setdefault(s.name, (s.fn, []))
             if fn != s.fn:
@@ -71,11 +74,6 @@ def _value_sql(sources: list[tuple[str, str]], projected: bool = False) -> str:
         src = ident(value_col_name(rid, col)) if projected else f"({col})"
         expr = case([(f"_rule_id = {quote(rid)}", src)], expr)
     return expr
-
-
-def _value_expr(sources: list[tuple[str, str]], projected: bool = False) -> Column:
-    """:func:`_value_sql` as a Column."""
-    return F.expr(_value_sql(sources, projected))
 
 
 def _hashed_col(prefix: str, rule_id: str, key: str) -> str:
@@ -106,11 +104,17 @@ NARROW_BASE = [
 
 
 def narrow_for_correlation(classified: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Project the correlation stream down to the engine columns plus
-    pre-evaluated aggregation inputs (``_v_<rule>_<hash>``) BEFORE the
-    task-id exchange: the shuffle and the scan's sort then carry narrow
-    rows instead of raw text + every parsed capture — the columnar
-    equivalent of predicate/projection pushdown for the stateful stage."""
+    """Project the correlation stream down to the engine columns, partial
+    rows' ``_seed_*`` columns and the pre-evaluated per-row inputs
+    (evaluated unless the stream carries them already) BEFORE the task-id
+    exchange: the shuffle and the scan's sort
+    then carry narrow rows instead of raw text + every parsed capture —
+    the columnar equivalent of predicate/projection pushdown for the
+    stateful stage.
+
+    The inputs are each rule's aggregation inputs (``_v_*``) and, for
+    guard-gated emit rules, the emit outputs (``_e_*``) the scan's effect
+    rows carry, NULL on other rules' rows."""
     vcols: dict[str, str] = {}
     for r in cfg.rules:
         matched = f"{KIND_COL} = {quote(r.rule_id)}"
@@ -118,10 +122,6 @@ def narrow_for_correlation(classified: DataFrame, cfg: PipelineConfig) -> DataFr
             if sp.col:
                 vcols.setdefault(value_col_name(r.rule_id, sp.col), case([(matched, f"({sp.col})")]))
         if r.emit and r.map_action != "create_or_update":
-            # guard-gated emit rule: the emission fires only for _included
-            # rows, decided post-sessionize — pre-evaluate the emit
-            # expressions here so the inline bucket reads them off the
-            # guarded frame without a second pass over the raw stream
             for out_name, e in r.emit.items():
                 vcols[emit_col_name(r.rule_id, out_name)] = case([(matched, f"({e})")])
     seed_cols = [ident(c) for c in classified.columns if c.startswith("_seed_")]
@@ -142,177 +142,225 @@ def narrow_for_correlation(classified: DataFrame, cfg: PipelineConfig) -> DataFr
         # correlation stage with ZERO event-stream exchange
         # (tests/test_plans.py::test_bucketed_table_elides_task_exchange).
         narrow_base[narrow_base.index(TASK_ID_COL)] = f"{ident(field)} AS {TASK_ID_COL}"
-    return classified.selectExpr(
-        *narrow_base, *seed_cols, *[f"{e} AS {ident(n)}" for n, e in vcols.items()]
-    )
+    return classified.selectExpr(*narrow_base, *seed_cols, *[
+        ident(n) if n in classified.columns else f"{e} AS {ident(n)}" for n, e in vcols.items()
+    ])
 
 
-def _agg_column(
-    name: str, fn: str, sources: list[tuple[str, str]], with_seeds: bool,
-    projected: bool = False,
-) -> str:
-    """The aggregation dictionary (O6) — every entry a Catalyst built-in
-    with map-side partial aggregation. Order-sensitive fns (`first`,
-    `last`, `collect_list`) ride on ``_ord`` via min_by/max_by /
-    sort_array, so results are independent of partitioning (the departure
-    from the reference's arrival-order ``-w 1`` mode).
-
-    ``with_seeds``: resumed runs inject one seed row per previously-open
-    map (plans/resume.py, the ``aggregate_maps_path`` reload analog,
-    ``aggregate.rb:136-140``) carrying the prior partial aggregate in
-    ``_seed_<name>``; each fn merges it with its natural combiner."""
-    # count never evaluates its source (and "1" is not projected)
-    val = _value_sql(sources, projected) if fn != "count" else "NULL"
-    inc = "_included"
-    is_seed = f"_rule_id = {quote(SEED_RULE)}"
-    seed_val = ident(f"_seed_{name}") if with_seeds else "NULL"
-    if with_seeds and fn in ("sum", "min", "max", "first", "last"):
-        val = case([(is_seed, seed_val)], val)
-    val = case([(inc, val)])
-    in_rules = ", ".join(quote(r) for r, _ in sources)
-    rule_match = case([(f"{inc} AND _rule_id IN ({in_rules})", "1")])
-    if fn == "sum":
-        agg = f"sum({val})"
-    elif fn == "count":
-        if with_seeds:
-            # count merges as a sum of weights: seed weight = prior count
-            agg = "sum(" + case(
-                [
-                    (f"{inc} AND {is_seed}", f"coalesce(CAST({seed_val} AS BIGINT), 0)"),
-                    (f"{rule_match} IS NOT NULL", "1"),
-                ],
-                "0",
-            ) + ")"
-        else:
-            agg = f"count({rule_match})"
-    elif fn in ("min", "max"):
-        agg = f"{fn}({val})"
-    elif fn == "avg":
-        # handled via _avg_partials in aggregate_sessions (sum+count
-        # helpers make avg resumable across runs)
-        raise AssertionError("avg is expanded by aggregate_sessions, not _agg_column")
-    elif fn in ("first", "last"):
-        # ||= first non-null in turn order (docs/index.asciidoc:136); a
-        # seed row has the minimum _ord in its session, so it wins here.
-        # min_by instead of min-of-struct: no per-row struct allocation,
-        # ~20% cheaper in the aggregate stage; _ord is unique per session
-        # so the tie-order caveat of min_by cannot bite.
-        by = "min_by" if fn == "first" else "max_by"
-        agg = f"{by}({val}, CASE WHEN {val} IS NOT NULL THEN {ORDER_COL} END)"
-    elif fn in ("collect_list", "collect_set"):
-        # map['towns'] << {...} in arrival order (docs/index.asciidoc:231-233)
-        item = case([(f"{val} IS NOT NULL AND NOT ({is_seed})", f"struct({ORDER_COL} AS o, {val} AS v)")])
-        agg = f"transform(sort_array(collect_list({item})), x -> x.v)"
-        if with_seeds:
-            # seed carries the prior array; prepend it (seed is earliest).
-            # at most one seed per session, so an unordered first is fine;
-            # an empty slice of the new items types a missing prior
-            prior = f"first({case([(f'{inc} AND {is_seed}', seed_val)])}, true)"
-            agg = f"concat(coalesce({prior}, slice({agg}, 1, 0)), {agg})"
-        if fn == "collect_set":
-            agg = f"array_distinct({agg})"
-    else:
-        raise ConfigurationError(f"unhandled agg fn {fn!r}")
-    return f"{agg} AS {ident(name)}"
+# fns whose partial (a resume seed's or a pre-reduced super-row's
+# _seed_<name>) is one value of the result's type
+_ONE_VALUE_PARTIALS = ("sum", "min", "max", "first", "last")
 
 
-def _avg_partials(
-    name: str, sources: list[tuple[str, str]], with_seeds: bool, projected: bool,
-    available: set[str],
-) -> list[str]:
-    """avg decomposed into ``_avg_sum_<name>`` / ``_avg_cnt_<name>``
-    partials so the OPEN bucket carries mergeable state — resumed runs
-    combine seed sum+count with the new rows' (the reference's map would
-    hold the running sum and count explicitly; a bare average is not a
-    mergeable aggregate). The visible ``<name>`` column is derived after
-    the groupBy."""
-    val = f"CAST({_value_sql(sources, projected) if sources else 'NULL'} AS DOUBLE)"
-    is_seed = f"_rule_id = {quote(SEED_RULE)}"
-    counted = case([(f"{val} IS NOT NULL", "1")], "0")
-    if with_seeds:
-        if f"_seed__avg_sum_{name}" not in available:
+def agg_specs(cfg: PipelineConfig) -> dict[str, tuple[str, list[tuple[str, str | None]]]]:
+    """The merged aggregation dictionary, each source as ``(rule id, its
+    pre-evaluated input column)``; ``count`` never reads its source, so
+    its column is None."""
+    return {
+        name: (fn, [(rid, None if fn == "count" else value_col_name(rid, col)) for rid, col in sources])
+        for name, (fn, sources) in _merged_agg_specs(cfg).items()
+    }
+
+
+def session_agg_fields(df: DataFrame, cfg: PipelineConfig) -> list[StructField]:
+    """The aggregation columns of a session row, in dictionary order,
+    ``avg`` as its ``_avg_sum_``/``_avg_cnt_`` partials (the reference's
+    map would hold the running sum and count; a bare average does not
+    merge across resumes).
+
+    The types come from Catalyst: ``sum`` / ``first`` / ``collect_list``
+    over ``df``'s ``_v_*`` inputs (each partial row's ``_seed_*`` value
+    in their place, where ``df`` carries partial rows) are analyzed, not
+    run, so Spark's own typing rules hold (``sum`` of an int is a long,
+    of a ``DECIMAL(18,6)`` a ``DECIMAL(28,6)``)."""
+    cols = set(df.columns)
+    with_seeds = "_seed_nevents" in cols
+    merged = _merged_agg_specs(cfg)
+    probes = []
+    for name, (fn, sources) in merged.items():
+        if fn == "avg" and with_seeds and f"_seed__avg_sum_{name}" not in cols:
             raise ConfigurationError(
                 f"agg {name!r}: resuming avg needs _avg_sum_/_avg_cnt_ helper "
                 "columns in the open-maps input — was it produced by an older config?"
             )
-        sum_src = case([(is_seed, ident(f"_seed__avg_sum_{name}"))], val)
-        cnt_src = case([(is_seed, f"coalesce({ident(f'_seed__avg_cnt_{name}')}, 0)")], counted)
-    else:
-        sum_src, cnt_src = val, counted
-    return [
-        f"sum(CASE WHEN _included THEN {sum_src} END) AS {ident(f'_avg_sum_{name}')}",
-        f"CAST(sum(CASE WHEN _included THEN {cnt_src} ELSE 0 END) AS BIGINT) AS {ident(f'_avg_cnt_{name}')}",
-    ]
+        if fn in ("avg", "count"):
+            continue
+        val = _value_sql(sources, projected=True)
+        if with_seeds and fn in _ONE_VALUE_PARTIALS and f"_seed_{name}" in cols:
+            val = case([(f"_rule_id = {quote(SEED_RULE)}", ident(f"_seed_{name}"))], val)
+        probe = "sum" if fn == "sum" else "collect_list" if fn.startswith("collect") else "first"
+        probes.append(f"{probe}({val}) AS {ident(name)}")
+    typed = df.selectExpr(*probes).schema if probes else None
+    fields = []
+    for name, (fn, _) in merged.items():
+        if fn == "avg":
+            fields += [StructField(f"_avg_sum_{name}", DoubleType()), StructField(f"_avg_cnt_{name}", LongType())]
+        elif fn == "count":
+            fields.append(StructField(name, LongType()))
+        else:
+            t = typed[name].dataType
+            fields.append(StructField(name, ArrayType(t.elementType) if isinstance(t, ArrayType) else t))
+    return fields
+
+
+def session_values(specs: dict, column, sid: np.ndarray, n_sess: int, types: dict) -> dict:
+    """The aggregation dictionary (O6) over the sessions of one chunk of
+    rows: one Arrow array of ``n_sess`` values per column of
+    :func:`session_agg_fields`.
+
+    ``specs`` is :func:`agg_specs`; ``column(name)`` returns a chunk
+    column as an Arrow array (None when absent); ``sid`` is the session
+    of each row, -1 where the row's code did not run; ``types`` maps each
+    output column to its Arrow type. Rows fold in chunk order within
+    their session (the scan's ``(ts, conv_id, turn_idx)`` order): sum,
+    min and max skip NULLs; ``first`` / ``last`` are the first / last
+    non-NULL value (``||=`` in turn order, docs/index.asciidoc:136);
+    ``collect_list`` / ``collect_set`` the non-NULL values in order
+    (``map['towns'] << {...}``, docs/index.asciidoc:231-233), the set
+    keeping first occurrences; ``count`` the rows its rules matched;
+    ``avg`` a double sum and a count.
+
+    Partial rows (rule :data:`SEED_RULE`: resume seeds, pre-reduced
+    super-rows, streaming's carried maps) carry a prior map in
+    ``_seed_<name>`` (``_seed__avg_sum_<name>`` / ``_cnt_`` for avg),
+    merged with each fn's combiner: added for sum, count and avg,
+    compared for min and max, a value at the partial row's position for
+    first and last, a list spliced in there for the collects."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = np.flatnonzero(sid >= 0)
+    rows = rows[np.argsort(sid[rows], kind="stable")]
+    s = sid[rows]
+    n = len(rows)
+    rule = column("_rule_id").take(rows)
+    is_seed = pc.fill_null(pc.equal(rule, SEED_RULE), False)
+    seeded = is_seed.to_numpy(zero_copy_only=False)
+
+    def col(name, t):
+        c = column(name)
+        return pa.nulls(n, t) if c is None else c.take(rows).cast(t)
+
+    def value(sources, t):
+        v = pa.nulls(n, t)
+        for rid, vcol in sources:
+            v = pc.if_else(pc.equal(rule, rid), col(vcol, t), v)
+        return v
+
+    def total(w):
+        return pa.array(np.bincount(s, weights=w, minlength=n_sess).astype(np.int64))
+
+    out = {}
+    for name, (fn, sources) in specs.items():
+        seed = f"_seed_{name}"
+        if fn == "count":
+            w = pc.fill_null(pc.is_in(rule, pa.array([r for r, _ in sources])), False)
+            w = w.to_numpy(zero_copy_only=False).astype(np.int64)
+            w[seeded] = pc.fill_null(col(seed, pa.int64()), 0).to_numpy()[seeded]
+            out[name] = total(w)
+        elif fn == "avg":
+            v = value(sources, pa.float64())
+            w = v.is_valid().to_numpy(zero_copy_only=False).astype(np.int64)
+            w[seeded] = pc.fill_null(col(f"_seed__avg_cnt_{name}", pa.int64()), 0).to_numpy()[seeded]
+            v = pc.if_else(is_seed, col(f"_seed__avg_sum_{name}", pa.float64()), v)
+            out[f"_avg_sum_{name}"] = session_fold(s, n_sess, v, "sum")
+            out[f"_avg_cnt_{name}"] = total(w)
+        elif fn.startswith("collect"):
+            t = types[name]
+            v = value(sources, t.value_type)
+            valid = v.is_valid().to_numpy(zero_copy_only=False)
+            offsets = np.concatenate([[0], np.cumsum(valid)]).astype(np.int32)
+            own = pa.ListArray.from_arrays(offsets, v.filter(pa.array(valid))).cast(t)
+            lists = pc.if_else(is_seed, col(seed, t), own)
+            lengths = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+            per = np.bincount(s, weights=lengths, minlength=n_sess).astype(np.int64)
+            offsets = np.concatenate([[0], np.cumsum(per)]).astype(np.int32)
+            res = pa.ListArray.from_arrays(offsets, pc.list_flatten(lists)).cast(t)
+            if fn == "collect_set":
+                res = pa.array([_distinct(x) for x in res.to_pylist()], type=t)
+            out[name] = res
+        else:
+            t = types[name]
+            v = value(sources, t)
+            if fn in _ONE_VALUE_PARTIALS:
+                v = pc.if_else(is_seed, col(seed, t), v)
+            out[name] = session_fold(s, n_sess, v, fn)
+    return out
+
+
+def session_fold(s: np.ndarray, n_sess: int, v, how: str):
+    """``v`` (aligned with the non-decreasing session ids ``s``) folded to
+    one value per session: ``sum`` / ``min`` / ``max`` over the non-NULL
+    values, ``first`` / ``last`` the first / last non-NULL one; NULL
+    where a session has none. Numbers and timestamps fold in numpy;
+    other types (strings, decimals) through Arrow's hash aggregation,
+    whose engine costs each worker some 40 MB to load."""
+    import pyarrow as pa
+
+    valid = v.is_valid().to_numpy(zero_copy_only=False)
+    if how in ("first", "last"):
+        at = first_rows(s[valid], n_sess, last=how == "last")
+        idx = np.zeros(n_sess, dtype=np.int64)
+        idx[at >= 0] = np.flatnonzero(valid)[at[at >= 0]]
+        return v.take(pa.array(idx, mask=at < 0))
+    t = v.type
+    if pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_timestamp(t):
+        x = v.filter(pa.array(valid)).cast(pa.float64() if pa.types.is_floating(t) else pa.int64())
+        at = first_rows(s[valid], n_sess)
+        out = np.zeros(n_sess, dtype=x.type.to_pandas_dtype())
+        if len(x):
+            ufunc = {"sum": np.add, "min": np.minimum, "max": np.maximum}[how]
+            out[at >= 0] = ufunc.reduceat(x.to_numpy(), at[at >= 0])
+        return pa.array(out, mask=at < 0).cast(t if how != "sum" or pa.types.is_floating(t) else pa.int64())
+    folded = pa.table({"s": s, "v": v}).group_by("s", use_threads=False).aggregate([("v", how)])
+    at = np.full(n_sess, -1, dtype=np.int64)
+    at[folded.column("s").to_numpy()] = np.arange(folded.num_rows)
+    return folded.column(f"v_{how}").combine_chunks().take(pa.array(at, mask=at < 0))
+
+
+def first_rows(s: np.ndarray, n_sess: int, last: bool = False) -> np.ndarray:
+    """Per session, the position in the non-decreasing ids ``s`` of its
+    first (``last``: last) entry; -1 where it has none."""
+    at = np.full(n_sess, -1, dtype=np.int64)
+    if len(s):
+        starts = np.flatnonzero(np.r_[True, s[1:] != s[:-1]])
+        at[s[starts]] = np.r_[starts[1:], len(s)] - 1 if last else starts
+    return at
+
+
+def _distinct(xs: list) -> list:
+    """``xs`` without repeats, first occurrences in order (Spark's
+    ``array_distinct``); values may be unhashable (structs as dicts)."""
+    out: list = []
+    for x in xs:
+        if x not in out:
+            out.append(x)
+    return out
+
+
+def session_columns(cfg: PipelineConfig) -> list[str]:
+    """The columns of a session row, in order: :data:`SESSION_COLS`,
+    ``_last_row`` for push_previous configs, the aggregation columns."""
+    names = [*SESSION_COLS, *(["_last_row"] if cfg.push_previous_map_as_event else [])]
+    for name, (fn, _) in _merged_agg_specs(cfg).items():
+        names += [f"_avg_sum_{name}", f"_avg_cnt_{name}"] if fn == "avg" else [name]
+    return names
 
 
 def aggregate_sessions(guarded: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """One row per task-instance map: aggregation values + ``map_meta``
     (creation/lastevent timestamps, ``aggregate.rb:521-535``) + how the
-    session closed. Seed rows from a resumed run (plans/resume.py)
-    contribute their prior creation time / event count."""
-    merged = _merged_agg_specs(cfg)
-    available = set(guarded.columns)
-    with_seeds = "_seed_nevents" in available
-    projected = any(c.startswith("_v_") for c in available)
-
-    creation_src = "coalesce(_seed_creation_ts, ts)" if with_seeds else "ts"
-    lastevent_src = (
-        "coalesce(_seed_lastevent_ts, ts)"
-        if with_seeds and "_seed_lastevent_ts" in available
-        else "ts"
-    )
-    nevents_w = "coalesce(_seed_nevents, 1)" if with_seeds else "1"
-    closing = "_included AND _close_flag = 1"
-    aggs = [
-        f"min(CASE WHEN _included THEN {creation_src} END) AS creation_ts",    # O4 aggregate.rb:525-528
-        f"max(CASE WHEN _included THEN {lastevent_src} END) AS lastevent_ts",  # O5 aggregate.rb:220-221
-        f"sum(CASE WHEN _included THEN {nevents_w} ELSE 0 END) AS nevents",
-        # min_by/max_by instead of min/max-of-struct: same value (_ord is
-        # unique within a session), no per-row struct allocation
-        f"min_by(conv_id, CASE WHEN _included THEN {ORDER_COL} END) AS conv_id",
-        # the close row is by construction the last row of its segment
-        f"max(CASE WHEN {closing} THEN CASE WHEN _end_flag = 1 THEN 'end' ELSE 'custom0' END END) AS close_kind",
-        f"max(CASE WHEN {closing} THEN ts END) AS end_ts",
-        f"max(CASE WHEN {closing} THEN turn_idx END) AS end_turn_idx",
-        # last-set per-map override wins (aggregate.rb:243-246)
-        f"max_by(_custom_timeout, CASE WHEN _included AND _custom_timeout > 0 THEN {ORDER_COL} END)"
-        " AS _session_timeout",
-        f"max_by(_custom_inactivity, CASE WHEN _included AND _custom_inactivity > 0 THEN {ORDER_COL} END)"
-        " AS _session_inactivity",
-        # the scan marks the rows of each task's last map
-        "bool_or(_is_last) AS _is_last",
-    ]
-    names = [
-        "creation_ts", "lastevent_ts", "nevents", "conv_id", "close_kind", "end_ts",
-        "end_turn_idx", "_session_timeout", "_session_inactivity", "_is_last",
-    ]
-    if cfg.push_previous_map_as_event:
-        # the map's last row in arrival order: the final flush tags the
-        # map holding the globally last row (split_sessions)
-        aggs.append(f"max(CASE WHEN _included THEN struct({lastevent_src} AS ts, conv_id, turn_idx) END) AS _last_row")
-        names.append("_last_row")
-    avg_names: list[str] = []
-    for n, (fn, srcs) in merged.items():
-        if fn == "avg":
-            avg_names.append(n)
-            aggs.extend(_avg_partials(n, srcs, with_seeds, projected, available))
-            names += [f"_avg_sum_{n}", f"_avg_cnt_{n}"]
-        else:
-            aggs.append(_agg_column(n, fn, srcs, with_seeds, projected))
-            names.append(n)
+    session closed. The scan of ``sessionize`` already folded every map
+    into its session row, so this keeps the session rows (not the effect
+    rows, which ``_included`` flags) and adds ``pattern_id`` and each
+    avg's mean."""
     avgs = [
         f"CASE WHEN {ident(f'_avg_cnt_{n}')} > 0 THEN {ident(f'_avg_sum_{n}')} / {ident(f'_avg_cnt_{n}')} END"
         f" AS {ident(n)}"
-        for n in avg_names
+        for n, (fn, _) in _merged_agg_specs(cfg).items() if fn == "avg"
     ]
-    return (
-        guarded.groupBy(*SESSION_KEY)
-        .agg(*[F.expr(a) for a in aggs])
-        .where("nevents > 0")  # sessions with no creating row never made a map
-        .selectExpr(
-            f"{TASK_ID_COL} AS task_id", *SESSION_KEY[1:], *[ident(n) for n in names],
-            f"{quote(cfg.pattern_id)} AS pattern_id", *avgs,
-        )
+    return guarded.where("NOT _included").selectExpr(
+        *[ident(n) for n in session_columns(cfg)], f"{quote(cfg.pattern_id)} AS pattern_id", *avgs,
     )
 
 

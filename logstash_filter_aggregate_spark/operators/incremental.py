@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from logstash_filter_aggregate_spark.config import local_path
 from logstash_filter_aggregate_spark.operators.dedup import (
     banded_signatures,
     content_hash,
@@ -91,6 +92,7 @@ def _writer_lease(store_dir: str, lease_ttl_s: float = 3600.0):
     read-dedup-append span. ``O_CREAT|O_EXCL`` is the atomic primitive;
     a lease older than ``lease_ttl_s`` is treated as a crashed writer
     and reclaimed (the reclaim itself re-races through O_EXCL)."""
+    store_dir = local_path(store_dir)
     os.makedirs(store_dir, exist_ok=True)
     path = os.path.join(store_dir, _LEASE_NAME)
     token = uuid.uuid4().hex
@@ -437,22 +439,23 @@ def compact_store(
     import json as _json
     import shutil
 
+    local = local_path(store_dir)
     with _writer_lease(store_dir, lease_ttl_s):
         # heal a previous crashed compaction first: manifests name merged
         # dirs that may still linger
         healed = []
-        for d in sorted(os.listdir(store_dir)):
-            man = os.path.join(store_dir, d, "_compact_manifest")
+        for d in sorted(os.listdir(local)):
+            man = os.path.join(local, d, "_compact_manifest")
             if d.startswith("batch_id=") and os.path.exists(man):
                 with open(man) as fh:
                     for bid in _json.load(fh)["merged"]:
-                        leftover = os.path.join(store_dir, f"batch_id={bid}")
+                        leftover = os.path.join(local, f"batch_id={bid}")
                         if os.path.exists(leftover):
                             shutil.rmtree(leftover)
                             healed.append(bid)
         bids = sorted(
             int(d.split("=", 1)[1])
-            for d in os.listdir(store_dir)
+            for d in os.listdir(local)
             if d.startswith("batch_id=")
         )
         merge = bids[: len(bids) - keep_last] if keep_last else bids
@@ -462,7 +465,7 @@ def compact_store(
         target = min(-1, min(merge) - 1)
         df = spark.read.option("basePath", store_dir).parquet(store_dir)
         part_col = next(c for c in ("_hp", "_bp", "_sp") if c in df.columns)
-        tmp = os.path.join(store_dir, "_compact_tmp")
+        tmp = os.path.join(local, "_compact_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
         (
             df.where(F.col("batch_id").isin([int(b) for b in merge]))
@@ -472,8 +475,8 @@ def compact_store(
         )
         with open(os.path.join(tmp, "_compact_manifest"), "w") as fh:
             _json.dump({"merged": [int(b) for b in merge]}, fh)
-        os.rename(tmp, os.path.join(store_dir, f"batch_id={target}"))
+        os.rename(tmp, os.path.join(local, f"batch_id={target}"))
         for b in merge:
-            shutil.rmtree(os.path.join(store_dir, f"batch_id={b}"))
+            shutil.rmtree(os.path.join(local, f"batch_id={b}"))
         return {"compacted": True, "healed": healed,
                 "merged": [int(b) for b in merge], "target": target}

@@ -6,9 +6,9 @@ inactivity gap or absolute age when the task's next event arrives
 (``aggregate.rb:420-445``) — runs as one exact per-task scan: the JVM
 clusters the rows by task (one exchange of the event stream) and sorts
 them; one Arrow-native call per partition walks each task with the
-state machine streaming runs (``streaming/walk.py``). This is what
-replaces the reference's global mutex + ``-w 1`` worker
-(``docs/index.asciidoc:29-30``).
+state machine streaming runs (``streaming/walk.py``) and folds each
+map into one session row. This is what replaces the reference's global
+mutex + ``-w 1`` worker (``docs/index.asciidoc:29-30``).
 """
 
 from __future__ import annotations
@@ -16,22 +16,37 @@ from __future__ import annotations
 import functools
 import logging
 import math
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
+    DoubleType,
     IntegerType,
+    LongType,
+    StringType,
     StructField,
     StructType,
     TimestampNTZType,
     TimestampType,
 )
 
-from logstash_filter_aggregate_spark.config import ORDER_COL, TASK_ID_COL, PipelineConfig
+from logstash_filter_aggregate_spark.config import KIND_COL, ORDER_COL, TASK_ID_COL, PipelineConfig
+from logstash_filter_aggregate_spark.operators.correlate import (
+    agg_specs,
+    first_rows,
+    narrow_for_correlation,
+    session_agg_fields,
+    session_columns,
+    session_fold,
+    session_values,
+    value_col_name,
+)
 from logstash_filter_aggregate_spark.sqltext import any_of, double, with_columns
-from logstash_filter_aggregate_spark.streaming.walk import EXPIRY, OPEN, walk_inputs, walk_scan
+from logstash_filter_aggregate_spark.streaming.walk import CT0, END, EXPIRY, OPEN, walk_inputs, walk_scan
 
 logger = logging.getLogger(__name__)
 
@@ -39,10 +54,6 @@ logger = logging.getLogger(__name__)
 # arrival order under the deterministic event-time mode, spec:374-390),
 # then (conv_id, turn_idx) as the stable tiebreak (SURVEY.md §7 hard pt 4).
 ORDER_BY = ["ts", "conv_id", "turn_idx"]
-
-# columns the exact scan appends to its input rows
-SCAN_COLS = (ORDER_COL, "_end_seg", "_gap_seg", "_age_seg", "_included", "_is_last")
-_BOOL_COLS = ("_included", "_is_last")
 
 
 # _w and _window_age_seg are the single-pass window age flags the
@@ -81,24 +92,20 @@ def _window_age_seg(part: DataFrame, cfg: PipelineConfig, passes: int) -> DataFr
 
 
 def sessionize(classified: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Add ``_ord``, ``_end_seg``, ``_gap_seg``, ``_age_seg``, the
-    map-action guard decision ``_included`` and ``_is_last`` to rows that
-    participate in correlation, with the one exact per-task scan
-    (:func:`_exact_age_seg`) in both time modes. One task-key exchange,
-    plus one range exchange when ``push_previous_exact`` needs the global
-    index."""
-    part = classified.where(f"{TASK_ID_COL} IS NOT NULL AND _rule_id IS NOT NULL")
+    """The maps of the rows that participate in correlation, from the one
+    exact per-task scan (:func:`_exact_age_seg`) in both time modes: one
+    session row per map, plus one effect row per row whose guard-gated
+    code had a side effect; ``_included`` is false on session rows and
+    true on effect rows.
 
-    # statically no rule can close a map (no end_of_task rows, no
-    # custom_timeout expression that could evaluate to 0): the aggregate
-    # stage's close columns are provably NULL (the docs-example-#3 shape:
-    # click counting with timeout push)
-    no_closes = not any(r.end_of_task for r in cfg.rules) and all(
-        r.custom_timeout is None for r in cfg.rules
+    The scan reads the columns of
+    :func:`~logstash_filter_aggregate_spark.operators.correlate.narrow_for_correlation`,
+    which evaluates the inputs a stream that was not narrowed yet lacks.
+    One task-key exchange, plus one range exchange when
+    ``push_previous_exact`` needs the global index."""
+    part = narrow_for_correlation(
+        classified.where(f"{TASK_ID_COL} IS NOT NULL AND _rule_id IS NOT NULL"), cfg
     )
-    close_flag = "0" if no_closes else "CAST(((_end_flag = 1) OR (_custom_timeout = 0.0D)) AS INT)"
-    part = with_columns(part, {"_close_flag": close_flag})
-
     if cfg.push_previous_exact:
         # exact interleaved push_previous (O16 strict mode): a map also
         # dies when ANOTHER task's event arrives between two of its own —
@@ -142,44 +149,63 @@ def _exact_age_seg(part: DataFrame, cfg: PipelineConfig) -> DataFrame:
     The JVM clusters the rows by task (one hash exchange on ``_task_id``,
     elided when the input is already hash-partitioned on it) and sorts
     each partition by ``(_task_id, ts, conv_id, turn_idx)``, nulls last;
-    ``mapInArrow`` then hands the sorted partition to
-    :func:`_scan_partition` as a stream of Arrow batches, and each task's
-    slice runs :func:`~logstash_filter_aggregate_spark.streaming.walk.walk_scan`
-    — the state machine streaming runs, so batch and streaming share one
-    implementation of the reference's filter hot path
-    (``aggregate.rb:179-246``): the expiry check runs *before* the
-    map-action guard with the map's own ``map_meta`` clocks
-    (``aggregate.rb:194-199,420-445``), a duplicate ``create`` returns
-    before touching ``lastevent_timestamp`` (``aggregate.rb:216`` precedes
-    ``:220``), an ``update`` with no live map is a total no-op
-    (``aggregate.rb:203``), and ``end_of_task`` / ``map_meta.timeout = 0``
-    close the map only where the codeblock ran. The walk's ``code_ran``
-    is ``_included``, so no guard window runs after the scan. The walk is
-    a session-hop: O(#sessions · log n) numpy work per task, not
-    per-row Python, and it is fuzz-pinned against an independent per-row
+    ``mapInArrow`` hands the sorted partition to :func:`_scan_partition`
+    as Arrow batches, and each task runs
+    :func:`~logstash_filter_aggregate_spark.streaming.walk.walk_scan`,
+    the state machine streaming runs too (``aggregate.rb:179-246``):
+    expiry before the map-action guard on the map's own ``map_meta``
+    clocks (``aggregate.rb:194-199,420-445``), a duplicate ``create``
+    that never touches ``lastevent_timestamp`` (``aggregate.rb:216``), a
+    no-op ``update`` without a map (``aggregate.rb:203``), and closes
+    only where the codeblock ran. It is fuzz-pinned against a per-row
     reference simulator (``tests/test_timeouts.py::_reference_scan``).
 
-    Processing-time mode runs the same scan with infinite clocks: no
-    wall clock passes during a batch replay (config.py), so only closes
-    and push_previous run breaks split maps.
-
-    The scan holds at most one task plus one batch — bounded by the
-    reference's own working-set assumption (one in-memory map per task,
-    warning at 5000 maps, ``aggregate.rb:499-516``). Partial rows carry
-    their own clocks: a resume seed creates its map at the carried
-    ``_seed_creation_ts``, and a pre-reduced super-row refreshes the gap
-    clock to its ``_seed_lastevent_ts``.
+    The scan returns maps, not rows: each map's rows fold into one
+    session row (:func:`_session_rows`, with the aggregation dictionary
+    :func:`~logstash_filter_aggregate_spark.operators.correlate.session_values`),
+    so no aggregate and no exchange follow it, and guard-gated side
+    effects come out of the same call as effect rows (:func:`_effect_rows`).
+    Processing time runs the same scan with infinite clocks (config.py).
+    The scan holds at most one task plus one batch, the reference's own
+    working-set bound (one map per task, ``aggregate.rb:499-516``).
+    Partial rows carry their own clocks: a resume seed creates its map at
+    ``_seed_creation_ts``, a pre-reduced super-row refreshes the gap clock
+    to its ``_seed_lastevent_ts``.
     """
     schema = part.schema
     event_time = cfg.timeout_timestamp_field is not None
     ts_type = schema["ts"].dataType
     if event_time and not isinstance(ts_type, (TimestampType, TimestampNTZType)):
         raise TypeError(f"the exact scan needs a timestamp 'ts' column, got {ts_type.simpleString()}")
-    out_schema = StructType([f for f in schema.fields if f.name != "_gidx"] + [
-        StructField(c, BooleanType() if c in _BOOL_COLS else IntegerType(), False) for c in SCAN_COLS
+    effects = _effect_rules(cfg)
+    effect_cols = [c for c in schema.names if c.startswith("_e_")]
+    effect_cols += sorted({c for _, req in effects.values() for c in req})
+    types = {
+        "task_id": schema[TASK_ID_COL].dataType, "nevents": LongType(), "close_kind": StringType(),
+        "conv_id": schema["conv_id"].dataType, "end_turn_idx": schema["turn_idx"].dataType,
+        "_is_last": BooleanType(),
+        **dict.fromkeys(("_end_seg", "_gap_seg", "_age_seg"), IntegerType()),
+        **dict.fromkeys(("creation_ts", "lastevent_ts", "end_ts"), ts_type),
+        **dict.fromkeys(("_session_timeout", "_session_inactivity"), DoubleType()),
+        "_last_row": StructType([StructField("ts", ts_type), *[
+            StructField(c, schema[c].dataType) for c in ("conv_id", "turn_idx")
+        ]]),
+    }
+    out_schema = StructType([
+        *[StructField(c, types[c]) for c in session_columns(cfg) if c in types],
+        *session_agg_fields(part, cfg),
+        # effect rows: the row's key, rule and effect inputs
+        *[StructField(c, schema[c].dataType) for c in ("turn_idx", KIND_COL, *effect_cols)],
+        StructField("_included", BooleanType()),
     ])
-    clocks = (float(cfg.timeout), float(cfg.effective_inactivity_timeout)) if event_time else None
-    scan = functools.partial(_scan_partition, clocks=clocks)
+    plan = _ScanPlan(
+        clocks=(float(cfg.timeout), float(cfg.effective_inactivity_timeout)) if event_time else None,
+        specs=agg_specs(cfg),
+        schema=to_arrow_schema(out_schema),
+        effects=effects,
+        effect_cols=effect_cols,
+        last_row=cfg.push_previous_map_as_event,
+    )
     n = _task_partitions(part)
     if n is None:
         logger.info("exact scan: added a hash exchange on %s", TASK_ID_COL)
@@ -190,17 +216,42 @@ def _exact_age_seg(part: DataFrame, cfg: PipelineConfig) -> DataFrame:
         part = part.repartition(n, TASK_ID_COL)
     return (
         part.sortWithinPartitions(*[F.asc_nulls_last(c) for c in (TASK_ID_COL, *ORDER_BY)])
-        .mapInArrow(scan, out_schema)
+        .mapInArrow(functools.partial(_scan_partition, plan=plan), out_schema)
     )
 
 
-def _scan_partition(batches, clocks: tuple[float, float] | None):
+def _effect_rules(cfg: PipelineConfig) -> dict[str, tuple[bool, list[str]]]:
+    """The guard-gated rules whose code has a side effect the scan must
+    hand out per row: ``rule id -> (every code-ran row is an effect,
+    required input columns)``. A cancel or emit rule's every code-ran row
+    is one (the row is consumed or emits); a rule with ``required`` aggs
+    only its code-ran rows with a NULL required input (the
+    ``_aggregateexception`` tag, ``aggregate.rb:229-237``)."""
+    out = {}
+    for r in cfg.rules:
+        req = [value_col_name(r.rule_id, s.col) for s in r.aggs if s.required and s.col]
+        if r.map_action != "create_or_update" and (r.cancel or r.emit or req):
+            out[r.rule_id] = (bool(r.cancel or r.emit), req)
+    return out
+
+
+class _ScanPlan(NamedTuple):
+    """What the scan's workers need; ``clocks`` is None in processing time."""
+
+    clocks: tuple[float, float] | None
+    specs: dict
+    schema: object
+    effects: dict
+    effect_cols: list
+    last_row: bool
+
+
+def _scan_partition(batches, plan: _ScanPlan):
     """``mapInArrow`` body over one partition sorted by (task, ts,
-    conv_id, turn_idx); ``clocks`` are the pattern's (timeout,
-    inactivity), None in processing-time mode. Every task whose last row
-    has arrived is scanned; the trailing task of a batch may continue in
-    the next one, so it is carried until a batch starts a different task
-    (or the partition ends)."""
+    conv_id, turn_idx). Every task whose last row has arrived is scanned;
+    the trailing task of a batch may continue in the next one, so it is
+    carried until a batch starts a different task (or the partition
+    ends)."""
     import pyarrow.compute as pc
 
     pending: list = []  # (batch, task-start flags) not yet scanned
@@ -222,10 +273,10 @@ def _scan_partition(batches, clocks: tuple[float, float] | None):
         if k:
             pending.append((batch.slice(0, k), starts[:k]))
         if pending:
-            yield from _scan_tasks(pending, clocks)
+            yield from _scan_tasks(pending, plan)
         pending = [(batch.slice(k), starts[k:])]
     if pending:
-        yield from _scan_tasks(pending, clocks)
+        yield from _scan_tasks(pending, plan)
 
 
 def _epoch_seconds(col, null: float):
@@ -236,17 +287,16 @@ def _epoch_seconds(col, null: float):
 
     ns = col.cast(pa.timestamp("ns", col.type.tz)).cast(pa.int64())
     sec = pc.fill_null(ns, 0).to_numpy() / 1e9
-    sec[col.is_null().to_numpy()] = null
+    sec[col.is_null().to_numpy(zero_copy_only=False)] = null
     return sec
 
 
-def _scan_tasks(pending: list, clocks: tuple[float, float] | None):
+def _scan_tasks(pending: list, plan: _ScanPlan):
     """Scan whole tasks: ``pending`` holds (batch, task-start flags)
     pairs whose rows end on a task boundary. Builds the walk's input
     arrays once for the partition, runs one :func:`walk_scan` per task,
-    and yields the input batches with :data:`SCAN_COLS` appended; the
-    input columns pass through untouched, except the global index
-    ``_gidx``, which the scan consumes as run breaks."""
+    numbering the sessions across the tasks, and yields the session rows
+    and the effect rows as Arrow batches of ``plan.schema``."""
     import pyarrow as pa
 
     tbl = pa.Table.from_batches([b for b, _ in pending])
@@ -254,7 +304,12 @@ def _scan_tasks(pending: list, clocks: tuple[float, float] | None):
     starts = np.flatnonzero(np.concatenate([s for _, s in pending]))
     bounds = np.append(starts, n)
 
-    is_create, is_update, end_flag, cust_to, cust_in = walk_inputs(tbl.column, processing=clocks is None)
+    @functools.cache
+    def column(name):
+        return tbl.column(name).combine_chunks() if name in tbl.column_names else None
+
+    clocks = plan.clocks
+    is_create, is_update, end_flag, cust_to, cust_in = walk_inputs(column, processing=clocks is None)
     if clocks is None:
         # processing time: no clock runs out; every row reads ts 0
         timeout = inactivity = math.inf
@@ -263,14 +318,14 @@ def _scan_tasks(pending: list, clocks: tuple[float, float] | None):
     else:
         timeout, inactivity = clocks
         # a NaT ts reads as int64-min nanoseconds, as pandas casts it
-        ts = _epoch_seconds(tbl.column("ts"), np.iinfo(np.int64).min / 1e9)
+        ts = _epoch_seconds(column("ts"), np.iinfo(np.int64).min / 1e9)
 
         def partial_clock(name):
             # a partial row's carried clock, ts on the other rows; None
             # (the walk's default: ts) when no row carries one
             if name not in tbl.column_names:
                 return None
-            sec = _epoch_seconds(tbl.column(name), np.nan)
+            sec = _epoch_seconds(column(name), np.nan)
             return np.where(np.isnan(sec), ts, sec)
 
         # partial rows: a resume seed creates its map at the carried
@@ -281,49 +336,135 @@ def _scan_tasks(pending: list, clocks: tuple[float, float] | None):
     if "_gidx" in tbl.column_names:
         # push_previous run break: another task's event arrived between
         # two of this task's rows and popped its map (aggregate.rb:205-208)
-        gidx = tbl.column("_gidx").to_numpy()
+        gidx = column("_gidx").to_numpy()
         brk = np.zeros(n, dtype=bool)
         brk[1:] = gidx[1:] - gidx[:-1] > 1
     per_row = [*partial, brk]
 
-    included = np.zeros(n, dtype=bool)
-    is_last = np.zeros(n, dtype=bool)
-    breaks: list = []
+    sid = np.full(n, -1, dtype=np.int64)  # session of each code-ran row
+    sessions: list = []  # (task start row, labels, close kind, close row, is last)
     for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
         res = walk_scan(
             ts[s:e], is_create[s:e], is_update[s:e], end_flag[s:e], cust_to[s:e],
             cust_in[s:e], None, timeout, inactivity, *[c if c is None else c[s:e] for c in per_row],
         )
-        included[s:e] = res.code_ran
-        task_breaks, last = _label_breaks(res, s, e)
-        breaks += task_breaks
-        if last is not None:
-            is_last[last[0] : last[1]] = True
-    scanned = [*_session_labels(starts, breaks, n), included, is_last]
-    keep = [i for i, c in enumerate(tbl.column_names) if c != "_gidx"]
-    names = [tbl.column_names[i] for i in keep] + list(SCAN_COLS)
-    off = 0
-    for b, _ in pending:
-        m = b.num_rows
-        yield pa.RecordBatch.from_arrays(
-            [b.column(i) for i in keep] + [pa.array(a[off : off + m]) for a in scanned], names=names,
+        sid[s:e] = np.where(res.sess_id >= 0, res.sess_id + len(sessions), -1)
+        labels = _label_breaks(res, s, e)
+        last = len(res.sessions) - 1
+        for k, (_, _, kind, row) in enumerate(res.sessions):
+            sessions.append((s, labels[k][1:], kind, s + row if kind in (END, CT0) else -1, k == last))
+    if sessions:
+        yield _batch(plan.schema, _session_rows(plan, column, sid, sessions), len(sessions))
+    effect = _effect_rows(plan, column, sid)
+    if len(effect):
+        cols = {c: column(c).take(effect) for c in ("conv_id", "turn_idx", KIND_COL, *plan.effect_cols)}
+        yield _batch(plan.schema, {**cols, "_included": np.ones(len(effect), dtype=bool)}, len(effect))
+
+
+def _batch(schema, cols: dict, n: int):
+    """An Arrow batch of ``schema`` with ``n`` rows: the ``cols`` it
+    names (Arrow or numpy arrays), NULL elsewhere."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays([
+        (c if isinstance(c, pa.Array) else pa.array(c)).cast(f.type) if (c := cols.get(f.name)) is not None
+        else pa.nulls(n, f.type) for f in schema
+    ], schema=schema)
+
+
+def _session_rows(plan: _ScanPlan, column, sid: np.ndarray, sessions: list) -> dict:
+    """The columns of the session rows, folded from the rows whose code
+    ran (``sid``): labels, close, ``map_meta`` (creation O4
+    ``aggregate.rb:525-528`` and last event O5 ``aggregate.rb:220-221``,
+    partial rows counting with their carried clocks and event counts),
+    the last-set per-map overrides (``aggregate.rb:243-246``) and the
+    aggregation dictionary."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n_sess = len(sessions)
+    task_row, labels, kinds, close_row, is_last = (list(c) for c in zip(*sessions))
+    ran = np.flatnonzero(sid >= 0)
+    s = sid[ran]
+    ts = column("ts")
+    with_seeds = column("_seed_nevents") is not None
+
+    def carried(name):
+        # a partial row's carried value where it has one, ts elsewhere
+        c = column(name) if with_seeds else None
+        return (ts if c is None else pc.coalesce(c, ts)).take(ran)
+
+    def override(name):
+        v = column(name).take(ran)
+        return session_fold(s, n_sess, pc.if_else(pc.greater(v, 0), v, pa.nulls(len(v), v.type)), "last")
+
+    weight = np.ones(len(ran))
+    if with_seeds:
+        weight = pc.fill_null(column("_seed_nevents").take(ran), 1).to_numpy().astype(float)
+    close_row = np.asarray(close_row, dtype=np.int64)
+    closed = pa.array(close_row, mask=close_row < 0)
+    lastevent = carried("_seed_lastevent_ts")
+    cols = {
+        "task_id": column(TASK_ID_COL).take(pa.array(task_row)),
+        **dict(zip(("_end_seg", "_gap_seg", "_age_seg"), np.asarray(labels, dtype=np.int32).T)),
+        "creation_ts": session_fold(s, n_sess, carried("_seed_creation_ts"), "min"),
+        "lastevent_ts": session_fold(s, n_sess, lastevent, "max"),
+        "nevents": np.bincount(s, weights=weight, minlength=n_sess).astype(np.int64),
+        "conv_id": column("conv_id").take(ran[first_rows(s, n_sess)]),
+        "close_kind": pa.array([{END: "end", CT0: "custom0"}.get(k) for k in kinds], pa.string()),
+        "end_ts": ts.take(closed),
+        "end_turn_idx": column("turn_idx").take(closed),
+        "_session_timeout": override("_custom_timeout"),
+        "_session_inactivity": override("_custom_inactivity"),
+        "_is_last": np.asarray(is_last, dtype=bool),
+        "_included": np.zeros(n_sess, dtype=bool),
+    }
+    if plan.last_row:
+        # the map's last row in arrival order: max (last event, conv_id,
+        # turn_idx), NULLs lowest as in Spark's struct ordering
+        key = pa.table({"s": s, "ts": lastevent, "conv_id": column("conv_id").take(ran),
+                        "turn_idx": column("turn_idx").take(ran)})
+        order = pc.sort_indices(
+            key, sort_keys=[(c, "ascending") for c in key.column_names], null_placement="at_start"
+        ).to_numpy()
+        pick = pa.array(order[first_rows(s[order], n_sess, last=True)])
+        cols["_last_row"] = pa.StructArray.from_arrays(
+            [key.column(c).combine_chunks().take(pick) for c in ("ts", "conv_id", "turn_idx")],
+            names=["ts", "conv_id", "turn_idx"],
         )
-        off += m
+    types = {f.name: f.type for f in plan.schema}
+    return cols | session_values(plan.specs, column, sid, n_sess, types)
 
 
-def _label_breaks(res, s: int, e: int) -> tuple[list, tuple[int, int] | None]:
+def _effect_rows(plan: _ScanPlan, column, sid: np.ndarray) -> np.ndarray:
+    """The rows whose guard-gated code had a side effect
+    (:func:`_effect_rules`): every code-ran row of a cancel or emit rule,
+    and each code-ran row of a rule with ``required`` aggs whose required
+    input is NULL."""
+    if not plan.effects:
+        return np.zeros(0, dtype=np.int64)
+    rule = column(KIND_COL).to_numpy(zero_copy_only=False)
+    hit = np.zeros(len(sid), dtype=bool)
+    for rid, (every, req) in plan.effects.items():
+        m = rule == rid
+        if not every:
+            nulls = np.zeros(len(sid), dtype=bool)
+            for c in req:
+                nulls |= column(c).is_null().to_numpy(zero_copy_only=False)
+            m &= nulls
+        hit |= m
+    return np.flatnonzero(hit & (sid >= 0))
+
+
+def _label_breaks(res, s: int, e: int) -> list:
     """The rows of the task ``[s, e)`` where its labels change, each with
     the labels from there on, from :func:`walk_scan`'s close records:
     ``_end_seg`` counts the END/CT0 closes strictly before a row,
     ``_gap_seg`` the inactivity expiries and run breaks since the last of
     them, and ``_age_seg`` the age expiries since then (a row whose
     arrival expired the map starts the next label). The labels are unique
-    per map and increase along the task.
-
-    Walk session *k* lives in the *k*-th label run, since a run starts
-    only where a map closes; the second value is the row span of the
-    task's last session (None when no map was made), the rows
-    ``_is_last`` marks."""
+    per map and increase along the task; walk session *k* lives in the
+    *k*-th label run, since a run starts only where a map closes."""
     out = [(s, 0, 0, 0)]
     end_seg = gap = age = 0
     for k, (_, _, kind, row) in enumerate(res.sessions):
@@ -336,24 +477,7 @@ def _label_breaks(res, s: int, e: int) -> tuple[list, tuple[int, int] | None]:
         elif kind != OPEN and s + row + 1 < e:
             end_seg, gap, age = end_seg + 1, 0, 0
             out.append((s + row + 1, end_seg, gap, age))
-    last = len(res.sessions) - 1
-    if last < 0:
-        return out, None
-    return out, (out[last][0], out[last + 1][0] if last + 1 < len(out) else e)
-
-
-def _session_labels(starts, breaks: list, n: int):
-    """``(_ord, _end_seg, _gap_seg, _age_seg)`` int32 columns of a
-    partition of ``n`` rows: the row number within its task (tasks begin
-    at ``starts``), and the labels of :func:`_label_breaks` spread over
-    their rows."""
-    rows, *labels = np.array(breaks, dtype=np.int32).reshape(-1, 4).T
-    lengths = np.diff(np.append(rows, n))
-    task_start = np.repeat(starts.astype(np.int32), np.diff(np.append(starts, n)))
-    return (
-        np.arange(1, n + 1, dtype=np.int32) - task_start,
-        *[np.repeat(lab, lengths) for lab in labels],
-    )
+    return out
 
 
 def _fast_scan(ts, end_seg, seed_creation, age, timeout: float, inactivity: float) -> None:
@@ -366,5 +490,5 @@ def _fast_scan(ts, end_seg, seed_creation, age, timeout: float, inactivity: floa
     none, nan = np.zeros(n, dtype=bool), np.full(n, np.nan)
     creation = ts if seed_creation is None else np.where(np.isnan(seed_creation), ts, seed_creation)
     res = walk_scan(ts, none, none, end_flag, nan, nan, None, timeout, inactivity, creation)
-    _, _, gap, aged = _session_labels(np.zeros(1, dtype=np.int64), _label_breaks(res, 0, n)[0], n)
-    age[:] = gap + aged
+    rows, _, gap, aged = np.array(_label_breaks(res, 0, n)).T
+    age[:] = np.repeat(gap + aged, np.diff(np.append(rows, n)))

@@ -19,7 +19,8 @@ Exactness:
   ``allow_age_approx=True``).
 
 Partial rows reuse the resume-seed mechanism (``_seed_*`` columns,
-plans/resume.py): the aggregate stage merges them with each fn's natural
+plans/resume.py): the scan's aggregation dictionary
+(``correlate.session_values``) merges them with each fn's natural
 combiner, so no second code path exists downstream.
 
 Two eligibility tiers:
@@ -49,7 +50,7 @@ from logstash_filter_aggregate_spark.config import (
     ConfigurationError,
     PipelineConfig,
 )
-from logstash_filter_aggregate_spark.operators.correlate import SEED_RULE, _merged_agg_specs, _value_expr
+from logstash_filter_aggregate_spark.operators.correlate import SEED_RULE, _merged_agg_specs, _value_sql
 
 _PREREDUCIBLE_FNS = {"sum", "count", "min", "max"}
 
@@ -80,7 +81,7 @@ def _pre_guard_included(w) -> Column:
     creator are no-ops. Exact under prereduce's precondition that no map
     expires mid-segment.
 
-    Why this is a window and not the scan's ``_included``: prereduce
+    Why this is a window and not the scan's guard decision: prereduce
     must drop guard-rejected rows *before* it collapses rows into
     partial rows, since a super-row no longer knows which of its rows
     ran the code. The scan runs after the task exchange, and its input
@@ -111,8 +112,8 @@ def guard_inclusion_frame(classified: DataFrame, cfg: PipelineConfig) -> DataFra
     """Per-row guard inclusion ``(conv_id, turn_idx, _g_included)`` for
     guard-gated rules, resolved directly on the classified stream with the
     same narrow pre-window :func:`prereduce` uses — the prereduce-path
-    substitute for ``sessionize``'s ``_included`` (which only exists at
-    per-row grain on the NON-prereduced sessionized frame). Valid under
+    substitute for the scan's effect rows, which on this path come from
+    super-rows. Valid under
     prereduce's own precondition (no mid-segment gap/age expiry, enforced
     by :func:`prereduce`); joins back to the full-width stream on the
     (conv_id, turn_idx) row key."""
@@ -178,10 +179,7 @@ def prereduce(
             "(error < bucket_s); pass allow_age_approx=True to accept"
         )
 
-    from logstash_filter_aggregate_spark.operators.correlate import (
-        narrow_for_correlation,
-        value_col_name,
-    )
+    from logstash_filter_aggregate_spark.operators.correlate import narrow_for_correlation
 
     merged = _merged_agg_specs(cfg)
     ts_sec = F.col("ts").cast("timestamp").cast("double")
@@ -191,7 +189,7 @@ def prereduce(
     # whole prereduce stage — pre-window included — carries narrow rows
     partials = []
     for name, (fn, sources) in merged.items():
-        val = _value_expr(sources, projected=True)
+        val = F.expr(_value_sql(sources, projected=True))
         if fn == "sum":
             partials.append(F.sum(val).alias(f"_seed_{name}"))
         elif fn == "count":
@@ -207,6 +205,7 @@ def prereduce(
         classified.where(F.col(TASK_ID_COL).isNotNull() & F.col(KIND_COL).isNotNull()),
         cfg,
     )
+    narrow = participating.schema
 
     seg_key: list = []
     ends = None
@@ -256,13 +255,11 @@ def prereduce(
     )
     if ends is not None:
         reduced = reduced.unionByName(ends, allowMissingColumns=True)
-    # downstream _value_expr(projected=True) must resolve every _v_ column
-    # even when only seed rows carry a given aggregate
-    needed = {
-        value_col_name(r.rule_id, s.col) for r in cfg.rules for s in r.aggs if s.col
-    }
-    for c in sorted(needed - set(reduced.columns)):
-        reduced = reduced.withColumn(c, F.lit(None))
+    # the scan reads every pre-evaluated input column, typed as the
+    # narrow stream types it, even when only partial rows remain
+    for f in narrow.fields:
+        if f.name.startswith(("_v_", "_e_")) and f.name not in reduced.columns:
+            reduced = reduced.withColumn(f.name, F.lit(None).cast(f.dataType))
     return reduced
 
 

@@ -4,10 +4,9 @@
 (O8-O12, O3) -> aggregate (O4-O6) -> route (O13-O16, U5)`` plus the
 passthrough event stream (tags O19, cancel U3) and inline emissions
 (O18). The logical plan is declared once; Catalyst/AQE pick the
-physical strategy. Two shuffles total on the hot path: the
-``_task_id`` exchange of the narrow event rows ahead of the per-task
-scan, and the exchange of per-session partial rows under the session
-aggregate (see :func:`run_pipeline`).
+physical strategy. One shuffle on the hot path: the ``_task_id``
+exchange of the narrow event rows ahead of the per-task scan, which
+returns one row per map (see :func:`run_pipeline`).
 """
 
 from __future__ import annotations
@@ -142,29 +141,6 @@ def _exception_flag(cfg: PipelineConfig, with_incl: bool, with_tagged: bool = Fa
     return any_of(flags)
 
 
-def tagged_exception_keys(guarded: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Row keys of guard-gated rows the reference's code would raise on:
-    ``_included`` AND a NULL required input — evaluated on the guarded
-    frame's pre-projected ``_v_*`` columns, so the decision rides the
-    existing task exchange and the result is a FEW rows (nulls are the
-    exception, literally) that broadcast back onto the passthrough
-    without shuffling the event stream."""
-    from logstash_filter_aggregate_spark.operators.correlate import value_col_name
-
-    raises = []
-    for r in cfg.rules:
-        if r.map_action == "create_or_update":
-            continue
-        req = [s for s in r.aggs if s.required and s.col]
-        if not req:
-            continue
-        nulls = any_of([f"{ident(value_col_name(r.rule_id, s.col))} IS NULL" for s in req])
-        raises.append(all_of([f"_rule_id = {quote(r.rule_id)}", nulls]))
-    return guarded.where(all_of(["_included", any_of(raises)])).selectExpr(
-        "conv_id", "turn_idx", "true AS _g_tagged"
-    )
-
-
 def passthrough_stream(
     classified: DataFrame,
     cfg: PipelineConfig,
@@ -183,12 +159,13 @@ def passthrough_stream(
     planned):
 
     - ``tagged_df`` (gated REQUIRED-agg rules, the common case): the
-      pre-decided exception keys broadcast onto the stream — the
-      passthrough stays scan-shaped (zero event-stream shuffle); the
-      build side reads the persisted guarded frame.
-    - ``incl_df`` (the prereduce path, or gated CANCEL rules): full
-      per-row inclusion ``(conv_id, turn_idx, _g_included)`` joined on
-      the row key — one extra exchange of the passthrough stream.
+      keys of the scan's effect rows that raise, broadcast onto the
+      stream — the passthrough stays scan-shaped (zero event-stream
+      shuffle); the build side reads the persisted scan output.
+    - ``incl_df`` (the prereduce path, or gated CANCEL rules): the keys
+      ``(conv_id, turn_idx, _g_included)`` of the rows whose gated code
+      ran, joined on the row key — one extra exchange of the passthrough
+      stream.
     """
     df = classified
     if incl_df is not None:
@@ -225,10 +202,10 @@ def inline_emissions(
     - rules with ``create_or_update`` emit straight off the classified
       stream (guard always passes) — zero extra shuffle;
     - guard-gated rules read the pre-evaluated ``_e_*`` columns off the
-      ``guarded`` sessionized frame where ``_included`` (riding the
-      existing task exchange), or — on the prereduce path, where no
-      per-row guarded frame exists — join ``incl_df`` back to the
-      classified rows of that rule.
+      effect rows of the ``guarded`` scan output (riding the existing
+      task exchange), or — on the prereduce path, where the scan sees
+      super-rows — join ``incl_df`` back to the classified rows of that
+      rule.
     """
     from logstash_filter_aggregate_spark.operators.correlate import emit_col_name
 
@@ -274,9 +251,10 @@ def run_pipeline(
     The job set correlates once (PLANS.md): the closed sessions frame is
     persisted and every session bucket is a filter over it. Configs whose
     passthrough depends on guard results read one lazily checkpointed
-    classified stream (one parse), and persist the narrow guarded frame
-    that both the session aggregate and the passthrough read. The frames
-    are released by ``write_routed`` or the next ``run_pipeline``.
+    classified stream (one parse), and persist the scan's output, whose
+    session rows feed the buckets and whose effect rows feed the
+    passthrough and the gated emits. The frames are released by
+    ``write_routed`` or the next ``run_pipeline``.
 
     ``open_maps``: the previous run's ``open`` bucket — resumes the
     still-live maps (plans/resume.py, the aggregate_maps_path analog).
@@ -327,18 +305,17 @@ def run_pipeline(
 
     guarded = sessionize(correlated_in, cfg)
     if prereduce_s is None and (gated_emit or gated_cancel or gated_req):
-        # the gated side effects read the guarded frame besides the session
-        # aggregate: persisting it runs the task exchange and the scan
-        # once for the job set. Narrow = engine cols +
-        # pre-evaluated agg inputs only (no text), so the footprint is a
-        # small fraction of the input.
+        # the gated side effects read the scan's effect rows besides its
+        # session rows: persisting the output runs the task exchange and
+        # the scan once for the job set. It holds one row per map plus
+        # one per effect, a small fraction of the input.
         guarded = _persisted(guarded)
 
     # per-row inclusion for gated code side-effects (see the
     # passthrough_stream docstring for the cost model of each delivery).
-    # Prereduce: the guarded frame holds super-rows, so inclusion resolves
-    # on the classified stream with the narrow pre-window instead (valid
-    # under prereduce's own no-mid-segment-expiry precondition).
+    # Prereduce: the scan sees super-rows, so inclusion resolves on the
+    # classified stream with the narrow pre-window instead (valid under
+    # prereduce's own no-mid-segment-expiry precondition).
     incl_df = None
     tagged_df = None
     if prereduce_s is not None:
@@ -347,15 +324,21 @@ def run_pipeline(
 
             incl_df = guard_inclusion_frame(classified, cfg)
     elif gated_cancel:
-        gated_ids = [
-            r.rule_id for r in gated
-            if r.cancel or any(s.required and s.col for s in r.aggs)
-        ]
-        incl_df = guarded.where(f"_rule_id IN ({', '.join(map(quote, gated_ids))})").selectExpr(
-            "conv_id", "turn_idx", "_included AS _g_included"
-        )
+        # every code-ran row of a gated cancel rule is an effect row
+        incl_df = guarded.where("_included").selectExpr("conv_id", "turn_idx", "true AS _g_included")
     elif gated_req:
-        tagged_df = tagged_exception_keys(guarded, cfg)
+        # the effect rows the reference's code raises on: a NULL required input
+        from logstash_filter_aggregate_spark.operators.correlate import value_col_name
+
+        raises = [
+            all_of([f"_rule_id = {quote(r.rule_id)}", any_of(
+                [f"{ident(value_col_name(r.rule_id, s.col))} IS NULL" for s in r.aggs if s.required and s.col]
+            )])
+            for r in gated if any(s.required and s.col for s in r.aggs)
+        ]
+        tagged_df = guarded.where(all_of(["_included", any_of(raises)])).selectExpr(
+            "conv_id", "turn_idx", "true AS _g_tagged"
+        )
 
     # watermark from the raw input: scan-only (ts column pruned down to
     # the parquet reader). The closed frame is persisted, so the buckets

@@ -10,7 +10,7 @@ Run N writes its ``open`` bucket; run N+1 turns each open map into one
 - ``_seed_creation_ts`` preserves the true map age for the absolute
   timeout (a map that aged out during the downtime expires immediately);
 - ``_seed_<agg>`` columns carry the prior partial aggregates, merged by
-  each fn's natural combiner in ``aggregate_sessions``;
+  each fn's natural combiner in the scan (``correlate.session_values``);
 - the seed's ``map_action`` is ``create_or_update``: it re-creates the
   map, so a duplicate ``start`` event in run N+1 is correctly ignored
   (``spec:268-307`` persistence round-trip behavior).
@@ -66,7 +66,7 @@ def seed_rows_from_open(open_maps: DataFrame, cfg: PipelineConfig) -> DataFrame:
     for n, (fn, _) in merged.items():
         if fn == "avg":
             # avg merges via its sum/count partials (the open bucket
-            # carries them — correlate._avg_partials), never the bare avg
+            # carries them — correlate.session_agg_fields), never the bare avg
             cols.append(F.col(f"_avg_sum_{n}").alias(f"_seed__avg_sum_{n}"))
             cols.append(F.col(f"_avg_cnt_{n}").alias(f"_seed__avg_cnt_{n}"))
     return open_maps.select(*cols)

@@ -31,7 +31,7 @@ from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from logstash_filter_aggregate_spark.config import PipelineConfig
+from logstash_filter_aggregate_spark.config import PipelineConfig, local_path
 from logstash_filter_aggregate_spark.plans.pipeline import release_pipeline_caches
 
 log = logging.getLogger(__name__)
@@ -61,7 +61,7 @@ class RunManifest:
         return f"{base}/_lineage/{self.run_id}.json"
 
     def save(self, base: str) -> None:
-        p = self.path(base)
+        p = self.path(local_path(base))
         os.makedirs(os.path.dirname(p), exist_ok=True)
         tmp = p + ".tmp"
         with open(tmp, "w") as f:
@@ -70,7 +70,7 @@ class RunManifest:
 
     @classmethod
     def load(cls, base: str, run_id: str) -> "RunManifest | None":
-        p = f"{base}/_lineage/{run_id}.json"
+        p = f"{local_path(base)}/_lineage/{run_id}.json"
         if not os.path.exists(p):
             return None
         with open(p) as f:

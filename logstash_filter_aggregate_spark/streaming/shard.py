@@ -25,8 +25,9 @@ differ only in the output they build from the walk:
 :func:`make_correlate_shard_fn` the closed maps, timeout pushes and emit
 rows, :func:`make_passthrough_shard_fn` the input rows, tagged or
 cancelled. Sessions are numbered globally across the chunk's tasks so
-the aggregation dictionaries build in one set of vectorized passes
-(:func:`stream._session_agg_maps`).
+every map folds in one call of the batch scan's aggregation dictionary
+(:func:`correlate.session_values`), each carried cell's map merged in as
+a partial row ahead of its session's rows.
 
 Clocks, timers and eviction: one :class:`_Clock` gives each cell a
 deadline. In event time (the default) it is the map's own age or
@@ -72,16 +73,16 @@ from pyspark.sql.streaming.state import GroupState
 
 from logstash_filter_aggregate_spark.config import PipelineConfig
 from logstash_filter_aggregate_spark.operators.correlate import (
-    _merged_agg_specs,
+    SEED_RULE,
+    agg_specs,
     emit_col_name,
+    session_values,
     value_col_name,
 )
 from logstash_filter_aggregate_spark.streaming.stream import (
     OUTPUT_SCHEMA,
     _map_json,
-    _merge_carried,
     _norm,
-    _session_agg_maps,
     _ts_us,
 )
 from logstash_filter_aggregate_spark.streaming.walk import (
@@ -453,23 +454,67 @@ def make_passthrough_shard_fn(cfg: PipelineConfig, out_cols: list[str],
     return fn
 
 
+def _session_maps(specs: dict, types: dict, whole: pd.DataFrame, walk: _Walk) -> list[dict]:
+    """Each session's map of a walked chunk: :func:`correlate.session_values`
+    over the chunk's code-ran rows, each carried cell's map merged in as a
+    partial row ahead of its session's rows. A map holds the entries
+    something went into: no NULL, no zero count, no empty collection;
+    ``avg`` as its ``[sum, count]`` partials, so a carried map merges
+    exactly (:func:`stream._map_json` renders the mean)."""
+    carried = list(walk.sess_init_map.items())
+    k, n = len(carried), len(whole)
+
+    def partial(m: dict, col: str):
+        # the carried value of one output column
+        for prefix, i in (("_avg_sum_", 0), ("_avg_cnt_", 1)):
+            if col.startswith(prefix) and col[len(prefix):] in m:
+                return m[col[len(prefix):]][i]
+        return m.get(col)
+
+    def column(name: str):
+        if name == "_rule_id":
+            return pa.array([SEED_RULE] * k + whole["_rule_id"].tolist(), pa.string())
+        if name.startswith("_seed_") and name[6:] in types:
+            t = types[name[6:]]
+            seeds = pa.array([partial(m, name[6:]) for _, m in carried], type=t)
+            return pa.concat_arrays([seeds, pa.nulls(n, t)])
+        if name not in whole:
+            return None
+        rows = pa.Array.from_pandas(whole[name])
+        return pa.concat_arrays([pa.nulls(k, rows.type), rows])
+
+    n_sess = len(walk.sessions)
+    sid = np.concatenate([np.asarray([b for b, _ in carried], dtype=np.int64), walk.sess_full])
+    values = {c: a.to_pylist() for c, a in session_values(specs, column, sid, n_sess, types).items()}
+    maps: list[dict] = [dict() for _ in range(n_sess)]
+    for name, (fn, _) in specs.items():
+        if fn == "avg":
+            for m, s_, c_ in zip(maps, values[f"_avg_sum_{name}"], values[f"_avg_cnt_{name}"]):
+                if c_:
+                    m[name] = [s_, c_]
+            continue
+        for m, v in zip(maps, values[name]):
+            if v is not None and v != [] and not (fn == "count" and v == 0):
+                m[name] = v
+    return maps
+
+
 def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozenset,
-                            time_mode: str = "event"):
+                            agg_types: dict, time_mode: str = "event"):
     """State walk for :func:`stream.streaming_correlate`: the full map
     lifecycle (aggregation dictionaries, closes, timeout pushes, O18 emit
     rows) over the reference's filter hot path (``aggregate.rb:179-255``).
     Agg and emit inputs arrive pre-projected as the batch engine's
-    ``value_col_name`` / ``emit_col_name`` columns; ``int_cols`` names
-    those of an integral Spark type, which render as JSON integers
-    whatever dtype pandas gave the chunk.
+    ``value_col_name`` / ``emit_col_name`` columns; ``agg_types`` maps
+    each aggregation column (``correlate.session_agg_fields``) to its
+    Arrow type, and ``int_cols`` names the emit inputs of an integral
+    Spark type, which render as JSON integers whatever dtype pandas gave
+    the chunk.
 
     ``time_mode='processing'``: wall-clock expiry (see
     :func:`make_passthrough_shard_fn`), with evicted cells pushed as
     timeout rows where the config asks for it."""
-    agg_specs = {
-        name: (fn_, [(rid, value_col_name(rid, col)) for rid, col in sources])
-        for name, (fn_, sources) in _merged_agg_specs(cfg).items()
-    }
+    specs = agg_specs(cfg)
     emit_rules = {
         r.rule_id: [(n, emit_col_name(r.rule_id, n)) for n in r.emit]
         for r in cfg.rules if r.emit
@@ -483,25 +528,20 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
             task_id=task, sink="timeout",
             creation_ts=_ts_us(cell[_C]), lastevent_ts=_ts_us(cell[_L]),
             nevents=int(cell[_N]),
-            map_json=_map_json(agg_specs, cell[_M] or {}),
+            map_json=_map_json(specs, cell[_M] or {}),
         )
 
     def _walk_rows(whole, walk: _Walk, out_rows: list) -> None:
         """Append the closed maps and emit rows of one walked chunk, and
         persist the open maps into their cells."""
         sessions, sess_full = walk.sessions, walk.sess_full
-        n_sess = len(sessions)
         cr_idx = np.flatnonzero(walk.code_ran)
         sess_cr = sess_full[cr_idx]
         srid = (
             whole["_rule_id"].to_numpy()[cr_idx]
             if cr_idx.size else np.empty(0, dtype=object)
         )
-        sess_maps = _session_agg_maps(
-            whole, cr_idx, sess_cr, srid, n_sess, agg_specs, int_cols
-        )
-        for base, imap in walk.sess_init_map.items():
-            sess_maps[base] = _merge_carried(agg_specs, imap, sess_maps[base])
+        sess_maps = _session_maps(specs, agg_types, whole, walk)
 
         # closed sessions -> sink rows
         for si_, (task, creation, last_ts, kind) in enumerate(sessions):
@@ -519,7 +559,7 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
                 task_id=task, sink=sink,
                 creation_ts=_ts_us(creation), lastevent_ts=_ts_us(last_ts),
                 nevents=int(walk.sess_nev[si_]),
-                map_json=_map_json(agg_specs, sess_maps[si_]),
+                map_json=_map_json(specs, sess_maps[si_]),
             ))
 
         # emit rows (O18): one per code-ran row of an emit rule, carrying

@@ -20,18 +20,18 @@ from __future__ import annotations
 
 import json
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from logstash_filter_aggregate_spark.config import PipelineConfig
+from logstash_filter_aggregate_spark.config import ConfigurationError, PipelineConfig, local_path
 from logstash_filter_aggregate_spark.operators.classify import classify
 from logstash_filter_aggregate_spark.operators.correlate import (
     _merged_agg_specs,
     emit_col_name,
+    session_agg_fields,
     value_col_name,
 )
 from logstash_filter_aggregate_spark.plans.pipeline import compile_groks, parse
@@ -88,116 +88,13 @@ def _ts_us(sec: float) -> pd.Timestamp:
     return pd.Timestamp(sec, unit="s").round("us")
 
 
-def _merge_carried(agg_specs: dict, carried: dict, batch: dict) -> dict:
-    """Combine the state cell's accumulated map with this batch's
-    per-session aggregate, per agg function semantics."""
-    if not carried:
-        return batch
-    out = dict(carried)
-    for name, v in batch.items():
-        if name not in out:
-            out[name] = v
-            continue
-        fn_ = agg_specs[name][0] if name in agg_specs else "last"
-        if fn_ in ("count", "sum"):
-            out[name] = out[name] + v
-        elif fn_ == "min":
-            out[name] = min(out[name], v)
-        elif fn_ == "max":
-            out[name] = max(out[name], v)
-        elif fn_ == "first":
-            pass                            # carried first wins
-        elif fn_ == "avg":                  # [sum, count] partials
-            out[name] = [out[name][0] + v[0], out[name][1] + v[1]]
-        elif fn_ == "collect_list":
-            out[name] = list(out[name]) + list(v)
-        elif fn_ == "collect_set":
-            cur = list(out[name])
-            out[name] = cur + [x for x in v if x not in cur]
-        else:                               # last
-            out[name] = v
-    return out
-
-
 def _map_json(agg_specs: dict, m: dict) -> str:
-    """A map as the sinks carry it: JSON, each ``avg`` entry rendered as
-    the mean of its ``[sum, count]`` partials."""
+    """A map (``shard._session_maps``) as the sinks carry it: JSON, each
+    ``avg`` entry rendered as the mean of its ``[sum, count]`` partials."""
     return json.dumps(
         {k: v[0] / v[1] if agg_specs.get(k, ("last",))[0] == "avg" else v for k, v in m.items()},
         default=str,
     )
-
-
-def _session_agg_maps(whole, cr_idx, sess_cr, srid, n_sess: int, agg_specs: dict,
-                      int_cols: frozenset):
-    """Per-session aggregation dictionaries: one set of vectorized passes
-    per agg name over the code-ran rows. ``sess_cr`` numbers sessions
-    across every task of the chunk; session ids are unique within it.
-    Values of ``int_cols`` (integral Spark type) aggregate as int64 even
-    when the chunk's nulls made pandas upcast the column to float, so a
-    map renders the same JSON whichever tasks share the chunk (and the
-    batch engine's ``long`` sums)."""
-    sess_maps: list[dict] = [dict() for _ in range(n_sess)]
-    if not cr_idx.size:
-        return sess_maps
-    for name, (fn_, pairs) in agg_specs.items():
-        if fn_ == "count":
-            ind = np.zeros(len(cr_idx), dtype=bool)
-            for rid_, _col in pairs:
-                ind |= (srid == rid_).astype(bool)
-            cnt = np.bincount(sess_cr[ind], minlength=n_sess)
-            for si_ in np.flatnonzero(cnt):
-                sess_maps[int(si_)][name] = int(cnt[si_])
-            continue
-        parts = []
-        for rid_, col in pairs:
-            m = (srid == rid_).astype(bool)
-            if not m.any():
-                continue
-            v = whole[col].iloc[cr_idx[m]]
-            nn = v.notna().to_numpy()
-            if not nn.any():
-                continue
-            val = v.to_numpy()[nn]
-            if col in int_cols and val.dtype.kind == "f":
-                val = val.astype(np.int64)
-            parts.append(pd.DataFrame({
-                "sess": sess_cr[m][nn],
-                "pos": cr_idx[m][nn],
-                "val": val,
-            }))
-        if not parts:
-            continue
-        dfp = parts[0] if len(parts) == 1 else pd.concat(
-            parts, ignore_index=True
-        ).sort_values("pos", kind="mergesort")
-        g = dfp.groupby("sess")["val"]
-        if fn_ == "avg":
-            # [sum, count] partials, so a map carried across micro-batches
-            # merges exactly; rendered as their mean (_map_json)
-            sums, cnts = g.sum(), g.count()
-            for si_, s_, c_ in zip(sums.index, sums.tolist(), cnts.tolist()):
-                sess_maps[int(si_)][name] = [s_, c_]
-            continue
-        if fn_ == "sum":
-            agg_res = g.sum()
-        elif fn_ == "min":
-            agg_res = g.min()
-        elif fn_ == "max":
-            agg_res = g.max()
-        elif fn_ == "first":
-            agg_res = g.first()
-        elif fn_ == "last":
-            agg_res = g.last()
-        elif fn_ == "collect_list":
-            agg_res = g.agg(list)
-        else:                            # collect_set: stable dedupe
-            agg_res = g.agg(lambda s: list(dict.fromkeys(s)))
-        for si_, v_ in agg_res.items():
-            sess_maps[int(si_)][name] = (
-                [_norm(x) for x in v_] if isinstance(v_, list) else _norm(v_)
-            )
-    return sess_maps
 
 
 def streaming_correlate(
@@ -235,8 +132,11 @@ def streaming_correlate(
     assert structure, not latencies); ``map_meta.timeout = 0`` instant
     eviction still fires, but >0 per-map overrides are event-mode
     features and are ignored."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
     from logstash_filter_aggregate_spark.streaming.shard import make_correlate_shard_fn
 
+    _reject_push_previous(cfg)
     _check_time_mode(time_mode)
     shards = _shard_count(shards)
     # the batch engine's agg specs and pre-projected input columns: a
@@ -278,8 +178,21 @@ def streaming_correlate(
     int_cols = frozenset(
         n for n in value_cols if isinstance(part.schema[n].dataType, T.IntegralType)
     )
-    fn = make_correlate_shard_fn(cfg, shards, int_cols, time_mode=time_mode)
+    agg_types = {f.name: to_arrow_type(f.dataType) for f in session_agg_fields(part, cfg)}
+    fn = make_correlate_shard_fn(cfg, shards, int_cols, agg_types, time_mode=time_mode)
     return _shard_keyed(part, fn, OUTPUT_SCHEMA, shards, time_mode)
+
+
+def _reject_push_previous(cfg: PipelineConfig) -> None:
+    """The shard state keys maps by task, so it cannot pop a map when
+    another task's event arrives (``aggregate.rb:205-208``): refuse
+    push_previous configs instead of writing empty sinks."""
+    if cfg.push_previous_map_as_event:
+        raise ConfigurationError(
+            "streaming_correlate cannot run push_previous_map_as_event: its pop "
+            "discipline spans tasks, and streaming state is kept per task; "
+            "stream such configs with replay_push_previous"
+        )
 
 
 def _check_time_mode(time_mode: str) -> None:
@@ -363,8 +276,6 @@ def streaming_inline_emissions(stream_df: DataFrame, cfg: PipelineConfig, groks=
     streaming state CAN express but this helper does not implement; they
     raise rather than silently emit rows the reference would suppress
     (use the batch engine / replay_push_previous for those shapes)."""
-    from logstash_filter_aggregate_spark.config import ConfigurationError
-
     gated = [r.rule_id for r in cfg.rules if r.emit and r.map_action != "create_or_update"]
     if gated:
         raise ConfigurationError(
@@ -509,9 +420,10 @@ def replay_push_previous(
 
     Exactly-once: sink and state writes go to ``batch_id=N`` directories
     with overwrite, and batch N reads the state of the LARGEST id < N —
-    a replayed batch reconstructs from its true predecessor. State
-    listing uses the local filesystem (this sandbox); on a cluster point
-    ``base_path`` at a shared FS.
+    a replayed batch reconstructs from its true predecessor. The driver
+    lists the state with ``os``, so ``base_path`` must be a local or
+    shared-filesystem path or a ``file:`` URI; other schemes raise
+    ``ConfigurationError``.
 
     Batches are assumed to arrive in event-time order (an ordered file
     source) — the same event-time-equals-arrival-order model the batch
@@ -530,19 +442,20 @@ def replay_push_previous(
 
     if not cfg.push_previous_map_as_event:
         raise ValueError("cfg must set push_previous_map_as_event=True")
+    local_state = f"{local_path(base_path)}/_pp_state"  # listed with os
     schema = spark.read.parquet(input_dir).schema
     state_root = f"{base_path}/_pp_state"
     seg_drop = ["_end_seg", "_gap_seg", "_age_seg", "_is_last", "close_kind", "_last_row"]
 
     def _latest_state(before: int) -> str | None:
-        if not os.path.isdir(state_root):
+        if not os.path.isdir(local_state):
             return None
         ids = [
             int(m.group(1))
-            for d in os.listdir(state_root)
+            for d in os.listdir(local_state)
             if (m := _re.fullmatch(r"batch_id=(\d+)", d))
             and m and int(m.group(1)) < before
-            and os.path.exists(f"{state_root}/{d}/_SUCCESS")
+            and os.path.exists(f"{local_state}/{d}/_SUCCESS")
         ]
         return f"{state_root}/batch_id={max(ids)}" if ids else None
 
@@ -627,11 +540,11 @@ def replay_push_previous(
         _timeout_event(sessions_like, cfg, final_col="_final").drop(
             "_final", "_session_timeout", "_session_inactivity"
         ).write.mode("overwrite").parquet(final_dir)
-    elif os.path.isdir(final_dir):
+    elif os.path.isdir(local_final := f"{local_path(base_path)}/timeout/batch_id=final"):
         # no state at all this run: drop any stale final dir
         import shutil
 
-        shutil.rmtree(final_dir, ignore_errors=True)
+        shutil.rmtree(local_final, ignore_errors=True)
 
 
 def replay_routed(
@@ -678,6 +591,7 @@ def replay_routed(
     """
     import re as _re
 
+    _reject_push_previous(cfg)
     shards = _shard_count(shards)
     schema = spark.read.parquet(input_dir).schema
     hb_dir = f"{base_path}/_heartbeat_src"

@@ -18,8 +18,8 @@ runs the identical state machine as a numpy session-hop, with:
   map with its carried creation time, and a pre-reduced super-row
   refreshes the gap clock to its last event, not its arrival position;
 - per-row ``code_ran`` labels and per-session close records coming
-  out — the streaming outputs are passthrough rows and closed maps,
-  the batch output is ``_included`` plus the session labels.
+  out, which both engines fold into one row per map with the same
+  aggregation dictionary (``operators/correlate.py::session_values``).
 
 Python-level work is O(#sessions + #override events + #closes), each
 step O(log n); every per-row computation is numpy. Fuzz-pinned against

@@ -464,3 +464,23 @@ def test_compact_embedding_store_recall_after_compaction(spark, tmp_path):
     }
     for i in range(4):
         assert (1000 + i, i) in got, (i, sorted(got))
+
+
+def test_store_control_files_refuse_remote_schemes(spark, tmp_path, monkeypatch):
+    # the writer lease and the compaction listing use os on the driver: on
+    # an s3:// store they used to live in ./s3:/... on the driver's disk
+    # and exclude no writer on another host. Both raise, naming the path;
+    # a file: URI is a local path
+    import re
+
+    from logstash_filter_aggregate_spark.config import ConfigurationError
+    from logstash_filter_aggregate_spark.operators.incremental import compact_store
+
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ConfigurationError, match=re.escape("s3://bucket/store")):
+        incremental_exact_dedup(_corpus(spark, n=4), "s3://bucket/store", batch_id=0)
+    with pytest.raises(ConfigurationError, match=re.escape("s3://bucket/store")):
+        compact_store(spark, "s3://bucket/store")
+    assert not (tmp_path / "s3:").exists()
+    assert compact_store(spark, f"file://{tmp_path}/store")["compacted"] is False
+    assert (tmp_path / "store").is_dir()

@@ -47,25 +47,48 @@ def transcripts_path(spark, tmp_path_factory):
 def test_correlation_stage_single_task_exchange(spark, transcripts_path, cfg_fn):
     # the event stream crosses ONE exchange, on the task key alone, ahead
     # of the exact scan (the claim BENCH/BASELINE.md's scaling rests on).
-    # The scan's output carries no known partitioning, so the session
-    # groupBy exchanges again on the full session key: that exchange must
-    # sit directly on the aggregate's partial stage, so it moves one row
-    # per map per partition, never event rows. Gated configs persist the
-    # scanned frame; the closed frame's plan prints it, so the walk below
-    # covers it too.
+    # The scan returns one row per map, so no exchange of session rows
+    # follows it. Gated configs persist the scanned frame; the closed
+    # frame's plan prints it, so the count below covers it too.
     t = spark.read.parquet(transcripts_path)
     out = run_pipeline(spark, t, cfg_fn())
-    lines = _plan(out.sessions).splitlines()
-    event_rows, partials = 0, 0
-    for i, ln in enumerate(lines):
-        if "Exchange hashpartitioning(_task_id" not in ln:
-            continue
-        if re.search(r"Exchange hashpartitioning\(_task_id#\d+, \d+\)", ln):
-            event_rows += 1
-        else:
-            assert "Aggregate" in lines[i + 1] and "partial_" in lines[i + 1], "\n".join(lines)
-            partials += 1
-    assert (event_rows, partials) == (1, 1), "\n".join(lines)
+    plan = _plan(out.sessions)
+    assert plan.count("Exchange hashpartitioning(_task_id") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(_task_id#\d+, \d+\)", plan), plan
+
+
+def _scan_lineage(plan: str) -> tuple[list[str], list[str]]:
+    """The operators above the ``MapInArrow`` node of a printed physical
+    plan (its ancestors) and below it (its subtree)."""
+    lines = plan.splitlines()
+    depth = [re.match(r"[\s:+|-]*", ln).end() for ln in lines]
+    at = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    above, d = [], depth[at]
+    for i in range(at - 1, -1, -1):
+        if depth[i] < d:
+            above.append(lines[i])
+            d = depth[i]
+    below = []
+    for i in range(at + 1, len(lines)):
+        if depth[i] <= depth[at]:
+            break
+        below.append(lines[i])
+    return above, below
+
+
+@pytest.mark.parametrize("cfg_fn", [
+    lambda: example1_config(timeout=3600.0),
+    lambda: example3_config(timeout=600.0),
+], ids=["example1", "example3"])
+def test_sessions_plan_ends_at_the_scan(spark, transcripts_path, cfg_fn):
+    # the scan folds every map into its session row: in the sessions
+    # plan no exchange and no aggregate sits above MapInArrow (the
+    # watermark aggregate is a broadcast side branch, not an ancestor),
+    # and exactly one task-key exchange sits below it
+    t = spark.read.parquet(transcripts_path)
+    above, below = _scan_lineage(_plan(run_pipeline(spark, t, cfg_fn()).sessions))
+    assert not [ln for ln in above if "Exchange" in ln or "Aggregate" in ln], above
+    assert sum("Exchange hashpartitioning(_task_id" in ln for ln in below) == 1, below
 
 
 def test_exact_scan_is_one_arrow_call_per_partition(spark, transcripts_path):

@@ -178,3 +178,26 @@ def test_final_flush_tags_nothing_when_last_map_closed(spark):
     out = run_pipeline(spark, make_transcript(spark, rows), _click_count_cfg(end))
     assert _pushed(out) == [("A", 1, False)]
     assert [r.task_id for r in out.completed.collect()] == ["B"]
+
+
+def test_streaming_refuses_push_previous(spark, tmp_path):
+    # streaming state is kept per task and cannot pop a map when another
+    # task's event arrives (aggregate.rb:205-208): streaming_correlate and
+    # replay_routed refuse push_previous configs, naming the replay that
+    # streams them, before any plan, file or checkpoint exists (they used
+    # to write empty sinks without an error)
+    import pytest
+
+    from logstash_filter_aggregate_spark.config import ConfigurationError
+    from logstash_filter_aggregate_spark.streaming.stream import replay_routed, streaming_correlate
+
+    cfg = example4_config()
+    src = str(tmp_path / "in")
+    make_transcript(spark, ROWS).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    with pytest.raises(ConfigurationError, match="replay_push_previous"):
+        streaming_correlate(stream, cfg)
+    out, cp = tmp_path / "out", tmp_path / "cp"
+    with pytest.raises(ConfigurationError, match="replay_push_previous"):
+        replay_routed(spark, src, cfg, str(out), str(cp))
+    assert not out.exists() and not cp.exists()

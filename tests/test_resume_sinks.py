@@ -383,7 +383,7 @@ def test_concurrent_sink_writes_recompute_nothing(spark, tmp_path):
             stage_ids |= {job.stageIds().apply(k) for k in range(job.stageIds().size())}
     stages = [status.lastStageAttempt(i) for i in stage_ids]
     done = [s for s in stages if s.status().toString() == "COMPLETE"]
-    assert (len(done), sum(s.inputRecords() for s in done)) == (12, 242)
+    assert (len(done), sum(s.inputRecords() for s in done)) == (11, 244)
 
 
 def test_failed_sink_lets_the_others_land_and_reruns_alone(spark, tmp_path):
@@ -432,3 +432,26 @@ def test_concurrent_manifest_updates_lose_no_sink(spark, tmp_path):
     for manifest in (m, RunManifest.load(str(tmp_path / "stress"), m.run_id)):
         assert list(manifest.sinks) == list(outputs)
         assert [v["rows"] for v in manifest.sinks.values()] == list(range(1, 13))
+
+
+def test_run_manifest_refuses_remote_schemes(spark, tmp_path, monkeypatch):
+    # the manifest is written with os on the driver: an s3:// base used to
+    # land in ./s3:/... on the driver's disk. write_routed now raises,
+    # naming the path, before it writes anything; a file: URI is a local
+    # path
+    import re
+
+    from logstash_filter_aggregate_spark.config import ConfigurationError
+    from logstash_filter_aggregate_spark.sinks import write_routed
+    from tests.conftest import make_transcript
+
+    monkeypatch.chdir(tmp_path)
+    cfg = example1_config(timeout=3600.0)
+    out = run_pipeline(spark, make_transcript(spark, [(0, "INFO - t - TASK_START - s", 0)]), cfg)
+    with pytest.raises(ConfigurationError, match=re.escape("s3://bucket/run")):
+        write_routed(out.as_dict(), "s3://bucket/run", cfg, input_desc="remote")
+    assert not (tmp_path / "s3:").exists()
+    m = RunManifest("r", "d", [], "f")
+    m.save(f"file://{tmp_path}/base")
+    assert RunManifest.load(f"file:{tmp_path}/base", "r") == m
+    assert (tmp_path / "base" / "_lineage" / "r.json").exists()

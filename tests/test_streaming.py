@@ -315,6 +315,23 @@ def test_replay_push_previous_matches_batch(spark, tmp_path):
     assert [r.uid for r in got if r.final_flush] == ["A"]
 
 
+def test_replay_push_previous_refuses_remote_state(spark, tmp_path, monkeypatch):
+    # the replay lists its carried state with os on the driver: an s3://
+    # base raises, naming the path, before the stream starts
+    import re
+
+    from logstash_filter_aggregate_spark.config import ConfigurationError
+    from logstash_filter_aggregate_spark.plans.pipeline import example4_config
+    from logstash_filter_aggregate_spark.streaming.stream import replay_push_previous
+
+    monkeypatch.chdir(tmp_path)
+    src = str(tmp_path / "in")
+    make_transcript(spark, [(0, "INFO - A - Town - x", 0)]).write.parquet(src)
+    with pytest.raises(ConfigurationError, match=re.escape("s3://bucket/out")):
+        replay_push_previous(spark, src, example4_config(), "s3://bucket/out", str(tmp_path / "cp"))
+    assert not (tmp_path / "s3:").exists() and not (tmp_path / "cp").exists()
+
+
 def test_replay_push_previous_creation_tie(spark, tmp_path):
     # two maps created at the SAME ts in one batch: the carried map must
     # be the one live after the ARRIVAL-order last row (A, turn 1), not

@@ -416,10 +416,21 @@ def test_restart_with_another_shard_count_fails_loudly(spark, tmp_path):
     assert {json.loads(r.map_json)["sql_duration"] for r in done} == {5}
 
 
-def test_streaming_avg_across_micro_batches_matches_batch(spark, tmp_path):
-    # an avg map carried across two micro-batches keeps [sum, count]
-    # partials in its cell and renders their mean: durations 2, 2 | 8
-    # give 4.0, the batch engine's value (not the mean of the two means)
+# SQL durations 2, NULL, 2 | 8, NULL: what each fn folds them to
+_ONE_DICTIONARY = {
+    "sum": 12, "count": 5, "min": 2, "max": 8, "avg": 4.0, "first": 2, "last": 8,
+    "collect_list": [2, 2, 8], "collect_set": [2, 8],
+}
+
+
+@pytest.mark.parametrize("fn", list(_ONE_DICTIONARY))
+def test_streaming_avg_across_micro_batches_matches_batch(spark, tmp_path, fn):
+    # one aggregation dictionary on both engines: a map carried across two
+    # micro-batches (its cell's partial merged into the second batch's
+    # rows), the batch engine over the whole input, and the batch engine
+    # resuming the second half from the first half's open bucket all hold
+    # the same value, NULL inputs skipped (avg keeps [sum, count]
+    # partials, so it is 4.0, not the mean of the two halves' means)
     from logstash_filter_aggregate_spark.plans.pipeline import run_pipeline
     from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
 
@@ -429,25 +440,35 @@ def test_streaming_avg_across_micro_batches_matches_batch(spark, tmp_path):
             CorrelationRule("start", "logger = 'TASK_START'", map_action="create"),
             CorrelationRule(
                 "sql", "logger = 'SQL'", map_action="update",
-                aggs=(AggSpec("avg_ms", "avg", "duration"),),
+                aggs=(AggSpec("v", fn, "duration"),),
             ),
             CorrelationRule("end", "logger = 'TASK_END'", map_action="update", end_of_task=True),
         ),
     )
     p = str(tmp_path / "in")
-    for rows in (
+    halves = (
         [(0, "INFO - t - TASK_START - s", 0), (1, "INFO - t - SQL - q - 2", 1),
-         (2, "INFO - t - SQL - q - 2", 2)],
-        [(3, "INFO - t - SQL - q - 8", 3), (4, "INFO - t - TASK_END - e", 4)],
-    ):
+         (2, "INFO - t - SQL - q", 2), (3, "INFO - t - SQL - q - 2", 3)],
+        [(4, "INFO - t - SQL - q - 8", 4), (5, "INFO - t - SQL - q", 5),
+         (6, "INFO - t - TASK_END - e", 6)],
+    )
+    for rows in halves:
         make_transcript(spark, rows).coalesce(1).write.mode("append").parquet(p)
     got = _run_stream(
-        spark, p, lambda s: streaming_correlate(s, cfg, shards=3), "shard_avg", max_files=1
+        spark, p, lambda s: streaming_correlate(s, cfg, shards=3), f"shard_{fn}", max_files=1
     ).collect()
-    assert [(r.task_id, r.sink, r.nevents) for r in got] == [("t", "completed", 5)]
+    assert [(r.task_id, r.sink, r.nevents) for r in got] == [("t", "completed", 7)]
+    want = _ONE_DICTIONARY[fn]
+    assert json.loads(got[0].map_json) == {"v": want}
+
     batch = run_pipeline(spark, spark.read.parquet(p), cfg).completed.collect()
-    assert [r.avg_ms for r in batch] == [4.0]
-    assert json.loads(got[0].map_json) == {"avg_ms": 4.0}
+    first = run_pipeline(spark, make_transcript(spark, halves[0]), cfg)
+    assert first.completed.count() == 0
+    resumed = run_pipeline(
+        spark, make_transcript(spark, halves[1]), cfg, open_maps=first.open
+    ).completed.collect()
+    assert [(r.nevents, r.v) for r in batch] == [(7, want)]
+    assert [(r.nevents, r.v) for r in resumed] == [(7, want)]
 
 
 @pytest.mark.parametrize("aggs", [

@@ -110,14 +110,15 @@ def _scan_split_labels(ts, close, flags, cust_to, cust_in, seed, timeout, inacti
     Returns ``(end_seg, gap, age, included)``."""
     import numpy as np
 
-    from logstash_filter_aggregate_spark.operators.sessionize import _label_breaks, _session_labels
+    from logstash_filter_aggregate_spark.operators.sessionize import _label_breaks
     from logstash_filter_aggregate_spark.streaming.walk import walk_scan
 
     n = len(ts)
     creation = None if seed is None else np.where(np.isnan(seed), ts, seed)
     res = walk_scan(ts, *flags, close, cust_to, cust_in, None, timeout, inactivity, creation)
-    breaks, _ = _label_breaks(res, 0, n)
-    _, end_seg, gap, age = _session_labels(np.zeros(1, dtype=np.int64), breaks, n)
+    # each label run spread over its rows
+    rows, *labels = np.array(_label_breaks(res, 0, n)).T
+    end_seg, gap, age = (np.repeat(lab, np.diff(np.append(rows, n))) for lab in labels)
     return end_seg, gap, age, res.code_ran
 
 
@@ -763,40 +764,54 @@ _CLASSIFIED_SCHEMA = (
 )
 
 
-def _exact_scan_labels(spark, rows, cfg, max_records_per_batch=None):
+def _exact_scan_sessions(spark, rows, cfg, max_records_per_batch=None):
     """Run the exact tier over classified ``rows`` (``_CLASSIFIED_SCHEMA``)
-    and collect each row's inputs (timestamps as epoch microseconds) with
-    its scan labels."""
-    from pyspark.sql import functions as F
-
+    with a ``collect_list(turn_idx)`` agg, so each session row lists
+    exactly the rows whose code ran: sorted ``(task, _end_seg, _gap_seg,
+    _age_seg, turn_idxs, _is_last)`` per map."""
+    from logstash_filter_aggregate_spark.operators.correlate import aggregate_sessions
     from logstash_filter_aggregate_spark.operators.sessionize import sessionize
 
+    cfg = _with_row_list(cfg)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
     if max_records_per_batch is not None:
         spark.conf.set(key, str(max_records_per_batch))
     try:
-        out = sessionize(spark.createDataFrame(rows, _CLASSIFIED_SCHEMA), cfg).select(
-            "_task_id", "conv_id", "turn_idx",
-            F.unix_micros("ts").alias("ts_us"),
-            "_action", "_end_flag", "_custom_timeout", "_custom_inactivity",
-            F.unix_micros("_seed_creation_ts").alias("seed_us"),
-            "_ord", "_end_seg", "_gap_seg", "_age_seg", "_included",
-        ).collect()
+        out = aggregate_sessions(
+            sessionize(spark.createDataFrame(rows, _CLASSIFIED_SCHEMA), cfg), cfg
+        ).select("task_id", "_end_seg", "_gap_seg", "_age_seg", "_rows", "_is_last").collect()
     finally:
         spark.conf.set(key, prev)
-    return sorted(tuple(r) for r in out)
+    return sorted((r[0], r[1], r[2], r[3], tuple(r[4]), r[5]) for r in out)
 
 
-def _assert_labels_match_reference(labels, cfg):
-    """Replay every task of ``labels`` in (ts, conv_id, turn_idx) order
+def _with_row_list(cfg):
+    """``cfg`` with every rule collecting its rows' ``turn_idx`` into ``_rows``."""
+    import dataclasses
+
+    return dataclasses.replace(cfg, rules=tuple(
+        dataclasses.replace(r, aggs=(*r.aggs, AggSpec("_rows", "collect_list", "turn_idx")))
+        for r in cfg.rules
+    ))
+
+
+def _assert_sessions_match_reference(spark, sessions, rows, cfg):
+    """Replay every task of ``rows`` in (ts, conv_id, turn_idx) order
     through ``_reference_scan`` with the scan's seconds arithmetic
-    (int64 ns / 1e9) and compare every label and ``_included``."""
+    (int64 ns / 1e9), group its included rows by their labels, and
+    compare each session's labels and rows with the scan's."""
     import numpy as np
+    from pyspark.sql import functions as F
 
+    inputs = spark.createDataFrame(rows, _CLASSIFIED_SCHEMA).select(
+        "_task_id", "conv_id", "turn_idx", F.unix_micros("ts"), "_action", "_end_flag",
+        "_custom_timeout", "_custom_inactivity", F.unix_micros("_seed_creation_ts"),
+    ).collect()
     by_task: dict = {}
-    for r in labels:
+    for r in inputs:
         by_task.setdefault(r[0], []).append(r)
+    want = []
     for tid, rs in by_task.items():
         rs.sort(key=lambda r: (r[3], r[1], r[2]))
         n = len(rs)
@@ -815,9 +830,13 @@ def _assert_labels_match_reference(labels, cfg):
             ts, close, action, cust_to, cust_in, seed, age,
             float(cfg.timeout), float(cfg.effective_inactivity_timeout), gap=gap,
         )
-        got = [(r[9], r[10], r[11], r[12], r[13]) for r in rs]
-        want = [(i + 1, end_seg[i], int(gap[i]), int(age[i] - gap[i]), included[i]) for i in range(n)]
-        assert got == want, (tid, got, want)
+        maps: dict = {}
+        for i in range(n):
+            if included[i]:
+                maps.setdefault((end_seg[i], int(gap[i]), int(age[i] - gap[i])), []).append(rs[i][2])
+        last = max(maps, default=None)
+        want += [(tid, *k, tuple(v), k == last) for k, v in maps.items()]
+    assert sessions == sorted(want)
 
 
 def test_exact_scan_tasks_spanning_arrow_batches(spark):
@@ -859,10 +878,9 @@ def test_exact_scan_tasks_spanning_arrow_batches(spark):
         task(f"over{k}", rng.randint(2, 9), guarded, overrides=True)
         task(f"seed{k}", rng.randint(2, 9), rng.choice([cou, guarded]), seeds=True)
 
-    small = _exact_scan_labels(spark, rows, cfg, max_records_per_batch=3)
-    assert small == _exact_scan_labels(spark, rows, cfg)
-    assert len(small) == len(rows)
-    _assert_labels_match_reference(small, cfg)
+    small = _exact_scan_sessions(spark, rows, cfg, max_records_per_batch=3)
+    assert small == _exact_scan_sessions(spark, rows, cfg)
+    _assert_sessions_match_reference(spark, small, rows, cfg)
 
 
 def test_exact_age_cap_is_strict_at_the_microsecond(spark):
@@ -880,9 +898,9 @@ def test_exact_age_cap_is_strict_at_the_microsecond(spark):
         ("c", i, T0 + off, "t", "r", 0, "create_or_update", None, None, None)
         for i, off in enumerate(offsets)
     ]
-    labels = _exact_scan_labels(spark, rows, cfg)
-    assert [r[12] for r in sorted(labels, key=lambda r: r[3])] == [0, 0, 1]
-    _assert_labels_match_reference(labels, cfg)
+    sessions = _exact_scan_sessions(spark, rows, cfg)
+    assert [(r[3], r[4]) for r in sessions] == [(0, (0, 1)), (1, (2,))]
+    _assert_sessions_match_reference(spark, sessions, rows, cfg)
 
 
 def test_exact_age_cap_rejects_non_timestamp_ts(spark):
@@ -902,10 +920,8 @@ def test_exact_age_cap_rejects_non_timestamp_ts(spark):
 def test_scan_labels_name_the_clock_and_the_last_map(spark):
     # an inactivity expiry bumps _gap_seg and an age expiry bumps
     # _age_seg (a row that crosses both counts as a gap); _is_last marks
-    # the rows of each task's last map only — here the end-closed map,
-    # not the trailing segment of no-op updates after it
-    from logstash_filter_aggregate_spark.operators.sessionize import sessionize
-
+    # each task's last map only — here the end-closed map, not the
+    # trailing segment of no-op updates after it
     cfg = PipelineConfig(
         task_id="%{taskid}", rules=(CorrelationRule("r", "true"),),
         timeout=100.0, inactivity_timeout=30.0,
@@ -923,17 +939,14 @@ def test_scan_labels_name_the_clock_and_the_last_map(spark):
         ("c", i, T0 + dt.timedelta(seconds=off), "t", "r", end, act, None, None, None)
         for i, (off, act, end) in enumerate(t_rows)
     ] + [("c", 100, T0, "u", "r", 0, cou, None, None, None)]
-    got = sessionize(spark.createDataFrame(rows, _CLASSIFIED_SCHEMA), cfg).select(
-        "_task_id", "turn_idx", "_end_seg", "_gap_seg", "_age_seg", "_included", "_is_last",
-    ).orderBy("_task_id", "turn_idx").collect()
-    labels = [tuple(r)[2:] for r in got if r._task_id == "t"]
-    assert labels == [
-        (0, 0, 0, True, False),
-        *[(0, 1, 0, True, False)] * 5,
-        (0, 1, 1, True, True), (0, 1, 1, True, True),
-        (1, 0, 0, False, False), (1, 0, 0, False, False),
+    # each map lists the rows its code ran for (the no-ops after the end
+    # are in none)
+    assert _exact_scan_sessions(spark, rows, cfg) == [
+        ("t", 0, 0, 0, (0,), False),
+        ("t", 0, 1, 0, (1, 2, 3, 4, 5), False),
+        ("t", 0, 1, 1, (6, 7), True),
+        ("u", 0, 0, 0, (100,), True),
     ]
-    assert [tuple(r)[2:] for r in got if r._task_id == "u"] == [(0, 0, 0, True, True)]
 
 
 def test_custom_timeout_override_expires_maps_on_arrival_by_default(spark):
