@@ -16,6 +16,7 @@ end-of-input, the shutdown-persistence analog ``aggregate.rb:154-175``).
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
 import numpy as np
@@ -38,12 +39,17 @@ SESSION_COLS = (
     "conv_id", "close_kind", "end_ts", "end_turn_idx", "_session_timeout", "_session_inactivity",
     "_is_last",
 )
+# names an agg may not take: the scan's other output columns (an effect
+# row's key, rule and _v_/_e_ inputs, the row-kind flag) and the columns
+# the buckets add
+_RESERVED = (*SESSION_COLS, "_last_row", "turn_idx", KIND_COL, "_included", "pattern_id", "tags",
+             TASK_ID_COL)
 
 
 def apply_guards(sessions: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """The ``map_action`` guards (O3) run inside :func:`sessionize`, which
-    emits ``_included`` in both modes; this returns its input, for
-    callers of the former two-step ``apply_guards(sessionize(...))``."""
+    """The ``map_action`` guards (O3) run inside :func:`sessionize`'s
+    scan, so its output is already guarded; this returns its input, for
+    callers of ``apply_guards(sessionize(...))``."""
     return sessions
 
 
@@ -54,7 +60,7 @@ def _merged_agg_specs(cfg: PipelineConfig) -> dict[str, tuple[str, list[tuple[st
     merged: dict[str, tuple[str, list[tuple[str, str]]]] = {}
     for r in cfg.rules:
         for s in r.aggs:
-            if s.name in (*SESSION_COLS, "_last_row", "pattern_id", "tags", TASK_ID_COL):
+            if s.name in _RESERVED or s.name.startswith(("_v_", "_e_")):
                 raise ConfigurationError(f"agg name {s.name!r} collides with a reserved column")
             fn, sources = merged.setdefault(s.name, (s.fn, []))
             if fn != s.fn:
@@ -92,8 +98,9 @@ def value_col_name(rule_id: str, expr: str) -> str:
 def emit_col_name(rule_id: str, out_name: str) -> str:
     """Pre-evaluated ``emit`` output column (``_e_*``, O18) riding the
     narrow correlation stream — needed when the emit rule is guard-gated
-    (``map_action`` create/update), because the emission then depends on
-    ``_included``, which only exists after sessionize."""
+    (``map_action`` create/update): whether the row emits is known only
+    in the scan, which hands the row's ``_e_*`` values out on its effect
+    row."""
     return _hashed_col("_e", rule_id, out_name)
 
 
@@ -309,7 +316,9 @@ def session_fold(s: np.ndarray, n_sess: int, v, how: str):
         at = first_rows(s[valid], n_sess)
         out = np.zeros(n_sess, dtype=x.type.to_pandas_dtype())
         if len(x):
-            ufunc = {"sum": np.add, "min": np.minimum, "max": np.maximum}[how]
+            # NaN sorts above every number in Spark: min skips it, max
+            # returns it
+            ufunc = {"sum": np.add, "min": np.fmin, "max": np.maximum}[how]
             out[at >= 0] = ufunc.reduceat(x.to_numpy(), at[at >= 0])
         return pa.array(out, mask=at < 0).cast(t if how != "sum" or pa.types.is_floating(t) else pa.int64())
     folded = pa.table({"s": s, "v": v}).group_by("s", use_threads=False).aggregate([("v", how)])
@@ -330,12 +339,15 @@ def first_rows(s: np.ndarray, n_sess: int, last: bool = False) -> np.ndarray:
 
 def _distinct(xs: list) -> list:
     """``xs`` without repeats, first occurrences in order (Spark's
-    ``array_distinct``); values may be unhashable (structs as dicts)."""
-    out: list = []
-    for x in xs:
-        if x not in out:
-            out.append(x)
-    return out
+    ``array_distinct``); unhashable values (structs as dicts, arrays as
+    lists) are keyed by their JSON."""
+    try:
+        return list(dict.fromkeys(xs))
+    except TypeError:
+        firsts: dict = {}
+        for x in xs:
+            firsts.setdefault(json.dumps(x, default=str), x)
+        return list(firsts.values())
 
 
 def session_columns(cfg: PipelineConfig) -> list[str]:

@@ -475,8 +475,10 @@ def _session_maps(specs: dict, types: dict, whole: pd.DataFrame, walk: _Walk) ->
         if name == "_rule_id":
             return pa.array([SEED_RULE] * k + whole["_rule_id"].tolist(), pa.string())
         if name.startswith("_seed_") and name[6:] in types:
+            # the cell codec's JSON keeps timestamps, dates and decimals
+            # as text (default=str); Arrow's cast parses them back
             t = types[name[6:]]
-            seeds = pa.array([partial(m, name[6:]) for _, m in carried], type=t)
+            seeds = pa.array([partial(m, name[6:]) for _, m in carried]).cast(t)
             return pa.concat_arrays([seeds, pa.nulls(n, t)])
         if name not in whole:
             return None

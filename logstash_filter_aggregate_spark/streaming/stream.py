@@ -35,7 +35,7 @@ from logstash_filter_aggregate_spark.operators.correlate import (
     value_col_name,
 )
 from logstash_filter_aggregate_spark.plans.pipeline import compile_groks, parse
-from logstash_filter_aggregate_spark.sqltext import with_columns
+from logstash_filter_aggregate_spark.sqltext import case, quote, with_columns
 
 # State shards of every streaming query that keeps task state: 16 per
 # core on a 4-core machine (MIGRATION.md's sizing). A constant, not
@@ -140,14 +140,21 @@ def streaming_correlate(
     _check_time_mode(time_mode)
     shards = _shard_count(shards)
     # the batch engine's agg specs and pre-projected input columns: a
-    # config batch rejects is rejected here too
+    # config batch rejects is rejected here too. Each input is NULL off
+    # its rule's rows, as on the batch engine's narrow stream; a bare
+    # `ts` input would otherwise alias the event-time column, and Spark
+    # refuses a stream with two.
+    def gated(rid: str, e: str) -> str:
+        return case([(f"_rule_id = {quote(rid)}", f"({e})")])
+
     value_cols = {
-        value_col_name(rid, col): col
+        value_col_name(rid, col): gated(rid, col)
         for fn_, sources in _merged_agg_specs(cfg).values() if fn_ != "count"
         for rid, col in sources
     }
     value_cols.update(
-        (emit_col_name(r.rule_id, n), e) for r in cfg.rules for n, e in (r.emit or {}).items()
+        (emit_col_name(r.rule_id, n), gated(r.rule_id, e))
+        for r in cfg.rules for n, e in (r.emit or {}).items()
     )
     parsed = parse(stream_df, groks or compile_groks())
     classified = classify(parsed, cfg)

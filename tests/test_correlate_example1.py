@@ -1,6 +1,7 @@
 """Example #1 start/update/end correlation + map_action guards
 (docs/index.asciidoc:36-93; spec:33-151)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from logstash_filter_aggregate_spark.plans.pipeline import example1_config, run_pipeline
@@ -188,3 +189,28 @@ def test_composite_task_id_isolates_maps(spark):
     )
     got = {r.task_id: (r.nevents, int(r.total)) for r in out.open.collect()}
     assert got == {"INFO.t1": (2, 15), "WARN.t1": (1, 7)}
+
+
+@pytest.mark.parametrize("name", ["turn_idx", "_rule_id", "_included", "_v_x", "_e_x", "nevents"])
+def test_agg_named_like_a_scan_column_is_rejected(spark, name):
+    # the scan's rows hold every session column plus an effect row's key,
+    # rule, _v_/_e_ inputs and the row-kind flag: an agg of the same name
+    # fails at configuration, not as an ambiguous column at analysis
+    from logstash_filter_aggregate_spark.config import AggSpec, ConfigurationError, CorrelationRule
+
+    cfg = example1_config(rules=(
+        CorrelationRule("start", "logger = 'TASK_START'", map_action="create",
+                        aggs=(AggSpec(name, "sum", "turn_idx"),)),
+    ))
+    with pytest.raises(ConfigurationError, match="reserved"):
+        run_pipeline(spark, make_transcript(spark, [(0, "INFO - t - TASK_START - s", 0)]), cfg)
+
+
+def test_collect_set_keeps_first_occurrences():
+    # hashable values dedup through a dict, structs (dicts) by their JSON;
+    # both keep first occurrences and stay linear in the list's length
+    from logstash_filter_aggregate_spark.operators.correlate import _distinct
+
+    assert _distinct([2, 8, 2, 3, 8]) == [2, 8, 3]
+    assert _distinct([{"a": 1}, {"a": 2}, {"a": 1}]) == [{"a": 1}, {"a": 2}]
+    assert _distinct(list(range(100_000)) * 2) == list(range(100_000))

@@ -12,6 +12,7 @@ count recorded in the checkpoint, and the plan shape.
 import datetime as dt
 import json
 import re
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -416,15 +417,24 @@ def test_restart_with_another_shard_count_fails_loudly(spark, tmp_path):
     assert {json.loads(r.map_json)["sql_duration"] for r in done} == {5}
 
 
-# SQL durations 2, NULL, 2 | 8, NULL: what each fn folds them to
+# SQL durations 2, NULL, 2 | 8, NULL: what each fn folds them to, plus
+# values the cell codec's JSON holds as text (a timestamp, decimals) and
+# a NaN, which Spark's min skips
 _ONE_DICTIONARY = {
-    "sum": 12, "count": 5, "min": 2, "max": 8, "avg": 4.0, "first": 2, "last": 8,
-    "collect_list": [2, 2, 8], "collect_set": [2, 8],
+    **{fn: (fn, "duration", want) for fn, want in {
+        "sum": 12, "count": 5, "min": 2, "max": 8, "avg": 4.0, "first": 2, "last": 8,
+        "collect_list": [2, 2, 8], "collect_set": [2, 8],
+    }.items()},
+    "first_ts": ("first", "ts", T0 + dt.timedelta(seconds=1)),
+    "collect_list_decimal": (
+        "collect_list", "CAST(duration AS DECIMAL(18,6))", [Decimal("2.000000")] * 2 + [Decimal("8.000000")]
+    ),
+    "min_nan": ("min", "IF(duration = 8, double('NaN'), double(duration))", 2.0),
 }
 
 
-@pytest.mark.parametrize("fn", list(_ONE_DICTIONARY))
-def test_streaming_avg_across_micro_batches_matches_batch(spark, tmp_path, fn):
+@pytest.mark.parametrize("case", list(_ONE_DICTIONARY))
+def test_streaming_avg_across_micro_batches_matches_batch(spark, tmp_path, case):
     # one aggregation dictionary on both engines: a map carried across two
     # micro-batches (its cell's partial merged into the second batch's
     # rows), the batch engine over the whole input, and the batch engine
@@ -434,13 +444,14 @@ def test_streaming_avg_across_micro_batches_matches_batch(spark, tmp_path, fn):
     from logstash_filter_aggregate_spark.plans.pipeline import run_pipeline
     from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
 
+    fn, col, want = _ONE_DICTIONARY[case]
     cfg = example1_config(
         timeout=3600.0,
         rules=(
             CorrelationRule("start", "logger = 'TASK_START'", map_action="create"),
             CorrelationRule(
                 "sql", "logger = 'SQL'", map_action="update",
-                aggs=(AggSpec("v", fn, "duration"),),
+                aggs=(AggSpec("v", fn, col),),
             ),
             CorrelationRule("end", "logger = 'TASK_END'", map_action="update", end_of_task=True),
         ),
@@ -455,11 +466,12 @@ def test_streaming_avg_across_micro_batches_matches_batch(spark, tmp_path, fn):
     for rows in halves:
         make_transcript(spark, rows).coalesce(1).write.mode("append").parquet(p)
     got = _run_stream(
-        spark, p, lambda s: streaming_correlate(s, cfg, shards=3), f"shard_{fn}", max_files=1
+        spark, p, lambda s: streaming_correlate(s, cfg, shards=3), f"shard_{case}", max_files=1
     ).collect()
     assert [(r.task_id, r.sink, r.nevents) for r in got] == [("t", "completed", 7)]
-    want = _ONE_DICTIONARY[fn]
-    assert json.loads(got[0].map_json) == {"v": want}
+    # map_json renders timestamps (UTC) and decimals as text
+    rendered = want.replace(tzinfo=dt.timezone.utc) if isinstance(want, dt.datetime) else want
+    assert json.loads(got[0].map_json) == {"v": json.loads(json.dumps(rendered, default=str))}
 
     batch = run_pipeline(spark, spark.read.parquet(p), cfg).completed.collect()
     first = run_pipeline(spark, make_transcript(spark, halves[0]), cfg)
