@@ -13,9 +13,16 @@ and distributed: grok parse runs as one SQL-text projection of JVM
 regex functions, the map lifecycle becomes one exact per-task scan over
 Arrow batches after a task-key exchange that returns one row per map,
 and results fan out to routed sinks.
+
+Importing the package installs ``_zipcache`` first, so every Python
+task after a worker's first skips re-reading ``pyspark.zip``.
 """
 
-from logstash_filter_aggregate_spark.config import (
+from logstash_filter_aggregate_spark import _zipcache
+
+_zipcache.install()
+
+from logstash_filter_aggregate_spark.config import (  # noqa: E402
     AggSpec,
     CorrelationRule,
     PipelineConfig,

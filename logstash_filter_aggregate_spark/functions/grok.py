@@ -310,21 +310,32 @@ def _cast_sql(expr: str, dtype: T.DataType) -> str:
 def _group_indices(regex: str) -> tuple[int, dict[str, int]]:
     """Total capturing-group count and named-group -> 1-based index for a
     regex, counted exactly as the Java engine numbers them: skips escapes,
-    ``(`` inside character classes, and (?: (?= (?! (?<= (?<!
-    non-capturing opens."""
+    ``\\Q…\\E`` quotes, ``(`` inside character classes (which nest: ``[``
+    inside a class opens another, and a ``]`` first in a class is
+    literal), and (?: (?= (?! (?<= (?<! non-capturing opens."""
     named: dict[str, int] = {}
     idx = 0
-    i, n, in_class = 0, len(regex), False
+    i, n, depth = 0, len(regex), 0
     while i < n:
         c = regex[i]
         if c == "\\":
-            i += 2
+            if regex.startswith("Q", i + 1):
+                end = regex.find("\\E", i + 2)
+                i = n if end < 0 else end + 2
+            else:
+                i += 2
             continue
-        if in_class:
+        if c == "[":
+            depth += 1
+            i += 1
+            if regex.startswith("^", i):
+                i += 1
+            if regex.startswith("]", i):
+                i += 1
+            continue
+        if depth:
             if c == "]":
-                in_class = False
-        elif c == "[":
-            in_class = True
+                depth -= 1
         elif c == "(":
             m = re.match(r"\?<(\w+)>", regex[i + 1 :])
             if m:

@@ -136,6 +136,37 @@ def test_group_index_counting_matches_python_re():
     assert m.group(g.group_index["c"]) == "world"
 
 
+QUOTED = r"\Q(\Ev=%{INT:v:int}"
+
+
+def test_group_count_matches_java(spark):
+    # the total must be java.util.regex's own groupCount(): a \Q...\E
+    # quote hides its "(", and a "[" inside a class opens a nested class
+    from logstash_filter_aggregate_spark.functions.grok import _combined_alternation, _group_indices
+
+    groks = compile_groks()
+    regexes = [g.regex for g in groks] + [_combined_alternation(groks)[0]] + [
+        compile_grok("q", QUOTED).regex,
+        r"^[[a]()](?<x>b)$",
+        r"[a\Q]\E(](b)",
+        r"[](b)](c)",
+        r"[^[a]](b)",
+        r"[a&&[(]](b)",
+    ]
+    pattern = spark._jvm.java.util.regex.Pattern
+    for r in regexes:
+        assert _group_indices(r)[0] == pattern.compile(r).matcher("").groupCount(), r
+
+
+def test_quoted_paren_parses_end_to_end(spark):
+    g = compile_grok("q", QUOTED)
+    assert g.group_index == {"v": 1}
+    df = make_transcript(spark, [(0, "(v=5", 0), (1, "v=5", 1)])
+    rows = {r.turn_idx: r for r in apply_grok_jvm(df, "text", [g]).collect()}
+    assert rows[0].parse_tags == [] and rows[0].v == 5
+    assert rows[1].parse_tags == ["_grokparsefailure"] and rows[1].v is None
+
+
 def test_unanchored_grok_mid_string_match_extracts_correctly(spark):
     # an UNANCHORED grok matching mid-string must not take the single-pass
     # replace+split path: a single mid-string replace would glue the
