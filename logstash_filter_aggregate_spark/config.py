@@ -25,7 +25,7 @@ def local_path(path: str) -> str:
     """``path`` (a plain path or a ``file:`` URI) as a driver-local path.
 
     Control-plane files (run manifests, the dedup writer lease, the
-    compaction listing, push_previous replay state) go through ``os`` on
+    compaction listing) go through ``os`` on
     the driver, where ``s3://b/x`` would become a directory ``./s3:/b/x``
     that excludes no writer on another host: other schemes raise."""
     scheme = re.match(r"([A-Za-z][A-Za-z0-9+.-]*):", path)

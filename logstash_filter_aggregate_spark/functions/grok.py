@@ -311,39 +311,47 @@ def _group_indices(regex: str) -> tuple[int, dict[str, int]]:
     """Total capturing-group count and named-group -> 1-based index for a
     regex, counted exactly as the Java engine numbers them: skips escapes,
     ``\\Q…\\E`` quotes, ``(`` inside character classes (which nest: ``[``
-    inside a class opens another, and a ``]`` first in a class is
-    literal), and (?: (?= (?! (?<= (?<! non-capturing opens."""
+    inside a class opens another, and a ``]`` is literal while its class
+    is still empty, even after a leading ``^`` or an empty quote), and
+    (?: (?= (?! (?<= (?<! non-capturing opens."""
     named: dict[str, int] = {}
     idx = 0
-    i, n, depth = 0, len(regex), 0
+    i, n = 0, len(regex)
+    empty: list[bool] = []           # per open class: nothing in it yet
     while i < n:
         c = regex[i]
         if c == "\\":
             if regex.startswith("Q", i + 1):
                 end = regex.find("\\E", i + 2)
-                i = n if end < 0 else end + 2
+                if end < 0:
+                    end = n
+                if empty and end > i + 2:      # a non-empty quote fills the class
+                    empty[-1] = False
+                i = end + 2
             else:
                 i += 2
+                if empty:
+                    empty[-1] = False
             continue
+        i += 1
         if c == "[":
-            depth += 1
-            i += 1
+            if empty:
+                empty[-1] = False
+            empty.append(True)
             if regex.startswith("^", i):
                 i += 1
-            if regex.startswith("]", i):
-                i += 1
-            continue
-        if depth:
-            if c == "]":
-                depth -= 1
+        elif empty:
+            if c == "]" and not empty[-1]:
+                empty.pop()
+            else:
+                empty[-1] = False
         elif c == "(":
-            m = re.match(r"\?<(\w+)>", regex[i + 1 :])
+            m = re.match(r"\?<(\w+)>", regex[i:])
             if m:
                 idx += 1
                 named[m.group(1)] = idx
-            elif not regex[i + 1 : i + 2] == "?":
+            elif not regex[i : i + 1] == "?":
                 idx += 1
-        i += 1
     return idx, named
 
 

@@ -27,7 +27,10 @@ rows, :func:`make_passthrough_shard_fn` the input rows, tagged or
 cancelled. Sessions are numbered globally across the chunk's tasks so
 every map folds in one call of the batch scan's aggregation dictionary
 (:func:`correlate.session_values`), each carried cell's map merged in as
-a partial row ahead of its session's rows.
+a partial row ahead of its session's rows. push_previous is the one
+branch: the reference keeps ONE live map and pops it on every task-id
+change (``aggregate.rb:205-208,314-320``), so such a query runs on one
+shard, walked in arrival order (:func:`_walk_tasks`).
 
 Clocks, timers and eviction: one :class:`_Clock` gives each cell a
 deadline. In event time (the default) it is the map's own age or
@@ -107,6 +110,7 @@ from logstash_filter_aggregate_spark.streaming.walk import (
 )
 
 SHARD_STATE_SCHEMA = T.StructType([T.StructField("cells", T.BinaryType())])
+FLUSH = "flush"  # session kind: a heartbeat popped the live map (push_previous)
 
 # cell layout: [creation_s, last_s, nevents, map_dict|None, eff_to|None,
 #               eff_in|None, wall_cap|None, wall_last|None]
@@ -300,13 +304,18 @@ class _Walk(NamedTuple):
     touched: set
 
 
-def _walk_tasks(whole: pd.DataFrame, cells: dict, clock: _Clock) -> _Walk:
-    """Run the session-hop walk for every task slice of a sorted shard
+def _walk_tasks(whole: pd.DataFrame, cells: dict, clock: _Clock, pops: bool) -> _Walk:
+    """Run the session-hop walk for every task run of a sorted shard
     chunk; updates ``cells`` in place (final-open sessions persist,
     closed ones drop). The rule inputs are built once for the whole
-    chunk from classify's columns; per-task work is one
-    :func:`walk_scan` call on numpy slices. Heartbeat rows carry no task
-    and are skipped.
+    chunk from classify's columns; per-task work is one :func:`walk_scan`
+    call on numpy slices. Heartbeat rows carry no task and are skipped.
+
+    ``pops`` (push_previous): the chunk is in arrival order and the shard
+    holds the one live map. The task rows between event-time heartbeats
+    are walked in one call with a run break at each task change, which
+    pops the live map like an expiry (``aggregate.rb:205-208``); a
+    heartbeat pops it as the final flush (``aggregate.rb:348-351``).
 
     Processing time stamps each open cell's wall clocks: a map carried in
     keeps its creation-time age cap, a map created this batch gets
@@ -321,11 +330,8 @@ def _walk_tasks(whole: pd.DataFrame, cells: dict, clock: _Clock) -> _Walk:
     tid = whole["_task_id"].to_numpy()
     walk = _Walk(np.zeros(n, dtype=bool), np.full(n, -1, dtype=np.int64), [], [], [], {}, {}, set())
     sessions = walk.sessions
-    starts, ends = _task_slices(tid)
-    for lo, hi in zip(starts.tolist(), ends.tolist()):
-        task = tid[lo]
-        if task is None:
-            continue                 # heartbeat rows: no state
+
+    def walk_run(task, rows, brk=None) -> None:
         walk.touched.add(task)
         cell = cells.get(task)
         init = None
@@ -336,45 +342,77 @@ def _walk_tasks(whole: pd.DataFrame, cells: dict, clock: _Clock) -> _Walk:
                 cell[_IN] if cell[_IN] is not None else inactivity_s,
             )
         res = walk_scan(
-            ts_s[lo:hi], is_create[lo:hi], is_update[lo:hi], end_flag[lo:hi],
-            ct[lo:hi], ci[lo:hi], init, timeout_s, inactivity_s,
+            ts_s[rows], is_create[rows], is_update[rows], end_flag[rows],
+            ct[rows], ci[rows], init, timeout_s, inactivity_s, row_break=brk,
         )
         base = len(sessions)
-        walk.code_ran[lo:hi] = res.code_ran
+        walk.code_ran[rows] = res.code_ran
         lab = res.sess_id.astype(np.int64)
-        walk.sess_full[lo:hi] = np.where(lab >= 0, lab + base, -1)
+        walk.sess_full[rows] = np.where(lab >= 0, lab + base, -1)
         carried_n = int(cell[_N]) if cell is not None else 0
+        stask = [task] * len(res.sessions)
+        if brk is not None:              # a session is its first row's task's
+            for k, i in zip(*np.unique(lab, return_index=True)):
+                if k >= 0:
+                    stask[k] = tid[rows[i]]
+            walk.touched.update(stask)
         for k, (creation, last_ts, kind, _crow) in enumerate(res.sessions):
-            sessions.append((task, creation, last_ts, kind))
+            sessions.append((stask[k], creation, last_ts, kind))
             walk.sess_nev.append(int(res.nevents[k]))
             walk.sess_carry.append(carried_n if (k == 0 and cell is not None) else 0)
         if cell is not None:
             walk.sess_init_map[base] = cell[_M] or {}
-        if res.final is None:
+        if res.final is None or stask[-1] != task:
             cells.pop(task, None)
-            continue
+        if res.final is None:
+            return
         creation, last, nev, eff_to, eff_in = res.final
         wall = (None, None)
         if clock.processing:
             carried = cell is not None and len(res.sessions) == 1 and cell[_WC] is not None
             wall = (cell[_WC] if carried else now_s + clock.timeout_s, now_s)
-        cells[task] = walk.open_cells[len(sessions) - 1] = [
+        cells[stask[-1]] = walk.open_cells[len(sessions) - 1] = [
             creation, last, int(nev), None,
             eff_to if eff_to != timeout_s else None,
             eff_in if eff_in != inactivity_s else None,
             *wall,
         ]
+
+    def flush() -> None:
+        (live,) = cells
+        if live not in walk.touched:
+            walk_run(live, slice(0, 0))
+        si = len(sessions) - 1           # the live map is the last session walked
+        sessions[si] = (*sessions[si][:3], FLUSH)
+        del walk.open_cells[si], cells[live]
+
+    if not pops:
+        starts, ends = _task_slices(tid)
+        for lo, hi in zip(starts.tolist(), ends.tolist()):
+            if tid[lo] is not None:
+                walk_run(tid[lo], slice(lo, hi))
+        return walk
+    hb = pd.isna(tid)
+    data = np.flatnonzero(~hb)
+    cuts = [] if clock.processing else np.searchsorted(data, np.flatnonzero(hb))
+    for k, rows in enumerate(np.split(data, cuts)):
+        if k and cells:                  # an event-time heartbeat arrived
+            flush()
+        if len(rows):                    # a carried map of another task pops at once
+            t, live = tid[rows], next(iter(cells), tid[rows[0]])
+            walk_run(live, rows, np.r_[t[0] != live, t[1:] != t[:-1]])
     return walk
 
 
 def _shard_step(state: GroupState, pdfs: Iterator[pd.DataFrame], cfg: PipelineConfig,
-                processing: bool, shards: int, build):
+                processing: bool, shards: int, build, pops: bool = False):
     """One shard invocation, shared by both stateful functions: load the
-    cells, sort the chunk, walk its tasks, evict the due cells and save
-    the rest. ``build(whole, walk, evicted)`` makes the output frame from
-    the sorted chunk, its :class:`_Walk` and the evicted ``(task_id,
-    cell)`` pairs, and may update the open cells before they are saved;
-    ``whole`` and ``walk`` are None on a timer invocation.
+    cells, sort the chunk (in arrival order when ``pops``), walk it,
+    evict the due cells and save the rest. ``build(whole, walk, evicted)``
+    makes the output frame from the sorted chunk, its :class:`_Walk` and
+    the evicted ``(task_id, cell)`` pairs, and may update the open cells
+    before they are saved; ``whole`` and ``walk`` are None on a timer
+    invocation.
 
     Processing time evicts on arrival, before the walk, as the reference
     checks a map when its task's next event comes (``aggregate.rb:194-199``).
@@ -390,9 +428,10 @@ def _shard_step(state: GroupState, pdfs: Iterator[pd.DataFrame], cfg: PipelineCo
     if not chunks:
         return build(None, None, [])
     whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    whole = whole.sort_values(["_task_id", "ts", "conv_id", "turn_idx"], kind="mergesort")
+    order = ["ts", "conv_id", "turn_idx"]
+    whole = whole.sort_values(order if pops else ["_task_id", *order], kind="mergesort")
     evicted = _evict(cells, clock) if processing else []
-    walk = _walk_tasks(whole, cells, clock)
+    walk = _walk_tasks(whole, cells, clock, pops)
     if not processing:
         evicted = _evict(cells, clock, skip=walk.touched)
     out = build(whole, walk, evicted)
@@ -535,7 +574,8 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
         for r in cfg.rules if r.emit
     }
     processing = time_mode == "processing"
-    push = cfg.push_map_as_event_on_timeout
+    pops = cfg.push_previous_map_as_event
+    push = cfg.push_map_as_event_on_timeout or pops
     out_cols = [f.name for f in OUTPUT_SCHEMA.fields]
 
     def _timeout_row(task, cell) -> dict:
@@ -570,16 +610,17 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
                 sink = "timeout" if push else None
             if sink is None:
                 continue
+            m = sess_maps[si_]
             out_rows.append(dict(
                 task_id=task, sink=sink,
                 creation_ts=_ts_us(creation), lastevent_ts=_ts_us(last_ts),
                 nevents=int(walk.sess_nev[si_]),
-                map_json=_map_json(specs, sess_maps[si_]),
+                map_json=_map_json(specs, {**m, "tags": ["_aggregatefinalflush"]} if kind == FLUSH else m),
             ))
 
         # emit rows (O18): one per code-ran row of an emit rule, carrying
-        # the state AS OF that row. sess_cr is non-decreasing (chunk is
-        # task-then-ts sorted, sessions numbered in walk order), so the
+        # the state AS OF that row. sess_cr is non-decreasing (runs are
+        # walked in chunk order, sessions numbered in walk order), so the
         # per-session running count is a group-offset computation over
         # it — plus each session's carried base.
         if emit_rules and cr_idx.size:
@@ -627,6 +668,6 @@ def make_correlate_shard_fn(cfg: PipelineConfig, shards: int, int_cols: frozense
         return pd.DataFrame(out_rows, columns=out_cols)
 
     def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        yield _shard_step(state, pdfs, cfg, processing, shards, build)
+        yield _shard_step(state, pdfs, cfg, processing, shards, build, pops)
 
     return fn

@@ -8,7 +8,10 @@ state row per shard holds the cells of every live task hashing into it,
 each cell being the reference's per-task map (``aggregate.rb:199-246``).
 One Python call per shard per micro-batch runs the reference's serial
 algorithm over every task of the shard (:mod:`streaming.shard`), so the
-per-call framework cost is paid per shard, not per task. The batch
+per-call framework cost is paid per shard, not per task.
+``push_previous_map_as_event`` configs run on ONE shard walked in arrival
+order, so its single live map pops on every task-id change as the
+reference's serial run does (``aggregate.rb:205-208``). The batch
 engine remains the correctness reference; tests assert the streaming
 results match it on the same input.
 
@@ -26,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from logstash_filter_aggregate_spark.config import ConfigurationError, PipelineConfig, local_path
+from logstash_filter_aggregate_spark.config import ConfigurationError, PipelineConfig
 from logstash_filter_aggregate_spark.operators.classify import classify
 from logstash_filter_aggregate_spark.operators.correlate import (
     _merged_agg_specs,
@@ -35,7 +38,7 @@ from logstash_filter_aggregate_spark.operators.correlate import (
     value_col_name,
 )
 from logstash_filter_aggregate_spark.plans.pipeline import compile_groks, parse
-from logstash_filter_aggregate_spark.sqltext import case, quote, with_columns
+from logstash_filter_aggregate_spark.sqltext import case, quote
 
 # State shards of every streaming query that keeps task state: 16 per
 # core on a 4-core machine (MIGRATION.md's sizing). A constant, not
@@ -54,12 +57,17 @@ def _is_nullish(v) -> bool:
         return False
 
 
-def _shard_count(shards: int | None) -> int:
-    if shards is None:
-        return DEFAULT_SHARDS
-    if isinstance(shards, bool) or not isinstance(shards, int) or shards < 1:
+def _shard_count(shards: int | None, cfg: PipelineConfig | None = None) -> int:
+    if shards is not None and (isinstance(shards, bool) or not isinstance(shards, int) or shards < 1):
         raise ValueError(f"shards must be a positive int or None, got {shards!r}")
-    return shards
+    if cfg is not None and cfg.push_previous_map_as_event:
+        # the one live map pops on every task-id change (aggregate.rb:205-208)
+        if shards not in (None, 1):
+            raise ValueError(
+                f"push_previous_map_as_event streams on one state shard, got shards={shards!r}"
+            )
+        return 1
+    return DEFAULT_SHARDS if shards is None else shards
 
 
 OUTPUT_SCHEMA = T.StructType(
@@ -131,14 +139,21 @@ def streaming_correlate(
     Documented divergences: timings depend on the wall clock (tests
     assert structure, not latencies); ``map_meta.timeout = 0`` instant
     eviction still fires, but >0 per-map overrides are event-mode
-    features and are ignored."""
+    features and are ignored.
+
+    ``push_previous_map_as_event``: one state shard (``shards`` must be
+    None or 1), walked in arrival order ``(ts, conv_id, turn_idx)``. The
+    arrival of another task pops the live map as a ``timeout`` row, and
+    a heartbeat row (event time) pops it as the final flush, its
+    ``map_json`` carrying ``"tags": ["_aggregatefinalflush"]``. The pops
+    are the reference's exact ones whatever ``push_previous_exact`` says;
+    micro-batches must arrive in event-time order."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     from logstash_filter_aggregate_spark.streaming.shard import make_correlate_shard_fn
 
-    _reject_push_previous(cfg)
     _check_time_mode(time_mode)
-    shards = _shard_count(shards)
+    shards = _shard_count(shards, cfg)
     # the batch engine's agg specs and pre-projected input columns: a
     # config batch rejects is rejected here too. Each input is NULL off
     # its rule's rows, as on the batch engine's narrow stream; a bare
@@ -162,7 +177,8 @@ def streaming_correlate(
     # the match filter so they can advance the event-time watermark —
     # the mechanism replay_routed uses to flush state timeouts on a
     # finite corpus. They reach the stateful fn with a null task id,
-    # which emits nothing and keeps no state. (A filter predicate alone
+    # which keeps no state and emits nothing (push_previous: it pops the
+    # live map as the final flush). (A filter predicate alone
     # can't protect the watermark: Catalyst splits conjunctions and
     # pushes the non-ts conjuncts below the EventTimeWatermark node.)
     # processing mode needs no event-time watermark (timers are wall
@@ -188,18 +204,6 @@ def streaming_correlate(
     agg_types = {f.name: to_arrow_type(f.dataType) for f in session_agg_fields(part, cfg)}
     fn = make_correlate_shard_fn(cfg, shards, int_cols, agg_types, time_mode=time_mode)
     return _shard_keyed(part, fn, OUTPUT_SCHEMA, shards, time_mode)
-
-
-def _reject_push_previous(cfg: PipelineConfig) -> None:
-    """The shard state keys maps by task, so it cannot pop a map when
-    another task's event arrives (``aggregate.rb:205-208``): refuse
-    push_previous configs instead of writing empty sinks."""
-    if cfg.push_previous_map_as_event:
-        raise ConfigurationError(
-            "streaming_correlate cannot run push_previous_map_as_event: its pop "
-            "discipline spans tasks, and streaming state is kept per task; "
-            "stream such configs with replay_push_previous"
-        )
 
 
 def _check_time_mode(time_mode: str) -> None:
@@ -282,7 +286,7 @@ def streaming_inline_emissions(stream_df: DataFrame, cfg: PipelineConfig, groks=
     (``map_action`` create/update) depend on per-row map state that keyed
     streaming state CAN express but this helper does not implement; they
     raise rather than silently emit rows the reference would suppress
-    (use the batch engine / replay_push_previous for those shapes)."""
+    (:func:`streaming_correlate`'s ``sink='emit'`` rows cover them)."""
     gated = [r.rule_id for r in cfg.rules if r.emit and r.map_action != "create_or_update"]
     if gated:
         raise ConfigurationError(
@@ -401,159 +405,6 @@ def streaming_passthrough(
     return _shard_keyed(part, fn, out_schema, shards, time_mode).unionByName(stateless)
 
 
-def replay_push_previous(
-    spark,
-    input_dir: str,
-    cfg: PipelineConfig,
-    base_path: str,
-    checkpoint: str,
-    groks=None,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Streaming replay of ``push_previous_map_as_event`` (O16/O20).
-
-    The pop discipline — the single live map dies on EVERY task-id change
-    in arrival order (``aggregate.rb:205-208,314-320``) — is a
-    GLOBAL-order property across keys: keyed ``applyInPandasWithState``
-    cannot express it, because one key's state must react to OTHER keys'
-    arrivals. The reference itself runs serial (``-w 1``,
-    ``docs/index.asciidoc:29-30``), so the faithful streaming form is a
-    serial-equivalent incremental replay: each micro-batch runs the batch
-    engine's exact push_previous over (carried live map ∪ batch), appends
-    the popped maps to the sinks, and carries the still-live map to the
-    next batch as a resume seed (the ``aggregate_maps_path`` machinery,
-    plans/resume.py). After the stream drains, the carried map is pushed
-    with the ``_aggregatefinalflush`` tag (``aggregate.rb:348-351``).
-
-    Exactly-once: sink and state writes go to ``batch_id=N`` directories
-    with overwrite, and batch N reads the state of the LARGEST id < N —
-    a replayed batch reconstructs from its true predecessor. The driver
-    lists the state with ``os``, so ``base_path`` must be a local or
-    shared-filesystem path or a ``file:`` URI; other schemes raise
-    ``ConfigurationError``.
-
-    Batches are assumed to arrive in event-time order (an ordered file
-    source) — the same event-time-equals-arrival-order model the batch
-    engine documents.
-    """
-    import os
-    import re as _re
-
-    from logstash_filter_aggregate_spark.operators.correlate import (
-        _timeout_event,
-        aggregate_sessions,
-        narrow_for_correlation,
-    )
-    from logstash_filter_aggregate_spark.operators.sessionize import sessionize
-    from logstash_filter_aggregate_spark.plans.resume import inject_seeds
-
-    if not cfg.push_previous_map_as_event:
-        raise ValueError("cfg must set push_previous_map_as_event=True")
-    local_state = f"{local_path(base_path)}/_pp_state"  # listed with os
-    schema = spark.read.parquet(input_dir).schema
-    state_root = f"{base_path}/_pp_state"
-    seg_drop = ["_end_seg", "_gap_seg", "_age_seg", "_is_last", "close_kind", "_last_row"]
-
-    def _latest_state(before: int) -> str | None:
-        if not os.path.isdir(local_state):
-            return None
-        ids = [
-            int(m.group(1))
-            for d in os.listdir(local_state)
-            if (m := _re.fullmatch(r"batch_id=(\d+)", d))
-            and m and int(m.group(1)) < before
-            and os.path.exists(f"{local_state}/{d}/_SUCCESS")
-        ]
-        return f"{state_root}/batch_id={max(ids)}" if ids else None
-
-    def _as_open(df: DataFrame) -> DataFrame:
-        return (
-            df.drop(*seg_drop)
-            .withColumnRenamed("_session_timeout", "map_custom_timeout")
-            .withColumnRenamed("_session_inactivity", "map_custom_inactivity")
-        )
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from logstash_filter_aggregate_spark.config import TASK_ID_COL
-
-        prev = _latest_state(batch_id)
-        seed = spark.read.parquet(prev) if prev else None
-        classified = classify(parse(batch_df, groks or compile_groks()), cfg)
-        corr = inject_seeds(narrow_for_correlation(classified, cfg), seed, cfg)
-        corr = corr.where(
-            F.col(TASK_ID_COL).isNotNull() & F.col("_rule_id").isNotNull()
-        )
-        sessions = aggregate_sessions(sessionize(corr, cfg), cfg)
-        sessions = sessions.persist()
-        try:
-            completed = sessions.where(F.col("close_kind") == "end")
-            inline = sessions.where(F.col("close_kind") == "custom0")
-            cand = sessions.where(F.col("close_kind").isNull())
-            # The carried map is the one live AFTER the batch's LAST row in
-            # arrival order: the map holding the max (ts, conv_id, turn_idx)
-            # row, chosen as split_sessions chooses the final-flush map.
-            # If that map CLOSED (end/custom0) it is not in cand, so no
-            # live map is carried.
-            glast = sessions.agg(F.expr("max(_last_row) AS _g"))
-            cand = with_columns(
-                cand.crossJoin(F.broadcast(glast)),
-                {"_last": "coalesce(_g = _last_row, false)"},
-                drop=["_g"],
-            )
-            pushed = _timeout_event(
-                cand.where(~F.col("_last")).drop("_last"), cfg, final_col=None
-            ).drop(*seg_drop, "_session_timeout", "_session_inactivity")
-            pushed.write.mode("overwrite").parquet(f"{base_path}/timeout/batch_id={batch_id}")
-            # completed maps pass through plain (route_sessions does not
-            # run end-closed maps through the timeout-event projection)
-            completed.drop(
-                *seg_drop, "_session_timeout", "_session_inactivity"
-            ).write.mode("overwrite").parquet(f"{base_path}/completed/batch_id={batch_id}")
-            _timeout_event(inline, cfg, final_col=None).drop(
-                *seg_drop, "_session_timeout", "_session_inactivity"
-            ).write.mode("overwrite").parquet(f"{base_path}/inline/batch_id={batch_id}")
-            _as_open(cand.where(F.col("_last")).drop("_last")).write.mode(
-                "overwrite"
-            ).parquet(f"{state_root}/batch_id={batch_id}")
-        finally:
-            sessions.unpersist()
-
-    src = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        src = src.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        src.parquet(input_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # final flush (O20): push the carried live map with the final tag
-    last = _latest_state(1 << 62)
-    final_dir = f"{base_path}/timeout/batch_id=final"
-    if last is not None:
-        # ALWAYS rewrite the final dir — even when no live map is carried
-        # (zero rows), so an incremental re-run never leaves a previous
-        # invocation's final-flush rows behind to be double-counted by
-        # sink readers
-        live = spark.read.parquet(last)
-        sessions_like = (
-            live.withColumnRenamed("map_custom_timeout", "_session_timeout")
-            .withColumnRenamed("map_custom_inactivity", "_session_inactivity")
-            .withColumn("_final", F.lit(True))
-        )
-        _timeout_event(sessions_like, cfg, final_col="_final").drop(
-            "_final", "_session_timeout", "_session_inactivity"
-        ).write.mode("overwrite").parquet(final_dir)
-    elif os.path.isdir(local_final := f"{local_path(base_path)}/timeout/batch_id=final"):
-        # no state at all this run: drop any stale final dir
-        import shutil
-
-        shutil.rmtree(local_final, ignore_errors=True)
-
-
 def replay_routed(
     spark,
     input_dir: str,
@@ -584,7 +435,8 @@ def replay_routed(
     exactly like the batch engine's final flush. The staging dir is
     rewritten with ``overwrite`` each call, so repeated replays never
     accumulate sentinels (the horizon is always computed from the real
-    corpus, not from a previous sentinel).
+    corpus, not from a previous sentinel). A push_previous config's
+    sentinel pops the live map on arrival, tagged as the final flush.
 
     **Checkpoint compatibility**: this two-source union shape is pinned
     by the checkpoint from the FIRST cycle. A checkpoint created by an
@@ -598,8 +450,7 @@ def replay_routed(
     """
     import re as _re
 
-    _reject_push_previous(cfg)
-    shards = _shard_count(shards)
+    shards = _shard_count(shards, cfg)
     schema = spark.read.parquet(input_dir).schema
     hb_dir = f"{base_path}/_heartbeat_src"
     # the union source must exist from the FIRST cycle: a checkpoint pins

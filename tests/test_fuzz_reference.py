@@ -308,16 +308,8 @@ def test_fuzz_resume_split_equals_full(spark):
         assert fp(b.open) == fp(ref.open), (shape, str(split))
 
 
-def test_fuzz_push_previous_exact_serial_pops(spark):
-    # O16/O20 fuzz: random GLOBAL interleavings of task ids vs the
-    # reference's serial single-live-map discipline (aggregate.rb:205-208,
-    # 314-320): every task-id change pops the live map; shutdown flushes
-    # the survivor with the final tag (aggregate.rb:348-351)
-    from pyspark.sql import functions as F  # noqa: F401
-
-    rng = random.Random(20260819)
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    cfg = PipelineConfig(
+def _pp_cfg():
+    return PipelineConfig(
         task_id="%{taskid}",
         rules=(
             CorrelationRule(
@@ -329,33 +321,59 @@ def test_fuzz_push_previous_exact_serial_pops(spark):
         push_previous_map_as_event=True,
         push_previous_exact=True,
     )
+
+
+def _pp_interleavings():
+    """Four random GLOBAL interleavings of task ids: [(task, ts_s, val)]."""
+    rng = random.Random(20260819)
+    trials = []
     for trial in range(4):
         tasks = [f"pp{trial}t{k}" for k in range(rng.randint(2, 6))]
         t, rows = 0.0, []
         for _ in range(rng.randint(20, 120)):
             t += rng.choice([1.0, 2.0, 7.0])
             rows.append((rng.choice(tasks), t, rng.randint(1, 9)))
+        trials.append(rows)
+    return trials
 
-        # serial reference simulator: one live map, popped on id change
-        pushed, live = [], None
-        for task, ts, val in rows:
-            if live is not None and live["task"] != task:
-                pushed.append((live["task"], live["n"], live["sum"],
-                               live["creation"], live["last"], False))
-                live = None
-            if live is None:
-                live = dict(task=task, n=0, sum=0, creation=ts, last=ts)
-            live.update(n=live["n"] + 1, sum=live["sum"] + val, last=ts)
-        pushed.append((live["task"], live["n"], live["sum"],
-                       live["creation"], live["last"], True))
 
-        data = [
-            (task, j, "user", _LINES["sql"].format(tid=task, val=val), "none",
-             T0 + dt.timedelta(seconds=ts))
-            for j, (task, ts, val) in enumerate(rows)
-        ]
-        df = spark.createDataFrame(data, schema).repartition(5)
-        out = run_pipeline(spark, df, cfg)
+def simulate_serial_pops(rows):
+    """The reference's serial single-live-map discipline
+    (aggregate.rb:205-208,314-320): every task-id change pops the live
+    map; shutdown flushes the survivor with the final tag
+    (aggregate.rb:348-351). Returns the pushed maps as
+    (task, nevents, val_sum, creation, last, final), the survivor last."""
+    pushed, live = [], None
+    for task, ts, val in rows:
+        if live is not None and live["task"] != task:
+            pushed.append((live["task"], live["n"], live["sum"],
+                           live["creation"], live["last"], False))
+            live = None
+        if live is None:
+            live = dict(task=task, n=0, sum=0, creation=ts, last=ts)
+        live.update(n=live["n"] + 1, sum=live["sum"] + val, last=ts)
+    pushed.append((live["task"], live["n"], live["sum"],
+                   live["creation"], live["last"], True))
+    return pushed
+
+
+def _pp_frame(spark, rows, first=0):
+    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    data = [
+        (task, first + j, "user", _LINES["sql"].format(tid=task, val=val), "none",
+         T0 + dt.timedelta(seconds=ts))
+        for j, (task, ts, val) in enumerate(rows)
+    ]
+    return spark.createDataFrame(data, schema)
+
+
+def test_fuzz_push_previous_exact_serial_pops(spark):
+    # O16/O20 fuzz: random GLOBAL interleavings of task ids vs the
+    # reference's serial single-live-map discipline
+    cfg = _pp_cfg()
+    for trial, rows in enumerate(_pp_interleavings()):
+        pushed = simulate_serial_pops(rows)
+        out = run_pipeline(spark, _pp_frame(spark, rows).repartition(5), cfg)
         got = sorted(
             (r.task_id, r.nevents, int(r.val_sum or 0),
              (r.creation_ts - T0).total_seconds(),
@@ -364,6 +382,35 @@ def test_fuzz_push_previous_exact_serial_pops(spark):
             for r in out.timeout.collect()
         )
         assert got == sorted(pushed), (trial, rows[:10], got[:5], sorted(pushed)[:5])
+
+
+def test_fuzz_push_previous_streaming_serial_pops(spark, tmp_path):
+    # the same interleavings through streaming_correlate, three files and
+    # a heartbeat file read one per micro-batch: the one-shard walk pops
+    # the maps the serial reference pops, the heartbeat the survivor with
+    # the final tag. Processing time has no heartbeat flush, so there the
+    # survivor stays in state and every other map must match.
+    import json
+
+    from tests.conftest import heartbeat, stream_timeout_rows, write_stream_files
+
+    cfg = _pp_cfg()
+    trials = _pp_interleavings()
+    legs = [(trial, rows, "event") for trial, rows in enumerate(trials)] + [(0, trials[0], "processing")]
+    for trial, rows, time_mode in legs:
+        cut = [0, len(rows) // 3, 2 * len(rows) // 3, len(rows)]
+        frames = [_pp_frame(spark, rows[a:b], first=a) for a, b in zip(cut, cut[1:])]
+        run = tmp_path / f"{time_mode}{trial}"
+        write_stream_files(spark, str(run / "in"), [*frames, heartbeat(spark, rows[-1][1] + 1)])
+        got = sorted(
+            (r.task_id, r.nevents, json.loads(r.map_json).get("val_sum", 0),
+             (r.creation_ts - T0).total_seconds(), (r.lastevent_ts - T0).total_seconds(),
+             "_aggregatefinalflush" in json.loads(r.map_json).get("tags", []))
+            for r in stream_timeout_rows(spark, str(run / "in"), cfg, run, time_mode)
+        )
+        pushed = simulate_serial_pops(rows)
+        expect = sorted(pushed if time_mode == "event" else pushed[:-1])
+        assert got == expect, (trial, time_mode, got[:5], expect[:5])
 
 
 def test_fuzz_window_mode_matches_simulator(spark):

@@ -152,6 +152,7 @@ def test_group_count_matches_java(spark):
         r"[](b)](c)",
         r"[^[a]](b)",
         r"[a&&[(]](b)",
+        r"[\Q\E](b)]",
     ]
     pattern = spark._jvm.java.util.regex.Pattern
     for r in regexes:

@@ -180,24 +180,57 @@ def test_final_flush_tags_nothing_when_last_map_closed(spark):
     assert [r.task_id for r in out.completed.collect()] == ["B"]
 
 
-def test_streaming_refuses_push_previous(spark, tmp_path):
-    # streaming state is kept per task and cannot pop a map when another
-    # task's event arrives (aggregate.rb:205-208): streaming_correlate and
-    # replay_routed refuse push_previous configs, naming the replay that
-    # streams them, before any plan, file or checkpoint exists (they used
-    # to write empty sinks without an error)
+def test_global_index_matches_row_number_at_2000_partitions(spark):
+    # one stats row per partition, most partitions holding one row: the
+    # offsets still rank every row as a global row_number would
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from logstash_filter_aggregate_spark.operators.order import with_global_index
+
+    df = spark.range(2000).select((F.col("id") * 7919 % 2000).alias("k"))
+    got = with_global_index(df, ["k"], num_partitions=2000)
+    expect = df.select("k", (F.row_number().over(Window.orderBy("k")) - 1).alias("_gidx"))
+    assert sorted(got.collect()) == sorted(expect.collect())
+
+
+def test_replay_routed_push_previous_matches_batch(spark, tmp_path):
+    # push_previous streams on one state shard walked in arrival order:
+    # spain's arrival pops france's map, and replay_routed's heartbeat
+    # pops spain's as the final flush, as batch pushes them
+    import json
+    import re
+
     import pytest
 
-    from logstash_filter_aggregate_spark.config import ConfigurationError
     from logstash_filter_aggregate_spark.streaming.stream import replay_routed, streaming_correlate
+    from tests.test_streaming_shard import _stateful_group_keys
 
     cfg = example4_config()
     src = str(tmp_path / "in")
     make_transcript(spark, ROWS).write.parquet(src)
+    replay_routed(spark, src, cfg, str(tmp_path / "out"), str(tmp_path / "cp"))
+    got = sorted(
+        (r.task_id, r.nevents, r.creation_ts, r.lastevent_ts,
+         [t["town_name"] for t in json.loads(r.map_json)["towns"]],
+         json.loads(r.map_json).get("tags", []))
+        for r in spark.read.parquet(str(tmp_path / "out" / "timeout")).collect()
+    )
+    out = run_pipeline(spark, spark.read.parquet(src), cfg)
+    expect = sorted(
+        (r.task_id, r.nevents, r.creation_ts, r.lastevent_ts, [t.town_name for t in r.towns], r.tags)
+        for r in out.timeout.collect()
+    )
+    assert got == expect
+    assert [t[-1] for t in got] == [[], ["_aggregatefinalflush"]]
+
+    # the plan keys its one state row by pmod(xxhash64(_task_id), 1)
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    with pytest.raises(ConfigurationError, match="replay_push_previous"):
-        streaming_correlate(stream, cfg)
-    out, cp = tmp_path / "out", tmp_path / "cp"
-    with pytest.raises(ConfigurationError, match="replay_push_previous"):
-        replay_routed(spark, src, cfg, str(out), str(cp))
-    assert not out.exists() and not cp.exists()
+    plan = streaming_correlate(stream, cfg)
+    assert _stateful_group_keys(plan) == ["_shard"]
+    assert re.search(
+        r"pmod\(xxhash64\(_task_id#\d+, 42\), cast\(1 as bigint\)\)",
+        plan._jdf.queryExecution().analyzed().toString(),
+    )
+    with pytest.raises(ValueError, match="push_previous"):
+        streaming_correlate(stream, cfg, shards=5)

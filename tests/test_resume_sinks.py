@@ -356,6 +356,18 @@ def test_sink_writes_keep_the_callers_local_properties(spark, tmp_path):
     assert sc.getLocalProperty("spark.job.description") is None
 
 
+def _has_stage(status, stage_id) -> bool:
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        status.lastStageAttempt(stage_id)
+    except Py4JJavaError as e:
+        if "NoSuchElementException" not in str(e.java_exception):
+            raise
+        return False
+    return True
+
+
 def test_concurrent_sink_writes_recompute_nothing(spark, tmp_path):
     # the concurrent writes share the persisted frames and the lazy
     # checkpoint: the run completes exactly the stages, and reads exactly
@@ -377,11 +389,18 @@ def test_concurrent_sink_writes_recompute_nothing(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = status.jobsList(None)
-    stage_ids = set()
+    stage_ids, skipped = set(), 0
     for job in (jobs.apply(i) for i in range(jobs.size())):
         if job.jobGroup().isDefined() and job.jobGroup().get() == "recompute":
             stage_ids |= {job.stageIds().apply(k) for k in range(job.stageIds().size())}
-    stages = [status.lastStageAttempt(i) for i in stage_ids]
+            skipped += job.numSkippedStages()
+    # once the session's store holds spark.ui.retainedStages stages, each
+    # cleanup evicts skipped stages first (they have no completion time),
+    # so a skipped stage of this run may be gone; no more stages may be
+    # missing than the jobs skipped, so an evicted COMPLETE one still fails
+    missing = {i for i in stage_ids if not _has_stage(status, i)}
+    assert len(missing) <= skipped
+    stages = [status.lastStageAttempt(i) for i in stage_ids - missing]
     done = [s for s in stages if s.status().toString() == "COMPLETE"]
     assert (len(done), sum(s.inputRecords() for s in done)) == (11, 244)
 

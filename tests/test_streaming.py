@@ -247,20 +247,10 @@ def test_replay_routed_final_flush_matches_batch(spark, tmp_path, shards):
     assert spark.read.parquet(p).where("conv_id = '__heartbeat__'").count() == 0
 
 
-def test_replay_push_previous_matches_batch(spark, tmp_path):
-    # O16 over a stream: the serial-equivalent incremental replay
-    # (foreachBatch + carried live-map seed) must equal the batch
-    # engine's exact push_previous on the full input — including a task
-    # run that SPANS a micro-batch boundary (the carried map merges with
-    # its continuation) and the final-flush tag on the last map.
-    import glob
-    import os
-    import shutil
+def _click_pp_cfg():
+    from logstash_filter_aggregate_spark.config import PipelineConfig
 
-    from logstash_filter_aggregate_spark.config import AggSpec, CorrelationRule, PipelineConfig
-    from logstash_filter_aggregate_spark.streaming.stream import replay_push_previous
-
-    cfg = PipelineConfig(
+    return PipelineConfig(
         task_id="%{taskid}",
         rules=(
             CorrelationRule(
@@ -273,6 +263,39 @@ def test_replay_push_previous_matches_batch(spark, tmp_path):
         push_previous_exact=True,
         timeout_task_id_field="uid",
     )
+
+
+def _pp_stream_vs_batch(spark, tmp_path, cfg, slices):
+    """push_previous over a stream, one slice per micro-batch and a
+    heartbeat after the last row, next to batch's timeout rows on the
+    whole input: (task, nevents, creation, last event, clicks, final)."""
+    from tests.conftest import heartbeat, stream_timeout_rows, write_stream_files
+
+    in_dir = str(tmp_path / "in")
+    last = max(r[-1] for rows in slices for r in rows)
+    files = write_stream_files(
+        spark, in_dir, [make_transcript(spark, rows) for rows in slices] + [heartbeat(spark, last + 1)]
+    )
+    got = sorted(
+        (r.task_id, r.nevents, r.creation_ts, r.lastevent_ts, json.loads(r.map_json).get("clicks"),
+         "_aggregatefinalflush" in json.loads(r.map_json).get("tags", []))
+        for r in stream_timeout_rows(spark, in_dir, cfg, tmp_path)
+    )
+    batch = run_pipeline(spark, spark.read.parquet(*files[:-1]), cfg)
+    expect = sorted(
+        (r.uid, r.nevents, r.creation_ts, r.lastevent_ts, r.clicks, "_aggregatefinalflush" in r.tags)
+        for r in batch.timeout.collect()
+    )
+    assert got == expect
+    return got
+
+
+def test_stream_push_previous_matches_batch(spark, tmp_path):
+    # O16 over a stream: the one-shard arrival-order walk must equal the
+    # batch engine's exact push_previous on the full input — including a
+    # task run that SPANS a micro-batch boundary (the carried map merges
+    # with its continuation) and the final-flush tag on the last map,
+    # popped by the heartbeat
     # contiguous runs: A×3 | B×2 ‖ B×2 C×1 ‖ C×1 A×2   (‖ = file boundary;
     # the B and C runs each span one)
     slices = [
@@ -284,106 +307,27 @@ def test_replay_push_previous_matches_batch(spark, tmp_path):
         [(8, "INFO - C - Clicked One", 8), (9, "INFO - A - Clicked One", 9),
          (10, "INFO - A - Clicked One", 10)],
     ]
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    for i, rows in enumerate(slices):
-        tmp = str(tmp_path / f"slice{i}")
-        make_transcript(spark, rows).coalesce(1).write.mode("overwrite").parquet(tmp)
-        dst = f"{in_dir}/{chr(97 + i)}.parquet"
-        shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))  # deterministic batch order
-
-    base = str(tmp_path / "out")
-    replay_push_previous(
-        spark, in_dir, cfg, base, str(tmp_path / "cp"), max_files_per_trigger=1
-    )
-    got = spark.read.parquet(f"{base}/timeout").select(
-        "uid", "clicks", "nevents", "creation_ts", "lastevent_ts",
-        F.array_contains("tags", "_aggregatefinalflush").alias("final_flush"),
-    ).collect()
-
-    full = spark.read.parquet(in_dir)
-    batch = run_pipeline(spark, full, cfg)
-    expect = batch.timeout.select(
-        "uid", "clicks", "nevents", "creation_ts", "lastevent_ts",
-        F.array_contains("tags", "_aggregatefinalflush").alias("final_flush"),
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, expect))
+    got = _pp_stream_vs_batch(spark, tmp_path, _click_pp_cfg(), slices)
     # the spanning runs really merged: B has one 4-event map, C one 2-event
-    by_uid = {(r.uid, r.nevents) for r in got}
-    assert ("B", 4) in by_uid and ("C", 2) in by_uid and ("A", 3) in by_uid
-    assert [r.uid for r in got if r.final_flush] == ["A"]
+    by_task = {(t, n) for t, n, *_ in got}
+    assert ("B", 4) in by_task and ("C", 2) in by_task and ("A", 3) in by_task
+    assert [(t, n) for t, n, *_, final in got if final] == [("A", 2)]
 
 
-def test_replay_push_previous_refuses_remote_state(spark, tmp_path, monkeypatch):
-    # the replay lists its carried state with os on the driver: an s3://
-    # base raises, naming the path, before the stream starts
-    import re
-
-    from logstash_filter_aggregate_spark.config import ConfigurationError
-    from logstash_filter_aggregate_spark.plans.pipeline import example4_config
-    from logstash_filter_aggregate_spark.streaming.stream import replay_push_previous
-
-    monkeypatch.chdir(tmp_path)
-    src = str(tmp_path / "in")
-    make_transcript(spark, [(0, "INFO - A - Town - x", 0)]).write.parquet(src)
-    with pytest.raises(ConfigurationError, match=re.escape("s3://bucket/out")):
-        replay_push_previous(spark, src, example4_config(), "s3://bucket/out", str(tmp_path / "cp"))
-    assert not (tmp_path / "s3:").exists() and not (tmp_path / "cp").exists()
-
-
-def test_replay_push_previous_creation_tie(spark, tmp_path):
+def test_stream_push_previous_creation_tie(spark, tmp_path):
     # two maps created at the SAME ts in one batch: the carried map must
     # be the one live after the ARRIVAL-order last row (A, turn 1), not
     # the lexically-larger task id (Z) — carrying Z would wrongly merge
     # it with its continuation in the next batch
-    import glob
-    import os
-    import shutil
-
-    from logstash_filter_aggregate_spark.config import AggSpec, CorrelationRule, PipelineConfig
-    from logstash_filter_aggregate_spark.streaming.stream import replay_push_previous
-
-    cfg = PipelineConfig(
-        task_id="%{taskid}",
-        rules=(
-            CorrelationRule(
-                "click", "click_target is not null",
-                aggs=(AggSpec("clicks", "count"),),
-            ),
-        ),
-        timeout=1e9,
-        push_previous_map_as_event=True,
-        push_previous_exact=True,
-        timeout_task_id_field="uid",
-    )
     slices = [
         [(0, "INFO - Z - Clicked One", 100), (1, "INFO - A - Clicked One", 100)],
         [(2, "INFO - Z - Clicked One", 101)],
     ]
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    for i, rows in enumerate(slices):
-        tmp = str(tmp_path / f"slice{i}")
-        make_transcript(spark, rows).coalesce(1).write.mode("overwrite").parquet(tmp)
-        dst = f"{in_dir}/{chr(97 + i)}.parquet"
-        shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0], dst)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
-    base = str(tmp_path / "out")
-    replay_push_previous(
-        spark, in_dir, cfg, base, str(tmp_path / "cp"), max_files_per_trigger=1
-    )
-    rows = spark.read.parquet(f"{base}/timeout").select(
-        "uid", "nevents", F.array_contains("tags", "_aggregatefinalflush").alias("ff")
-    ).collect()
-    got = sorted((r.uid, r.nevents, r.ff) for r in rows)
-    expect = run_pipeline(spark, spark.read.parquet(in_dir), cfg).timeout.select(
-        "uid", "nevents", F.array_contains("tags", "_aggregatefinalflush").alias("ff")
-    ).collect()
-    assert got == sorted((r.uid, r.nevents, r.ff) for r in expect)
+    got = _pp_stream_vs_batch(spark, tmp_path, _click_pp_cfg(), slices)
     # three single-event maps — NO wrongly-merged (Z, 2) map
-    assert got == [("A", 1, False), ("Z", 1, False), ("Z", 1, True)]
+    assert [(t, n, final) for t, n, *_, final in got] == [
+        ("A", 1, False), ("Z", 1, False), ("Z", 1, True)
+    ]
 
 
 def test_streaming_inline_emissions(spark, tmp_path):
