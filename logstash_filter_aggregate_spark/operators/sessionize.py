@@ -291,17 +291,28 @@ def _epoch_seconds(col, null: float):
     return sec
 
 
-def _scan_tasks(pending: list, plan: _ScanPlan):
-    """Scan whole tasks: ``pending`` holds (batch, task-start flags)
-    pairs whose rows end on a task boundary. Builds the walk's input
-    arrays once for the partition, runs one :func:`walk_scan` per task,
-    numbering the sessions across the tasks, and yields the session rows
-    and the effect rows as Arrow batches of ``plan.schema``."""
-    import pyarrow as pa
+class Scan(NamedTuple):
+    """One :func:`scan` call: the chunk's columns (``column(name)``, an
+    Arrow array or None), each row's session (``sid``, -1 where the row's
+    code did not run) and the sessions, each ``(labels, walk close kind,
+    close row or -1, last of its group)``."""
 
-    tbl = pa.Table.from_batches([b for b, _ in pending])
+    column: object
+    sid: np.ndarray
+    sessions: list
+
+
+def scan(tbl, starts: np.ndarray, plan: _ScanPlan, brk: np.ndarray | None = None) -> Scan:
+    """The per-task kernel both tiers run: one :func:`walk_scan` per group
+    of ``tbl`` (the rows from each of ``starts`` to the next), numbering
+    the sessions across the groups. The walk's rule inputs are built once
+    for the whole table from the columns ``classify`` gave its rows.
+
+    Partial rows (rule ``_seed``: resume seeds, pre-reduced super-rows,
+    streaming's carried maps) create their map at ``_seed_creation_ts``
+    and run the gap clock from ``_seed_lastevent_ts``. ``brk`` flags the
+    rows whose arrival pops the live map (push_previous's run breaks)."""
     n = tbl.num_rows
-    starts = np.flatnonzero(np.concatenate([s for _, s in pending]))
     bounds = np.append(starts, n)
 
     @functools.cache
@@ -323,41 +334,53 @@ def _scan_tasks(pending: list, plan: _ScanPlan):
         def partial_clock(name):
             # a partial row's carried clock, ts on the other rows; None
             # (the walk's default: ts) when no row carries one
-            if name not in tbl.column_names:
+            if column(name) is None:
                 return None
             sec = _epoch_seconds(column(name), np.nan)
             return np.where(np.isnan(sec), ts, sec)
 
-        # partial rows: a resume seed creates its map at the carried
-        # creation time, and a pre-reduced super-row's gap clock runs from
-        # its last event
         partial = [partial_clock("_seed_creation_ts"), partial_clock("_seed_lastevent_ts")]
-    brk = None
-    if "_gidx" in tbl.column_names:
-        # push_previous run break: another task's event arrived between
-        # two of this task's rows and popped its map (aggregate.rb:205-208)
-        gidx = column("_gidx").to_numpy()
-        brk = np.zeros(n, dtype=bool)
-        brk[1:] = gidx[1:] - gidx[:-1] > 1
-    per_row = [*partial, brk]
+    per_row = [*partial, brk] if any(c is not None for c in (*partial, brk)) else []
 
-    sid = np.full(n, -1, dtype=np.int64)  # session of each code-ran row
-    sessions: list = []  # (task start row, labels, close kind, close row, is last)
-    for s, e in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+    sid = np.empty(n, dtype=np.int64)  # each group's own session labels, offset below
+    base = np.zeros(len(starts), dtype=np.int64)
+    sessions: list = []
+    for g, (s, e) in enumerate(zip(bounds[:-1].tolist(), bounds[1:].tolist())):
         res = walk_scan(
             ts[s:e], is_create[s:e], is_update[s:e], end_flag[s:e], cust_to[s:e],
             cust_in[s:e], None, timeout, inactivity, *[c if c is None else c[s:e] for c in per_row],
         )
-        sid[s:e] = np.where(res.sess_id >= 0, res.sess_id + len(sessions), -1)
+        sid[s:e] = res.sess_id
+        base[g] = len(sessions)
         labels = _label_breaks(res, s, e)
         last = len(res.sessions) - 1
         for k, (_, _, kind, row) in enumerate(res.sessions):
-            sessions.append((s, labels[k][1:], kind, s + row if kind in (END, CT0) else -1, k == last))
-    if sessions:
-        yield _batch(plan.schema, _session_rows(plan, column, sid, sessions), len(sessions))
-    effect = _effect_rows(plan, column, sid)
+            sessions.append((labels[k][1:], kind, s + row if kind in (END, CT0) else -1, k == last))
+    sid = np.where(sid >= 0, sid + np.repeat(base, np.diff(bounds)), -1)
+    return Scan(column, sid, sessions)
+
+
+def _scan_tasks(pending: list, plan: _ScanPlan):
+    """Scan whole tasks: ``pending`` holds (batch, task-start flags)
+    pairs whose rows end on a task boundary. One :func:`scan` call over
+    them yields the session rows and the effect rows as Arrow batches of
+    ``plan.schema``."""
+    import pyarrow as pa
+
+    tbl = pa.Table.from_batches([b for b, _ in pending])
+    brk = None
+    if "_gidx" in tbl.column_names:
+        # push_previous run break: another task's event arrived between
+        # two of this task's rows and popped its map (aggregate.rb:205-208)
+        gidx = tbl.column("_gidx").to_numpy()
+        brk = np.zeros(len(gidx), dtype=bool)
+        brk[1:] = gidx[1:] - gidx[:-1] > 1
+    sc = scan(tbl, np.flatnonzero(np.concatenate([s for _, s in pending])), plan, brk)
+    if sc.sessions:
+        yield _batch(plan.schema, _session_rows(plan, sc), len(sc.sessions))
+    effect = _effect_rows(plan, sc)
     if len(effect):
-        cols = {c: column(c).take(effect) for c in ("conv_id", "turn_idx", KIND_COL, *plan.effect_cols)}
+        cols = {c: sc.column(c).take(effect) for c in ("conv_id", "turn_idx", KIND_COL, *plan.effect_cols)}
         yield _batch(plan.schema, {**cols, "_included": np.ones(len(effect), dtype=bool)}, len(effect))
 
 
@@ -372,20 +395,27 @@ def _batch(schema, cols: dict, n: int):
     ], schema=schema)
 
 
-def _session_rows(plan: _ScanPlan, column, sid: np.ndarray, sessions: list) -> dict:
+# the close kind of each walk session, as a session row carries it
+CLOSE_KINDS = {END: "end", CT0: "custom0", EXPIRY: "expiry", OPEN: "open"}
+
+
+def _session_rows(plan: _ScanPlan, sc: Scan) -> dict:
     """The columns of the session rows, folded from the rows whose code
-    ran (``sid``): labels, close, ``map_meta`` (creation O4
-    ``aggregate.rb:525-528`` and last event O5 ``aggregate.rb:220-221``,
-    partial rows counting with their carried clocks and event counts),
-    the last-set per-map overrides (``aggregate.rb:243-246``) and the
-    aggregation dictionary."""
+    ran: task, labels, close, ``map_meta`` (creation O4
+    ``aggregate.rb:525-528`` at the map's first row and last event O5
+    ``aggregate.rb:220-221``, partial rows counting with their carried
+    clocks and event counts), the last-set per-map overrides
+    (``aggregate.rb:243-246``) and the aggregation dictionary."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    n_sess = len(sessions)
-    task_row, labels, kinds, close_row, is_last = (list(c) for c in zip(*sessions))
+    column, sid = sc.column, sc.sid
+    n_sess = len(sc.sessions)
+    labels, kinds, close_row, is_last = (list(c) for c in zip(*sc.sessions)) if n_sess else ([],) * 4
     ran = np.flatnonzero(sid >= 0)
     s = sid[ran]
+    at = first_rows(s, n_sess)
+    first = ran[at]
     ts = column("ts")
     with_seeds = column("_seed_nevents") is not None
 
@@ -405,13 +435,15 @@ def _session_rows(plan: _ScanPlan, column, sid: np.ndarray, sessions: list) -> d
     closed = pa.array(close_row, mask=close_row < 0)
     lastevent = carried("_seed_lastevent_ts")
     cols = {
-        "task_id": column(TASK_ID_COL).take(pa.array(task_row)),
-        **dict(zip(("_end_seg", "_gap_seg", "_age_seg"), np.asarray(labels, dtype=np.int32).T)),
-        "creation_ts": session_fold(s, n_sess, carried("_seed_creation_ts"), "min"),
+        # a session is its first row's task (push_previous walks several
+        # tasks in one group)
+        "task_id": column(TASK_ID_COL).take(first),
+        **dict(zip(("_end_seg", "_gap_seg", "_age_seg"), np.asarray(labels, dtype=np.int32).reshape(-1, 3).T)),
+        "creation_ts": carried("_seed_creation_ts").take(at),
         "lastevent_ts": session_fold(s, n_sess, lastevent, "max"),
         "nevents": np.bincount(s, weights=weight, minlength=n_sess).astype(np.int64),
-        "conv_id": column("conv_id").take(ran[first_rows(s, n_sess)]),
-        "close_kind": pa.array([{END: "end", CT0: "custom0"}.get(k) for k in kinds], pa.string()),
+        "conv_id": column("conv_id").take(first),
+        "close_kind": pa.array([CLOSE_KINDS[k] for k in kinds], pa.string()),
         "end_ts": ts.take(closed),
         "end_turn_idx": column("turn_idx").take(closed),
         "_session_timeout": override("_custom_timeout"),
@@ -436,11 +468,12 @@ def _session_rows(plan: _ScanPlan, column, sid: np.ndarray, sessions: list) -> d
     return cols | session_values(plan.specs, column, sid, n_sess, types)
 
 
-def _effect_rows(plan: _ScanPlan, column, sid: np.ndarray) -> np.ndarray:
+def _effect_rows(plan: _ScanPlan, sc: Scan) -> np.ndarray:
     """The rows whose guard-gated code had a side effect
     (:func:`_effect_rules`): every code-ran row of a cancel or emit rule,
     and each code-ran row of a rule with ``required`` aggs whose required
     input is NULL."""
+    column, sid = sc.column, sc.sid
     if not plan.effects:
         return np.zeros(0, dtype=np.int64)
     rule = column(KIND_COL).to_numpy(zero_copy_only=False)

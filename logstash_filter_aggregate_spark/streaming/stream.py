@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,15 +45,6 @@ from logstash_filter_aggregate_spark.sqltext import case, quote
 # when a checkpoint restarts (the count is recorded in the state and
 # checked on decode).
 DEFAULT_SHARDS = 64
-
-
-def _is_nullish(v) -> bool:
-    """True for NaN/NaT (self-inequality) — the pandas null family that
-    must become JSON null, not a NaN token or a stringified 'NaT'."""
-    try:
-        return bool(v != v)
-    except (TypeError, ValueError):
-        return False
 
 
 def _shard_count(shards: int | None, cfg: PipelineConfig | None = None) -> int:
@@ -82,27 +72,33 @@ OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def _norm(v):
-    if v is None or _is_nullish(v):
-        return None
-    return v.item() if hasattr(v, "item") else v
+# json.dumps(v, default=str) without building an encoder per call
+_to_json = json.JSONEncoder(default=str).encode
 
 
-def _ts_us(sec: float) -> pd.Timestamp:
-    # the state keeps epoch-seconds doubles; float64 is exact to
-    # <0.25µs here but ns-residue appears on reconstruction and
-    # Arrow's safe µs cast rejects it — round("us") recovers the
-    # original microsecond exactly
-    return pd.Timestamp(sec, unit="s").round("us")
-
-
-def _map_json(agg_specs: dict, m: dict) -> str:
-    """A map (``shard._session_maps``) as the sinks carry it: JSON, each
-    ``avg`` entry rendered as the mean of its ``[sum, count]`` partials."""
-    return json.dumps(
-        {k: v[0] / v[1] if agg_specs.get(k, ("last",))[0] == "avg" else v for k, v in m.items()},
-        default=str,
-    )
+def _map_json(specs: dict, sess, flush=None) -> list[str]:
+    """Each map of ``sess`` (an Arrow table of session rows, or of evicted
+    cells under the session names) as the sinks carry it: JSON
+    (``default=str``) of the entries something went into — no NULL, no
+    zero count, no empty collection — in dictionary order, each ``avg``
+    the mean of its ``_avg_sum_`` / ``_avg_cnt_`` partials. ``flush``
+    marks the maps a heartbeat popped with the final-flush tag
+    (``aggregate.rb:348-351``)."""
+    entries = []
+    for name, (fn, _) in specs.items():
+        if fn == "avg":
+            sums, cnts = (sess.column(f"_avg_{p}_{name}").to_pylist() for p in ("sum", "cnt"))
+            vals = [s / c if c else None for s, c in zip(sums, cnts)]
+        else:
+            vals = [None if v == [] or (fn == "count" and v == 0) else v for v in sess.column(name).to_pylist()]
+        entries.append((name, vals))
+    out = []
+    for i in range(sess.num_rows):
+        m = {name: vals[i] for name, vals in entries if vals[i] is not None}
+        if flush is not None and flush[i]:
+            m["tags"] = ["_aggregatefinalflush"]
+        out.append(_to_json(m))
+    return out
 
 
 def streaming_correlate(
@@ -139,7 +135,10 @@ def streaming_correlate(
     Documented divergences: timings depend on the wall clock (tests
     assert structure, not latencies); ``map_meta.timeout = 0`` instant
     eviction still fires, but >0 per-map overrides are event-mode
-    features and are ignored.
+    features and are ignored. The timers make Spark plan a no-data batch
+    after every batch, so such a query never ends under ``availableNow``
+    (:func:`stream_to_routed_sinks` refuses it): run it with a
+    ``processingTime`` trigger and ``stop()`` it.
 
     ``push_previous_map_as_event``: one state shard (``shards`` must be
     None or 1), walked in arrival order ``(ts, conv_id, turn_idx)``. The
@@ -148,6 +147,7 @@ def streaming_correlate(
     ``map_json`` carrying ``"tags": ["_aggregatefinalflush"]``. The pops
     are the reference's exact ones whatever ``push_previous_exact`` says;
     micro-batches must arrive in event-time order."""
+    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
     from logstash_filter_aggregate_spark.streaming.shard import make_correlate_shard_fn
@@ -201,8 +201,8 @@ def streaming_correlate(
     int_cols = frozenset(
         n for n in value_cols if isinstance(part.schema[n].dataType, T.IntegralType)
     )
-    agg_types = {f.name: to_arrow_type(f.dataType) for f in session_agg_fields(part, cfg)}
-    fn = make_correlate_shard_fn(cfg, shards, int_cols, agg_types, time_mode=time_mode)
+    aggs = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in session_agg_fields(part, cfg)])
+    fn = make_correlate_shard_fn(cfg, shards, part.columns, aggs, int_cols, time_mode=time_mode)
     return _shard_keyed(part, fn, OUTPUT_SCHEMA, shards, time_mode)
 
 
@@ -256,7 +256,16 @@ def stream_to_routed_sinks(
     after a crash overwrites its own directory instead of appending
     duplicates (the standard idempotent-foreachBatch pattern). Readers
     just ``spark.read.parquet(f"{base_path}/<sink>")``.
+
+    ``available_now`` is refused for processing-time state, whose timers
+    make Spark plan a no-data batch after every batch, so it never ends.
     """
+    if available_now and _keeps_processing_timers(correlated):
+        raise ValueError(
+            "an availableNow trigger never ends a query whose state keeps processing-time "
+            "timers (time_mode='processing'): pass available_now=False for the processingTime "
+            "trigger and stop() the query once its data has drained"
+        )
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
@@ -276,6 +285,18 @@ def stream_to_routed_sinks(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _keeps_processing_timers(df: DataFrame) -> bool:
+    """True when a stateful operator of ``df``'s plan times out by processing time."""
+    todo = [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if (node.getClass().getSimpleName() == "FlatMapGroupsInPandasWithState"
+                and node.timeout().toString() == "ProcessingTimeTimeout"):
+            return True
+        todo += [node.children().apply(i) for i in range(node.children().size())]
+    return False
 
 
 def streaming_inline_emissions(stream_df: DataFrame, cfg: PipelineConfig, groks=None) -> DataFrame:
@@ -355,7 +376,9 @@ def streaming_passthrough(
     price of reference-exact guard decisions on a stream; the batch
     engine remains the cheap path for bulk replays.
 
-    ``shards`` and ``time_mode``: as for :func:`streaming_correlate`.
+    ``shards`` and ``time_mode``: as for :func:`streaming_correlate`; a
+    gated query in processing time never ends under ``availableNow``, so
+    run it with a ``processingTime`` trigger and ``stop()`` it.
     """
     from logstash_filter_aggregate_spark.streaming.shard import make_passthrough_shard_fn
 

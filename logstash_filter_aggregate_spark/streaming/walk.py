@@ -2,23 +2,20 @@
 reference's filter hot path (``aggregate.rb:179-246``) that batch and
 streaming share.
 
-The shard-keyed stateful functions in :mod:`streaming.shard` run it
-over each task's slice of a micro-batch, and the exact batch tier
-(``operators/sessionize.py``) over each task of a sorted partition.
-Through round 4 the streaming replay was a per-row interpreted Python
-loop (~1 s per million rows on a hot key, one task slot); this module
-runs the identical state machine as a numpy session-hop, with:
+The batch scan's kernel (``operators/sessionize.py::scan``) calls it
+for each task of a sorted partition and of a streaming shard's
+micro-batch chunk (:mod:`streaming.shard`); each call runs the state
+machine as a numpy session-hop, with:
 
-- a **carried state cell** entering the scan (creation / lastevent /
-  nevents / effective clocks from previous micro-batches);
 - **dynamic closes**: ``end_of_task`` and ``map_meta.timeout = 0``
   fire only where the codeblock runs (a duplicate ``create`` never
   runs it), so they cannot be precomputed as static segment splits;
-- per-row **partial rows** (batch only): a resume seed re-creates a
-  map with its carried creation time, and a pre-reduced super-row
-  refreshes the gap clock to its last event, not its arrival position;
+- per-row **partial rows**: a resume seed or a streaming shard's carried
+  cell re-creates a map with its carried creation time and last event,
+  and a pre-reduced super-row refreshes the gap clock to its last event,
+  not its arrival position;
 - per-row ``code_ran`` labels and per-session close records coming
-  out, which both engines fold into one row per map with the same
+  out, which the kernel folds into one row per map with the
   aggregation dictionary (``operators/correlate.py::session_values``).
 
 Python-level work is O(#sessions + #override events + #closes), each
@@ -131,7 +128,7 @@ def walk_scan(
     if row_last is None:
         row_last = ts
     code_ran = np.zeros(n, dtype=bool)
-    sess_id = np.full(n, -1, dtype=np.int32)
+    sess_id = np.empty(n, dtype=np.int32)    # -1 off the code-ran rows, set at the end
     sessions: list[tuple] = []
     aged: set = set()
     final = None
@@ -147,7 +144,7 @@ def walk_scan(
 
     # the all-create_or_update shape skips the can-create index and the
     # running max: every row can create, and sorted ts is its own max
-    cc_rows = np.flatnonzero(~is_update) if is_update.any() else None  # can-create rows
+    cc_rows = (~is_update).nonzero()[0] if is_update.any() else None  # can-create rows
 
     def next_cc(i: int) -> int:
         if cc_rows is None:
@@ -174,14 +171,14 @@ def walk_scan(
     # rejected at config time), timeout=0 rows only when not a duplicate
     # create (the codeblock must run for the eviction to fire)
     close_cand = (end_flag | ct0) & ~is_create
-    close_rows = np.flatnonzero(close_cand)
+    close_rows = close_cand.nonzero()[0]
     cl_ss, n_cl = close_rows.searchsorted, len(close_rows)
-    brk_rows = np.flatnonzero(row_break) if row_break is not None else None
+    brk_rows = row_break.nonzero()[0] if row_break is not None else None
 
     ts_ss = ts.searchsorted
     # override EVENTS (non-create rows carrying a live override value):
     # visited only when they could change the effective clocks
-    ev_rows_arr = np.flatnonzero((has_to | has_in) & ~is_create)
+    ev_rows_arr = ((has_to | has_in) & ~is_create).nonzero()[0]
     ev_rows: list = ev_rows_arr.tolist()
     _cto = cust_to[ev_rows_arr]
     _cin = cust_in[ev_rows_arr]
@@ -215,7 +212,7 @@ def walk_scan(
     def _gap_rows(eff):
         hit = gap_cache.get(eff)
         if hit is None:
-            r = np.flatnonzero(gap_margin > eff)
+            r = (gap_margin > eff).nonzero()[0]
             hit = (r, r.searchsorted, ts[r].searchsorted, len(r))
             if len(gap_cache) < 8:
                 gap_cache[eff] = hit

@@ -68,11 +68,12 @@ def stream_timeout_rows(spark, in_dir, cfg, tmp_path, time_mode="event"):
     )
     base = str(tmp_path / f"out_{time_mode}")
     q = stream_to_routed_sinks(
-        streaming_correlate(src, cfg, time_mode=time_mode), base, str(tmp_path / f"cp_{time_mode}")
+        streaming_correlate(src, cfg, time_mode=time_mode), base, str(tmp_path / f"cp_{time_mode}"),
+        available_now=time_mode == "event",
     )
     if time_mode == "processing":
-        # processing-time timers keep an availableNow query running no-data
-        # batches: stop it once the last file's batch has written its sinks
+        # processing-time timers keep a query running no-data batches:
+        # stop it once the last file's batch has written its sinks
         import glob
         import os
         import time

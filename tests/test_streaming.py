@@ -1,5 +1,6 @@
 """Streaming variant vs the batch correctness reference."""
 
+import datetime as dt
 import json
 
 import pytest
@@ -8,7 +9,7 @@ from pyspark.sql import functions as F
 from logstash_filter_aggregate_spark.config import AggSpec, CorrelationRule
 from logstash_filter_aggregate_spark.plans.pipeline import example1_config, example3_config, run_pipeline
 from logstash_filter_aggregate_spark.sources.transcripts import generate_transcripts
-from tests.conftest import make_transcript
+from tests.conftest import T0, make_transcript
 
 
 @pytest.fixture(scope="module")
@@ -443,19 +444,42 @@ def test_streaming_gated_emissions_match_batch(spark, tmp_path):
 def test_streaming_fuzz_matches_reference_simulator(spark, tmp_path):
     # the randomized reference-semantics fuzz, replayed through the
     # STREAMING engine: per-event state machine vs the independent
-    # simulator. replay_routed's final flush pushes every surviving map,
-    # so the streaming timeout sink must equal sim timeout ∪ open.
-    import datetime as dt
-    import json
+    # simulator. The final flush pushes every surviving map, so the
+    # streaming timeout sink must equal sim timeout ∪ open. Two legs per
+    # shape: replay_routed over the whole input in one batch, and three
+    # ts-ordered files read one per micro-batch plus a heartbeat, so maps
+    # are carried across batches and evicted by the watermark
     import random
 
     from logstash_filter_aggregate_spark.config import PipelineConfig
-    from logstash_filter_aggregate_spark.streaming.stream import replay_routed
-    from tests.conftest import T0
+    from logstash_filter_aggregate_spark.streaming.stream import (
+        replay_routed,
+        stream_to_routed_sinks,
+        streaming_correlate,
+    )
+    from tests.conftest import heartbeat, write_stream_files
     from tests.test_fuzz_reference import _LINES, _scenario_rows, _shapes, simulate
 
     rng = random.Random(20260817)
     schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+
+    def sink_rows(base, streams):
+        got: dict[str, list] = {tid: [] for tid in streams}
+        for sink in ("completed", "timeout", "inline"):
+            try:
+                rows_df = spark.read.parquet(f"{base}/{sink}").collect()
+            except Exception:
+                continue
+            for r in rows_df:
+                m = json.loads(r.map_json)
+                got[r.task_id].append((
+                    sink, r.nevents,
+                    (r.creation_ts - T0).total_seconds(),
+                    (r.lastevent_ts - T0).total_seconds(),
+                    int(m.get("val_sum") or 0),
+                ))
+        return got
+
     for shape, (cfg_kw, sim_rules, kinds) in _shapes().items():
         cfg = PipelineConfig(task_id="%{taskid}", **cfg_kw)
         streams = {
@@ -472,29 +496,90 @@ def test_streaming_fuzz_matches_reference_simulator(spark, tmp_path):
         base = str(tmp_path / f"out_{shape}")
         replay_routed(spark, p, cfg, base, str(tmp_path / f"cp_{shape}"))
 
-        got: dict[str, list] = {tid: [] for tid in streams}
-        for sink in ("completed", "timeout", "inline"):
-            try:
-                rows_df = spark.read.parquet(f"{base}/{sink}").collect()
-            except Exception:
-                continue
-            for r in rows_df:
-                m = json.loads(r.map_json)
-                got[r.task_id].append((
-                    sink, r.nevents,
-                    (r.creation_ts - T0).total_seconds(),
-                    (r.lastevent_ts - T0).total_seconds(),
-                    int(m.get("val_sum") or 0),
-                ))
-        for tid, rows in streams.items():
-            exp = simulate(rows, sim_rules, cfg.timeout,
-                           cfg.effective_inactivity_timeout, wm)
-            # final flush: sim's open survivors are pushed as timeout
-            exp_cmp = [("timeout" if b == "open" else b, n, c, l, s)
-                       for (b, n, c, l, s, _rr) in exp]
-            assert sorted(got[tid]) == sorted(exp_cmp), (
-                shape, tid, rows, sorted(got[tid]), sorted(exp_cmp)
-            )
+        data.sort(key=lambda r: r[-1])
+        k = len(data) // 3
+        files = str(tmp_path / f"files_{shape}")
+        write_stream_files(spark, files, [
+            *[spark.createDataFrame(part, schema) for part in (data[:k], data[k:2 * k], data[2 * k:])],
+            heartbeat(spark, wm + 10_000),
+        ])
+        src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(files)
+        q = stream_to_routed_sinks(streaming_correlate(src, cfg), f"{files}_out", f"{files}_cp")
+        assert q.awaitTermination(300)
+
+        for leg, out in (("one batch", base), ("three files", f"{files}_out")):
+            got = sink_rows(out, streams)
+            for tid, rows in streams.items():
+                exp = simulate(rows, sim_rules, cfg.timeout,
+                               cfg.effective_inactivity_timeout, wm)
+                # final flush: sim's open survivors are pushed as timeout
+                exp_cmp = [("timeout" if b == "open" else b, n, c, l, s)
+                           for (b, n, c, l, s, _rr) in exp]
+                assert sorted(got[tid]) == sorted(exp_cmp), (
+                    shape, leg, tid, rows, sorted(got[tid]), sorted(exp_cmp)
+                )
+
+
+# the sink rows of the late-row case, as the engine wrote them when its
+# shard step still walked tasks itself
+_LATE_ROW = [
+    ("t", "completed", T0 + dt.timedelta(seconds=10), T0 + dt.timedelta(seconds=30), 4,
+     '{"sql_duration": 5}'),
+    ("u", "timeout", T0 + dt.timedelta(seconds=10), T0 + dt.timedelta(seconds=20), 3,
+     '{"sql_duration": 5}'),
+]
+
+
+def test_streaming_late_row_follows_its_carried_map(spark, tmp_path):
+    # a row inside the watermark whose ts precedes its task's carried
+    # creation and last event joins the carried map: the map keeps its
+    # creation and last event and counts the row. t then completes; u's
+    # map is pushed by the heartbeat's watermark
+    from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
+    from tests.conftest import heartbeat, write_stream_files
+
+    cfg = example1_config(timeout=3600.0, push_map_as_event_on_timeout=True)
+    files = [
+        [("c1", 0, "INFO - t - TASK_START - s", 10), ("c1", 1, "INFO - t - SQL - q - 2", 20),
+         ("c2", 0, "INFO - u - TASK_START - s", 10), ("c2", 1, "INFO - u - SQL - q - 4", 20)],
+        [("c1", 2, "INFO - t - SQL - q - 3", 5), ("c1", 3, "INFO - t - TASK_END - e", 30),
+         ("c2", 2, "INFO - u - SQL - q - 1", 5)],
+    ]
+    p = str(tmp_path / "in")
+    write_stream_files(spark, p, [make_transcript(spark, f) for f in files] + [heartbeat(spark, 10_000)])
+    src = spark.readStream.schema(spark.read.parquet(p).schema).option("maxFilesPerTrigger", 1).parquet(p)
+    q = (
+        streaming_correlate(src, cfg).writeStream.format("memory").queryName("late_row")
+        .outputMode("append").trigger(availableNow=True).start()
+    )
+    assert q.awaitTermination(300)
+    got = sorted(
+        (r.task_id, r.sink, r.creation_ts, r.lastevent_ts, r.nevents, r.map_json)
+        for r in spark.table("late_row").collect()
+    )
+    assert got == _LATE_ROW
+
+
+def test_streaming_late_closing_row_keeps_the_last_event(spark, tmp_path):
+    # a late end row (inside the watermark, earlier than the carried
+    # map's last event) closes the map without moving its lastevent_ts
+    # back: the map's latest event, as the batch scan folds every map
+    from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
+    from tests.conftest import write_stream_files
+
+    files = [[(0, "INFO - t - TASK_START - s", 10), (1, "INFO - t - SQL - q - 2", 20)],
+             [(2, "INFO - t - TASK_END - e", 15)]]
+    p = str(tmp_path / "in")
+    write_stream_files(spark, p, [make_transcript(spark, f) for f in files])
+    src = spark.readStream.schema(spark.read.parquet(p).schema).option("maxFilesPerTrigger", 1).parquet(p)
+    q = (
+        streaming_correlate(src, example1_config(timeout=3600.0)).writeStream.format("memory")
+        .queryName("late_end").outputMode("append").trigger(availableNow=True).start()
+    )
+    assert q.awaitTermination(300)
+    assert [(r.sink, r.creation_ts, r.lastevent_ts, r.nevents) for r in spark.table("late_end").collect()] == [
+        ("completed", T0 + dt.timedelta(seconds=10), T0 + dt.timedelta(seconds=20), 3)
+    ]
 
 
 @pytest.mark.parametrize("shards", [None, 7])
@@ -602,3 +687,4 @@ def test_streaming_passthrough_ungated_is_stateless(spark, stream_dir):
     )
     assert q.awaitTermination(300)
     assert spark.table(name).count() == want
+

@@ -230,3 +230,42 @@ def test_proc_time_mode_validation(spark):
     cfg = example1_config()
     with pytest.raises(ValueError, match="time_mode"):
         streaming_correlate(df, cfg, time_mode="wall")
+
+
+def test_available_now_refuses_processing_time_state(spark, tmp_path):
+    # processing-time timers make Spark plan a no-data batch after every
+    # batch, so an availableNow query over such state never ends: the
+    # routed sinks refuse the combination before the query starts
+    from logstash_filter_aggregate_spark.streaming.stream import stream_to_routed_sinks
+
+    in_dir, cp = str(tmp_path / "in"), str(tmp_path / "cp")
+    df = make_transcript(spark, [("c1", 1, "INFO - t - TASK_START - s", 0)])
+    _append(df, in_dir)
+    src = spark.readStream.schema(df.schema).parquet(in_dir)
+    for out in (streaming_correlate(src, example1_config(), time_mode="processing"),
+                streaming_passthrough(src, example1_config(), time_mode="processing")):
+        with pytest.raises(ValueError, match=r"processingTime.*stop\(\)"):
+            stream_to_routed_sinks(out, str(tmp_path / "out"), cp)
+    assert not (tmp_path / "cp").exists()
+
+
+def test_available_now_processing_time_passthrough_keeps_running(spark, tmp_path):
+    # the case the refusal stands for: gated streaming_passthrough in
+    # processing time under availableNow writes every row, then keeps
+    # running no-data batches instead of terminating
+    in_dir = str(tmp_path / "in")
+    df = make_transcript(spark, [
+        ("c1", 1, "INFO - t - TASK_START - s", 0), ("c1", 2, "INFO - t - SQL - q - 5", 1),
+    ])
+    _append(df, in_dir)
+    q = (
+        streaming_passthrough(spark.readStream.schema(df.schema).parquet(in_dir), example1_config(),
+                              time_mode="processing")
+        .writeStream.format("memory").queryName("pt_avail_now").outputMode("append")
+        .trigger(availableNow=True).start()
+    )
+    try:
+        assert _poll(lambda: spark.table("pt_avail_now").count() == 2, deadline_s=10.0)
+        assert not q.awaitTermination(3) and q.isActive
+    finally:
+        q.stop()

@@ -285,63 +285,55 @@ def test_shard_passthrough_fuzz_carried_state(spark, tmp_path):
 
 
 def test_cell_codec_roundtrip_fuzz():
-    # property fuzz for the binary cell-set codec (no Spark): arbitrary
-    # task ids (unicode), finite clocks, optional maps/overrides must
-    # survive encode->decode exactly; SGC2 blobs (no recorded shard
-    # count) still decode, and an SGC3 blob refuses another count
-    import json as _json
+    # property fuzz for the Arrow IPC cell codec (no Spark): cell tables
+    # of unicode task ids, finite clocks, overrides, wall clocks and NULL
+    # or typed partials (timestamp, date, decimal, list, avg's pair)
+    # survive the round trip exactly; another shard count is refused, and
+    # so is a cell set of the older SGC2/SGC3 codec, naming a fresh
+    # checkpoint
     import struct as _struct
 
-    import numpy as _np
+    import pyarrow as pa
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from logstash_filter_aggregate_spark.streaming.shard import (
-        _decode_cells,
-        _encode_cells,
-    )
+    from logstash_filter_aggregate_spark.streaming.shard import _cell_bytes, _cell_table, _shard_plan
 
-    finite = st.floats(allow_nan=False, allow_infinity=False,
-                       min_value=-1e15, max_value=1e15)
-    payload = st.dictionaries(
-        st.text(min_size=1, max_size=8),
-        st.one_of(st.integers(-2**40, 2**40), finite,
-                  st.text(max_size=12),
-                  st.lists(st.integers(-100, 100), max_size=4)),
-        max_size=4,
-    )
-    opt_clock = st.one_of(st.none(), st.floats(min_value=1e-3, max_value=1e9))
-    cell = st.tuples(
-        finite, finite, st.integers(0, 2**40),
-        st.one_of(st.none(), payload),
-        opt_clock, opt_clock,
-        opt_clock, opt_clock,       # wall_cap / wall_last (proc mode)
-    ).map(list)
-    cells_st = st.dictionaries(st.text(min_size=1, max_size=64), cell, max_size=32)
+    aggs = pa.schema([
+        ("n", pa.int64()), ("_avg_sum_a", pa.float64()), ("_avg_cnt_a", pa.int64()),
+        ("at", pa.timestamp("us", tz="UTC")), ("day", pa.date32()), ("dec", pa.decimal128(18, 6)),
+        ("towns", pa.list_(pa.string())),
+    ])
+    schema = _shard_plan(example1_config(), 1, "event", [], aggs).cells
+    finite = st.floats(allow_nan=False, allow_infinity=False, min_value=-1e15, max_value=1e15)
+    clock = st.datetimes(min_value=dt.datetime(1970, 1, 1), max_value=dt.datetime(2200, 1, 1))
+    opt = st.one_of(st.none(), st.floats(min_value=1e-3, max_value=1e9))
+    partials = {
+        "n": st.integers(-2**40, 2**40), "_avg_sum_a": finite, "_avg_cnt_a": st.integers(0, 2**40),
+        "at": clock, "day": st.dates(), "towns": st.lists(st.text(max_size=8), max_size=4),
+        "dec": st.decimals(min_value=-10**11, max_value=10**11, places=6, allow_nan=False,
+                           allow_infinity=False),
+    }
+    cell = st.fixed_dictionaries({
+        "_task_id": st.text(min_size=1, max_size=64), "_seed_creation_ts": clock,
+        "_seed_lastevent_ts": clock, "_seed_nevents": st.integers(0, 2**40),
+        "_custom_timeout": opt, "_custom_inactivity": opt, "_wall_cap": opt, "_wall_last": opt,
+        **{f"_seed_{k}": st.one_of(st.none(), v) for k, v in partials.items()},
+    })
 
     @settings(max_examples=300, deadline=None)
-    @given(cells_st, st.integers(1, 1 << 20))
+    @given(st.lists(cell, max_size=32), st.integers(1, 1 << 20))
     def check(cells, shards):
-        # empty maps normalize to None on encode (c[_M] falsy) — mirror
-        # that in the expectation
-        expect = {
-            t: [c[0], c[1], c[2], (c[3] or None), *c[4:]]
-            for t, c in cells.items()
-        }
-        blob = _encode_cells(cells, shards)
-        assert blob[:4] == b"SGC3"
-        assert _decode_cells(blob, shards) == expect
+        table = pa.Table.from_pylist(cells, schema=schema)
+        blob = _cell_bytes(table, shards)
+        assert _cell_table(blob, shards).equals(table)
         with pytest.raises(ValueError, match=rf"shards={shards}\b.*shards={shards + 1}\b"):
-            _decode_cells(blob, shards + 1)
-        # SGC2: the same body behind a header without the shard count
-        n, mlen, _stored = _struct.unpack_from("<QQQ", blob, 4)
-        legacy = b"SGC2" + _struct.pack("<QQ", n, mlen) + blob[28:]
-        assert _decode_cells(legacy, shards + 1) == expect
+            _cell_table(blob, shards + 1)
 
     check()
-    with pytest.raises(ValueError, match="unknown shard cell-set header"):
-        _decode_cells(_json.dumps({"t": [0, 0, 1]}).encode(), 1)
-    assert _np.frombuffer(_encode_cells({}, 3)[4:28], dtype="<u8").tolist() == [0, 0, 3]
+    for legacy in (b"SGC3" + _struct.pack("<QQQ", 0, 0, 3), b"SGC2" + _struct.pack("<QQ", 0, 0)):
+        with pytest.raises(ValueError, match="fresh checkpoint"):
+            _cell_table(legacy, 3)
 
 
 def _stream_src(spark, path):
@@ -536,3 +528,92 @@ def test_default_streaming_plans_key_state_by_shard(spark, tmp_path):
             assert re.search(
                 rf"pmod\(xxhash64\(_task_id#\d+, 42\), cast\({DEFAULT_SHARDS} as bigint\)\)", plan
             )
+
+
+def _golden_rows(spark, tmp_path):
+    """The sink rows of two streams, as ``(task_id, sink, nevents,
+    map_json)``. Example #1's shape with the nine fns over ``duration``
+    plus a timestamp, a date and a decimal ``last``, and a guard-gated
+    emit rule: t's map is carried across a micro-batch and completes, u's
+    is carried and evicted by the heartbeat's watermark. Then example #4
+    (push_previous): spain's map spans a file boundary and the heartbeat
+    pops it as the final flush."""
+    from logstash_filter_aggregate_spark.plans.pipeline import example4_config
+    from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
+    from tests.conftest import heartbeat, write_stream_files
+
+    fns = ("sum", "count", "min", "max", "avg", "first", "last", "collect_list", "collect_set")
+    aggs = tuple(AggSpec(f"v_{fn}", fn, "duration") for fn in fns) + (
+        AggSpec("last_ts", "last", "ts"),
+        AggSpec("last_date", "last", "CAST(ts AS DATE)"),
+        AggSpec("last_dec", "last", "CAST(duration AS DECIMAL(18,6))"),
+    )
+    cfg = example1_config(
+        timeout=3600.0, push_map_as_event_on_timeout=True,
+        rules=(
+            CorrelationRule("start", "logger = 'TASK_START'", map_action="create"),
+            CorrelationRule("sql", "logger = 'SQL'", map_action="update", aggs=aggs,
+                            emit={"d": "duration", "at": "ts", "who": "taskid"}),
+            CorrelationRule("end", "logger = 'TASK_END'", map_action="update", end_of_task=True),
+        ),
+    )
+    files = [
+        [(0, "INFO - t - TASK_START - s", 0), (1, "INFO - t - SQL - q - 2", 1),
+         (2, "INFO - t - SQL - q", 2), (3, "INFO - t - SQL - q - 2", 3.5),
+         (4, "INFO - u - TASK_START - s", 4), (5, "INFO - u - SQL - q - 3", 5.25)],
+        [(6, "INFO - t - SQL - q - 8", 6), (7, "INFO - t - SQL - q", 7.125),
+         (8, "INFO - t - TASK_END - e", 8)],
+    ]
+    pp_files = [
+        [(0, "INFO - france - Town - paris", 0), (1, "INFO - france - Town - lyon", 1),
+         (2, "INFO - spain - Town - madrid", 2)],
+        [(3, "INFO - spain - Town - sevilla", 3)],
+    ]
+    out = []
+    for name, c, fs, hb in (("golden", cfg, files, 10_000), ("golden_pp", example4_config(), pp_files, 4)):
+        p = str(tmp_path / name)
+        write_stream_files(spark, p, [make_transcript(spark, f) for f in fs] + [heartbeat(spark, hb)])
+        got = _run_stream(spark, p, lambda s, c=c: streaming_correlate(s, c), name, max_files=1)
+        out += [(r.task_id, r.sink, r.nevents, r.map_json) for r in got.collect()]
+    return sorted(out)
+
+
+# map_json as the sinks carry it, byte for byte (the other tests parse it)
+_GOLDEN = [
+    ('france', 'timeout', 2,
+     '{"towns": [{"town_name": "paris"}, {"town_name": "lyon"}]}'),
+    ('spain', 'timeout', 2,
+     '{"towns": [{"town_name": "madrid"}, {"town_name": "sevilla"}], '
+     '"tags": ["_aggregatefinalflush"]}'),
+    ('t', 'completed', 7,
+     '{"v_sum": 12, "v_count": 5, "v_min": 2, "v_max": 8, "v_avg": 4.0, "v_first": 2, '
+     '"v_last": 8, "v_collect_list": [2, 2, 8], "v_collect_set": [2, 8], '
+     '"last_ts": "2026-01-01 00:00:07.125000+00:00", "last_date": "2026-01-01", '
+     '"last_dec": "8.000000"}'),
+    ('t', 'emit', 2,
+     '{"d": 2, "at": "2026-01-01 00:00:01", "who": "t"}'),
+    ('t', 'emit', 3,
+     '{"d": null, "at": "2026-01-01 00:00:02", "who": "t"}'),
+    ('t', 'emit', 4,
+     '{"d": 2, "at": "2026-01-01 00:00:03.500000", "who": "t"}'),
+    ('t', 'emit', 5,
+     '{"d": 8, "at": "2026-01-01 00:00:06", "who": "t"}'),
+    ('t', 'emit', 6,
+     '{"d": null, "at": "2026-01-01 00:00:07.125000", "who": "t"}'),
+    ('u', 'emit', 2,
+     '{"d": 3, "at": "2026-01-01 00:00:05.250000", "who": "u"}'),
+    ('u', 'timeout', 2,
+     '{"v_sum": 3, "v_count": 1, "v_min": 3, "v_max": 3, "v_avg": 3.0, "v_first": 3, '
+     '"v_last": 3, "v_collect_list": [3], "v_collect_set": [3], '
+     '"last_ts": "2026-01-01 00:00:05.250000+00:00", "last_date": "2026-01-01", '
+     '"last_dec": "3.000000"}'),
+]
+
+
+def test_map_json_golden(spark, tmp_path):
+    # the rendered text of every entry kind: the nine fns (a long sum as
+    # an integer, avg as the mean of its partials), a timestamp, a date
+    # and a decimal, a map carried across a micro-batch and one evicted
+    # from the carried state, struct collections, the final-flush tag and
+    # gated emit payloads (an integral input with NULLs as an integer)
+    assert _golden_rows(spark, tmp_path) == _GOLDEN
