@@ -296,13 +296,6 @@ def compile_grok(
     )
 
 
-# The seed of the shuffle() optimizer barrier (see apply_grok_jvm). A
-# one-element array shuffles to itself whatever the seed, but the seed is
-# part of the generated code: a fixed one lets every run reuse the
-# compiled parse stage instead of compiling a new class per query.
-_BARRIER_SEED = 0
-
-
 def _cast_sql(expr: str, dtype: T.DataType) -> str:
     return expr if isinstance(dtype, T.StringType) else f"CAST({expr} AS {dtype.simpleString()})"
 
@@ -460,17 +453,22 @@ def apply_grok_jvm(df: DataFrame, text_col: str, groks: list[CompiledGrok]) -> D
         regex, total, wrapper_idx, cap_idx = comb
         DELIM = "\x01"
         rep = DELIM.join(f"${i}" for i in range(1, total + 1))
-        # shuffle() on a 1-element array is a semantic identity but is
-        # marked non-deterministic, so Catalyst's CollapseProject /
-        # predicate pushdown do NOT inline this expensive extraction into
-        # every downstream consumer (observed without the barrier: 51
-        # textual copies of the regexp_replace in the executed correlation
-        # plan, tripling the stage; a plain rand()>-1 guard gets
-        # constant-folded away). Retries recompute identical values.
+        # Optimizer barrier: spark_partition_id() is never negative, so the
+        # if() is a semantic identity, but it is non-deterministic, so
+        # Catalyst's CollapseProject / predicate pushdown do NOT inline
+        # this expensive extraction into every downstream consumer
+        # (observed without a barrier: 26 textual copies of the
+        # regexp_replace in example #3's executed plan; a plain rand()>-1
+        # guard gets constant-folded away). The barrier must carry no
+        # seed: streaming's IncrementalExecution gives every seeded
+        # expression (rand, shuffle, uuid, ...) a fresh seed on each
+        # micro-batch, which changes the generated code, so a seeded
+        # barrier recompiles the parse stage on every batch. Retries
+        # recompute identical values.
         df = df.selectExpr(
             "*",
-            f"element_at(shuffle(array(split(regexp_replace({text}, {quote(regex)}, "
-            f"{quote(rep)}), {quote(DELIM)}, -1)), {_BARRIER_SEED}), 1) AS _ca",
+            f"if(spark_partition_id() < 0, NULL, split(regexp_replace({text}, "
+            f"{quote(regex)}, {quote(rep)}), {quote(DELIM)}, -1)) AS _ca",
         )
         clean = f"size(_ca) = {total}"
 

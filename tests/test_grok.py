@@ -349,3 +349,61 @@ def test_combined_alternation_ineligible_lists():
     assert G._combined_alternation([anchored, backref]) is None
     assert G._combined_alternation([]) is None
     assert G._combined_alternation([anchored, compile_grok("b", r"%{WORD:w}")]) is not None
+
+
+def test_parse_runs_the_combined_replace_once(spark, tmp_path):
+    """The optimizer barrier keeps the combined alternation's one
+    ``regexp_replace`` from being inlined into its consumers: example #3's
+    executed correlation plan (taken before any job runs, so it prints one
+    plan) holds it once; without a barrier it holds 26 copies."""
+    from logstash_filter_aggregate_spark.plans.pipeline import example3_config, run_pipeline
+    from logstash_filter_aggregate_spark.sources.transcripts import generate_transcripts
+
+    p = str(tmp_path / "t")
+    generate_transcripts(spark, n_convs=12, hot_convs=0).write.parquet(p)
+    out = run_pipeline(spark, spark.read.parquet(p), example3_config(timeout=600.0))
+    plan = out.completed._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"regexp_replace\(text#\d+, \^\(\?:\(\?<w0>", plan)) == 1
+
+
+def _seeded_expressions(spark, df) -> list[str]:
+    """Every expression of ``df``'s analyzed plan that carries a random
+    seed (``rand``, ``randn``, ``shuffle``, ``uuid``, ...): streaming
+    re-seeds each of them on every micro-batch, which changes the
+    generated code and so recompiles the stage that holds it."""
+    jvm = spark._jvm
+    seeded = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.ExpressionWithRandomSeed"
+    )
+
+    def items(seq):
+        it = seq.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    found, plans = [], [df._jdf.queryExecution().analyzed()]
+    while plans:
+        plan = plans.pop()
+        plans.extend(items(plan.children()))
+        exprs = list(items(plan.expressions()))
+        while exprs:
+            e = exprs.pop()
+            if seeded.isInstance(e):
+                found.append(e.toString())
+            exprs.extend(items(e.children()))
+    return found
+
+
+def test_parse_and_stream_plans_carry_no_seed(spark, tmp_path):
+    """The parse and the streaming correlation hold no seeded expression,
+    so a stream compiles its parse once, not once per micro-batch."""
+    from logstash_filter_aggregate_spark.plans.pipeline import example1_config, parse
+    from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
+
+    df = make_transcript(spark, ROWS)
+    assert _seeded_expressions(spark, df.selectExpr("*", "shuffle(array(1, 2), 0) AS s"))
+    assert _seeded_expressions(spark, parse(df)) == []
+    p = str(tmp_path / "in")
+    df.write.parquet(p)
+    src = spark.readStream.schema(df.schema).parquet(p)
+    assert _seeded_expressions(spark, streaming_correlate(src, example1_config())) == []

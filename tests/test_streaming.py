@@ -688,3 +688,35 @@ def test_streaming_passthrough_ungated_is_stateless(spark, stream_dir):
     assert q.awaitTermination(300)
     assert spark.table(name).count() == want
 
+
+def test_parse_compiles_once_per_stream(spark, stream_dir, tmp_path):
+    # a second drain of the same files (fresh checkpoint, one file per
+    # micro-batch) and a second batch run compile no new class: every
+    # micro-batch reuses the first run's generated code, which a seeded
+    # optimizer barrier defeats (streaming re-seeds it on every batch)
+    from logstash_filter_aggregate_spark.sinks import write_routed
+    from logstash_filter_aggregate_spark.streaming.stream import streaming_correlate
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    cfg = example1_config(timeout=3600.0)
+    schema = spark.read.parquet(stream_dir).schema
+
+    def drain(i):
+        src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stream_dir)
+        q = (
+            streaming_correlate(src, cfg).writeStream.format("memory").queryName(f"compile_once_{i}")
+            .option("checkpointLocation", str(tmp_path / f"cp{i}"))
+            .outputMode("append").trigger(availableNow=True).start()
+        )
+        assert q.awaitTermination(120)
+        assert len(q.recentProgress) > 1
+
+    def batch(i):
+        out = run_pipeline(spark, spark.read.parquet(stream_dir), cfg)
+        write_routed(out.as_dict(), str(tmp_path / f"sinks{i}"), cfg, input_desc=f"compile-once-{i}")
+
+    for run in (drain, batch):
+        run(0)
+        before = compiles.getCount()
+        run(1)
+        assert compiles.getCount() - before == 0, run.__name__
