@@ -5,10 +5,11 @@ create, delete on ``end_of_task`` (``aggregate.rb:240``), expire on
 inactivity gap or absolute age when the task's next event arrives
 (``aggregate.rb:420-445``) — runs as one exact per-task scan: the JVM
 clusters the rows by task (one exchange of the event stream) and sorts
-them; one Arrow-native call per partition walks each task with the
-state machine streaming runs (``streaming/walk.py``) and folds each
-map into one session row. This is what replaces the reference's global
-mutex + ``-w 1`` worker (``docs/index.asciidoc:29-30``).
+them; one Arrow-native call per partition walks its tasks with the
+state machine streaming runs (``streaming/walk.py``), one walk per
+batch of whole tasks, and folds each map into one session row. This is
+what replaces the reference's global mutex + ``-w 1`` worker
+(``docs/index.asciidoc:29-30``).
 """
 
 from __future__ import annotations
@@ -150,11 +151,12 @@ def _exact_age_seg(part: DataFrame, cfg: PipelineConfig) -> DataFrame:
     elided when the input is already hash-partitioned on it) and sorts
     each partition by ``(_task_id, ts, conv_id, turn_idx)``, nulls last;
     ``mapInArrow`` hands the sorted partition to :func:`_scan_partition`
-    as Arrow batches, and each task runs
-    :func:`~logstash_filter_aggregate_spark.streaming.walk.walk_scan`,
-    the state machine streaming runs too (``aggregate.rb:179-246``):
-    expiry before the map-action guard on the map's own ``map_meta``
-    clocks (``aggregate.rb:194-199,420-445``), a duplicate ``create``
+    as Arrow batches, and each batch of whole tasks runs one
+    :func:`~logstash_filter_aggregate_spark.streaming.walk.walk_scan`
+    over its tasks, the state machine streaming runs too
+    (``aggregate.rb:179-246``): expiry before the map-action guard on the
+    map's own ``map_meta`` clocks (``aggregate.rb:194-199,420-445``), a
+    duplicate ``create``
     that never touches ``lastevent_timestamp`` (``aggregate.rb:216``), a
     no-op ``update`` without a map (``aggregate.rb:203``), and closes
     only where the codeblock ran. It is fuzz-pinned against a per-row
@@ -294,26 +296,31 @@ def _epoch_seconds(col, null: float):
 class Scan(NamedTuple):
     """One :func:`scan` call: the chunk's columns (``column(name)``, an
     Arrow array or None), each row's session (``sid``, -1 where the row's
-    code did not run) and the sessions, each ``(labels, walk close kind,
-    close row or -1, last of its group)``."""
+    code did not run) and, per session, its first row, walk close kind,
+    close row (-1 unless END/CT0), labels (an ``(n, 3)`` array of
+    ``_end_seg``, ``_gap_seg``, ``_age_seg``) and whether it is the last
+    of its group."""
 
     column: object
     sid: np.ndarray
-    sessions: list
+    first: np.ndarray
+    kinds: list
+    close_row: np.ndarray
+    labels: np.ndarray
+    is_last: np.ndarray
 
 
 def scan(tbl, starts: np.ndarray, plan: _ScanPlan, brk: np.ndarray | None = None) -> Scan:
-    """The per-task kernel both tiers run: one :func:`walk_scan` per group
-    of ``tbl`` (the rows from each of ``starts`` to the next), numbering
-    the sessions across the groups. The walk's rule inputs are built once
-    for the whole table from the columns ``classify`` gave its rows.
+    """The kernel both tiers run: one :func:`walk_scan` over the groups of
+    ``tbl`` (the rows from each of ``starts`` to the next: its tasks, or
+    push_previous's runs between heartbeats), with the walk's rule inputs
+    built from the columns ``classify`` gave its rows.
 
     Partial rows (rule ``_seed``: resume seeds, pre-reduced super-rows,
     streaming's carried maps) create their map at ``_seed_creation_ts``
     and run the gap clock from ``_seed_lastevent_ts``. ``brk`` flags the
     rows whose arrival pops the live map (push_previous's run breaks)."""
     n = tbl.num_rows
-    bounds = np.append(starts, n)
 
     @functools.cache
     def column(name):
@@ -340,24 +347,18 @@ def scan(tbl, starts: np.ndarray, plan: _ScanPlan, brk: np.ndarray | None = None
             return np.where(np.isnan(sec), ts, sec)
 
         partial = [partial_clock("_seed_creation_ts"), partial_clock("_seed_lastevent_ts")]
-    per_row = [*partial, brk] if any(c is not None for c in (*partial, brk)) else []
-
-    sid = np.empty(n, dtype=np.int64)  # each group's own session labels, offset below
-    base = np.zeros(len(starts), dtype=np.int64)
-    sessions: list = []
-    for g, (s, e) in enumerate(zip(bounds[:-1].tolist(), bounds[1:].tolist())):
-        res = walk_scan(
-            ts[s:e], is_create[s:e], is_update[s:e], end_flag[s:e], cust_to[s:e],
-            cust_in[s:e], None, timeout, inactivity, *[c if c is None else c[s:e] for c in per_row],
-        )
-        sid[s:e] = res.sess_id
-        base[g] = len(sessions)
-        labels = _label_breaks(res, s, e)
-        last = len(res.sessions) - 1
-        for k, (_, _, kind, row) in enumerate(res.sessions):
-            sessions.append((labels[k][1:], kind, s + row if kind in (END, CT0) else -1, k == last))
-    sid = np.where(sid >= 0, sid + np.repeat(base, np.diff(bounds)), -1)
-    return Scan(column, sid, sessions)
+    res = walk_scan(
+        ts, is_create, is_update, end_flag, cust_to, cust_in, starts, timeout, inactivity, *partial, brk
+    )
+    sid = res.sess_id
+    ran = np.flatnonzero(sid >= 0)
+    first = ran[first_rows(sid[ran], len(res.sessions))]
+    group = np.searchsorted(starts, first, "right") - 1
+    rows, labels = _label_breaks(res, starts, group)
+    kinds = [k for _, _, k, _ in res.sessions]
+    close_row = np.array([r if k in (END, CT0) else -1 for _, _, k, r in res.sessions], dtype=np.int64)
+    return Scan(column, sid, first, kinds, close_row, labels[np.searchsorted(rows, first, "right") - 1],
+                np.diff(group, append=-1) != 0)
 
 
 def _scan_tasks(pending: list, plan: _ScanPlan):
@@ -376,8 +377,8 @@ def _scan_tasks(pending: list, plan: _ScanPlan):
         brk = np.zeros(len(gidx), dtype=bool)
         brk[1:] = gidx[1:] - gidx[:-1] > 1
     sc = scan(tbl, np.flatnonzero(np.concatenate([s for _, s in pending])), plan, brk)
-    if sc.sessions:
-        yield _batch(plan.schema, _session_rows(plan, sc), len(sc.sessions))
+    if sc.kinds:
+        yield _batch(plan.schema, _session_rows(plan, sc), len(sc.kinds))
     effect = _effect_rows(plan, sc)
     if len(effect):
         cols = {c: sc.column(c).take(effect) for c in ("conv_id", "turn_idx", KIND_COL, *plan.effect_cols)}
@@ -409,13 +410,11 @@ def _session_rows(plan: _ScanPlan, sc: Scan) -> dict:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    column, sid = sc.column, sc.sid
-    n_sess = len(sc.sessions)
-    labels, kinds, close_row, is_last = (list(c) for c in zip(*sc.sessions)) if n_sess else ([],) * 4
+    column, sid, first = sc.column, sc.sid, sc.first
+    n_sess = len(sc.kinds)
     ran = np.flatnonzero(sid >= 0)
     s = sid[ran]
     at = first_rows(s, n_sess)
-    first = ran[at]
     ts = column("ts")
     with_seeds = column("_seed_nevents") is not None
 
@@ -431,24 +430,23 @@ def _session_rows(plan: _ScanPlan, sc: Scan) -> dict:
     weight = np.ones(len(ran))
     if with_seeds:
         weight = pc.fill_null(column("_seed_nevents").take(ran), 1).to_numpy().astype(float)
-    close_row = np.asarray(close_row, dtype=np.int64)
-    closed = pa.array(close_row, mask=close_row < 0)
+    closed = pa.array(sc.close_row, mask=sc.close_row < 0)
     lastevent = carried("_seed_lastevent_ts")
     cols = {
         # a session is its first row's task (push_previous walks several
         # tasks in one group)
         "task_id": column(TASK_ID_COL).take(first),
-        **dict(zip(("_end_seg", "_gap_seg", "_age_seg"), np.asarray(labels, dtype=np.int32).reshape(-1, 3).T)),
+        **dict(zip(("_end_seg", "_gap_seg", "_age_seg"), sc.labels.T)),
         "creation_ts": carried("_seed_creation_ts").take(at),
         "lastevent_ts": session_fold(s, n_sess, lastevent, "max"),
         "nevents": np.bincount(s, weights=weight, minlength=n_sess).astype(np.int64),
         "conv_id": column("conv_id").take(first),
-        "close_kind": pa.array([CLOSE_KINDS[k] for k in kinds], pa.string()),
+        "close_kind": pa.array([CLOSE_KINDS[k] for k in sc.kinds], pa.string()),
         "end_ts": ts.take(closed),
         "end_turn_idx": column("turn_idx").take(closed),
         "_session_timeout": override("_custom_timeout"),
         "_session_inactivity": override("_custom_inactivity"),
-        "_is_last": np.asarray(is_last, dtype=bool),
+        "_is_last": sc.is_last,
         "_included": np.zeros(n_sess, dtype=bool),
     }
     if plan.last_row:
@@ -489,28 +487,36 @@ def _effect_rows(plan: _ScanPlan, sc: Scan) -> np.ndarray:
     return np.flatnonzero(hit & (sid >= 0))
 
 
-def _label_breaks(res, s: int, e: int) -> list:
-    """The rows of the task ``[s, e)`` where its labels change, each with
-    the labels from there on, from :func:`walk_scan`'s close records:
-    ``_end_seg`` counts the END/CT0 closes strictly before a row,
+def _label_breaks(res, starts: np.ndarray, group: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The rows where the labels change and the labels from each of them
+    on (an ``(n, 3)`` int32 array), from :func:`walk_scan`'s close
+    records; ``group`` is each session's group (the rows from one of
+    ``starts`` to the next), and the labels restart at each group's
+    start. ``_end_seg`` counts the END/CT0 closes strictly before a row,
     ``_gap_seg`` the inactivity expiries and run breaks since the last of
     them, and ``_age_seg`` the age expiries since then (a row whose
     arrival expired the map starts the next label). The labels are unique
-    per map and increase along the task; walk session *k* lives in the
-    *k*-th label run, since a run starts only where a map closes."""
-    out = [(s, 0, 0, 0)]
-    end_seg = gap = age = 0
-    for k, (_, _, kind, row) in enumerate(res.sessions):
+    per map and increase along the group; a session's labels are those
+    of its first row, since a label starts only where a map closes."""
+    bounds = np.append(starts, len(res.code_ran)).tolist()
+    rows, labels = list(starts), [(0, 0, 0)] * len(starts)
+    at = -1
+    for k, (g, (_, _, kind, row)) in enumerate(zip(group.tolist(), res.sessions)):
+        if g != at:
+            at, end_seg, gap, age = g, 0, 0, 0
         if kind == EXPIRY:
             if k in res.aged:
                 age += 1
             else:
                 gap += 1
-            out.append((s + row, end_seg, gap, age))
-        elif kind != OPEN and s + row + 1 < e:
+            rows.append(row)
+            labels.append((end_seg, gap, age))
+        elif kind != OPEN and row + 1 < bounds[g + 1]:
             end_seg, gap, age = end_seg + 1, 0, 0
-            out.append((s + row + 1, end_seg, gap, age))
-    return out
+            rows.append(row + 1)
+            labels.append((end_seg, gap, age))
+    order = np.argsort(rows, kind="stable")
+    return np.asarray(rows, dtype=np.int64)[order], np.asarray(labels, dtype=np.int32).reshape(-1, 3)[order]
 
 
 def _fast_scan(ts, end_seg, seed_creation, age, timeout: float, inactivity: float) -> None:
@@ -522,6 +528,7 @@ def _fast_scan(ts, end_seg, seed_creation, age, timeout: float, inactivity: floa
     end_flag = np.append(end_seg[1:] != end_seg[:-1], False)
     none, nan = np.zeros(n, dtype=bool), np.full(n, np.nan)
     creation = ts if seed_creation is None else np.where(np.isnan(seed_creation), ts, seed_creation)
-    res = walk_scan(ts, none, none, end_flag, nan, nan, None, timeout, inactivity, creation)
-    rows, _, gap, aged = np.array(_label_breaks(res, 0, n)).T
-    age[:] = np.repeat(gap + aged, np.diff(np.append(rows, n)))
+    one = np.zeros(1, dtype=np.int64)
+    res = walk_scan(ts, none, none, end_flag, nan, nan, one, timeout, inactivity, creation)
+    rows, labels = _label_breaks(res, one, np.zeros(len(res.sessions), dtype=np.int64))
+    age[:] = np.repeat(labels[:, 1] + labels[:, 2], np.diff(np.append(rows, n)))

@@ -291,13 +291,11 @@ def _walk(whole: pd.DataFrame, cells: pa.Table, clock: _Clock):
     sc = scan(rows, np.flatnonzero(_changes(group) if sp.pops else task_change), sp.scan,
               task_change if sp.pops else None)
     sess = pa.table(_session_rows(sp.scan, sc))
-    ran = np.flatnonzero(sc.sid >= 0)
-    first = ran[first_rows(sc.sid[ran], sess.num_rows)]
     kind = sess.column("close_kind").to_numpy(zero_copy_only=False)
     live = kind == "open"
     if n_hb:
         # a heartbeat after the map's group pops it as the final flush
-        flush = live & (group[first] < n_hb)
+        flush = live & (group[sc.first] < n_hb)
         kind, live = np.where(flush, "flush", kind), live & ~flush
         sess = sess.set_column(sess.schema.get_field_index("close_kind"), "close_kind", pa.array(kind))
     live = np.flatnonzero(live)
@@ -305,7 +303,7 @@ def _walk(whole: pd.DataFrame, cells: pa.Table, clock: _Clock):
     if sp.processing:
         now = clock.now_ms / 1000.0
         cap = sc.column("_wall_cap")
-        cap = pa.nulls(len(live), pa.float64()) if cap is None else cap.take(first[live])
+        cap = pa.nulls(len(live), pa.float64()) if cap is None else cap.take(sc.first[live])
         wall = [pc.fill_null(cap, now + sp.timeout_s), pa.array(np.full(len(live), now))]
     opened = sess.take(live)
     new = [opened.column(c) for c in _CELL_OF] + [opened.column(f.name) for f in sp.scan.schema] + wall

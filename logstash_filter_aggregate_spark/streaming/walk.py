@@ -1,11 +1,13 @@
-"""Vectorized per-task state walk: the one implementation of the
-reference's filter hot path (``aggregate.rb:179-246``) that batch and
-streaming share.
+"""Vectorized state walk: the one implementation of the reference's
+filter hot path (``aggregate.rb:179-246``) that batch and streaming
+share.
 
 The batch scan's kernel (``operators/sessionize.py::scan``) calls it
-for each task of a sorted partition and of a streaming shard's
-micro-batch chunk (:mod:`streaming.shard`); each call runs the state
-machine as a numpy session-hop, with:
+once for a sorted partition's pending tasks and once for a streaming
+shard's micro-batch chunk (:mod:`streaming.shard`), with each group's
+first row as an input (a task, or push_previous's rows between
+heartbeats); the call runs the state machine over every group as one
+numpy session-hop, with:
 
 - **dynamic closes**: ``end_of_task`` and ``map_meta.timeout = 0``
   fire only where the codeblock runs (a duplicate ``create`` never
@@ -18,10 +20,11 @@ machine as a numpy session-hop, with:
   out, which the kernel folds into one row per map with the
   aggregation dictionary (``operators/correlate.py::session_values``).
 
-Python-level work is O(#sessions + #override events + #closes), each
-step O(log n); every per-row computation is numpy. Fuzz-pinned against
-independent per-row reference simulators (``tests/test_streaming_walk.py``
-and ``tests/test_timeouts.py::_reference_scan``) and by the engine-level
+Python-level work is O(#groups + #sessions + #override events +
+#closes), each step O(log n); every per-row computation is numpy.
+Fuzz-pinned against independent per-row reference simulators
+(``tests/test_streaming_walk.py`` and
+``tests/test_timeouts.py::_reference_scan``) and by the engine-level
 streaming batch-equality tests.
 """
 
@@ -35,7 +38,7 @@ import numpy as np
 END = "end"        # end_of_task rule row closed the map (aggregate.rb:240)
 CT0 = "ct0"        # map_meta.timeout = 0 instant eviction (aggregate.rb:259-274)
 EXPIRY = "expiry"  # event-time expiry on arrival (aggregate.rb:194-199)
-OPEN = "open"      # survives the micro-batch -> state cell
+OPEN = "open"      # survives its group -> state cell
 
 
 def walk_inputs(column, processing: bool):
@@ -71,15 +74,13 @@ def walk_inputs(column, processing: bool):
 class WalkResult:
     """Plain result bundle (no dataclass import churn in the hot path)."""
 
-    __slots__ = ("code_ran", "sess_id", "sessions", "aged", "nevents", "final")
+    __slots__ = ("code_ran", "sess_id", "sessions", "aged")
 
-    def __init__(self, code_ran, sess_id, sessions, aged, nevents, final):
+    def __init__(self, code_ran, sess_id, sessions, aged):
         self.code_ran = code_ran    # bool[n]: the codeblock ran for this row
         self.sess_id = sess_id      # int32[n]: session index, -1 where code didn't run
         self.sessions = sessions    # list[(creation, last_ts, kind, close_row)]
         self.aged = aged            # set: indices of the EXPIRY sessions the age clock closed
-        self.nevents = nevents      # int64[#sessions], carried base included
-        self.final = final          # (creation, last, nevents, eff_to, eff_in) | None
 
 
 def walk_scan(
@@ -89,26 +90,29 @@ def walk_scan(
     end_flag: np.ndarray,
     cust_to: np.ndarray,
     cust_in: np.ndarray,
-    init: tuple | None,
+    starts: np.ndarray,
     timeout: float,
     inactivity: float,
     row_creation: np.ndarray | None = None,
     row_last: np.ndarray | None = None,
     row_break: np.ndarray | None = None,
 ) -> WalkResult:
-    """Run the reference state machine over one sorted task chunk.
+    """Run the reference state machine over a chunk of sorted groups.
 
-    Parameters: ``ts`` epoch-seconds (non-decreasing), ``is_create`` /
-    ``is_update`` guard-action flags, ``end_flag`` end_of_task rows,
-    ``cust_to`` / ``cust_in`` per-row override values (NaN = none;
-    ``cust_to == 0`` is the instant-eviction marker), ``init`` the
-    carried state ``(creation, last, nevents, eff_to, eff_in)`` or
-    None, and the pattern-default clocks. Batch partial rows add two
-    optional per-row inputs: ``row_creation``, the creation time a row
-    gives the map it creates (a resume seed's carried creation, at any
-    position), and ``row_last``, the row's last-event time, which the gap
-    clock measures from once the row ran the code (a pre-reduced
-    super-row's last event). Both default to ``ts``. ``row_break``
+    Parameters: ``ts`` epoch-seconds (non-decreasing within a group),
+    ``is_create`` / ``is_update`` guard-action flags, ``end_flag``
+    end_of_task rows, ``cust_to`` / ``cust_in`` per-row override values
+    (NaN = none; ``cust_to == 0`` is the instant-eviction marker),
+    ``starts`` the sorted first rows of the groups (0 first; a group is
+    the rows from one start to the next: a task, or push_previous's rows
+    between heartbeats), and the pattern-default clocks. A map still live
+    at the end of its group is recorded ``OPEN`` and the next group starts
+    with no map. Partial rows add two optional per-row inputs:
+    ``row_creation``, the creation time a row gives the map it creates (a
+    resume seed's or a carried cell's creation, at any position), and
+    ``row_last``, the row's last-event time, which the gap clock measures
+    from once the row ran the code (a pre-reduced super-row's last
+    event). Both default to ``ts``. ``row_break``
     flags rows whose arrival pops the live map before their guard, like
     an expiry (push_previous's run breaks); None means no row does.
 
@@ -131,16 +135,7 @@ def walk_scan(
     sess_id = np.empty(n, dtype=np.int32)    # -1 off the code-ran rows, set at the end
     sessions: list[tuple] = []
     aged: set = set()
-    final = None
-
-    if n == 0:
-        nev = np.zeros(0, dtype="int64")
-        if init is not None:
-            c0, l0, nv0, et0, ei0 = init
-            sessions.append((float(c0), float(l0), OPEN, -1))
-            final = (float(c0), float(l0), int(nv0), float(et0), float(ei0))
-            nev = np.asarray([int(nv0)], dtype="int64")
-        return WalkResult(code_ran, sess_id, sessions, aged, nev, final)
+    bounds = [*np.asarray(starts).tolist(), n]   # group k: rows [bounds[k], bounds[k + 1])
 
     # the all-create_or_update shape skips the can-create index and the
     # running max: every row can create, and sorted ts is its own max
@@ -152,16 +147,21 @@ def walk_scan(
         k = cc_rows.searchsorted(i)
         return int(cc_rows[k]) if k < len(cc_rows) else n
 
-    # running max of non-create row last-event times: the gap-clock
-    # refresh candidates. Rows that never ran the code (no-map updates
-    # between sessions) are included but harmless: their ts <= the next
-    # session creator's, so max(run_prev, last_floor) floors them out.
+    # running max of non-create row last-event times within each group:
+    # the gap-clock refresh candidates. Rows that never ran the code (no-map
+    # updates between sessions) are included but harmless: their ts <= the
+    # next session creator's, so max(run_prev, last_floor) floors them out.
     run = np.where(is_create, -np.inf, row_last) if is_create.any() else row_last
     if run is not ts:
-        run = np.maximum.accumulate(run)
+        # (group, value) pairs as complex numbers, which numpy's maximum
+        # orders lexicographically: the accumulate restarts at each group
+        key = np.empty(n, dtype=complex)
+        key.real = np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+        key.imag = run
+        run = np.maximum.accumulate(key).imag
     run_prev = np.empty(n)
-    run_prev[0] = -np.inf
     run_prev[1:] = run[:-1]
+    run_prev[bounds[:-1]] = -np.inf
     gap_margin = ts - run_prev
 
     has_to = np.isfinite(cust_to) & (cust_to > 0)
@@ -175,7 +175,6 @@ def walk_scan(
     cl_ss, n_cl = close_rows.searchsorted, len(close_rows)
     brk_rows = row_break.nonzero()[0] if row_break is not None else None
 
-    ts_ss = ts.searchsorted
     # override EVENTS (non-create rows carrying a live override value):
     # visited only when they could change the effective clocks
     ev_rows_arr = ((has_to | has_in) & ~is_create).nonzero()[0]
@@ -205,20 +204,19 @@ def walk_scan(
     )
     no_to, no_in = not len(to_vals), not len(in_vals)
 
-    # first-crossing rows of the row-static half of the gap condition per
-    # distinct effective inactivity (memoized, as in _override_scan)
-    gap_cache: dict = {}
+    # first-crossing rows of the row-static half of the gap condition in
+    # the current group, where ts is sorted, per distinct effective
+    # inactivity (memoized)
+    group_gap: dict = {}
 
     def _gap_rows(eff):
-        hit = gap_cache.get(eff)
+        hit = group_gap.get(eff)
         if hit is None:
-            r = (gap_margin > eff).nonzero()[0]
+            r = gs + (gap_margin[gs:hi] > eff).nonzero()[0]
             hit = (r, r.searchsorted, ts[r].searchsorted, len(r))
-            if len(gap_cache) < 8:
-                gap_cache[eff] = hit
+            if len(group_gap) < 8:
+                group_gap[eff] = hit
         return hit
-
-    si = -1                                   # current session index
 
     not_create = ~is_create
 
@@ -229,70 +227,46 @@ def walk_scan(
         code_ran[lo:hi] = not_create[lo:hi]
         sess_id[lo:hi] = si
 
-    s = 0
-    carried = init is not None
-    if carried:
-        creation, last_floor, _nv0, eff_to, eff_in = (
-            float(init[0]), float(init[1]), int(init[2]), float(init[3]), float(init[4])
-        )
+    gs = hi = 0                               # the current group's rows [gs, hi)
+    s = next_cc(0)
+    while s < n:
+        if s >= hi:
+            # the creator opens a later group, with its own ts and gap rows
+            k = bisect_right(bounds, s)
+            gs, hi = bounds[k - 1], bounds[k]
+            ts_ss = ts[gs:hi].searchsorted
+            group_gap = {}
+        # creator row: the codeblock runs (creating), its own overrides
+        # apply, and an end/timeout=0 marker closes the one-row session
         si = len(sessions)
-        sessions.append(None)                 # placeholder, filled on close
-        p = -1
-        in_session = True
-    else:
-        s = next_cc(0)
-        in_session = False
-
-    while True:
-        if not in_session:
-            if s >= n:
-                break
-            # creator row: the codeblock runs (creating), its own overrides
-            # apply, and an end/timeout=0 marker closes the one-row session
-            si = len(sessions)
-            sessions.append(None)
-            creation = float(row_creation[s])
-            last_floor = float(row_last[s])
-            eff_to = float(cust_to[s]) if has_to[s] else timeout
-            eff_in = float(cust_in[s]) if has_in[s] else inactivity
-            code_ran[s] = True
-            sess_id[s] = si
-            if end_flag[s] or ct0[s]:
-                sessions[si] = (creation, last_floor, END if end_flag[s] else CT0, s)
-                s = next_cc(s + 1)
-                continue
-            p = s
-            in_session = True
+        sessions.append(None)
+        creation = float(row_creation[s])
+        last_floor = float(row_last[s])
+        eff_to = float(cust_to[s]) if has_to[s] else timeout
+        eff_in = float(cust_in[s]) if has_in[s] else inactivity
+        code_ran[s] = True
+        sess_id[s] = si
+        if end_flag[s] or ct0[s]:
+            sessions[si] = (creation, last_floor, END if end_flag[s] else CT0, s)
+            s = next_cc(s + 1)
+            continue
+        p = s
 
         # ---- in-session hop ----
         ei = bisect_right(ev_rows, p)
-        a_raw = int(ts_ss(creation + eff_to, "right"))
+        a_raw = gs + int(ts_ss(creation + eff_to, "right"))
         a_eff_to = eff_to
         g_rows, g_pos_ss, g_ts_ss, g_n = _gap_rows(eff_in)
         gi_dyn = int(g_ts_ss(last_floor + eff_in, "right"))
         g_eff_in = eff_in
-        closed = False
         clocks_final = (no_to or eff_to == const_to) and (no_in or eff_in == const_in)
         while True:
-            # next override event that would CHANGE a clock
-            if clocks_final:
-                o = n
-                ei = n_ev
-            else:
-                o = n
-                while ei < n_ev:
-                    r = ev_rows[ei]
-                    tv, iv = ev_vals[ei]
-                    if (tv is not None and tv != eff_to) or (iv is not None and iv != eff_in):
-                        o = r
-                        break
-                    ei += 1
             # next close candidate
             ci_ = cl_ss(p + 1)
             c = int(close_rows[ci_]) if ci_ < n_cl else n
             # expiry crossings
             if eff_to != a_eff_to:
-                a_raw = int(ts_ss(creation + eff_to, "right"))
+                a_raw = gs + int(ts_ss(creation + eff_to, "right"))
                 a_eff_to = eff_to
             if eff_in != g_eff_in:
                 g_rows, g_pos_ss, g_ts_ss, g_n = _gap_rows(eff_in)
@@ -311,26 +285,44 @@ def walk_scan(
                 if bi < len(brk_rows):
                     b = int(brk_rows[bi])
             d = min(a, g, b)                   # expiry row
-            evt = min(d, c, o, n)
-            mark_span(p + 1, evt)
-            if evt >= n:
-                # survives the micro-batch
-                last_ts = max(last_floor, float(run[n - 1]))
-                sessions[si] = (creation, last_ts, OPEN, -1)
-                final = (creation, last_ts, eff_to, eff_in)
-                s = n
-                break
-            if d <= c and d <= o:
+            end = min(d, c, hi)                # the map's last hop, as the clocks stand
+            # next override event before it that would CHANGE a clock (an
+            # event on the expiry or close row never runs its code first)
+            o = end
+            while not clocks_final and ei < n_ev:
+                r = ev_rows[ei]
+                if r >= end:
+                    break
+                tv, iv = ev_vals[ei]
+                if (tv is not None and tv != eff_to) or (iv is not None and iv != eff_in):
+                    o = r
+                    break
+                ei += 1
+            mark_span(p + 1, o)
+            if o < end:
+                # override event survives its own expiry check: apply
+                code_ran[o] = True
+                sess_id[o] = si
+                if tv is not None:
+                    eff_to = tv
+                if iv is not None:
+                    eff_in = iv
+                ei += 1
+                p = o
+                clocks_final = (no_to or eff_to == const_to) and (no_in or eff_in == const_in)
+                continue
+            if end >= hi:
+                # survives its group: the next group starts with no map
+                sessions[si] = (creation, max(last_floor, float(run[hi - 1])), OPEN, -1)
+                s = next_cc(hi)
+            elif d <= c:
                 # expiry on row d's arrival, BEFORE d's guard/codeblock —
                 # d itself may immediately create the next map
-                last_ts = max(last_floor, float(run[d - 1])) if d > 0 else last_floor
-                sessions[si] = (creation, last_ts, EXPIRY, d)
+                sessions[si] = (creation, max(last_floor, float(run[d - 1])), EXPIRY, d)
                 if a < g and a < b:
                     aged.add(si)
                 s = next_cc(d)
-                closed = True
-                break
-            if c <= o:
+            else:
                 # close row: codeblock runs (refreshing last), THEN the map
                 # is deleted — end takes precedence over timeout=0, and the
                 # row's own >0 overrides never get to matter
@@ -338,34 +330,7 @@ def walk_scan(
                 sess_id[c] = si
                 sessions[si] = (creation, float(row_last[c]), END if end_flag[c] else CT0, c)
                 s = next_cc(c + 1)
-                closed = True
-                break
-            # override event survives its own expiry check: apply
-            code_ran[o] = True
-            sess_id[o] = si
-            tv, iv = ev_vals[ei]               # ei stopped at o's entry
-            if tv is not None:
-                eff_to = tv
-            if iv is not None:
-                eff_in = iv
-            ei += 1
-            p = o
-            clocks_final = (no_to or eff_to == const_to) and (
-                no_in or eff_in == const_in
-            )
-        in_session = False
-        if not closed and s >= n:
             break
 
     np.putmask(sess_id, ~code_ran, -1)
-    # per-session code-ran counts (+ carried base on session 0)
-    n_sess = len(sessions)
-    if n_sess:
-        counts = np.bincount(sess_id[code_ran], minlength=n_sess).astype("int64")
-    else:
-        counts = np.zeros(0, dtype="int64")
-    if carried:
-        counts[0] += int(init[2])
-    if final is not None:
-        final = (final[0], final[1], int(counts[n_sess - 1]), final[2], final[3])
-    return WalkResult(code_ran, sess_id, sessions, aged, counts, final)
+    return WalkResult(code_ran, sess_id, sessions, aged)

@@ -8,40 +8,48 @@ import numpy as np
 from logstash_filter_aggregate_spark.streaming.walk import walk_scan
 
 
-def simulate_walk(ts, action, end_flag, ct, ci, init, timeout, inactivity):
-    """Per-row reference replay of the streaming keyed state machine:
+def simulate_walk(ts, action, end_flag, ct, ci, timeout, inactivity,
+                  creation=None, last=None, brk=None):
+    """Per-row reference replay of the keyed state machine over one group:
     expiry-on-arrival before the guard, duplicate-create / no-map-update
     suppression, last-write-wins overrides where the codeblock runs,
-    end_of_task / timeout=0 closes where the codeblock runs. Returns the
-    same observables as walk_scan: (code_ran, sess_id, sessions,
-    nevents, final)."""
+    end_of_task / timeout=0 closes where the codeblock runs. Partial rows:
+    ``creation`` is the creation time a row gives the map it creates,
+    ``last`` the last-event time it sets when its code runs, and a
+    ``brk`` row pops the live map on arrival. Returns walk_scan's
+    observables (code_ran, sess_id, sessions) plus each session's event
+    count, the open map's ``(creation, last, nevents, eff_to, eff_in)``
+    (None when none is open) and walk_scan's ``aged``."""
     n = len(ts)
+    creation = ts if creation is None else creation
+    last = ts if last is None else last
     code_ran = [False] * n
     sess_lab = [-1] * n
     sessions = []  # (creation, last_ts, kind, close_row)
     nevents = []
+    aged = set()
     st = None
     label = -1
-    if init is not None:
-        st = dict(creation=float(init[0]), last=float(init[1]), nev=int(init[2]),
-                  eff_to=float(init[3]), eff_in=float(init[4]))
-        label = 0
     for i in range(n):
         t = float(ts[i])
-        if st is not None and (
-            t - st["creation"] > st["eff_to"] or t - st["last"] > st["eff_in"]
-        ):
-            sessions.append((st["creation"], st["last"], "expiry", i))
-            nevents.append(st["nev"])
-            st = None
+        if st is not None:
+            age, gap = t - st["creation"] > st["eff_to"], t - st["last"] > st["eff_in"]
+            popped = brk is not None and brk[i]
+            if age or gap or popped:
+                if age and not gap and not popped:
+                    aged.add(len(sessions))
+                sessions.append((st["creation"], st["last"], "expiry", i))
+                nevents.append(st["nev"])
+                st = None
         if st is None:
             if action[i] == "update":
                 continue  # no map: total no-op (aggregate.rb:203)
-            st = dict(creation=t, last=t, nev=0, eff_to=timeout, eff_in=inactivity)
+            st = dict(creation=float(creation[i]), last=float(last[i]), nev=0,
+                      eff_to=timeout, eff_in=inactivity)
             label += 1
         elif action[i] == "create":
             continue  # duplicate start (aggregate.rb:216)
-        st["last"] = t
+        st["last"] = float(last[i])
         st["nev"] += 1
         code_ran[i] = True
         sess_lab[i] = label
@@ -65,7 +73,7 @@ def simulate_walk(ts, action, end_flag, ct, ci, init, timeout, inactivity):
         sessions.append((st["creation"], st["last"], "open", -1))
         nevents.append(st["nev"])
         final = (st["creation"], st["last"], st["nev"], st["eff_to"], st["eff_in"])
-    return code_ran, sess_lab, sessions, nevents, final
+    return code_ran, sess_lab, sessions, nevents, final, aged
 
 
 def _rand_stream(rng, n):
@@ -91,47 +99,88 @@ def _rand_stream(rng, n):
     if rng.rand() < 0.5:
         m = rng.rand(n) < 0.15
         ci[m] = rng.choice([30.0, 90.0, 450.0], size=int(m.sum()))
-    init = None
-    if rng.rand() < 0.5:
-        c0 = float(ts[0] - rng.choice([0.0, 50.0, 1000.0, 5000.0]))
-        l0 = float(min(ts[0], c0 + rng.choice([0.0, 10.0, 400.0])))
-        init = (c0, l0, int(rng.randint(1, 9)),
-                float(rng.choice([120.0, 600.0, 3000.0])),
-                float(rng.choice([60.0, 300.0, 600.0])))
     timeout = float(rng.choice([120.0, 600.0, 3000.0]))
     inactivity = min(float(rng.choice([60.0, 300.0, timeout])), timeout)
-    return ts, action, end_flag, ct, ci, init, timeout, inactivity
+    return ts, action, end_flag, ct, ci, timeout, inactivity
+
+
+def _flags(action):
+    return (action == "create").astype(bool), (action == "update").astype(bool)
+
+
+ONE = np.zeros(1, dtype=np.int64)  # a whole input as the walk's one group
 
 
 def test_walk_scan_equals_reference_fuzz():
     rng = np.random.RandomState(20260820)
     for trial in range(150):
         n = int(rng.randint(1, 300))
-        ts, action, end_flag, ct, ci, init, timeout, inactivity = _rand_stream(rng, n)
-        is_create = (action == "create").astype(bool)
-        is_update = (action == "update").astype(bool)
-        res = walk_scan(ts, is_create, is_update, end_flag, ct, ci,
-                        init, timeout, inactivity)
-        e_cr, e_lab, e_sess, e_nev, e_final = simulate_walk(
-            ts, action, end_flag, ct, ci, init, timeout, inactivity
+        ts, action, end_flag, ct, ci, timeout, inactivity = _rand_stream(rng, n)
+        res = walk_scan(ts, *_flags(action), end_flag, ct, ci, ONE, timeout, inactivity)
+        e_cr, e_lab, e_sess, _nev, _final, e_aged = simulate_walk(
+            ts, action, end_flag, ct, ci, timeout, inactivity
         )
         assert res.code_ran.tolist() == e_cr, (trial, np.flatnonzero(
             res.code_ran != np.asarray(e_cr))[:5])
         assert res.sess_id.tolist() == e_lab, trial
         got_sess = [(c, l, k, r) for (c, l, k, r) in res.sessions]
         assert got_sess == e_sess, (trial, got_sess, e_sess)
-        assert res.nevents.tolist() == e_nev, (trial, res.nevents, e_nev)
-        assert res.final == e_final, (trial, res.final, e_final)
+        assert res.aged == e_aged, trial
 
 
-def test_walk_scan_carried_state_empty_batch():
-    # zero-row chunk with carried state: the cell survives untouched
-    res = walk_scan(np.zeros(0), np.zeros(0, bool), np.zeros(0, bool),
-                    np.zeros(0, bool), np.zeros(0), np.zeros(0),
-                    (100.0, 110.0, 3, 600.0, 300.0), 600.0, 300.0)
-    assert res.final == (100.0, 110.0, 3, 600.0, 300.0)
-    assert res.sessions == [(100.0, 110.0, "open", -1)]
-    assert res.nevents.tolist() == [3]
+def test_walk_scan_multi_group_equals_per_group_reference_fuzz():
+    # one walk over 1-8 joined groups, each group's ts starting below the
+    # previous group's last, so the input is not monotone across groups:
+    # every ts search must stay in its group and the gap clock's running
+    # max must restart at each group start. Each group must walk as if it
+    # were walked alone, partial clocks and run breaks included.
+    rng = np.random.RandomState(20261020)
+    for trial in range(200):
+        groups = [_rand_stream(rng, int(rng.randint(1, 60))) for _ in range(int(rng.randint(1, 9)))]
+        timeout, inactivity = groups[0][5], groups[0][6]
+        parts = []
+        for ts, action, end_flag, ct, ci, _, _ in groups:
+            below = parts[-1][0][-1] - float(rng.choice([1.0, 300.0, 5000.0])) if parts else 0.0
+            ts = ts - ts[0] + below
+            creation = last = brk = None
+            if rng.rand() < 0.5:
+                # partial rows: a carried creation up to 1000 s back, a last
+                # event up to the next row's ts, and run breaks
+                m = rng.rand(len(ts)) < 0.2
+                creation = np.where(m, ts - rng.choice([0.0, 50.0, 1000.0], size=len(ts)), ts)
+                nxt = np.append(ts[1:], ts[-1])
+                last = np.where(rng.rand(len(ts)) < 0.2, nxt, ts)
+                brk = rng.rand(len(ts)) < 0.1
+            parts.append((ts, action, end_flag, ct, ci, creation, last, brk))
+        sizes = [len(p[0]) for p in parts]
+        starts = np.cumsum([0, *sizes[:-1]])
+        partial = any(p[5] is not None for p in parts)
+
+        def joined(i, default):
+            return np.concatenate([default(p) if p[i] is None else p[i] for p in parts])
+
+        ts = joined(0, None)
+        action = joined(1, None)
+        res = walk_scan(
+            ts, *_flags(action), joined(2, None), joined(3, None), joined(4, None), starts,
+            timeout, inactivity,
+            *([joined(5, lambda p: p[0]), joined(6, lambda p: p[0]),
+               joined(7, lambda p: np.zeros(len(p[0]), dtype=bool))] if partial else []),
+        )
+        off = 0
+        for g, (s, (gts, gaction, gend, gct, gci, gcre, glast, gbrk)) in enumerate(zip(starts, parts)):
+            e = s + len(gts)
+            e_cr, e_lab, e_sess, _nev, _final, e_aged = simulate_walk(
+                gts, gaction, gend, gct, gci, timeout, inactivity, gcre, glast, gbrk
+            )
+            ctx = (trial, g)
+            assert res.code_ran[s:e].tolist() == e_cr, ctx
+            assert res.sess_id[s:e].tolist() == [k + off if k >= 0 else -1 for k in e_lab], ctx
+            want = [(c, l, k, r + s if r >= 0 else -1) for c, l, k, r in e_sess]
+            assert res.sessions[off:off + len(e_sess)] == want, (ctx, res.sessions[off:], want)
+            assert {k - off for k in res.aged if off <= k < off + len(e_sess)} == e_aged, ctx
+            off += len(e_sess)
+        assert off == len(res.sessions), trial
 
 
 def test_walk_scan_beats_reference_5x_on_hot_key():
@@ -173,20 +222,96 @@ def test_walk_scan_beats_reference_5x_on_hot_key():
             for _ in range(3):
                 t0 = time.perf_counter()
                 res = walk_scan(ts, is_create, is_update, end_flag, ct, ci,
-                                None, timeout, inactivity)
+                                ONE, timeout, inactivity)
                 v_s = min(v_s, time.perf_counter() - t0)
             slow_s = float("inf")
             for _ in range(2):
                 t0 = time.perf_counter()
-                e_cr, _lab, e_sess, _nev, e_final = simulate_walk(
-                    ts, action, end_flag, ct, ci, None, timeout, inactivity
+                e_cr, _lab, e_sess, _nev, _final, _aged = simulate_walk(
+                    ts, action, end_flag, ct, ci, timeout, inactivity
                 )
                 slow_s = min(slow_s, time.perf_counter() - t0)
 
             assert res.code_ran.tolist() == e_cr
             assert [s[2] for s in res.sessions] == [s[2] for s in e_sess]
-            assert res.final == e_final
+            # the last session: the map still open at the end, if any
+            assert res.sessions[-1] == e_sess[-1]
             best_ratio = max(best_ratio, slow_s / max(v_s, 1e-9))
             if best_ratio >= min_ratio:
                 break
         assert best_ratio >= min_ratio, (vals, best_ratio)
+
+
+def test_one_walk_per_scan_call(spark, monkeypatch):
+    # the count pin: a batch partition's pending tasks and a streaming
+    # shard's chunk each take ONE walk_scan call over all of their tasks.
+    # Both scans run in-process on the frames the engine would hand its
+    # Python workers, example #1 traffic with several tasks per partition
+    # and per shard.
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from logstash_filter_aggregate_spark.operators import sessionize
+    from logstash_filter_aggregate_spark.plans.pipeline import example1_config, run_pipeline
+    from logstash_filter_aggregate_spark.sources.transcripts import generate_transcripts
+    from logstash_filter_aggregate_spark.streaming import shard, stream
+
+    calls, groups = Counter(), []
+
+    def counted(name, fn):
+        def wrap(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+        return wrap
+
+    def walk(*args, **kwargs):
+        groups.append(len(args[6]))
+        return counted("walk_scan", real_walk)(*args, **kwargs)
+
+    real_walk = sessionize.walk_scan
+    monkeypatch.setattr(sessionize, "walk_scan", walk)
+    monkeypatch.setattr(sessionize, "_scan_tasks", counted("_scan_tasks", sessionize._scan_tasks))
+    monkeypatch.setattr(shard, "_walk", counted("_walk", shard._walk))
+    captured = {}
+    cfg = example1_config(timeout=3600.0)
+    src = generate_transcripts(spark, n_convs=24, hot_convs=0)
+    real_map = type(src).mapInArrow
+
+    def map_in_arrow(self, func, schema, *args, **kwargs):
+        captured["batch"] = (self, func)
+        return real_map(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(type(src), "mapInArrow", map_in_arrow)
+    monkeypatch.setattr(
+        stream, "_shard_keyed", lambda part, fn, *args: captured.setdefault("stream", (part, fn))
+    )
+
+    # batch: each sorted partition through the scan's mapInArrow body
+    run_pipeline(spark, src, cfg)
+    part, func = captured["batch"]
+    tbl = part.withColumn("_pid", F.spark_partition_id()).toArrow()
+    pid = tbl.column("_pid").to_numpy()
+    tbl = tbl.drop_columns(["_pid"])
+    for p in np.unique(pid):
+        rows = tbl.filter(pid == p)
+        assert len(set(rows.column("_task_id").to_pylist())) >= 2, p
+        for _ in func(iter(rows.to_batches(max_chunksize=64))):
+            pass
+    assert calls["_scan_tasks"] >= 2 and calls["walk_scan"] == calls["_scan_tasks"], calls
+    assert max(groups) >= 2, groups
+
+    # streaming: each shard's chunk through the shard function, no prior state
+    calls.clear(), groups.clear()
+    stream.streaming_correlate(src, cfg, shards=2)
+    part, fn = captured["stream"]
+    pdf = part.withColumn("_shard", F.pmod(F.xxhash64("_task_id"), F.lit(2))).toPandas()
+    for key, chunk in pdf.groupby("_shard"):
+        assert chunk["_task_id"].nunique() >= 2, key
+        state = GroupState(None, 0, 0, GroupStateTimeout.EventTimeTimeout, False, True, False,
+                           False, False, GroupState.NO_TIMESTAMP, b"", shard.SHARD_STATE_SCHEMA)
+        for _ in fn((key,), iter([chunk.drop(columns="_shard")]), state):
+            pass
+    assert calls["_walk"] == 2 and calls["walk_scan"] == calls["_walk"], calls
+    assert min(groups) >= 2, groups

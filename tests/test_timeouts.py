@@ -115,10 +115,11 @@ def _scan_split_labels(ts, close, flags, cust_to, cust_in, seed, timeout, inacti
 
     n = len(ts)
     creation = None if seed is None else np.where(np.isnan(seed), ts, seed)
-    res = walk_scan(ts, *flags, close, cust_to, cust_in, None, timeout, inactivity, creation)
+    one = np.zeros(1, dtype=np.int64)  # the task is the walk's one group
+    res = walk_scan(ts, *flags, close, cust_to, cust_in, one, timeout, inactivity, creation)
+    rows, labels = _label_breaks(res, one, np.zeros(len(res.sessions), dtype=np.int64))
     # each label run spread over its rows
-    rows, *labels = np.array(_label_breaks(res, 0, n)).T
-    end_seg, gap, age = (np.repeat(lab, np.diff(np.append(rows, n))) for lab in labels)
+    end_seg, gap, age = np.repeat(labels, np.diff(np.append(rows, n)), axis=0).T
     return end_seg, gap, age, res.code_ran
 
 
@@ -986,9 +987,9 @@ def test_custom_timeout_override_expires_maps_on_arrival_by_default(spark):
         ts = np.array([float(o) for o, _ in evs])
         ct = np.array([0.0 if k == "ERR" else 60.0 if k == "SIGN" else np.nan for _, k in evs])
         n = len(evs)
-        _, _, sessions, nevents, final = simulate_walk(
+        _, _, sessions, nevents, final, _ = simulate_walk(
             ts, np.full(n, "create_or_update", dtype=object), np.zeros(n, dtype=bool),
-            ct, np.full(n, np.nan), None, cfg.timeout, cfg.effective_inactivity_timeout,
+            ct, np.full(n, np.nan), cfg.timeout, cfg.effective_inactivity_timeout,
         )
         for (creation, last, kind, _), nev in zip(sessions, nevents):
             if kind == "ct0":
